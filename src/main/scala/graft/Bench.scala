@@ -154,9 +154,8 @@ object Bench {
       // aggregations were spilling against stale storage memory). The
       // explicit BLOCKING unpersist makes the release deterministic —
       // the isolation a per-job cluster gets for free from JVM teardown.
-      // PINNED shared-artifact checkpoints survive the sweep (round-17
-      // verdict task 1: the sweep was forcing d14/p14 to rebuild d06's
-      // component labeling per query — see Engine.pinnedRDDs).
+      // Live shared-artifact checkpoints survive the sweep, so d14/p14
+      // read d06's component labeling instead of rebuilding it.
       Engine.sweepPersistentRDDs(spark)
       System.gc()
       if (wantSpill) {

@@ -28,42 +28,18 @@ import org.apache.spark.sql.SparkSession
 object Engine {
   def defaultParallelism: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
 
-  /** RDD ids EXEMPT from the harness inter-query storage sweep
-    * ([[sweepPersistentRDDs]]) — the registry the round-17 ledger
-    * promised as `Engine.pinnedRDDs`. The Bench/Verify hygiene sweep
-    * (blocking `unpersist(true)` of every persistent RDD between
-    * queries) exists to stop DEAD localCheckpoint blocks from one
-    * query bleeding into the next query's memory headroom; but it was
-    * also destroying the LIVE shared-artifact checkpoints
-    * ([[graft.ops.ArtifactCache]]: d06/d14/p14's component labels,
-    * d16's semantic labels, the graph family's edge table), forcing
-    * each consumer query to recompute the artifact from scratch
-    * (measured sf10: d14 2.0 → 21.7 s, p14 0.9 → 21.7 s; sf0.1
-    * 0.41 → 3.3 s each). Pinned ids survive the sweep; the
-    * ArtifactCache unpins on eviction so a retired artifact is
-    * releasable again. Deployment analogy: the sweep models per-job
-    * JVM teardown, the pins model the at-rest index artifacts a
-    * teardown does NOT delete.
-    *
-    * Entries are `applicationId:rddId` ([[pinKey]]), not bare ids
-    * (round-18 advisory): RDD ids restart from 0 in every new
-    * SparkContext, so a bare id pinned by a stopped session would
-    * silently exempt an UNRELATED RDD of a later session from the
-    * sweep. Scoping by applicationId makes a stale pin inert. */
-  val pinnedRDDs: java.util.Set[String] =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** The pin-registry key for `rddId` in `spark`'s context. */
-  def pinKey(spark: SparkSession, rddId: Int): String =
-    s"${spark.sparkContext.applicationId}:$rddId"
-
-  /** The ONE inter-query storage-hygiene sweep Bench and Verify run:
-    * blocking-unpersist every persistent RDD EXCEPT the pinned
-    * shared-artifact checkpoints (see [[pinnedRDDs]]). */
+  /** The inter-query storage sweep Bench and Verify run: blocking-
+    * unpersist every persistent RDD except the live frames of
+    * [[graft.ops.Artifacts]] in `spark`'s context. The sweep keeps one
+    * query's dead checkpoint blocks out of the next query's memory
+    * headroom; the exemption keeps shared artifacts (component labels,
+    * the graph edge table) from being rebuilt by every consumer. An
+    * evicted or superseded artifact is no longer exempt, so the next
+    * sweep frees it. */
   def sweepPersistentRDDs(spark: SparkSession): Unit = {
-    val app = spark.sparkContext.applicationId
+    val keep = graft.ops.Artifacts.liveRdds(spark)
     spark.sparkContext.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!pinnedRDDs.contains(s"$app:$id")) rdd.unpersist(true)
+      if (!keep(id)) rdd.unpersist(true)
     }
   }
 
@@ -100,7 +76,9 @@ object Engine {
       // MB, within one task's execution-memory share on any executor
       // profile this engine targets (local[32]/8g at sf0.1 up to
       // 96g at sf100; a cluster sizes SPARK_GRAFT_SHJ_THRESHOLD to its
-      // own per-task memory budget — 0 disables the rewrite).
+      // own per-task memory budget). A threshold of 0 turns off only
+      // this AQE SMJ→SHJ rewrite: static shuffled-hash selection stays
+      // on through preferSortMergeJoin=false.
       .config("spark.sql.join.preferSortMergeJoin", "false")
       .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))

@@ -36,8 +36,8 @@ object Verify {
       }
       // Bench's inter-query hygiene (see there): deterministic release
       // of dead localCheckpoint storage so late heavy queries don't
-      // spill against 200 earlier queries' leftover blocks. Pinned
-      // shared-artifact checkpoints survive (Engine.pinnedRDDs).
+      // spill against 200 earlier queries' leftover blocks. Live
+      // shared-artifact checkpoints survive (graft.ops.Artifacts).
       Engine.sweepPersistentRDDs(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -712,6 +712,7 @@ object Core {
 
   private object Replay {
     import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+    import graft.ops.Artifacts.rmTree
 
     private val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
     private val tmpBase = Paths.get(System.getProperty("java.io.tmpdir"))
@@ -804,11 +805,6 @@ object Core {
         p
       })
     private val runRoots = new java.util.concurrent.ConcurrentHashMap[String, Path]()
-
-    private[queries] def rmTree(p: Path): Unit =
-      if (Files.exists(p))
-        Files.walk(p).sorted(java.util.Comparator.reverseOrder())
-          .forEach(f => { Files.deleteIfExists(f); () })
   }
 
   /** Q36 — STATEFUL streaming under the oracle: the real `events` table

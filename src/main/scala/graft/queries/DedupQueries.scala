@@ -217,8 +217,8 @@ object DedupQueries {
     * doc, read from the first [[SwitchSampleRows]] rows of the
     * already-checkpointed signature (a `limit` over cached blocks —
     * bounded work at ANY corpus size, deterministic for a given plan),
-    * cached per estate so one tiny job serves d02/d10/d18 and Bench's
-    * min-of-2 reruns.
+    * stored per documents content ([[graft.ops.Artifacts.value]]) so one
+    * tiny job serves d02/d10/d18 and Bench's min-of-2 reruns.
     *
     * What the model says and what the probe measured: carry ships the
     * payload ×4 (band fanout) through the bucket shuffle; join-back
@@ -243,23 +243,21 @@ object DedupQueries {
       estate: String): Boolean = {
     val jb = force.getOrElse {
       // the payload stat is an ESTATE property, not a query property —
-      // one tiny job per estate per JVM, shared by d02/d10/d18 and by
+      // one tiny job per documents content, shared by d02/d10/d18 and by
       // Bench's min-of-2 reruns
-      val avgBytes = avgShBytesCache.computeIfAbsent(estate, _ => {
+      val avgBytes = graft.ops.Artifacts.value(
+          sig.sparkSession, "avg_sh_bytes", "1", estate, Seq("documents.parquet")) {
         val r = sig.limit(SwitchSampleRows)
           .agg(avg(aggregate(col("sh"), lit(0L),
             (acc, x) => acc + length(x) + lit(16L))))
           .head()
         if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      })
+      }
       avgBytes > CarryShBytesCutoff
     }
     switchLog.put(census, if (jb) "join-back" else "carry")
     jb
   }
-
-  private val avgShBytesCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Double]()
 
   /** Payload-stats sample size — first rows of the checkpointed
     * signature, NOT a corpus scan (bounded work at 100 TB). */
@@ -442,51 +440,22 @@ object DedupQueries {
       .agg(count(lit(1)).as("n_docs"))
       .orderBy("component")
 
-  /** The ONE near-dup component labeling per (session, dataset) —
-    * d06/d14/p14 all consume the same clusters, and label propagation is
-    * the expensive part of all three (measured ~3-4 s each at sf0.1 when
-    * every query re-ran its own ConnectedComponents over the shared
-    * edge feed). Cached per (session, dataset dir) under the
-    * [[graft.sources.Layout.ensureBucketedArtifact]] discipline: at
-    * deployment the labeling is a one-time indexing job whose artifact
-    * downstream queries read; here the localCheckpoint'd label table
-    * stands in for that artifact. `synchronized` for the same reason as
-    * Layout: concurrent test suites sharing the session must not race
-    * two labelings of one dataset. Entries are keyed on the dataset's
-    * CONTENT STAMP — the (name, length, mtime) listing of
-    * `documents.parquet` — not just its path (round-10 advisory fix): a
-    * restaged or overwritten directory yields a new stamp, so stale
-    * labels can never be served, and the superseded entry is dropped at
-    * that moment. Probes that must time the labeling itself bypass the
-    * cache and call [[graft.ops.ConnectedComponents]] directly. Bench
-    * note: d06/d14/p14 share this one labeling — their per-query
-    * timings are artifact READS; the one cold labeling cost lands in
-    * whichever of the three runs first (visible in `queries_cold`).
-    * BOUNDED (round-10 advisory): a long-lived session staging many
-    * datasets evicts least-recently-USED entries past
-    * [[LabelCacheBound]] — dropping the DataFrame releases its
-    * localCheckpoint blocks via the ContextCleaner once unreferenced,
-    * so the cache's storage footprint is bounded too; an evicted
-    * dataset simply relabels on next touch. */
-  /** The label caches now ride [[graft.ops.ArtifactCache]] — the one
-    * shared discipline (content-stamp keyed, LRU-bounded, checkpoint-
-    * liveness self-healing, and — new in round 18 — PINNED out of the
-    * Bench/Verify storage sweep via [[graft.Engine.pinnedRDDs]], so
-    * d14/p14 read the artifact instead of rebuilding the labeling per
-    * query). Two instances: the two labelings cover different tables
-    * and invalidate independently. */
-  private val ccCache = new graft.ops.ArtifactCache()
-  private val semCache = new graft.ops.ArtifactCache()
-
+  /** The near-dup component labeling d06/d14/p14 all read, built once
+    * per (session, documents content) through [[graft.ops.Artifacts]]:
+    * label propagation is the expensive part of all three queries, and
+    * at deployment it is a one-time indexing job whose artifact
+    * downstream queries read. The first of the three to run pays the
+    * labeling; the others read the checkpoint. Probes that must time
+    * the labeling itself call [[graft.ops.ConnectedComponents]]
+    * directly. */
   private[graft] def componentLabels(s: SparkSession, d: String): DataFrame =
-    ccCache.artifact(s, d, Seq("documents.parquet"))(
+    graft.ops.Artifacts.frame(s, "component_labels", "1", d, Seq("documents.parquet"))(
       graft.ops.ConnectedComponents.run(lshComponentEdges(s, d)))
 
-  /** d16's labeling under the SAME one-artifact discipline as
-    * [[componentLabels]], over the EMBEDDING similarity graph — keyed on
-    * the embeddings table's content stamp. */
+  /** d16's labeling, stored like [[componentLabels]], over the
+    * EMBEDDING similarity graph — keyed on the embeddings table. */
   private[graft] def semanticLabels(s: SparkSession, d: String): DataFrame =
-    semCache.artifact(s, d, Seq("embeddings.parquet"))(
+    graft.ops.Artifacts.frame(s, "semantic_labels", "1", d, Seq("embeddings.parquet"))(
       graft.ops.ConnectedComponents.run(
         cosineEdges(s, d).select(col("va").as("src"), col("vb").as("dst"))))
 
@@ -908,7 +877,7 @@ object DedupQueries {
     * signature index of the history corpus, without ever rescanning
     * history text. This is the shape that makes dedup sustainable at
     * 100 TB: the history index — (band key, doc_id, shingle set), built
-    * once by an indexing job ([[graft.sources.Layout.ensureBucketedArtifact]],
+    * once by an indexing job ([[graft.ops.Artifacts.bucketed]],
     * bucketed+sorted by band key) — is the only thing the daily job
     * touches besides the delta itself. The join shuffles ONLY the
     * delta's band rows (the index side reads pre-bucketed, plan-asserted
@@ -917,7 +886,8 @@ object DedupQueries {
     * no second lookup); a pair matching in several bands is collapsed by
     * the pair-level max — identical scores, so the collapse is exact. */
   private def d09(s: SparkSession, d: String): DataFrame = {
-    val idxT = graft.sources.Layout.ensureBucketedArtifact(s, "lsh_sig", d, "bk")(
+    val idxT = graft.ops.Artifacts.bucketed(
+        s, "lsh_sig", "1", d, Seq("documents.parquet"), "bk", 8)(
       keyedBands(s, d).filter(col("doc_id") % 5 =!= 4))
     val idx = s.table(idxT)
       .select(col("bk"), col("doc_id").as("dup_of"), col("sh").as("shh"))

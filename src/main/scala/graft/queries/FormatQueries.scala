@@ -7,12 +7,13 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables._
 import graft.functions.Num.oround
+import graft.ops.Artifacts
 
 /** Non-parquet SOURCE formats — the engine's answer to "my corpus
   * arrives as CSV exports / JSONL crawl dumps, not parquet":
   *
-  *  - x01: schema'd CSV scan. The artifact is written once per JVM from
-  *    the parquet table, then read back with an EXPLICIT DDL schema
+  *  - x01: schema'd CSV scan. The artifact is written from the parquet
+  *    table, then read back with an EXPLICIT DDL schema
   *    (never inferSchema — on a 100 TB lake, inference is a full extra
   *    pass over the data before the real one, and a silently wrong
   *    type on row 10^12). The oracle aggregates the same rows straight
@@ -29,6 +30,11 @@ import graft.functions.Num.oround
   * behave exactly as on parquet (minus footer statistics — which is the
   * point: the queries document what text formats COST at scale; convert
   * to parquet early).
+  *
+  * Every converted copy the queries read (x01, x02, x04–x08, x10, x11) is
+  * written once per content stamp of its source table and published by
+  * rename ([[graft.ops.Artifacts.dir]]), so a restaged sf dir gets a
+  * fresh copy and a build that dies midway is never read.
   */
 object FormatQueries {
 
@@ -36,25 +42,12 @@ object FormatQueries {
     * pattern (millis) would truncate. */
   private val TsFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX"
 
-  /** Write-once-per-JVM text artifact derived from an sf table — the
-    * `Layout.ensureBucketedArtifact` discipline for file formats. The
-    * pid + sfDir tag keeps concurrent Verify/Bench/test JVMs and
-    * multiple scale factors from colliding. */
-  private def ensureTextArtifact(
-      name: String, d: String, write: String => Unit): String = synchronized {
-    val tag = java.lang.Long.toHexString(ProcessHandle.current().pid()) +
-      "_" + java.lang.Integer.toHexString(d.hashCode).replace('-', 'm')
-    val path = Paths.get(
-      System.getProperty("java.io.tmpdir"), s"graft_fmt_${name}_$tag")
-    if (!Files.exists(path)) write(path.toString)
-    path.toString
-  }
-
   /** X1 — CSV roundtrip: customer → headered CSV → explicit-schema scan
     * → per-segment account rollup. Oracle reads the original parquet. */
   private def x01(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("customer_csv", d, p =>
-      customer(s, d).write.option("header", "true").csv(p))
+    val path = Artifacts.dir(s, "customer_csv", "1", d, Seq("customer.parquet")) { p =>
+      customer(s, d).write.option("header", "true").csv(p)
+    }
     s.read
       .schema("c_custkey BIGINT, c_name STRING, c_nationkey BIGINT, " +
         "c_acctbal DOUBLE, c_mktsegment STRING")
@@ -79,8 +72,9 @@ object FormatQueries {
     * max(ts) column is the precision check: a lossy timestamp format
     * fails the oracle by up to 999 µs. */
   private def x02(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("events_jsonl", d, p =>
-      events(s, d).write.option("timestampFormat", TsFmt).json(p))
+    val path = Artifacts.dir(s, "events_jsonl", "1", d, Seq("events.parquet")) { p =>
+      events(s, d).write.option("timestampFormat", TsFmt).json(p)
+    }
     s.read
       .schema("event_id BIGINT, ts TIMESTAMP, user_id BIGINT, " +
         "event_type STRING, value DOUBLE, props STRING")
@@ -131,8 +125,9 @@ object FormatQueries {
     * columns. The engine answer to "my lake has an ORC estate": read it
     * natively at full scan efficiency, no convert-first pass needed. */
   private def x04(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("orders_orc", d, p =>
-      orders(s, d).write.orc(p))
+    val path = Artifacts.dir(s, "orders_orc", "1", d, Seq("orders.parquet")) { p =>
+      orders(s, d).write.orc(p)
+    }
     s.read.orc(path)
       .filter(col("o_orderdate") >= "1995-01-01" && col("o_orderdate") < "1996-01-01")
       .groupBy("o_orderpriority")
@@ -159,8 +154,9 @@ object FormatQueries {
     * module on this classpath; the source is built on avro-mapred's
     * splittable input format (FormatsSpec asserts the mapping table). */
   private def x05(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("events_avro", d, p =>
-      graft.sources.AvroSource.write(events(s, d), p))
+    val path = Artifacts.dir(s, "events_avro", "1", d, Seq("events.parquet")) { p =>
+      graft.sources.AvroSource.write(events(s, d), p)
+    }
     graft.sources.AvroSource.read(s, path,
       org.apache.spark.sql.types.StructType.fromDDL(
         "event_type STRING, ts TIMESTAMP, value DOUBLE"))
@@ -186,8 +182,9 @@ object FormatQueries {
     * partition per file. Same artifact as x05; `min(ts)` instead of
     * max so the two queries cannot share a cached result by accident. */
   private def x06(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("events_avro", d, p =>
-      graft.sources.AvroSource.write(events(s, d), p))
+    val path = Artifacts.dir(s, "events_avro", "1", d, Seq("events.parquet")) { p =>
+      graft.sources.AvroSource.write(events(s, d), p)
+    }
     s.read.format("graft-avro").load(path)
       .groupBy("event_type")
       .agg(
@@ -214,8 +211,9 @@ object FormatQueries {
     * roundtrip (lang leaves the file bodies and comes back from
     * directory names). */
   private def x07(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("docs_hive", d, p =>
-      documents(s, d).write.partitionBy("lang").parquet(p))
+    val path = Artifacts.dir(s, "docs_hive", "1", d, Seq("documents.parquet")) { p =>
+      documents(s, d).write.partitionBy("lang").parquet(p)
+    }
     s.read.parquet(path)
       .filter(col("lang") === "en")
       .groupBy("source")
@@ -246,7 +244,7 @@ object FormatQueries {
     * blobs into parquet `binary` columns (m02's shape) precisely
     * because per-file open cost dominates small-object estates. */
   private def x08(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("events_bin", d, p => {
+    val path = Artifacts.dir(s, "events_bin", "1", d, Seq("events.parquet")) { p =>
       Files.createDirectories(Paths.get(p))
       val rows = events(s, d)
         .filter(
@@ -260,7 +258,7 @@ object FormatQueries {
         Files.write(
           Paths.get(p, s"ev_${r.getLong(0)}.bin"), r.getAs[Array[Byte]](1))
       }
-    })
+    }
     s.read.format("binaryFile")
       .option("pathGlobFilter", "*.bin")
       .load(path)
@@ -341,7 +339,7 @@ object FormatQueries {
     * columns are free. Oracle: the same census straight off the
     * original orders table with the batch rule re-applied. */
   private def x10(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("orders_evo", d, p => {
+    val path = Artifacts.dir(s, "orders_evo", "1", d, Seq("orders.parquet")) { p =>
       val o = orders(s, d)
       o.filter(col("o_orderkey") % 2 === 0)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
@@ -350,7 +348,7 @@ object FormatQueries {
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"),
           col("o_orderstatus"))
         .write.parquet(p + "/batch=2")
-    })
+    }
     s.read.option("mergeSchema", "true").parquet(path)
       .groupBy(coalesce(col("o_orderstatus"), lit("<pre-evolution>")).as("status"))
       .agg(
@@ -377,13 +375,14 @@ object FormatQueries {
     * (Spark refuses corrupt-only projections over JSON). Oracle: the
     * corruption rule re-applied to the original events table. */
   private def x11(s: SparkSession, d: String): DataFrame = {
-    val path = ensureTextArtifact("events_corrupt", d, p =>
+    val path = Artifacts.dir(s, "events_corrupt", "1", d, Seq("events.parquet")) { p =>
       events(s, d)
         .select(
           when(col("event_id") % 10 === 0, lit("{\"event_id\": oops"))
             .otherwise(to_json(struct(col("event_id"), col("value"))))
             .as("line"))
-        .write.text(p))
+        .write.text(p)
+    }
     s.read
       .schema("event_id BIGINT, value DOUBLE, _corrupt_record STRING")
       .option("mode", "PERMISSIVE")

@@ -23,52 +23,19 @@ import org.apache.spark.sql.functions._
   */
 object Layout {
 
-  /** Write `df` as a bucketed+sorted managed parquet table. Joins and
-    * aggregations keyed on `key` against other tables bucketed the same
-    * way (same key, same bucket count) plan without a shuffle. */
-  def writeBucketed(df: DataFrame, table: String, key: String, buckets: Int): Unit =
-    df.write
-      .format("parquet")
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .mode("overwrite")
-      .saveAsTable(table)
-
-  /** Materialize (once per JVM) the orderkey-bucketed orders⋈lineitem
-    * fact pair for `sfDir` and return the two table names. Bucket
-    * metadata lives in the catalog, not the files, so bucketed tables
-    * MUST go through `saveAsTable`; this session's catalog is in-memory,
-    * so each process builds its own copy — at deployment the metastore
-    * persists and the build is a one-time indexing job, exactly like
-    * [[graft.sources.VectorIndex]]'s artifacts. Table names carry the
-    * pid so concurrent Verify/Bench/test JVMs sharing a warehouse dir
-    * never collide on a managed-table location. */
-  def ensureBucketedFacts(s: SparkSession, sfDir: String, buckets: Int = 8): (String, String) =
-    (ensureBucketedArtifact(s, "orders_bkt", sfDir, "o_orderkey", buckets)(
-      graft.Tables.orders(s, sfDir).select("o_orderkey", "o_custkey")),
-      ensureBucketedArtifact(s, "lineitem_bkt", sfDir, "l_orderkey", buckets)(
-        graft.Tables.lineitem(s, sfDir)
-          .select("l_orderkey", "l_extendedprice", "l_discount")))
-
-  /** Materialize (once per JVM) a DERIVED bucketed artifact table —
-    * `build` evaluated lazily, written bucketed+sorted by `key` — and
-    * return its name: the ensureBucketedFacts discipline generalized to
-    * computed artifacts (signature indexes, pre-joined projections).
-    * Table names carry the pid (concurrent Verify/Bench/test JVMs
-    * sharing a warehouse dir never collide on a managed-table location)
-    * plus the sfDir hash (one JVM may query several scale factors). */
-  def ensureBucketedArtifact(
-      s: SparkSession, name: String, sfDir: String, key: String, buckets: Int = 8)(
-      build: => DataFrame): String = synchronized {
-    // the bucket spec is part of the cache identity: same name re-requested
-    // with a different key/count must build a NEW table, not silently
-    // serve one bucketed the wrong way
-    val tag = java.lang.Long.toHexString(ProcessHandle.current().pid()) +
-      "_" + java.lang.Integer.toHexString((sfDir, key, buckets).hashCode)
-        .replace('-', 'm')
-    val t = s"graft_${name}_$tag"
-    if (!s.catalog.tableExists(t)) writeBucketed(build, t, key, buckets)
-    t
+  /** The orderkey-bucketed orders⋈lineitem fact pair for `sfDir`,
+    * built once per content stamp ([[graft.ops.Artifacts.bucketed]]);
+    * returns the two table names, registered in `s`'s catalog. At
+    * deployment the metastore persists these and the build is a one-time
+    * indexing job. */
+  def ensureBucketedFacts(s: SparkSession, sfDir: String, buckets: Int = 8): (String, String) = {
+    val o = graft.ops.Artifacts.bucketed(
+        s, "orders", "1", sfDir, Seq("orders.parquet"), "o_orderkey", buckets)(
+      graft.Tables.orders(s, sfDir).select("o_orderkey", "o_custkey"))
+    val l = graft.ops.Artifacts.bucketed(
+        s, "lineitem", "1", sfDir, Seq("lineitem.parquet"), "l_orderkey", buckets)(
+      graft.Tables.lineitem(s, sfDir).select("l_orderkey", "l_extendedprice", "l_discount"))
+    (o, l)
   }
 
   /** Write an event table partitioned by the date of `tsCol` — queries
@@ -193,21 +160,15 @@ object Layout {
       if (Files.exists(old))
         throw new IllegalStateException(
           s"$old exists: a previous compaction died mid-swap; restore it to $dir first")
-      deleteTree(staging) // stale staging from a dead run is safe to drop
+      graft.ops.Artifacts.rmTree(staging) // stale staging from a dead run is safe to drop
       spark.read.parquet(dir.toString).repartition(nOut).write.mode("overwrite")
         .parquet(staging.toString)
       // replace source only after the staged write fully succeeded
       Files.move(dir, old, StandardCopyOption.ATOMIC_MOVE)
       Files.move(staging, dir, StandardCopyOption.ATOMIC_MOVE)
-      deleteTree(old)
+      graft.ops.Artifacts.rmTree(old)
       (before.size, ls(dir).count(_.getFileName.toString.endsWith(".parquet")))
     }
-    def deleteTree(p: Path): Unit =
-      if (Files.exists(p)) {
-        val walk = Files.walk(p)
-        try walk.iterator().asScala.toSeq.reverse.foreach(Files.delete)
-        finally walk.close()
-      }
     def walk(dir: Path): (Int, Int) = {
       val entries = ls(dir)
       if (entries.exists(_.getFileName.toString == "_spark_metadata"))

@@ -1,12 +1,10 @@
 package graft.sources
 
-import java.nio.file.{FileAlreadyExistsException, Files, Paths, StandardCopyOption}
-import java.util.Comparator
-
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorFns._
+import graft.ops.Artifacts
 
 /** Persisted ANN index artifacts — the offline half of the similarity
   * search story.
@@ -18,11 +16,11 @@ import graft.functions.VectorFns._
   * re-explodes the full corpus per execution — correct, but the wrong
   * plan at scale.
   *
-  * Two artifacts, both derived from `embeddings` and cached per
-  * source-fingerprint under /tmp:
+  * Two artifacts, both derived from `embeddings` and published through
+  * [[graft.ops.Artifacts.dir]]:
   *
-  *  - **IVF**: per-label mean vectors (`centroids/`: label, ce) plus the
-  *    corpus re-written `partitionBy(label)` (`corpus/`). A probe reads
+  *  - **IVF**: per-label mean vectors (`ivf_centroids/`: label, ce) plus the
+  *    corpus re-written `partitionBy(label)` (`ivf_corpus/`). A probe reads
   *    the tiny centroid table, picks the nprobe nearest labels, and joins
   *    them against the partitioned corpus — the join key IS the partition
   *    column, so dynamic partition pruning opens only the probed
@@ -34,9 +32,9 @@ import graft.functions.VectorFns._
   *    integer 110). v02/v05 probe it with the query vector's bucket(s) —
   *    again partition-pruned to probes/2^bits of the corpus.
   *
-  * The cache key fingerprints the source file (size + mtime), so a
-  * regenerated testdata dir invalidates the artifact instead of silently
-  * serving stale vectors.
+  * The store keys each artifact on the embeddings table's content stamp,
+  * so a regenerated testdata dir gets a fresh artifact instead of stale
+  * vectors.
   */
 object VectorIndex {
 
@@ -57,18 +55,12 @@ object VectorIndex {
     * rows per file, not d05's pair-work-tight 64. */
   val IndexBucketTarget = 4096L
 
-  /** The corpus row count behind every adaptive width decision, cached
-    * per CONTENT fingerprint (size + mtime — the ccCache discipline):
-    * the count is a pure function of the source file, but left uncached
-    * it was an eager Spark job on EVERY query construction (v02 paid it
-    * twice — once directly, once inside ensureSrp — before any probe
-    * work ran). A restaged dir gets a fresh fingerprint, so the cache
-    * can never serve a stale count. */
-  private val countCache =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+  /** The corpus row count behind every adaptive width decision, counted
+    * once per content stamp: uncached it was an eager Spark job on every
+    * query construction. */
   def corpusCount(s: SparkSession, sfDir: String): Long =
-    countCache.computeIfAbsent(fingerprint(sfDir),
-      _ => graft.Tables.embeddings(s, sfDir).count()).longValue()
+    Artifacts.value(s, "embeddings_count", "1", sfDir, Seq("embeddings.parquet"))(
+      graft.Tables.embeddings(s, sfDir).count())
 
   /** The index's key width for `sfDir`'s corpus — the shared
     * [[graft.functions.VectorFns.adaptiveSrpBits]] rule (at
@@ -80,49 +72,10 @@ object VectorIndex {
     graft.functions.VectorFns.adaptiveSrpBits(
       corpusCount(s, sfDir), IndexBucketTarget)
 
-  private def fingerprint(sfDir: String): String = {
-    val p = Paths.get(sfDir, "embeddings.parquet")
-    val key = s"$sfDir:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
-    // stable short hash for a filesystem-safe cache dir name
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(key.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(16)
-  }
-
-  private def indexRoot(sfDir: String): String =
-    s"/tmp/graft_index/${fingerprint(sfDir)}"
-
-  private def built(dir: String): Boolean =
-    Files.exists(Paths.get(dir, "_SUCCESS"))
-
-  /** Build into a process-private staging dir, then ATOMIC-rename onto
-    * the final path. The JVM-level `synchronized` on the ensure methods
-    * only serializes one process; Verify/Bench/forked-test JVMs can race
-    * the same /tmp cache — with the rename, a reader either sees no
-    * `_SUCCESS` (and builds its own staging copy) or a complete
-    * artifact, never a half-written directory. The rename loser simply
-    * discards its staging copy. */
-  private def buildAtomic(finalDir: String)(write: String => Unit): Unit = {
-    if (built(finalDir)) return
-    val staging = s"$finalDir.build-${ProcessHandle.current().pid()}"
-    write(staging)
-    try Files.move(
-      Paths.get(staging), Paths.get(finalDir), StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: FileAlreadyExistsException | _: java.nio.file.FileSystemException =>
-        // lost the race — a concurrent builder finished first; use theirs
-        Files.walk(Paths.get(staging)).sorted(Comparator.reverseOrder())
-          .forEach(p => Files.deleteIfExists(p))
-    }
-  }
-
   /** Build (once) and return (centroidsPath, corpusPath) for the IVF
-    * index over `sfDir`'s embeddings. Synchronized: suites running in
-    * parallel in one JVM must not race the build. */
-  def ensureIvf(s: SparkSession, sfDir: String): (String, String) = synchronized {
-    val root = indexRoot(sfDir)
-    val cent = s"$root/ivf_centroids"
-    val corp = s"$root/ivf_corpus"
-    buildAtomic(cent) { dst =>
+    * index over `sfDir`'s embeddings. */
+  def ensureIvf(s: SparkSession, sfDir: String): (String, String) = {
+    val root = Artifacts.dir(s, "ivf", "1", sfDir, Seq("embeddings.parquet")) { dst =>
       val e = graft.Tables.embeddings(s, sfDir)
         .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("e"))
       // per-label mean vector: posexplode → per-(label,dim) avg → sorted
@@ -136,34 +89,29 @@ object VectorIndex {
             sort_array(collect_list(struct(col("i"), col("cx")))),
             p => p.getField("cx")).as("ce"))
         .coalesce(1)
-        .write.mode("overwrite").parquet(dst)
-    }
-    // the corpus at rest, one directory per coarse cell
-    buildAtomic(corp) { dst =>
+        .write.parquet(s"$dst/ivf_centroids")
+      // the corpus at rest, one directory per coarse cell
       graft.Tables.embeddings(s, sfDir)
-        .write.partitionBy("label").mode("overwrite").parquet(dst)
+        .write.partitionBy("label").parquet(s"$dst/ivf_corpus")
     }
-    (cent, corp)
+    (s"$root/ivf_centroids", s"$root/ivf_corpus")
   }
 
   /** Build (once) and return the path of the SRP-bucket-partitioned
     * corpus: columns (vec_id, embedding, label, pbucket), partitioned by
     * pbucket. */
-  def ensureSrp(s: SparkSession, sfDir: String): String = synchronized {
-    val root = indexRoot(sfDir)
+  def ensureSrp(s: SparkSession, sfDir: String): String = {
     val bits = srpBitsFor(s, sfDir)
     // the width is PART of the artifact identity: a probe computing
     // b-bit keys against a corpus partitioned at a different width
     // would join against nothing, silently — so a width change (rule
     // change, or a corpus edit that crosses a 64·2^k threshold) builds
     // a fresh directory instead of serving the stale layout
-    val corp = s"$root/srp_corpus_b$bits"
-    buildAtomic(corp) { dst =>
+    Artifacts.dir(s, s"srp_corpus_b$bits", "1", sfDir, Seq("embeddings.parquet")) { dst =>
       graft.Tables.embeddings(s, sfDir)
         .withColumn("pbucket", pbucketOf(toDouble(col("embedding")), bits))
-        .write.partitionBy("pbucket").mode("overwrite").parquet(dst)
+        .write.partitionBy("pbucket").parquet(dst)
     }
-    corp
   }
 
   /** How many independent hash tables the multi-table SRP index carries
@@ -186,20 +134,18 @@ object VectorIndex {
     * wider the gap grows — 0.5 @ 11% vs 0.3 @ ~19%. The price is ×L
     * storage — the textbook LSH cost, paid at index-build time, which
     * is what a serving deployment amortizes. */
-  def ensureSrpTables(s: SparkSession, sfDir: String): String = synchronized {
-    val root = indexRoot(sfDir)
+  def ensureSrpTables(s: SparkSession, sfDir: String): String = {
     val bits = srpBitsFor(s, sfDir)
-    val corp = s"$root/srp_tables_b$bits" // width is part of the identity
-    buildAtomic(corp) { dst =>
+    // width is part of the identity
+    Artifacts.dir(s, s"srp_tables_b$bits", "1", sfDir, Seq("embeddings.parquet")) { dst =>
       val e = graft.Tables.embeddings(s, sfDir)
       (0 until SrpTables).map { t =>
         e.withColumn("tbl", lit(t))
           .withColumn("pbucket",
             tableBucketOf(toDouble(col("embedding")), t, bits))
       }.reduce(_ unionByName _)
-        .write.partitionBy("tbl", "pbucket").mode("overwrite").parquet(dst)
+        .write.partitionBy("tbl", "pbucket").parquet(dst)
     }
-    corp
   }
 
   /** Table t's partition-safe bucket key: the sign pattern of the

@@ -41,7 +41,7 @@ class AnnRebandSpec extends AnyFunSuite {
     vecs.select((col("vec_id") + lit(r * stride)).as("vec_id"), col("embedding"))
 
   private def freshDirs(tag: String): (String, String) = {
-    val root = Files.createTempDirectory(s"graft_reband_$tag").toString
+    val root = SparkTestSession.tempDir(s"graft_reband_$tag").toString
     (s"$root/res", s"$root/idx")
   }
 

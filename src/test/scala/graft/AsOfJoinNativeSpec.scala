@@ -166,12 +166,12 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
     // EnsureRequirements inserts no shuffle — only in-partition sorts.
     val d = "/root/testdata/sf0.001"
     val e = graft.Tables.events(spark, d)
-    val pt = graft.sources.Layout.ensureBucketedArtifact(
-      spark, "asof_purch", d, "user_id", 4)(
+    val pt = graft.ops.Artifacts.bucketed(
+      spark, "asof_purch", "1", d, Seq("events.parquet"), "user_id", 4)(
       e.filter(col("event_type") === "purchase")
         .select("event_id", "user_id", "ts"))
-    val vt = graft.sources.Layout.ensureBucketedArtifact(
-      spark, "asof_views", d, "user_id", 4)(
+    val vt = graft.ops.Artifacts.bucketed(
+      spark, "asof_views", "1", d, Seq("events.parquet"), "user_id", 4)(
       e.filter(col("event_type") === "view")
         .select("event_id", "user_id", "ts"))
     val df = AsOfJoin.lastPriorNative(

@@ -62,7 +62,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
 
   test("write -> read roundtrips every supported type, nulls and corners included") {
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-prop").toString
+    val dir = SparkTestSession.tempDir("graft-avro-prop").toString
     val df = spark.createDataFrame(rows.asJava, schema).repartition(3)
     graft.sources.AvroSource.write(df, dir)
     val expect = rows.map(canon).sortBy(_.head.asInstanceOf[Long])
@@ -89,7 +89,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
   }
 
   test("re-writing a directory clears stale partitions from a wider prior job") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-commit1").toString
+    val dir = SparkTestSession.tempDir("graft-avro-commit1").toString
     graft.sources.AvroSource.write(tinyDf(30, 5), dir)
     graft.sources.AvroSource.write(tinyDf(10, 2), dir)
     // local FS adds hidden .crc checksum twins — only visible files count
@@ -104,7 +104,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
 
   test("a failed attempt leaves no temp garbage and no truncated part file") {
     import scala.jdk.CollectionConverters._
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-commit2").toString
+    val dir = SparkTestSession.tempDir("graft-avro-commit2").toString
     val poisoned = spark.createDataFrame(
       spark.sparkContext.parallelize(0L until 20L, 2).mapPartitions { it =>
         it.map { i =>
@@ -130,7 +130,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
   }
 
   test("orphan _tmp files are invisible to readers (hidden-file filter)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro-commit3").toString
+    val dir = SparkTestSession.tempDir("graft-avro-commit3").toString
     graft.sources.AvroSource.write(tinyDf(8, 2), dir)
     // a truncated container a crashed attempt might leave behind
     java.nio.file.Files.write(

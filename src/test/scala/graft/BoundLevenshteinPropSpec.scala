@@ -44,7 +44,7 @@ class BoundLevenshteinPropSpec extends AnyFunSuite {
     import spark.implicits._
     // Round-trip through parquet so the relation survives to the
     // optimizer (a local relation would be folded before the rule runs).
-    val dir = java.nio.file.Files.createTempDirectory("graft-lev-prop").toString
+    val dir = SparkTestSession.tempDir("graft-lev-prop").toString
     pairs.zipWithIndex.map { case ((a, b), i) => (i.toLong, a, b) }
       .toDF("id", "a", "b").write.mode("overwrite").parquet(dir)
     val df = spark.read.parquet(dir)

@@ -39,7 +39,7 @@ class BucketedIndexCrashSpec extends AnyFunSuite {
   }
 
   private def freshIndex(): (BucketedIndex, String) = {
-    val root = Files.createTempDirectory("graft_bix_crash").toString
+    val root = SparkTestSession.tempDir("graft_bix_crash").toString
     (new graft.streaming.BucketedIndex(
       spark, root, "k", schema, targetRowsPerBucket = 16L, minBuckets = 4), root)
   }

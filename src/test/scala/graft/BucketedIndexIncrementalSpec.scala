@@ -37,7 +37,7 @@ class BucketedIndexIncrementalSpec extends AnyFunSuite {
   }
 
   private def freshIndex(): (BucketedIndex, String) = {
-    val root = Files.createTempDirectory("graft_bix_inc").toString
+    val root = SparkTestSession.tempDir("graft_bix_inc").toString
     (new graft.streaming.BucketedIndex(
       spark, root, "k", schema, targetRowsPerBucket = 16L, minBuckets = 4), root)
   }

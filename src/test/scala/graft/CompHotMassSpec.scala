@@ -36,7 +36,7 @@ class CompHotMassSpec extends AnyFunSuite {
     * {3} a one-token-changed near-dup of it (bigram Jaccard 9/11 ≈ 0.818
     * ≥ 0.8), {4, 5} an unrelated identical pair. */
   private def stage(hot: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_hotmass_$hot").toString
+    val dir = SparkTestSession.tempDir(s"graft_hotmass_$hot").toString
     val t1 = "alpha beta gamma delta epsilon zeta eta theta iota kappa lambda"
     val t1near = "alpha beta gamma delta epsilon zeta eta theta iota kappa mu"
     val t2 = "north south east west upward downward inward outward leftward rightward forward"

@@ -23,7 +23,7 @@ class D08BandCapSpec extends AnyFunSuite {
   private val cap = DedupQueries.PairBlockCap
 
   private def stage(hot: Int): String = {
-    val dir = java.nio.file.Files.createTempDirectory(s"graft_d08cap_$hot").toString
+    val dir = SparkTestSession.tempDir(s"graft_d08cap_$hot").toString
     val base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " +
       "lam mu nu xi omicron pi rho sigma tau upsilon"
     val tmpl = "zzq template footer nav copyright zzq template footer nav copyright"

@@ -15,7 +15,7 @@ class D11BlockCapSpec extends AnyFunSuite {
   test("a block larger than D11BlockCap yields ZERO pairs; census reports it") {
     val cap = DedupQueries.PairBlockCap
     val hot = cap + 6 // one template page owning `hot` docs → one fp block
-    val dir = java.nio.file.Files.createTempDirectory("graft_d11cap").toString
+    val dir = SparkTestSession.tempDir("graft_d11cap").toString
 
     // hot block: identical boilerplate text → identical min-bigram fp.
     // small block: three identical docs → 3 pairs, the survivors.

@@ -15,7 +15,7 @@ class D15OverlapSpec extends AnyFunSuite {
   import spark.implicits._
 
   private def stage(): String = {
-    val dir = java.nio.file.Files.createTempDirectory("graft_d15").toString
+    val dir = SparkTestSession.tempDir("graft_d15").toString
     val latin = Seq(
       "alpha beta gamma delta epsilon zeta eta theta",
       "iota kappa lam mu nu xi omicron pi",
@@ -69,7 +69,7 @@ class D15OverlapSpec extends AnyFunSuite {
       "s_b" -> Seq("grape honey iris juniper kiwi lemon", hot),
       "s_c" -> Seq("mango nectar olive peach quince rose", hot,
         "grape honey iris juniper kiwi lemon"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_d15u").toString
+    val dir = SparkTestSession.tempDir("graft_d15u").toString
     texts.toSeq.sortBy(_._1).zipWithIndex
       .flatMap { case ((src, ts), si) =>
         ts.zipWithIndex.map { case (t, i) => (si * 100L + i, t, src) }

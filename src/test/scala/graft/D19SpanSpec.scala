@@ -14,7 +14,7 @@ class D19SpanSpec extends AnyFunSuite {
 
   /** Stage docs as a documents.parquet under a temp dir. */
   private def stage(docs: Seq[(Long, String)]): String = {
-    val dir = java.nio.file.Files.createTempDirectory("d19spec").toString
+    val dir = SparkTestSession.tempDir("d19spec").toString
     docs.toDF("doc_id", "text")
       .selectExpr("doc_id", "text", "'en' as lang", "'s' as source",
         "length(text) as n_chars")

@@ -52,7 +52,7 @@ class EngineWidthSpec extends AnyFunSuite {
   test("estate width counts parquet bytes only (sidecars excluded)") {
     // a synthetic estate dir: one 200 MiB parquet + a 900 MiB log —
     // width must price the parquet alone (ceil(200/96)=3, floored)
-    val dir = java.nio.file.Files.createTempDirectory("estate").toFile
+    val dir = SparkTestSession.tempDir("estate").toFile
     try {
       def write(name: String, mib: Int): Unit = {
         val f = new java.io.RandomAccessFile(

@@ -37,7 +37,7 @@ class FormatsSpec extends AnyFunSuite {
       .toSeq
 
   test("readings round-trip parquet ≡ json ≡ csv through the pipeline") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-formats").toString
+    val dir = SparkTestSession.tempDir("graft-formats").toString
     val expected = run(baseReadings)
     assert(expected.nonEmpty)
 
@@ -66,7 +66,7 @@ class FormatsSpec extends AnyFunSuite {
   test("schema evolution: mergeSchema unifies old and new file generations") {
     // a long-lived at-rest table gains a column mid-life; readers must
     // see ONE unified schema with NULLs for pre-evolution files
-    val dir = java.nio.file.Files.createTempDirectory("graft-evolve").toString
+    val dir = SparkTestSession.tempDir("graft-evolve").toString
     Seq(("AA", 1.0)).toDF("mac", "temperature").write.parquet(s"$dir/t")
     Seq(("BB", 2.0, 77L)).toDF("mac", "temperature", "battery_mv")
       .write.mode("append").parquet(s"$dir/t")
@@ -83,7 +83,7 @@ class FormatsSpec extends AnyFunSuite {
     // the reference drops malformed payloads rather than nulling them
     // (/root/reference/src/bluetooth/scanner.rs:36-45); at the SOURCE
     // layer the same policy is the reader's mode choice
-    val dir = java.nio.file.Files.createTempDirectory("graft-corrupt").toString
+    val dir = SparkTestSession.tempDir("graft-corrupt").toString
     java.nio.file.Files.write(
       java.nio.file.Paths.get(s"$dir/in.json"),
       java.util.Arrays.asList(
@@ -144,7 +144,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("x05: avro roundtrip keeps µs timestamps, nulls, binary; reader schema prunes") {
     import org.apache.spark.sql.types._
-    val dir = java.nio.file.Files.createTempDirectory("graft-avro").toString
+    val dir = SparkTestSession.tempDir("graft-avro").toString
     val rows = Seq(
       (1L, Timestamp.valueOf("2024-01-01 10:00:00.123456"), "a",
         Array[Byte](1, 2, 3), Some(1.5)),
@@ -175,7 +175,7 @@ class FormatsSpec extends AnyFunSuite {
 
   test("x08: binaryFile glob prunes foreign objects before any byte is read") {
     import java.nio.file.{Files, Paths}
-    val dir = Files.createTempDirectory("graft_binglob").toString
+    val dir = SparkTestSession.tempDir("graft_binglob").toString
     Files.write(Paths.get(dir, "ev_1.bin"), Array[Byte](5, 1, 2))
     Files.write(Paths.get(dir, "ev_2.bin"), Array[Byte](5, 3, 4))
     // a multimodal estate is never homogeneous: sidecar manifests,

@@ -15,12 +15,12 @@ class LayoutSpec extends AnyFunSuite {
   private val sf = "/root/testdata/sf0.001"
 
   test("bucketed orders⋈lineitem joins without any shuffle exchange") {
-    Layout.writeBucketed(
-      Tables.orders(spark, sf).select("o_orderkey", "o_totalprice"),
-      "orders_bkt", "o_orderkey", 8)
-    Layout.writeBucketed(
-      Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"),
-      "lineitem_bkt", "l_orderkey", 8)
+    val orders = graft.ops.Artifacts.bucketed(
+      spark, "layout_orders", "1", sf, Seq("orders.parquet"), "o_orderkey", 8)(
+      Tables.orders(spark, sf).select("o_orderkey", "o_totalprice"))
+    val lineitem = graft.ops.Artifacts.bucketed(
+      spark, "layout_lineitem", "1", sf, Seq("lineitem.parquet"), "l_orderkey", 8)(
+      Tables.lineitem(spark, sf).select("l_orderkey", "l_quantity"))
 
     // Force the shuffle path (at this tiny sf the planner would broadcast,
     // which hides exactly the exchange bucketing is meant to remove —
@@ -28,8 +28,8 @@ class LayoutSpec extends AnyFunSuite {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     try {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      val joined = spark.table("lineitem_bkt")
-        .join(spark.table("orders_bkt"), col("l_orderkey") === col("o_orderkey"))
+      val joined = spark.table(lineitem)
+        .join(spark.table(orders), col("l_orderkey") === col("o_orderkey"))
         .select("l_orderkey", "l_quantity", "o_totalprice")
 
       val plan = joined.queryExecution.executedPlan.toString
@@ -50,7 +50,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("range-clustered files cover disjoint key ranges (data-skipping precondition)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-range").toString + "/events"
+    val dir = SparkTestSession.tempDir("graft-range").toString + "/events"
     Layout.writeRangeClustered(Tables.events(spark, sf), "user_id", files = 8, dir)
 
     // per output file: the user_id span it covers
@@ -72,7 +72,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-ordered files bound BOTH dimensions; range-clustered bound only one") {
-    val root = java.nio.file.Files.createTempDirectory("graft-zorder").toString
+    val root = SparkTestSession.tempDir("graft-zorder").toString
     val ev = Tables.events(spark, sf).filter(col("value").isNotNull)
     Layout.writeZOrdered(ev, "user_id", "value", files = 16, s"$root/z")
     Layout.writeRangeClustered(ev, "user_id", files = 16, s"$root/r")
@@ -109,14 +109,14 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("z-order write handles empty input like the range writer (no NPE)") {
-    val root = java.nio.file.Files.createTempDirectory("graft-zorder-empty").toString
+    val root = SparkTestSession.tempDir("graft-zorder-empty").toString
     val empty = Tables.events(spark, sf).filter(lit(false))
     Layout.writeZOrdered(empty, "user_id", "value", files = 4, s"$root/z")
     assert(spark.read.parquet(s"$root/z").count() == 0)
   }
 
   test("compact rewrites a small-files directory to size-targeted files, losslessly") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft-compact").toString + "/t"
     // accrete the small-files pathology: 64 single-row-group fragments
     Tables.orders(spark, sf).repartition(64).write.parquet(dir)
     val original = spark.read.parquet(dir).orderBy("o_orderkey").collect()
@@ -133,7 +133,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("compact recurses into partition directories and preserves the layout") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-compact-part").toString + "/t"
+    val dir = SparkTestSession.tempDir("graft-compact-part").toString + "/t"
     Tables.events(spark, sf)
       .withColumn("p_date", to_date(col("ts")))
       .repartition(8).write.partitionBy("p_date").parquet(dir)
@@ -158,7 +158,7 @@ class LayoutSpec extends AnyFunSuite {
   }
 
   test("date-partitioned events scan prunes to the filtered days") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-part").toString + "/events"
+    val dir = SparkTestSession.tempDir("graft-part").toString + "/events"
     Layout.writeDatePartitioned(Tables.events(spark, sf), "ts", dir)
 
     val pruned = Layout.readPartitioned(spark, dir)

@@ -113,7 +113,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("micro-batch replay is idempotent (dynamic batch_id overwrite)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    val dir = SparkTestSession.tempDir("graft-replay").toString
     val agg = Pipeline.batch(readings(Seq(
       ("AA:BB:CC:DD:EE:01", ts("2024-01-01 10:00:00"), 4860L, 21396L, 50044L, 4L, -4L, 1036L, 66L))), tagDim)
     Pipeline.writeMicroBatch(agg, batchId = 7L, dir)
@@ -151,7 +151,7 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("dual sink writes both projections from one cached upstream") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-dual-sink").toString
+    val dir = SparkTestSession.tempDir("graft-dual-sink").toString
     val input = readings(Seq(
       ("AA:BB:CC:DD:EE:01", ts("2024-01-01 10:00:00"), 4860L, 21396L, 50044L, 4L, -4L, 1036L, 66L)))
     Pipeline.writeBatch(Pipeline.batch(input, tagDim), dir)

@@ -27,7 +27,7 @@ class StreamingSpec extends AnyFunSuite {
       .select(col("mac"), col("ts"), unhex(col("hex")).as("payload"))
     val tags = Seq(("AA:BB:CC:DD:EE:01", "Kitchen")).toDF("mac", "name")
 
-    val dir = java.nio.file.Files.createTempDirectory("graft-stream").toString
+    val dir = SparkTestSession.tempDir("graft-stream").toString
     val query = Pipeline.streaming(
       readings, tags,
       outDir = s"$dir/out", checkpoint = s"$dir/ckpt",
@@ -143,7 +143,7 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("file source: readStream over a readings directory (production source path)") {
-    val base = java.nio.file.Files.createTempDirectory("graft-filestream").toString
+    val base = SparkTestSession.tempDir("graft-filestream").toString
     val tagDim = Seq(("AA:BB:CC:DD:EE:01", "Kitchen")).toDF("mac", "name")
     def hexFor(tempRaw: Long): String =
       "05" + f"$tempRaw%04X" + "4E20" + "C350" + "000000000000" + "FFFF" + "01" + "0000" + "000000000000"
@@ -185,7 +185,7 @@ class StreamingSpec extends AnyFunSuite {
     // composed with q46's relational sink, end to end).
     import java.nio.file.{Files, Path}
     import java.nio.file.attribute.FileTime
-    val root = Files.createTempDirectory("graft-midbatch")
+    val root = SparkTestSession.tempDir("graft-midbatch")
     val src = Files.createDirectories(root.resolve("src"))
     val ckp = root.resolve("ckp").toString
     val url = s"jdbc:derby:memory:graftmb_${root.getFileName};create=true"

@@ -32,7 +32,7 @@ class SwitchSpec extends AnyFunSuite {
   }
 
   test("a long-document corpus flips the decision to join-back") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_switch").toString
+    val dir = SparkTestSession.tempDir("graft_switch").toString
     // 64 docs × 1024 unique-ish tokens ≈ 35 KB of shingle payload/doc —
     // far past the cutoff (even/odd pairs near-dup so verify has work)
     spark.range(64).select(

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.VectorIndex
 
 /** The persisted-ANN-artifact contract: probe keys derive from the one
-  * writer definition, builds are cached per source fingerprint, and the
+  * writer definition, builds are cached per source content stamp, and the
   * partitioned corpora hold exactly the source rows. */
 class VectorIndexSpec extends AnyFunSuite {
   import SparkTestSession.spark
