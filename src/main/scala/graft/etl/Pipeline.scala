@@ -4,7 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.functions.Num.oround
+import graft.functions.Format5
+import graft.functions.Num.{halfUp, oround}
 
 /** The reference-parity dataflow (OP-03..OP-13 composed), batch and
   * streaming: whitelist → validate → decode → 30-min tumbling window →
@@ -40,17 +41,24 @@ object Pipeline {
   /** OP-05 + OP-06: drop malformed payloads (never null them), decode the
     * rest with decode-stage rounding (`scanner.rs:35-83`).
     *
+    * Validity first, then ONE decode per reading: the byte predicate
+    * [[graft.functions.Format5.isValid]] (length 24, tag byte 5) is the
+    * exact set of payloads the decode does not map to NULL, so nothing
+    * NULL survives to the projection. Filtering on the decoded struct's
+    * `isNotNull` instead lets Catalyst push `isnotnull(format5_decode(
+    * payload))` below the projection, which decodes every row twice.
+    *
     * Uses the engine's native `format5_decode` expression (one codegen'd
-    * byte-level pass; invalid → NULL → dropped, the same drop-not-null
-    * discipline) — measured ~2× the composed substring→hex→conv chain,
-    * which survives as [[graft.functions.Format5.decodeAll]] and is pinned
-    * result-identical to the native path by the shared m03/m05 oracle.
-    * Requires a session with [[graft.plans.GraftExtensions]] (any
-    * [[graft.Engine]] session). */
+    * byte-level pass, no BigDecimal — see [[graft.plans.Format5Decode]]) —
+    * the composed substring→hex→conv chain survives as
+    * [[graft.functions.Format5.decodeAll]] and is pinned bit-identical to
+    * the native path over every raw value (`Format5DecodeSpec`) and by the
+    * shared m03/m05 oracle. Requires a session with
+    * [[graft.plans.GraftExtensions]] (any [[graft.Engine]] session). */
   def decode(readings: DataFrame): DataFrame =
     readings
+      .filter(Format5.isValid(col("payload")))
       .select(col("mac"), col("ts"), expr("format5_decode(payload)").as("dec"))
-      .filter(col("dec").isNotNull)
       .select(
         col("mac"), col("ts"),
         col("dec.temperature").as("temperature"),
@@ -61,18 +69,6 @@ object Pipeline {
         col("dec.acceleration_z").as("acceleration_z"),
         col("dec.movement_counter").as("movement_counter"))
 
-  /** OP-07 + OP-08 + OP-11: 30-minute tumbling window per sensor.
-    *
-    * - Averages are over already-rounded decode outputs and rounded AGAIN
-    *   here (2 dp atmospherics / 3 dp acceleration) — the reference's
-    *   two-stage rounding (`utils.rs:75-80` over `scanner.rs:68-73`).
-    * - Movement delta = (last − first) mod 256 in ARRIVAL (ts) order via
-    *   min_by/max_by — order-explicit, one aggregate, no window function
-    *   (`utils.rs:64-71`, u8 wrapping_sub).
-    * - `time` = window end (deterministic stand-in for the reference's
-    *   `now_utc()` stamped at aggregation, `utils.rs:82`).
-    * - Sensors with no readings in a window simply have no group — empty
-    *   groups are omitted, not nulled (`utils.rs:44-47`). */
   /** EXACT-INTEGER MEAN over d-decimal grid inputs: the decode stage
     * rounds every value to a fixed decimal grid, so `x·10^d` is an
     * integer recovered exactly by one half-up round; summing those
@@ -85,17 +81,49 @@ object Pipeline {
     * SAME exact integer pair in the same order, get the bit-identical
     * double, and round it the same way — and as a side effect the
     * pipeline's aggregates are bit-reproducible under ANY partitioning
-    * or parallelism, which a floating avg never is. */
+    * or parallelism, which a floating avg never is. The per-reading
+    * round is [[graft.functions.Num.halfUp]], Spark's `round(·, 0)`
+    * without its BigDecimal. */
   private def gridAvg(c: String, d: Int): Column = {
     val p = math.pow(10, d)
     oround(
-      (sum(round(col(c) * p, 0).cast("long")).cast("double") /
+      (sum(halfUp(col(c) * p).cast("long")).cast("double") /
         count(lit(1))) / p, d)
   }
 
-  def aggregate(decoded: DataFrame): DataFrame =
+  /** The aggregate's tumbling window (the reference's 30-minute interval
+    * loop, `main.rs:69-184`); [[aggregate]]'s movement key depends on it. */
+  private val WindowMinutes = 30
+  private val WindowMicros = WindowMinutes * 60L * 1000000L
+
+  /** OP-07 + OP-08 + OP-11: 30-minute tumbling window per sensor.
+    *
+    * - Averages are over already-rounded decode outputs and rounded AGAIN
+    *   here (2 dp atmospherics / 3 dp acceleration) — the reference's
+    *   two-stage rounding (`utils.rs:75-80` over `scanner.rs:68-73`).
+    * - Movement delta = (last − first) mod 256 in ARRIVAL (ts) order
+    *   (`utils.rs:64-71`, u8 wrapping_sub), with the counter as the
+    *   tiebreak when two readings share a timestamp (the reference's
+    *   arrival order is undefined there too — SURVEY §7 hard-point 2
+    *   forbids order-nondeterministic aggregates). Each reading carries
+    *   one long key, `pmod(unix_micros(ts), window) · 256 + counter`:
+    *   inside one window the offset orders exactly as `ts`, and the
+    *   counter (< 256) fills the low byte, so `max`/`min` of the key pick
+    *   the last/first reading by `(ts, counter)`, and `max − min ≡
+    *   last − first (mod 256)`. The offset is below 1.8e9 µs, so the key
+    *   stays under 2^39 for any timestamp, pre-1970 included. Plain
+    *   `max`/`min` of a long keep the aggregate on the hash path;
+    *   `max_by` over a struct ordering plans as a SortAggregate with a
+    *   sort on both sides of the shuffle.
+    * - `time` = window end (deterministic stand-in for the reference's
+    *   `now_utc()` stamped at aggregation, `utils.rs:82`).
+    * - Sensors with no readings in a window simply have no group — empty
+    *   groups are omitted, not nulled (`utils.rs:44-47`). */
+  def aggregate(decoded: DataFrame): DataFrame = {
+    val movementKey =
+      pmod(unix_micros(col("ts")), lit(WindowMicros)) * 256L + col("movement_counter")
     decoded
-      .groupBy(window(col("ts"), "30 minutes").as("w"), col("mac"))
+      .groupBy(window(col("ts"), s"$WindowMinutes minutes").as("w"), col("mac"))
       .agg(
         gridAvg("temperature", 2).as("temperature"),
         gridAvg("humidity", 2).as("humidity"),
@@ -103,24 +131,21 @@ object Pipeline {
         gridAvg("acceleration_x", 3).as("acceleration_x"),
         gridAvg("acceleration_y", 3).as("acceleration_y"),
         gridAvg("acceleration_z", 3).as("acceleration_z"),
-        // (ts, movement_counter) ordering: the counter tiebreak makes the
-        // delta deterministic when two readings share a timestamp (the
-        // reference's arrival order is undefined there too — SURVEY §7
-        // hard-point 2 forbids order-nondeterministic aggregates)
-        pmod(
-          max_by(col("movement_counter"), struct(col("ts"), col("movement_counter"))) -
-            min_by(col("movement_counter"), struct(col("ts"), col("movement_counter"))),
-          lit(256)).cast("int").as("movement_counter"),
+        pmod(max(movementKey) - min(movementKey), lit(256L)).cast("int").as("movement_counter"),
         count(lit(1)).cast("int").as("samples"))
       .select(col("w.end").as("time"), col("*")).drop("w")
+  }
 
   /** OP-10: broadcast left-outer enrichment with the 'Unknown' default
     * (`utils.rs:83-87`). The dimension is deduplicated by key first: the
     * reference's config is a HashMap (unique keys by construction,
     * `config.rs:36-53`), but a dirty dimension here would silently fan out
-    * every aggregate row through the left join. */
+    * every aggregate row through the left join. The dimension is
+    * config-sized, so it is deduplicated in ONE partition: no shuffle
+    * (and no exchange job) before it is broadcast. */
   def enrich(agg: DataFrame, tags: DataFrame): DataFrame = {
-    val dim = tags.select(upper(col("mac")).as("mac"), col("name")).dropDuplicates("mac")
+    val dim = tags.select(upper(col("mac")).as("mac"), col("name"))
+      .coalesce(1).dropDuplicates("mac")
     agg
       .join(broadcast(dim), Seq("mac"), "left_outer")
       .withColumn("name", coalesce(col("name"), lit("Unknown")))

@@ -40,9 +40,11 @@ object Format5 {
 
   /** OP-05 validation: exactly 24 bytes and format tag 5. Malformed rows
     * are DROPPED by the caller (filter), never nulled —
-    * `scanner.rs:36-45`. */
+    * `scanner.rs:36-45`. A byte comparison, no hex/conv: this is the
+    * cheap predicate callers filter on BEFORE decoding, and exactly the
+    * payloads `format5_decode` maps to NULL fail it. */
   def isValid(payload: Column): Column =
-    length(payload) === 24 && beUint(payload, 1, 1) === 5L
+    length(payload) === 24 && substring(payload, 1, 1) === lit(Array[Byte](5))
 
   def temperature(payload: Column): Column =
     oround(beInt16(payload, 2) * lit(0.005), 2)

@@ -25,4 +25,23 @@ object Num {
       val p = math.pow(10, d)
       round(c * p, 0) / p
     }
+
+  /** Spark's `round(x, 0)` on a double — `BigDecimal.valueOf(x)` rounded
+    * HALF_UP — bit for bit, without the BigDecimal and the
+    * `Double.toString` it costs per call. `rint` is the nearest integer
+    * except at a tie, where HALF_UP goes away from zero instead of to
+    * even.
+    * `x − rint(x)` is exact for every double (Sterbenz), so the tie test
+    * is exact, and so is `n.5 ± 0.5`. `+ 0.0` turns rint's −0.0 into the
+    * +0.0 a BigDecimal gives. NaN and ±∞ pass through, as in `round`. */
+  def halfUp(x: Double): Double = {
+    val n = math.rint(x)
+    if (math.abs(x - n) == 0.5) x + math.signum(x) * 0.5 else n + 0.0
+  }
+
+  /** [[halfUp]] as a column expression. */
+  def halfUp(c: Column): Column = {
+    val n = rint(c)
+    when(abs(c - n) === 0.5, c + signum(c) * 0.5).otherwise(n + 0.0)
+  }
 }

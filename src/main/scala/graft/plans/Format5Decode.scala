@@ -7,6 +7,8 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
 
+import graft.functions.Num
+
 /** Native Catalyst expression for the RuuviTag format-5 decode (OP-06,
   * `/root/reference/src/bluetooth/scanner.rs:35-83`) — the optional
   * deep-path from SURVEY §7: one byte-level pass instead of the composed
@@ -16,11 +18,17 @@ import org.apache.spark.sql.types._
   * Semantics are IDENTICAL to [[graft.functions.Format5]]:
   * sign-extended BE i16 temperature/acceleration, unsigned BE u16
   * humidity (clamped to 100 before rounding) and pressure (+50000 Pa),
-  * movement byte, decode-stage rounding (2 dp / 3 dp) implemented with
-  * exactly Spark `round`'s BigDecimal.valueOf + HALF_UP arithmetic in
-  * product space (see [[graft.functions.Num.oround]]). Invalid payloads
-  * (length ≠ 24 or format tag ≠ 5) decode to NULL so callers keep the
-  * reference's drop-not-null discipline with `.filter(col.isNotNull)`.
+  * movement byte, decode-stage rounding (2 dp / 3 dp) with the result
+  * Spark `round`'s BigDecimal.valueOf + HALF_UP arithmetic gives in
+  * product space (see [[graft.functions.Num.oround]]) — bit for bit, but
+  * without a BigDecimal per field ([[graft.functions.Num.halfUp]]; every
+  * raw value is checked in `Format5DecodeSpec`). Invalid payloads
+  * (length ≠ 24 or format tag ≠ 5) decode to NULL; callers drop them
+  * BEFORE decoding with
+  * [[graft.functions.Format5.isValid]], which has the same truth table —
+  * filtering on the decode's own `isNotNull` makes Catalyst push
+  * `isnotnull(format5_decode(payload))` below the projection and decode
+  * every row twice.
   *
   * Registered as the SQL function `format5_decode` by
   * [[GraftExtensions]]; codegen emits a single static call — the
@@ -76,13 +84,10 @@ object Format5Decode {
   * `graft.plans.Format5Util.decode(bytes)` directly). */
 object Format5Util {
 
-  /** Mirror of Spark `round(x*10^d, 0)/10^d` (= `Num.oround`):
-    * BigDecimal.valueOf(product) + HALF_UP — both Spark paths
-    * (interpreted RoundBase and its codegen) use BigDecimal.valueOf. */
-  private def roundP(x: Double, p: Double): Double =
-    java.math.BigDecimal.valueOf(x * p)
-      .setScale(0, java.math.RoundingMode.HALF_UP)
-      .doubleValue() / p
+  /** Mirror of Spark `round(x*10^d, 0)/10^d` (= `Num.oround`), whose
+    * product rounding [[graft.functions.Num.halfUp]] reproduces bit for
+    * bit without a BigDecimal per field. */
+  private def roundP(x: Double, p: Double): Double = Num.halfUp(x * p) / p
 
   private def beU16(b: Array[Byte], i: Int): Int =
     ((b(i) & 0xFF) << 8) | (b(i + 1) & 0xFF)

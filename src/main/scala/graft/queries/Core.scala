@@ -622,7 +622,7 @@ object Core {
     * Fresh source/checkpoint/sink dirs per run — replaying the replay
     * is itself idempotent. */
   private def q33(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_replay", "q33", d)((s, st) => {
+    val r = new Replay(s0, "graft_replay", "q33", d, Seq("events.parquet"))((s, st) => {
       def sentinel(ts: String) = s.range(1).select(
         lit("AA:BB:CC:DD:EE:99").as("mac"), // NOT in the whitelist
         to_timestamp(lit(ts)).as("ts"),
@@ -658,16 +658,16 @@ object Core {
     *    write;
     *  - distinct mtimes pin the file-source processing order (real data
     *    first, watermark-flush sentinels last) via copy-then-FileTime;
-    *  - the source is STAGED ONCE PER JVM: the staged files are a pure
-    *    function of (query, sfDir), so they live in a shared tmpdir
-    *    keyed by (prefix, sfDir, pid) and the staging closure runs only
-    *    on the first construction — a repeated in-JVM run of the same
-    *    replay (Bench's min-of-2, repeated specs) skips the synthesis +
-    *    write entirely. The dir is built under a `_build` suffix and
-    *    promoted with an atomic move, so no reader ever lists a
-    *    half-staged source (a stale `_build` from an aborted staging is
-    *    removed first, so one failure never wedges the JVM's replays);
-    *  - checkpoint and sink are ALSO per-JVM, keyed by (runKey, sfDir):
+    *  - the source is STAGED ONCE, not once per JVM: the staged files are
+    *    a pure function of (prefix, the tables the staging closure reads),
+    *    so they are an on-disk artifact ([[Replay.source]]) keyed on the
+    *    prefix, [[Replay.SourceVersion]] and those tables' content stamp.
+    *    The staging closure runs only when no JVM has published that key
+    *    — a repeated run of the same replay (Bench's min-of-2, Verify
+    *    after Bench, repeated specs) skips the synthesis + write entirely,
+    *    and the artifact store's atomic publish means no reader ever
+    *    lists a half-staged source;
+    *  - checkpoint and sink are per-JVM, keyed by (runKey, sfDir):
     *    a reconstruction of the same replay RESUMES the stream over the
     *    kept checkpoint — AvailableNow finds every staged file already
     *    committed, drains nothing, and the sink already holds the full
@@ -677,12 +677,12 @@ object Core {
     *    checkpoint, not the harness, owns progress. Bench's min-of-2
     *    therefore measures cold replay once and incremental resume
     *    once — the two costs a long-running streaming job actually has;
-    *  - every tmpdir this JVM creates is registered for shutdown-hook
-    *    removal, and dirs left by DEAD graft JVMs (crashed runs whose
+    *  - every run root this JVM creates is registered for shutdown-hook
+    *    removal, and run roots left by DEAD graft JVMs (crashed runs whose
     *    hook never fired) are swept at first use, so repeated
     *    bench/verify runs do not accumulate unbounded temp data. */
   private final class Replay(
-      s0: SparkSession, prefix: String, runKey: String, d: String)(
+      s0: SparkSession, prefix: String, runKey: String, d: String, tables: Seq[String])(
       stages: (SparkSession, Replay.Stager) => Unit) {
     val session: SparkSession = {
       val s = s0.newSession()
@@ -704,19 +704,20 @@ object Core {
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
       s
     }
-    val srcDir: String = Replay.ensureStaged(session, prefix, d, stages)
+    val srcDir: String = Replay.source(session, prefix, d, tables)(stages)
     private val root = Replay.runRoot(runKey, d)
     val outDir: String = root.resolve("out").toString
     val ckpDir: String = root.resolve("ckp").toString
   }
 
-  private object Replay {
-    import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+  private[graft] object Replay {
+    import java.nio.file.{Files, Path, Paths}
+    import graft.ops.Artifacts
     import graft.ops.Artifacts.rmTree
 
     private val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
     private val tmpBase = Paths.get(System.getProperty("java.io.tmpdir"))
-    /** Every dir this JVM creates — reclaimed by the shutdown hook. */
+    /** Every run root this JVM creates — reclaimed by the shutdown hook. */
     private val owned = java.util.concurrent.ConcurrentHashMap.newKeySet[Path]()
     locally {
       Runtime.getRuntime.addShutdownHook(new Thread(() => {
@@ -725,16 +726,13 @@ object Core {
       sweepDeadJvmDirs()
     }
 
-    /** Dirs named `graft_{src,run}_<pidHex>_…` whose owning JVM is dead
+    /** Run roots named `graft_run_<pidHex>_…` whose owning JVM is dead
       * (a crashed run never fires its shutdown hook) are reclaimed here,
       * so repeated bench/verify runs keep java.io.tmpdir bounded. */
     private def sweepDeadJvmDirs(): Unit = {
       val listing = Files.list(tmpBase)
       try listing
-        .filter { p =>
-          val n = p.getFileName.toString
-          n.startsWith("graft_src_") || n.startsWith("graft_run_")
-        }
+        .filter(_.getFileName.toString.startsWith("graft_run_"))
         .forEach { p =>
           val dead = p.getFileName.toString.split("_").lift(2)
             .flatMap(h => scala.util.Try(java.lang.Long.parseLong(h, 16)).toOption)
@@ -752,7 +750,8 @@ object Core {
 
     /** Handed to the staging closure while the shared source dir is
       * being built: writes one single-file parquet micro-batch with a
-      * pinned mtime (the file-source processing order). */
+      * pinned mtime (the file-source processing order; the publishing
+      * rename keeps it). */
     final class Stager private[Replay] (build: Path) {
       def stage(df: DataFrame, name: String, mtimeMs: Long): Unit =
         stageFile(df, build, name, mtimeMs)
@@ -777,22 +776,20 @@ object Core {
       rmTree(tmp) // the copied data file is the only survivor
     }
 
-    private def ensureStaged(
-        s: SparkSession, prefix: String, d: String,
-        stages: (SparkSession, Stager) => Unit): String = synchronized {
-      val dst = tmpBase.resolve(s"graft_src_${pidHex}_${prefix}_${pathKey(d)}")
-      if (!Files.exists(dst)) {
-        val buildPath = Paths.get(dst.toString + "_build")
-        rmTree(buildPath) // a stale partial from an aborted staging
-        val build = Files.createDirectories(buildPath)
-        owned.add(buildPath)
-        stages(s, new Stager(build))
-        Files.move(build, dst, StandardCopyOption.ATOMIC_MOVE)
-        owned.remove(buildPath)
-        owned.add(dst)
+    /** Bump when a staging closure changes: published sources are
+      * otherwise served as they are. */
+    private val SourceVersion = "1"
+
+    /** The staged source of the replays sharing `prefix` over `d`, whose
+      * staging closure reads only `tables` of `d` — built once by
+      * `stages` and published through [[graft.ops.Artifacts.dir]], so
+      * every JVM shares it and a restaged table gets a fresh one. */
+    private[graft] def source(
+        s: SparkSession, prefix: String, d: String, tables: Seq[String])(
+        stages: (SparkSession, Stager) => Unit): String =
+      Artifacts.dir(s, s"replay_$prefix", SourceVersion, d, tables) { p =>
+        stages(s, new Stager(Files.createDirectories(Paths.get(p))))
       }
-      dst.toString
-    }
 
     /** The per-JVM checkpoint + sink root of one replay, keyed by
       * (runKey, sfDir): first construction streams cold, every later
@@ -823,7 +820,7 @@ object Core {
     * closes and emits before AvailableNow drains. The sentinel user is
     * filtered from the result. */
   private def q36(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_sessions", "q36", d)((s, st) => {
+    val r = new Replay(s0, "graft_sessions", "q36", d, Seq("events.parquet"))((s, st) => {
       def sentinel(ts: String, id: Long) = s.range(1).select(
         lit(-1L).as("user_id"), to_timestamp(lit(ts)).as("ts"), lit(id).as("event_id"))
       st.stage(events(s, d).select(col("user_id"), col("ts"), col("event_id")),
@@ -865,13 +862,13 @@ object Core {
     * aggregated to exactly q24's batch shape, so ALL THREE runtimes are
     * pinned to the one declarative session definition by an independent
     * engine. The staging prefix is deliberately q36's: the staged
-    * micro-batch files are identical, so the per-JVM artifact is shared
+    * micro-batch files are identical, so the staged artifact is shared
     * between the two sessionizer replays (one synthesis pays for both).
     * Sentinel/watermark mechanics are q36's unchanged — TWS timers fire
     * on the same batch-N-uses-watermark-of-N−1 schedule as GroupState
     * timeouts. */
   private def q43(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_sessions", "q43", d)((s, st) => {
+    val r = new Replay(s0, "graft_sessions", "q43", d, Seq("events.parquet"))((s, st) => {
       def sentinel(ts: String, id: Long) = s.range(1).select(
         lit(-1L).as("user_id"), to_timestamp(lit(ts)).as("ts"), lit(id).as("event_id"))
       st.stage(events(s, d).select(col("user_id"), col("ts"), col("event_id")),
@@ -923,7 +920,7 @@ object Core {
     * comes from checkpoint + state store + idempotent sink, not from a
     * hand-rolled reconnect loop — and this query proves the recovery
     * path END TO END against an independent engine, not just in a
-    * unit test. Run-LOCAL staging (not the shared per-JVM artifact):
+    * unit test. Run-LOCAL staging (not the shared staged artifact):
     * mutating the source between incarnations is the point. */
   private def q44(s0: SparkSession, d: String): DataFrame = {
     import java.nio.file.Files
@@ -979,7 +976,7 @@ object Core {
     * are read back, and aggregate to per-type totals whose oracle is
     * the PLAIN events table — each event exactly once. */
   private def q45(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_dedup", "q45", d)((s, st) => {
+    val r = new Replay(s0, "graft_dedup", "q45", d, Seq("events.parquet"))((s, st) => {
       val ev = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
       val (cut1, cut2) =
@@ -1034,7 +1031,7 @@ object Core {
     * projection, so the streamed answer must hash-equal the batch
     * text. */
   private def q57(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_hopwin", "q57", d)((s, st) => {
+    val r = new Replay(s0, "graft_hopwin", "q57", d, Seq("events.parquet"))((s, st) => {
       val ev = events(s, d)
         .filter(col("ts").isNotNull)
         .select(col("ts"), col("event_type"), col("value"))
@@ -1133,7 +1130,8 @@ object Core {
       // proportional id-ordered thirds (any id-ordered batching yields
       // the identical result — see the oracle note — so the cut choice
       // is a realism knob, not a semantics one; staging runs once per
-      // JVM, so the one max() action is staging cost, not query cost)
+      // published source, so the one max() action is staging cost, not
+      // query cost)
       val mx = docs.agg(max("doc_id")).head().getLong(0)
       val (c1, c2) = (mx / 3, 2 * mx / 3)
       st.stage(docs.filter(col("doc_id") < c1), "batch0", 1000000000000L)
@@ -1143,7 +1141,7 @@ object Core {
     }
 
   private def q54(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_neardup", "q54", d)(q54Stage(d))
+    val r = new Replay(s0, "graft_neardup", "q54", d, Seq("documents.parquet"))(q54Stage(d))
     val s = r.session
     val resDir = r.outDir
     val stream = s.readStream.schema("doc_id LONG, text STRING")
@@ -1187,7 +1185,7 @@ object Core {
     * discipline). Shares q54's staged source (same prefix), own
     * index/checkpoint (runKey q54b). */
   private def q54b(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_neardup", "q54b", d)(q54Stage(d))
+    val r = new Replay(s0, "graft_neardup", "q54b", d, Seq("documents.parquet"))(q54Stage(d))
     val s = r.session
     val resDir = r.outDir
     val stream = s.readStream.schema("doc_id LONG, text STRING")
@@ -1258,7 +1256,7 @@ object Core {
       s0: SparkSession, d: String, runKey: String,
       targetRowsPerBucket: Long, minBuckets: Int,
       forceCompact: Boolean): DataFrame = {
-    val r = new Replay(s0, "graft_incdedup", runKey, d)(q58Stage(d))
+    val r = new Replay(s0, "graft_incdedup", runKey, d, Seq("documents.parquet"))(q58Stage(d))
     val s = r.session
     val resDir = r.outDir
     val idxRoot = r.outDir + "_index"
@@ -1306,7 +1304,7 @@ object Core {
     * algebra and the rounded-rank discipline live at
     * [[graft.streaming.AnnStream]]. */
   private def q60(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_annstream", "q60", d)((s, st) => {
+    val r = new Replay(s0, "graft_annstream", "q60", d, Seq("embeddings.parquet"))((s, st) => {
       val delta = embeddings(s, d).select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 5 === 4)
       val mx = delta.agg(max("vec_id")).head().getLong(0)
@@ -1386,7 +1384,7 @@ object Core {
     * result read are q60's verbatim; shares q60's staged source (same
     * prefix), own index/checkpoint (runKey q60b). */
   private def q60b(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_annstream", "q60b", d)((s, st) => {
+    val r = new Replay(s0, "graft_annstream", "q60b", d, Seq("embeddings.parquet"))((s, st) => {
       val delta = embeddings(s, d).select(col("vec_id"), col("embedding"))
         .filter(col("vec_id") % 5 === 4)
       val mx = delta.agg(max("vec_id")).head().getLong(0)
@@ -1480,7 +1478,7 @@ object Core {
     * side, so the batch query's oracle text is this query's oracle
     * verbatim — the q36/q43 one-oracle discipline. */
   private def q61(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_decontam", "q61", d)((s, st) => {
+    val r = new Replay(s0, "graft_decontam", "q61", d, Seq("documents.parquet"))((s, st) => {
       val train = documents(s, d).select(col("doc_id"), col("lang"), col("text"))
         .filter(!AnalyticsQueries.isBenchDoc(col("doc_id")))
       val mx = train.agg(max("doc_id")).head().getLong(0)
@@ -1530,9 +1528,9 @@ object Core {
     * the same batch ids into the same in-memory database and the
     * delete-then-insert idempotence keeps the table identical, which
     * is itself the crash-replay property under test. Shares q33's
-    * per-JVM staged source (same prefix, same files). */
+    * staged source (same prefix, same files). */
   private def q46(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_replay", "q46", d)((s, st) => {
+    val r = new Replay(s0, "graft_replay", "q46", d, Seq("events.parquet"))((s, st) => {
       def sentinel(ts: String) = s.range(1).select(
         lit("AA:BB:CC:DD:EE:99").as("mac"), // NOT in the whitelist
         to_timestamp(lit(ts)).as("ts"),
@@ -1584,7 +1582,7 @@ object Core {
     * watermark — nothing is dropped as late, so the replay equals the
     * batch join exactly. */
   private def q39(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_ssjoin", "q39", d)((s, st) => {
+    val r = new Replay(s0, "graft_ssjoin", "q39", d, Seq("events.parquet"))((s, st) => {
       val ev = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val (cut1, cut2) =
@@ -1645,7 +1643,7 @@ object Core {
     * canonical streaming enrich: dimension refreshes swap the
     * broadcast between micro-batches without touching stream state. */
   private def q40(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_enrich", "q40", d)((s, st) => {
+    val r = new Replay(s0, "graft_enrich", "q40", d, Seq("events.parquet"))((s, st) => {
       val ev = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       st.stage(ev.filter(col("event_id") % 3 === 0), "batch0", 1000000000000L)
@@ -1705,7 +1703,7 @@ object Core {
     * cost of LEFT OUTER is that left rows live to watermark expiry
     * instead of leaving at first match. */
   private def q42(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_ssouter", "q42", d)((s, st) => {
+    val r = new Replay(s0, "graft_ssouter", "q42", d, Seq("events.parquet"))((s, st) => {
       val ev = events(s, d)
         .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
       val (cut1, cut2) =

@@ -92,14 +92,15 @@ object MultimodalQueries {
     * `format5_decode` ([[graft.plans.Format5Decode]], registered by
     * [[graft.plans.GraftExtensions]]): one byte-level pass with codegen
     * instead of the composed substring→hex→conv chain. Invalid payloads
-    * decode to NULL and are dropped by the isNotNull filter (same
-    * drop-not-null semantics, different mechanism). Shares M3's oracle —
-    * the two implementations must be indistinguishable. */
+    * are dropped by M3's `Format5.isValid` filter BEFORE the decode
+    * (`Pipeline.decode`'s shape: filtering on the decoded struct's
+    * `isNotNull` would decode every row twice). Shares M3's oracle — the
+    * two implementations must be indistinguishable. */
   private def m05(s: SparkSession, d: String): DataFrame = {
     events(s, d)
       .select(col("event_id"), unhex(syntheticPayloadHex).as("payload"))
+      .filter(Format5.isValid(col("payload")))
       .select(col("event_id"), expr("format5_decode(payload)").as("dec"))
-      .filter(col("dec").isNotNull)
       .select(
         col("event_id"),
         col("dec.temperature").as("temperature"),

@@ -41,6 +41,48 @@ class Format5DecodeSpec extends AnyFunSuite {
     }
   }
 
+  test("every raw 16-bit value decodes bit-identically to the composed chain") {
+    // row r carries raw value r in every 16-bit field (the signed fields
+    // read it as r's two's complement) and r mod 256 in the movement byte
+    val payloads = spark.range(65536).select(
+      col("id"),
+      unhex(Format5.encodeHex(col("id"), col("id"), col("id"), col("id"), col("id"),
+        col("id"), col("id"))).as("payload"))
+    def bits(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+      df.collect().map { r =>
+        r.getLong(0) -> ((1 to 6).map(i => java.lang.Double.doubleToRawLongBits(r.getDouble(i))) :+
+          r.getLong(7))
+      }.toMap
+    val composed = bits(payloads.select(col("id") +: Format5.decodeAll(col("payload")): _*))
+    val native = bits(payloads
+      .select(col("id"), expr("format5_decode(payload)").as("dec")).select("id", "dec.*"))
+    assert(composed.size == 65536 && native.size == 65536)
+    val fields = graft.plans.Format5Decode.schema.fieldNames
+    val mismatches = (0L until 65536L).flatMap(r =>
+      fields.indices.collect {
+        case i if native(r)(i) != composed(r)(i) =>
+          s"${fields(i)} raw $r: native ${native(r)(i)} composed ${composed(r)(i)}"
+      })
+    assert(mismatches.isEmpty, s"${mismatches.size} mismatches, first: ${mismatches.take(5)}")
+  }
+
+  test("Pipeline.decode drops lengths 23 and 25, tag != 5 and NULL; keeps valid") {
+    val valid = "0512FC5394C37C0004FFFC040CAC364200CDCBB8334C884F"
+    val decoded = graft.etl.Pipeline.decode(Seq(
+      ("valid", valid),
+      ("len23", valid.dropRight(2)),
+      ("len25", valid + "00"),
+      ("tag4", "04" + valid.drop(2)),
+      ("tag0", "00" + valid.drop(2)),
+      ("null", null: String))
+      .toDF("mac", "h")
+      .select(col("mac"), current_timestamp().as("ts"), unhex(col("h")).as("payload")))
+    val rows = decoded.collect()
+    assert(rows.map(_.getAs[String]("mac")).toSeq == Seq("valid"))
+    assert(rows.head.getAs[Double]("temperature") == 24.3 &&
+      rows.head.getAs[Long]("movement_counter") == 66L)
+  }
+
   test("invalid payloads decode to NULL (drop-not-null via isNotNull)") {
     val rows = Seq(
       ("valid", "0512FC5394C37C0004FFFC040CAC364200CDCBB8334C884F"),
@@ -71,3 +113,4 @@ class Format5DecodeSpec extends AnyFunSuite {
       r.getDouble(2) == 1000.44 && r.getLong(3) == 66L)
   }
 }
+

@@ -16,8 +16,9 @@ import graft.ops.Artifacts
   * Bench/Verify storage sweep ([[Engine.sweepPersistentRDDs]]) while
   * ordinary checkpoints and retired artifacts are freed; a restaged input
   * rebuilds; concurrent callers build once; a failed build publishes
-  * nothing and reaches every waiter; nested builds complete; and a
-  * stopped session's entries exempt nothing in a later session. */
+  * nothing and reaches every waiter; nested builds complete; a stream
+  * replay source stages once; and a stopped session's entries exempt
+  * nothing in a later session. */
 class PinnedArtifactSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAll {
   import SparkTestSession.spark
 
@@ -141,6 +142,28 @@ class PinnedArtifactSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
     check()
     stage(col("c_custkey") % 3 === 0)
     check()
+  }
+
+  test("a replay source stages once, under a JVM-independent name, with its pinned mtimes") {
+    val dir = stagedTable(5)
+    val prefix = s"spec_replay_${System.nanoTime()}"
+    val builds = new AtomicInteger()
+    def lookup(): String =
+      graft.queries.Core.Replay.source(spark, prefix, dir, Seq("t.parquet")) { (s, st) =>
+        builds.incrementAndGet()
+        st.stage(s.read.parquet(s"$dir/t.parquet"), "batch0", 1000000000000L)
+        st.stage(s.range(1).toDF("x"), "batch1", 1000000060000L)
+      }
+    val first = lookup()
+    assert(lookup() == first && builds.get == 1)
+    // published in the shared store under a name with no pid in it, so
+    // every later JVM resolves the same files
+    val src = Paths.get(first)
+    assert(src.getParent == Artifacts.root && src.getFileName.toString.startsWith(s"replay_$prefix-"))
+    // the publishing rename keeps the file-source processing order
+    assert(Files.getLastModifiedTime(src.resolve("batch0.parquet")).toMillis == 1000000000000L)
+    assert(Files.getLastModifiedTime(src.resolve("batch1.parquet")).toMillis == 1000000060000L)
+    assert(spark.read.parquet(first).count() == 6)
   }
 
   test("two threads asking for one key run the build once") {

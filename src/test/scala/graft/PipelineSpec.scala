@@ -77,6 +77,67 @@ class PipelineSpec extends AnyFunSuite {
     assert(out.toSeq == expected.toSeq)
   }
 
+  private def utc(s: String) = Timestamp.from(java.time.Instant.parse(s))
+
+  /** (mac, window end, movement delta, samples) of each output row. */
+  private def movement(input: DataFrame): Seq[(String, java.time.Instant, Int, Int)] =
+    Pipeline.batch(input, tagDim).orderBy("mac", "time").collect().toSeq.map(r => (
+      r.getAs[String]("mac"), r.getAs[Timestamp]("time").toInstant,
+      r.getAs[Int]("movement_counter"), r.getAs[Int]("samples")))
+
+  /** A reading whose only varying fields are the time and the counter. */
+  private def tick(mac: String, at: String, mc: Long) =
+    (mac, utc(at), 4000L, 20000L, 50000L, 0L, 0L, 1000L, mc)
+
+  test("movement delta: the counter breaks a timestamp tie, first and last alike") {
+    val (s1, s2) = ("AA:BB:CC:DD:EE:01", "AA:BB:CC:DD:EE:02")
+    val out = movement(readings(Seq(
+      // last position tied at 10:01: (ts, counter) order makes 250 last,
+      // so the delta is 250 − 3, whatever order the rows arrive in
+      tick(s1, "2024-01-01T10:01:00Z", 250L),
+      tick(s1, "2024-01-01T10:00:00Z", 3L),
+      tick(s1, "2024-01-01T10:01:00Z", 10L),
+      // first position tied at 10:00: 7 is first, last is 20 → 13
+      tick(s2, "2024-01-01T10:00:00Z", 200L),
+      tick(s2, "2024-01-01T10:00:00Z", 7L),
+      tick(s2, "2024-01-01T10:20:00Z", 20L))))
+    val end = java.time.Instant.parse("2024-01-01T10:30:00Z")
+    assert(out == Seq((s1, end, 247, 3), (s2, end, 13, 3)))
+  }
+
+  test("movement delta at window edges and before 1970") {
+    val s1 = "AA:BB:CC:DD:EE:01"
+    val out = movement(readings(Seq(
+      // [1969-12-31 23:30, 1970-01-01 00:00): first and last microsecond
+      tick(s1, "1969-12-31T23:45:00Z", 100L),
+      tick(s1, "1969-12-31T23:59:59.999999Z", 10L),
+      tick(s1, "1969-12-31T23:30:00Z", 200L),
+      // the epoch itself opens the next window
+      tick(s1, "1970-01-01T00:00:00Z", 5L),
+      // [2024-01-01 10:00, 10:30): first and last microsecond
+      tick(s1, "2024-01-01T10:29:59.999999Z", 0L),
+      tick(s1, "2024-01-01T10:00:00Z", 1L),
+      tick(s1, "2024-01-01T10:30:00Z", 9L))))
+    def at(i: String) = java.time.Instant.parse(i)
+    assert(out == Seq(
+      (s1, at("1970-01-01T00:00:00Z"), 66, 3), // (10 − 200) mod 256
+      (s1, at("1970-01-01T00:30:00Z"), 0, 1),
+      (s1, at("2024-01-01T10:30:00Z"), 255, 2), // (0 − 1) mod 256
+      (s1, at("2024-01-01T11:00:00Z"), 0, 1)))
+  }
+
+  test("a window whose only readings are invalid yields no row") {
+    val s1 = "AA:BB:CC:DD:EE:01"
+    val input = readings(Seq(tick(s1, "2024-01-01T10:00:00Z", 1L)))
+      .unionByName(Seq(
+        (s1, utc("2024-01-01T10:40:00Z"), "04" + "0" * 46), // wrong tag
+        (s1, utc("2024-01-01T10:50:00Z"), "05" + "0" * 44), // 23 bytes
+        (s1, utc("2024-01-01T10:55:00Z"), null: String))
+        .toDF("mac", "ts", "h").select(col("mac"), col("ts"), unhex(col("h")).as("payload")))
+    assert(movement(input) ==
+      Seq((s1, java.time.Instant.parse("2024-01-01T10:30:00Z"), 0, 1)))
+  }
+
   test("empty interval produces zero rows, not nulls") {
     val input = readings(Seq(
       ("AA:BB:CC:DD:EE:01", ts("2024-01-01 10:00:00"), 4000L, 20000L, 50000L, 0L, 0L, 1000L, 1L)))

@@ -827,4 +827,42 @@ class PlanAssertionsSpec extends AnyFunSuite {
     val w = rows.map(_.getDouble(2))
     assert(w.zip(w.tail).forall { case (a, b) => a >= b })
   }
+
+  test("Pipeline.batch: hash window aggregate, one decode per reading, no shuffle under a broadcast") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.aggregate.{HashAggregateExec, SortAggregateExec}
+    import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
+    import org.apache.spark.sql.functions._
+    val dir = SparkTestSession.tempDir("graft-plan-etl").toString
+    spark.range(2000).select(
+      concat(lit("aa:bb:cc:dd:ee:0"), (col("id") % 4).cast("string")).as("mac"),
+      timestamp_seconds(col("id") * 60).as("ts"),
+      unhex(graft.functions.Format5.encodeHex(col("id"), col("id"), col("id"), col("id"),
+        col("id"), col("id"), col("id"))).as("payload"))
+      .write.parquet(s"$dir/readings")
+    val tags = spark.range(3).select(
+      concat(lit("AA:BB:CC:DD:EE:0"), col("id").cast("string")).as("mac"),
+      col("id").cast("string").as("name"))
+    val df = graft.etl.Pipeline.batch(spark.read.parquet(s"$dir/readings"), tags)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val text = plan.toString
+    val helper = new AdaptiveSparkPlanHelper {}
+    // the (window, mac) aggregate, partial and final; the 48-row tag
+    // dimension's dropDuplicates (a `first` buffer) may sort-aggregate
+    def byWindow(keys: Seq[org.apache.spark.sql.catalyst.expressions.NamedExpression]) =
+      keys.exists(_.name == "window")
+    val hash = helper.collect(plan) { case a: HashAggregateExec if byWindow(a.groupingExpressions) => a }
+    val sort = helper.collect(plan) { case a: SortAggregateExec if byWindow(a.groupingExpressions) => a }
+    assert(hash.size == 2 && sort.isEmpty,
+      s"the window aggregate must stay on the hash path, got:\n$text")
+    val decodes = helper.flatMap(plan)(_.expressions.flatMap(_.collect {
+      case e: graft.plans.Format5Decode => e }))
+    assert(decodes.size == 1, s"each reading must be decoded once, got:\n$text")
+    val broadcasts = helper.collect(plan) { case b: BroadcastExchangeExec => b }
+    assert(broadcasts.size == 2, s"whitelist and enrich broadcasts expected, got:\n$text")
+    broadcasts.foreach(b =>
+      assert(helper.collect(b) { case e: ShuffleExchangeExec => e }.isEmpty,
+        s"a broadcast side must not shuffle, got:\n$b"))
+  }
 }
