@@ -37,15 +37,14 @@ object Bench {
     // in the JSON host stamp below for dump provenance.
     val shuffleWidth = Engine.tuneForEstate(spark, sfDir)
     val errs = scala.collection.mutable.ArrayBuffer[String]()
-    // SPILL TELEMETRY (round-15 verdict task 8: g04's closure showed
-    // wall-clock alone misattributes one-box spill to plan defects —
-    // the α tables need "more work" separated from "same work,
-    // spilled"). A stage-metrics listener accumulates
+    // SPILL TELEMETRY: wall-clock alone misattributes one-box spill to
+    // plan defects — the α tables need "more work" separated from
+    // "same work, spilled". A stage-metrics listener accumulates
     // memory/disk-spill and peak-execution-memory; per-query deltas
     // ride the JSON as `queries_spill` when SPARK_GRAFT_BENCH_SPILL=1.
     // Gated because attribution needs a drain sleep per query
-    // (ListenerBus is async — the G04StageProbe discipline), which
-    // adds untimed wall a default sweep shouldn't pay.
+    // (ListenerBus is async), which adds untimed wall a default sweep
+    // shouldn't pay.
     val wantSpill = sys.env.get("SPARK_GRAFT_BENCH_SPILL").contains("1")
     val memSpill = new java.util.concurrent.atomic.AtomicLong
     val diskSpill = new java.util.concurrent.atomic.AtomicLong

@@ -48,7 +48,7 @@ object PipelineDemo {
     println(s"=== $outDir/movement_data ===")
     spark.read.parquet(s"$outDir/movement_data").show(truncate = false)
 
-    // probes: empty dimension drops everything; duplicate dimension rows
+    // edge cases: empty dimension drops everything; duplicate dimension rows
     // must not multiply readings through the semi-join
     println("empty-tags row count: " + Pipeline.batch(readings, tags.limit(0)).count())
     println("dup-tags samples: " + Pipeline.batch(readings, tags.unionByName(tags))
@@ -78,9 +78,9 @@ object PipelineDemo {
       val stream = ms.toDF().toDF("mac", "ts", "payload")
       // per-run checkpoint dir: reusing one across runs would make the
       // recovered query demand MemoryStream batches this run never had
-      val ckpt = java.nio.file.Files.createTempDirectory("graft-demo-ckpt").toString
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-demo-ckpt")
       val q = graft.etl.Pipeline.streaming(
-        stream, tags, s"$outDir/stream", ckpt,
+        stream, tags, s"$outDir/stream", ckpt.toString,
         trigger = Trigger.ProcessingTime(0), watermark = "0 seconds")
       try {
         val payload = readings.select("payload").collect().head.getAs[Array[Byte]](0)
@@ -92,7 +92,10 @@ object PipelineDemo {
         new java.io.File(s"$outDir/stream/sensor_data").listFiles()
           .map(_.getName).sorted.foreach(n => println(s"  $n"))
         spark.read.parquet(s"$outDir/stream/sensor_data").show(truncate = false)
-      } finally { q.stop(); q.awaitTermination() }
+      } finally {
+        try { q.stop(); q.awaitTermination() }
+        finally graft.ops.Artifacts.rmTree(ckpt)
+      }
     }
 
     // SQL surface: registered views + the extension-registered function

@@ -35,11 +35,10 @@ object TextFns {
     * caller already did; the reference's drop-short-rows discipline,
     * `/root/reference/src/bluetooth/scanner.rs:36-45`). The guard this
     * once carried as an internal `when(size >= n, …).otherwise(empty)`
-    * measured ~2× on the whole shingle explode at sf0.1 (D19Probe
-    * variants F vs G — a CASE around a higher-order function forces
-    * the lambda out of the Generate's fused evaluation), which is why
-    * the contract moved to the caller. On a shorter array the
-    * un-guarded `sequence(1, size-(n-1))` DESCENDS and produces
+    * measured ~2× on the whole shingle explode at sf0.1 (a CASE around
+    * a higher-order function forces the lambda out of the Generate's fused
+    * evaluation), which is why the contract moved to the caller. On a shorter
+    * array the un-guarded `sequence(1, size-(n-1))` DESCENDS and produces
     * garbage shingles — use [[shingles]] when the input is unfiltered. */
   def shinglesOf(toks: Column, n: Int): Column =
     array_distinct(
@@ -54,10 +53,10 @@ object TextFns {
     * packed-key discipline (AnalyticsQueries gramTokens): everything
     * downstream — exchanges, sorts, group keys — moves 8 bytes per
     * shingle instead of a ~25-byte string, and the hash skips the
-    * concat_ws allocation entirely (P04StageProbe measured the
-    * md5-string build at 16× the xxhash64 one). Distinct n-grams map
-    * to distinct longs modulo xxhash64 collisions — vanishing at any
-    * checked SF, and the same exposure g04/p04 already accept. */
+    * concat_ws allocation entirely (the md5-string build measured at
+    * 16× the xxhash64 one). Distinct n-grams map to distinct longs modulo
+    * xxhash64 collisions — vanishing at any checked SF, and the same exposure
+    * g04/p04 already accept. */
   def hashedShinglesOf(toks: Column, n: Int): Column =
     array_distinct(
       transform(

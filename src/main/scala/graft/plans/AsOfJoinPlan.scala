@@ -38,14 +38,13 @@ import org.apache.spark.sql.types._
   * shuffles each side with ONLY its own columns and replaces the
   * window's frame-buffering with a single forward-merge pointer per
   * partition — O(1) state, no frame materialization, no
-  * `last(ignoreNulls)` scan over the frame. Measured at sf0.1
-  * ([[graft.examples.AsOfProbe]]): 0.85–0.90× the composed form's
-  * shuffle bytes at identical shuffled row counts (UnsafeRow nulls are
-  * fixed-width, so schema-padding is cheaper than it looks; the byte
-  * gap widens when the payload struct duplicates wide columns), and
-  * ~1.7× faster on the join stages from dropping the window operator.
-  * The O(1)-state merge is also what survives skew: one hot key costs
-  * a sorted-run scan, never a window frame in memory.
+  * `last(ignoreNulls)` scan over the frame. Measured at sf0.1:
+  * 0.85–0.90× the composed form's shuffle bytes at identical shuffled row
+  * counts (UnsafeRow nulls are fixed-width, so schema-padding is cheaper than
+  * it looks; the byte gap widens when the payload struct duplicates wide
+  * columns), and ~1.7× faster on the join stages from dropping the window
+  * operator. The O(1)-state merge is also what survives skew: one hot key
+  * costs a sorted-run scan, never a window frame in memory.
   *
   * Scale posture: `requiredChildDistribution` is the same
   * co-partitioning contract as SortMergeJoin — EnsureRequirements

@@ -532,11 +532,11 @@ object AnalyticsQueries {
     * md5-hex string [[graft.functions.TextFns.kgramHashes]] emits: the
     * hash never reaches output (both engines count overlapping DOCS and
     * the DuckDB oracle grams independently), so any injective-enough
-    * token with the same equality relation is admissible — and
-    * P04StageProbe measured the md5-string build at 16× the xxhash64
-    * one at sf1 (36.8 vs 2.2 s: one codegen'd 64-bit hash per gram
-    * with no concat, and LONG tokens through array_distinct / explode /
-    * the broadcast semi-join set instead of 32-hex-char strings).
+    * token with the same equality relation is admissible — and the
+    * md5-string build measured at 16× the xxhash64 one at sf1 (36.8 vs
+    * 2.2 s: one codegen'd 64-bit hash per gram with no concat, and LONG
+    * tokens through array_distinct / explode / the broadcast semi-join
+    * set instead of 32-hex-char strings).
     * Equality relation is identical — token arrays are equal iff their
     * space-joins are (tokens are split on spaces so contain none) —
     * modulo 64-bit collisions, which only matter when they pair a
@@ -1454,7 +1454,7 @@ object AnalyticsQueries {
       .orderBy("bucket")
 
   // ------------------------------------------------------------------
-  // DuckDB oracles (prototyped in tools/proto_analytics.py)
+  // DuckDB oracles
   // ------------------------------------------------------------------
 
   private val ow01 =

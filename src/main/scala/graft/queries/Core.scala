@@ -450,11 +450,10 @@ object Core {
     * side shipping ONLY its own columns (the composed form pads right
     * rows to the left schema plus the payload struct), and the window's
     * per-key frame buffer becomes an O(1) merge pointer — measured
-    * ~0.9× shuffle bytes / ~1.7× join-stage speed at sf0.1
-    * ([[graft.examples.AsOfProbe]]). Green against the IDENTICAL DuckDB
-    * `ASOF LEFT JOIN` oracle as q23 — one oracle, two plans, which is
-    * the point: the operator changes the physical strategy, not the
-    * answer. */
+    * ~0.9× shuffle bytes / ~1.7× join-stage speed at sf0.1. Green
+    * against the IDENTICAL DuckDB `ASOF LEFT JOIN` oracle as q23 — one
+    * oracle, two plans, which is the point: the operator changes the physical
+    * strategy, not the answer. */
   private def j12(s: SparkSession, d: String): DataFrame = {
     val e = events(s, d)
     val purchases = e.filter(col("event_type") === "purchase")
@@ -1021,14 +1020,12 @@ object Core {
     * micro-batches replay the event stream; each event expands to its
     * 3 panes map-side (the same Expand as batch), the state store
     * keeps one row per OPEN (pane, type) — bounded by panes inside the
-    * watermark horizon × |types|, never by event mass (the
-    * StreamMassProbe winagg axis measured: 10⁵ hot events → 2 state
-    * rows) — and append mode emits each pane exactly once when the
-    * watermark passes its end. TWO far-future sentinel batches flush
-    * the tail (a batch's watermark derives from the PREVIOUS batch's
-    * max event time — the probe lesson now load-bearing in a query);
-    * the read-back drops the sentinel panes and applies a15's exact
-    * projection, so the streamed answer must hash-equal the batch
+    * watermark horizon × |types|, never by event mass (measured: 10⁵
+    * hot events → 2 state rows) — and append mode emits each pane exactly
+    * once when the watermark passes its end. TWO far-future sentinel batches
+    * flush the tail (a batch's watermark derives from the PREVIOUS batch's
+    * max event time); the read-back drops the sentinel panes and applies
+    * a15's exact projection, so the streamed answer must hash-equal the batch
     * text. */
   private def q57(s0: SparkSession, d: String): DataFrame = {
     val r = new Replay(s0, "graft_hopwin", "q57", d, Seq("events.parquet"))((s, st) => {
@@ -1114,9 +1111,7 @@ object Core {
     * amortization — a fixed every-N cadence would rewrite the whole
     * index every N batches) — per-batch probe cost
     * stays O(batch keys × bucket occupancy) as the stream ages instead
-    * of growing with the whole history
-    * ([[graft.examples.Q54GrowthProbe]] measures the contrast against
-    * the round-11 plain-append layout). Retry-idempotent WITHOUT
+    * of growing with the whole history. Retry-idempotent WITHOUT
     * delete-first sinks: duplicate index rows cannot change a
     * min-aggregate and duplicate result rows collapse under the final
     * `distinct` — the q46 idempotence contract met by algebra instead
@@ -1149,16 +1144,14 @@ object Core {
     val query = stream.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // the per-batch step (exact-class collapse → pruned LSH probe
-        // → append + periodic compaction) lives in NearDup.processBatch
-        // so the growth probe drives the IDENTICAL code over many more
-        // batches; tier semantics + the collapse-exactness proof are in
-        // the scaladoc above
+        // → append + periodic compaction) lives in NearDup.processBatch,
+        // shared with q54b; tier semantics + the collapse-exactness
+        // proof are in the scaladoc above
         graft.streaming.NearDup.processBatch(
           batch, batchId,
           resDir = resDir,
           bandRoot = r.outDir + "_index",
           exactRoot = r.outDir + "_exact")
-        ()
       }
       .option("checkpointLocation", r.ckpDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1199,7 +1192,6 @@ object Core {
           exactRoot = r.outDir + "_exact",
           targetRowsPerBucket = 64L, minBuckets = 4,
           forceCompact = true)
-        ()
       }
       .option("checkpointLocation", r.ckpDir)
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -1360,10 +1352,10 @@ object Core {
   /** Q60b — STREAMING ANN UNDER THE PRODUCTION RE-BAND POLICY: q60's
     * dataflow with `reband = true`, so each size fold recomputes the
     * SRP band width at the width the CURRENT row count calls for (the
-    * capability AnnRebandSpec pins and ReBandProbe measures at 21×
-    * candidate-mass reduction — round-14 verdict task 8 asked for it
-    * under the CROSS-ENGINE oracle, which the declared q60 cannot do:
-    * a mid-stream width flip is not one SQL bucket CTE).
+    * capability AnnRebandSpec pins, measured at 21× candidate-mass
+    * reduction — here under the CROSS-ENGINE oracle, which the
+    * declared q60 cannot do: a mid-stream width flip is not one SQL
+    * bucket CTE).
     *
     * The determinism knob that makes the oracle expressible:
     * `forceCompact` folds after EVERY batch (production uses the
@@ -1373,9 +1365,9 @@ object Core {
     * target 7 — chosen so the test estates' counts STRADDLE a width
     * boundary mid-stream (sf0.001/0.01: 400→466 crosses 7·2⁶ = 448;
     * sf0.1: 1600→1866 crosses 7·2⁸ = 1792), because the whole point
-    * of the variant is an ORACLE-CHECKED width FLIP — at the
-    * ReBandProbe target of 64 the ~8%-per-batch growth never crosses
-    * a power-of-two and the flip would go unexercised). The oracle is
+    * of the variant is an ORACLE-CHECKED width FLIP — at a target of
+    * 64 the ~8%-per-batch growth never crosses a power-of-two and the
+    * flip would go unexercised). The oracle is
     * PHASE-SPLIT: one width
     * per batch epoch derived with the same integer-shift SQL, each
     * query joined to its phase's width, candidates bucket-matched on

@@ -98,24 +98,22 @@ object DedupQueries {
     * exact-dup mass defeats it: every copy of a template page carries an
     * identical MinHash signature, so all copies share every band key and
     * one bucket row holds |hot|×|shingles| payload before exploding
-    * |hot|² pairs, ×4 bands (the hazard [[graft.examples.HotBlockProbe]]
-    * measures). Hence the same [[PairBlockCap]] df-cap d04/d11 apply to
-    * fingerprint blocks rides the (band, bh) bucket here, BEFORE the
-    * collect; dropped mass is surfaced via the `d02_bucket_census`
-    * observe and the DuckDB oracle applies the identical HAVING bound.
-    * A capped-out bucket is exact-dup/template mass — d01/d12's signal,
-    * not a near-dup pair listing's; cluster formation over that mass is
+    * |hot|² pairs, ×4 bands. Hence the same [[PairBlockCap]] df-cap d04/d11
+    * apply to fingerprint blocks rides the (band, bh) bucket here, BEFORE the
+    * collect; dropped mass is surfaced via the `d02_bucket_census` observe
+    * and the DuckDB oracle applies the identical HAVING bound. A capped-out
+    * bucket is exact-dup/template mass — d01/d12's signal, not a near-dup
+    * pair listing's; cluster formation over that mass is
     * [[lshComponentEdges]]'s job, which needs no cap. The earlier
-    * join-back-by-doc_id shape recomputed the tokenize→shingle subtree
-    * three times across six AQE stages plus two broadcasts — measured 10 s
-    * against ~2 s for this shape at sf0.1, same output. At 100 TB the
-    * carried arrays widen the bucket shuffle 4×; if that dominates,
-    * persist the shingle table and join back instead — the band/bucket
-    * skeleton is unchanged (implemented as [[d07]]; the bench carries
-    * both so the switch point is a measurement, not a comment). A pair
-    * sharing several bands is scored once
-    * per band and collapsed by the final distinct — duplicate scores of
-    * the same pair are identical, so distinct-after-verify is exact. */
+    * join-back-by-doc_id shape recomputed the tokenize→shingle subtree three
+    * times across six AQE stages plus two broadcasts — measured 10 s against
+    * ~2 s for this shape at sf0.1, same output. At 100 TB the carried arrays
+    * widen the bucket shuffle 4×; if that dominates, persist the shingle
+    * table and join back instead — the band/bucket skeleton is unchanged
+    * (implemented as [[d07]]; the bench carries both so the switch point is a
+    * measurement, not a comment). A pair sharing several bands is scored once
+    * per band and collapsed by the final distinct — duplicate scores of the
+    * same pair are identical, so distinct-after-verify is exact. */
   private def d02(s: SparkSession, d: String): DataFrame =
     lshVerifiedPairs(s, d)
       .select(col("da"), col("db"), oround(col("jac"), 3).as("jaccard"))
@@ -128,10 +126,10 @@ object DedupQueries {
     * either way), with the (band, bh) buckets df-capped at
     * [[PairBlockCap]] ([[capBlocks]] discipline — the signature table is
     * checkpointed first so the bucket census and the capped join read
-    * one materialization). `cap = None` is the probe-only uncapped
-    * hazard twin (always carry — it exists to measure the carry
-    * hazard). The CARRY vs JOIN-BACK choice is automatic — see
-    * [[chooseJoinBack]]; `forceShape` pins it for the A/B probe. */
+    * one materialization). `cap = None` is the uncapped reference
+    * (always carry) that CompHotMassSpec compares the capped stream
+    * against. The CARRY vs JOIN-BACK choice is automatic — see
+    * [[chooseJoinBack]]; `forceShape` pins it for SwitchSpec's A/B. */
   private[graft] def lshVerifiedPairs(
       s: SparkSession, d: String,
       cap: Option[Int] = Some(PairBlockCap),
@@ -157,16 +155,6 @@ object DedupQueries {
         capBlocks(bands, Seq("band", "bh"), "d02_bucket_census", cap))
     }
   }
-
-  /** d02's NARROW band stream — (doc_id, band, bh) with no carried
-    * payload — for census probes that need the full bucket-size
-    * DISTRIBUTION (the capBlocks observe reports only max + dropped
-    * mass). Shares [[sigWithSh]]/[[bandKeyCols]] so a probe census can
-    * never drift from the query's banding
-    * ([[graft.examples.D02StageProbe]]). */
-  private[graft] def d02BandsNarrow(s: SparkSession, d: String): DataFrame =
-    sigWithSh(s, d).select(
-      col("doc_id"), posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
 
   /** The JOIN-BACK spelling of [[lshVerifiedPairs]]'s tail over an
     * already-checkpointed (doc_id, sh, mh0..7) signature table — d07's
@@ -210,8 +198,8 @@ object DedupQueries {
             - size(array_intersect(col("sha"), col("shb"))))).as("jac"))
   }
 
-  /** The AUTOMATED d02↔d07 switch (round-12 verdict item 7): carry the
-    * shingle arrays through the band shuffle, or persist narrow bands
+  /** The AUTOMATED d02↔d07 switch: carry the shingle arrays
+    * through the band shuffle, or persist narrow bands
     * and join back? The choice is made per-corpus from a CHEAP stats
     * probe instead of a hand edit: average carried-payload bytes per
     * doc, read from the first [[SwitchSampleRows]] rows of the
@@ -220,24 +208,22 @@ object DedupQueries {
     * stored per documents content ([[graft.ops.Artifacts.value]]) so one
     * tiny job serves d02/d10/d18 and Bench's min-of-2 reruns.
     *
-    * What the model says and what the probe measured: carry ships the
+    * What the model says and what was measured: carry ships the
     * payload ×4 (band fanout) through the bucket shuffle; join-back
     * ships it ≤2× (the two verification joins — 0× when the candidate
     * side broadcasts) plus fixed machinery (an extra exchange pair, a
-    * distinct, two joins). [[graft.examples.SwitchProbe]]'s 70×
-    * payload sweep (2 KB → 146 KB/doc, planted verifying pairs):
-    * 2 KB carry 1.48 vs jb 1.01 (machinery noise at tiny payloads),
-    * 8.5 KB 1.23 vs 1.39, 35 KB 1.76 vs 2.03, 146 KB carry 5.36 vs
-    * JOIN-BACK 4.16 — the payload term wins the far end even at
-    * local[32], where a shuffle is only a memory copy; on a cluster
-    * fabric the crossover moves LEFT because shuffle bytes become the
-    * real cost and join-back halves them. [[CarryShBytesCutoff]] sits
-    * in the measured-neutral middle: below it carry's simpler plan
-    * wins outright (the estate's ~2.6 KB payloads, and the measured
-    * d02 1.6 s vs d07 3.4 s endpoints), above it join-back is ~free
-    * locally and halves network bytes at deployment. The decision is
-    * LOGGED per census key ([[switchDecision]]) so specs pin it and
-    * bench runs can attribute shape changes. */
+    * distinct, two joins). A 70× payload sweep (2 KB → 146 KB/doc, planted
+    * verifying pairs): 2 KB carry 1.48 vs jb 1.01 (machinery noise at tiny
+    * payloads), 8.5 KB 1.23 vs 1.39, 35 KB 1.76 vs 2.03, 146 KB carry 5.36 vs
+    * JOIN-BACK 4.16 — the payload term wins the far end even at local[32],
+    * where a shuffle is only a memory copy; on a cluster fabric the crossover
+    * moves LEFT because shuffle bytes become the real cost and join-back
+    * halves them. [[CarryShBytesCutoff]] sits in the measured-neutral middle:
+    * below it carry's simpler plan wins outright (the estate's ~2.6 KB
+    * payloads, and the measured d02 1.6 s vs d07 3.4 s endpoints), above it
+    * join-back is ~free locally and halves network bytes at deployment. The
+    * decision is LOGGED per census key ([[switchDecision]]) so specs pin it
+    * and bench runs can attribute shape changes. */
   private def chooseJoinBack(
       census: String, sig: DataFrame, force: Option[Boolean],
       estate: String): Boolean = {
@@ -264,11 +250,11 @@ object DedupQueries {
   private val SwitchSampleRows = 2048
 
   /** Carried-payload cutoff (bytes/doc) above which [[chooseJoinBack]]
-    * picks the join-back shape — set at the point
-    * [[graft.examples.SwitchProbe]] measured the shapes LOCALLY
-    * neutral (see [[chooseJoinBack]]'s doc: above this, join-back is
-    * free locally and halves shuffle bytes on a real fabric). */
-  private[graft] val CarryShBytesCutoff = 8192.0
+    * picks the join-back shape — set where the payload sweep measured
+    * the shapes LOCALLY neutral (see [[chooseJoinBack]]'s doc: above
+    * this, join-back is free locally and halves shuffle bytes on a real
+    * fabric). */
+  private val CarryShBytesCutoff = 8192.0
 
   private val switchLog =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
@@ -505,27 +491,22 @@ object DedupQueries {
       .orderBy(col("jaccard").desc, col("da"), col("db"))
       .limit(20)
 
-  /** d04's capped pair stage ([[capBlocks]] discipline); `cap = None` is
-    * the probe-only uncapped twin — see [[d11Pairs]].
+  /** d04's capped pair stage ([[capBlocks]] discipline).
     *
-    * HASHED-SHINGLE PAYLOAD (round-17 verdict task 2 — the d13
-    * discipline applied here): the per-member shingle sets that ride
-    * the groupBy(fp) exchange and sit in the collect_list build are
-    * `xxhash64` LONGS ([[TextFns.hashedShinglesOf]]), not rebuilt
-    * `concat_ws` strings — 8 bytes per shingle instead of a ~25-byte
-    * UTF8String object, no per-gram string allocation, and the
-    * in-lambda `array_intersect` compares words instead of strings.
-    * d04's sf100 cold-single was GC-bound at zero spill (α band
-    * 1.01–1.28 with 2.4× run-to-run variance, ~30 GB peak-exec): the
-    * per-stage ARRAY payload was the heap pressure, exactly as in
-    * d13 before its hashed-shingle rewrite. Jaccard over hashed
-    * shingles equals Jaccard over string shingles modulo xxhash64
-    * collisions (the same vanishing exposure p04/g04/d13 already
-    * accept and [[TextFns.hashedShinglesOf]] quantifies); the od04
-    * oracle is unchanged. */
-  private[graft] def d04Pairs(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame =
+    * HASHED-SHINGLE PAYLOAD (the d13 discipline applied here): the per-member
+    * shingle sets that ride the groupBy(fp) exchange and sit in the
+    * collect_list build are `xxhash64` LONGS ([[TextFns.hashedShinglesOf]]),
+    * not rebuilt `concat_ws` strings — 8 bytes per shingle instead of a
+    * ~25-byte UTF8String object, no per-gram string allocation, and the
+    * in-lambda `array_intersect` compares words instead of strings. d04's
+    * sf100 cold-single was GC-bound at zero spill (α band 1.01–1.28 with 2.4×
+    * run-to-run variance, ~30 GB peak-exec): the per-stage ARRAY payload was
+    * the heap pressure, exactly as in d13 before its hashed-shingle rewrite.
+    * Jaccard over hashed shingles equals Jaccard over string shingles modulo
+    * xxhash64 collisions (the same vanishing exposure p04/g04/d13 already
+    * accept and [[TextFns.hashedShinglesOf]] quantifies); the od04 oracle is
+    * unchanged. */
+  private def d04Pairs(s: SparkSession, d: String): DataFrame =
     capBlocks(
       tokenized(s, d)
         .filter(size(col("toks")) >= N)
@@ -536,9 +517,9 @@ object DedupQueries {
         // compute-once, mirroring d11Pairs: the census count and the
         // capped equi-join both read this projection, and without the
         // barrier the tokenize→fingerprint→shingle subtree runs twice
-        // (measured +0.9 s at sf0.1, VERDICT r7 #2)
+        // (measured +0.9 s at sf0.1)
         .localCheckpoint(),
-      Seq("fp"), "d04_block_census", cap)
+      Seq("fp"), "d04_block_census", Some(PairBlockCap))
       .groupBy("fp")
       .agg(sort_array(collect_list(struct(col("doc_id").as("id"), col("sh").as("sh"))))
         .as("ms"))
@@ -571,12 +552,10 @@ object DedupQueries {
     * count is parquet-footer metadata, not a data scan) as the blocking
     * key, exact cosine within buckets, oriented va < vb. One definition
     * so the similarity graph and the near-dup report can never
-    * disagree. `forceBits` is the probe-only fixed-width hazard twin
-    * (the lshVerifiedPairs `cap = None` discipline). */
-  private[graft] def cosineEdges(s: SparkSession, d: String, tau: Double = 0.3,
-      forceBits: Option[Int] = None): DataFrame = {
-    val bits = forceBits.getOrElse(
-      adaptiveSrpBits(graft.sources.VectorIndex.corpusCount(s, d)))
+    * disagree. */
+  private[graft] def cosineEdges(
+      s: SparkSession, d: String, tau: Double = 0.3): DataFrame = {
+    val bits = adaptiveSrpBits(graft.sources.VectorIndex.corpusCount(s, d))
     val e = graft.Tables.rebalance(s, embeddings(s, d)).select(
       col("vec_id"),
       VectorFns.toDouble(col("embedding")).as("e"))
@@ -724,43 +703,37 @@ object DedupQueries {
     * neighborhood around them (hd 1–3).
     *
     * KEYSPACE IS THE SCALE BOUND, re-widened TWICE by measurement:
-    * round 8 moved 16→60 signature bits (4 bands × 15 bits); round 15's
-    * [[graft.examples.D08BandCensusProbe]] caught THAT design
-    * saturating at the second decade — at sf10 (500 k docs) 127,474 of
-    * the 131,072 possible (band, value) keys were occupied, p99 bucket
-    * 123 vs the 64-cap, 73% of candidate pair mass dropped, and the
-    * sf100 mean bucket (≈153) would exceed the cap everywhere. Now the
-    * 60-bit signature splits into 5 blocks × 12 bits and the key is a
-    * PAIR of blocks (Manku's block-combination table): hd ≤ 3 flips at
-    * most 3 blocks, so ≥ 2 of 5 blocks agree, so the pair collides in
-    * at least one of the C(5,2) = 10 tables. 10 × 2²⁴ keys ≈ 168 M —
-    * a 24-bit agreement between random docs is ~6·10⁻⁸, so buckets
-    * stay sparse through sf100 and beyond (post-rewiden census, same
-    * probe: sf10 p99 bucket = 9 — FLAT across sf0.1/sf1/sf10 — and
-    * total candidate mass 9.9 M vs the old design's 60.7 M, with the
-    * dropped fraction down from 73% to 23%). Cost: 10 band rows per
-    * doc instead of 4 — two longs each, linear, and the self-join they
-    * feed shrinks 6× by the same sparsity. Exact-dup template mass
-    * still defeats any banding — every copy carries the identical
-    * signature — so the same [[PairBlockCap]] df-cap as d02/d04/d11
-    * rides the packed `bk` bucket as belt-and-braces ([[D08BandCapSpec]]
-    * pins it; a capped-out bucket is d01/d03's exact-dup signal, and
-    * its hd-0 pairs were never d08 output anyway). Dropped mass is
-    * surfaced via `d08_band_census`; the DuckDB oracle applies the
-    * identical blocking and HAVING bound. */
+    * first 16→60 signature bits (4 bands × 15 bits); a band census then
+    * caught THAT design saturating at the second decade — at sf10 (500 k
+    * docs) 127,474 of the 131,072 possible (band, value) keys were occupied,
+    * p99 bucket 123 vs the 64-cap, 73% of candidate pair mass dropped, and
+    * the sf100 mean bucket (≈153) would exceed the cap everywhere. Now the
+    * 60-bit signature splits into 5 blocks × 12 bits and the key is a PAIR of
+    * blocks (Manku's block-combination table): hd ≤ 3 flips at most 3 blocks,
+    * so ≥ 2 of 5 blocks agree, so the pair collides in at least one of the
+    * C(5,2) = 10 tables. 10 × 2²⁴ keys ≈ 168 M — a 24-bit agreement between
+    * random docs is ~6·10⁻⁸, so buckets stay sparse through sf100 and beyond
+    * (post-rewiden census: sf10 p99 bucket = 9 — FLAT across sf0.1/sf1/sf10 —
+    * and total candidate mass 9.9 M vs the old design's 60.7 M, with the
+    * dropped fraction down from 73% to 23%). Cost: 10 band rows per doc
+    * instead of 4 — two longs each, linear, and the self-join they feed
+    * shrinks 6× by the same sparsity. Exact-dup template mass still defeats
+    * any banding — every copy carries the identical signature — so the same
+    * [[PairBlockCap]] df-cap as d02/d04/d11 rides the packed `bk` bucket as
+    * belt-and-braces ([[D08BandCapSpec]] pins it; a capped-out bucket is
+    * d01/d03's exact-dup signal, and its hd-0 pairs were never d08 output
+    * anyway). Dropped mass is surfaced via `d08_band_census`; the DuckDB
+    * oracle applies the identical blocking and HAVING bound. */
   private def d08(s: SparkSession, d: String): DataFrame =
     d08Pairs(s, d)
       .orderBy("hamming", "da", "db")
       .limit(50)
 
   /** d08's banded + capped signature stage, split out so census readers
-    * (the cap spec, [[graft.examples.HotBlockProbe]]) can observe
-    * `d08_band_census` on the stage it rides — [[d08Pairs]] checkpoints
-    * this frame, which cuts the CollectMetrics out of the final query's
-    * lineage. */
-  private[graft] def d08Banded(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame = {
+    * (the cap spec) can observe `d08_band_census` on the stage it rides
+    * — [[d08Pairs]] checkpoints this frame, which cuts the
+    * CollectMetrics out of the final query's lineage. */
+  private[graft] def d08Banded(s: SparkSession, d: String): DataFrame = {
     // localCheckpoint: the census and the cap join would otherwise each
     // recompute the tokenize→hash60→simhash fold (lambda exprIds defeat
     // ReuseExchange — the d04/d07 lesson); the checkpointed table is two
@@ -787,20 +760,17 @@ object DedupQueries {
     // capBlocks' using-join reorders columns (join keys first) — pin the
     // order by NAME before the positional rename in d08Pairs, or da/sa
     // silently bind to the band key (caught by the sf0.01 oracle)
-    capBlocks(k, Seq("bk"), "d08_band_census", cap)
+    capBlocks(k, Seq("bk"), "d08_band_census", Some(PairBlockCap))
       .select("doc_id", "simhash", "bk")
   }
 
-  /** d08's capped pair stage ([[capBlocks]] discipline); `cap = None` is
-    * the probe-only uncapped twin — see [[d11Pairs]]. */
-  private[graft] def d08Pairs(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame = {
+  /** d08's capped pair stage ([[capBlocks]] discipline). */
+  private def d08Pairs(s: SparkSession, d: String): DataFrame = {
     // second (narrow — 4 longs/row) checkpoint: BOTH self-join sides
     // read the capped band table from one materialization; without it
     // the census agg + cap equi-join execute once per side (seen as
-    // three joins in the round-9 plan audit)
-    val capped = d08Banded(s, d, cap).localCheckpoint()
+    // three joins in a plan audit)
+    val capped = d08Banded(s, d).localCheckpoint()
     val a = capped.toDF("da", "sa", "ka")
     val b = capped.toDF("db", "sb", "kb")
     a.join(b, col("ka") === col("kb") && col("da") < col("db"))
@@ -1126,12 +1096,11 @@ object DedupQueries {
     * one row, and the dropped mass rides the job as a named observe
     * (surfaced, not silent — the d13 df≤20 / g04 ≤40-buyers discipline).
     * `keys` is the blocking key — the 16-byte fingerprint for d04/d11,
-    * the (band, bh) LSH bucket for d02/d07. `cap = None` is the
-    * probe-only uncapped twin ([[graft.examples.HotBlockProbe]]) that
-    * demonstrates the hazard the cap removes. Callers checkpoint `base`'s
-    * lineage first: the size agg and the equi-join both read it, and
-    * lambda exprIds defeat ReuseExchange (the round-2 lesson — an
-    * unpinned base pays its projection twice, measured on d04 r7). */
+    * the (band, bh) LSH bucket for d02/d07. `cap = None` passes `base`
+    * through uncapped — [[lshVerifiedPairs]]' reference stream. Callers
+    * checkpoint `base`'s lineage first: the size agg and the equi-join
+    * both read it, and lambda exprIds defeat ReuseExchange (an unpinned
+    * base pays its projection twice, measured on d04). */
   // private[queries]: m10's perceptual-hash banding rides the same
   // df-cap + census discipline
   private[queries] def capBlocks(
@@ -1156,16 +1125,14 @@ object DedupQueries {
   /** d11's stage 1 — fingerprint, cap, pair-enumerate — split out so the
     * plan spec can assert the cap join's shape (the barrier in [[d11]]
     * hides this lineage from the final QueryExecution). */
-  private[graft] def d11Pairs(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap)): DataFrame = {
+  private[graft] def d11Pairs(s: SparkSession, d: String): DataFrame = {
     val base = tokenized(s, d)
       .select(
         col("doc_id"),
         TextFns.fingerprintOf(col("toks"), col("text"), N).as("fp"),
         col("text"))
       .localCheckpoint() // compute-once: block census + capped join read it
-    capBlocks(base, Seq("fp"), "d11_block_census", cap)
+    capBlocks(base, Seq("fp"), "d11_block_census", Some(PairBlockCap))
       .groupBy("fp")
       .agg(sort_array(collect_list(struct(col("doc_id").as("id"), col("text").as("tx"))))
         .as("ms"))
@@ -1271,16 +1238,14 @@ object DedupQueries {
     * df·(df−1)/2 pairs per shingle — pair volume stays linear in the
     * posting-list mass no matter how the corpus grows.
     *
-    * PLAN SHAPE (rewritten by the round-14 stage probe,
-    * D13StageProbe; payload-shrunk again in round 17 after the sf100
-    * receipt — α band 1.03–1.29, and the width-32 twin was KILLED at
-    * >45 GB of spill, `bench/r16_sf100_groupBC.json`): the shingle
-    * stream crosses ONE exchange (`repartition`), the df census is a
-    * window over the co-located key (no second exchange), and pair
-    * emission builds actual POSTING LISTS — `collect_list` per
-    * multi-doc rare shingle, bounded ≤ 20 by the df filter (never an
-    * uncapped collect — the hot-key rule), then a combinations lambda
-    * explodes the C(df,2) sorted pairs.
+    * PLAN SHAPE (rewritten after a stage-level profile, payload-shrunk again
+    * after the sf100 receipt — α band 1.03–1.29, and the width-32 twin was
+    * KILLED at >45 GB of spill, `bench/r16_sf100_groupBC.json`): the shingle
+    * stream crosses ONE exchange (`repartition`), the df census is a window
+    * over the co-located key (no second exchange), and pair emission builds
+    * actual POSTING LISTS — `collect_list` per multi-doc rare shingle,
+    * bounded ≤ 20 by the df filter (never an uncapped collect — the hot-key
+    * rule), then a combinations lambda explodes the C(df,2) sorted pairs.
     *
     * The round-17 shrink applies the g04/p04 packed-key discipline to
     * everything that crosses the exchange or parks in the checkpoint:
@@ -1625,15 +1590,14 @@ object DedupQueries {
     val k = 8
     // filter(size >= k), NOT a when()-guarded empty-array fallback: the
     // CASE wrapper around the gram lambda measured 10× slower at sf0.1
-    // (2.9 s vs 0.3 s for the same explode — D19Probe variants A/C vs
-    // D/E; the conditional forces the transform out of the Generate's
-    // fused evaluation). Docs shorter than k have no grams and can
-    // never carry a redundant start, so the filter is also the exact
-    // semantics. localCheckpoint: BOTH the per-hash aggregate and the
-    // join-back probe side read g — unpinned, the lambda exprIds defeat
-    // exchange reuse (the d04/d07/d08 lesson) and the tokenize→md5
-    // subtree ran twice, with the gram lambdas additionally duplicated
-    // into the scan's pushed data filter.
+    // (2.9 s vs 0.3 s for the same explode; the conditional forces the
+    // transform out of the Generate's fused evaluation). Docs shorter than k
+    // have no grams and can never carry a redundant start, so the filter is
+    // also the exact semantics. localCheckpoint: BOTH the per-hash aggregate
+    // and the join-back probe side read g — unpinned, the lambda exprIds
+    // defeat exchange reuse (the d04/d07/d08 lesson) and the tokenize→md5
+    // subtree ran twice, with the gram lambdas additionally duplicated into
+    // the scan's pushed data filter.
     val g = tokenized(s, d)
       .filter(size(col("toks")) >= k)
       .select(col("doc_id"),
@@ -1883,6 +1847,12 @@ object DedupQueries {
       |FROM (SELECT v, component FROM lbl WHERE v <> component)
       |GROUP BY component ORDER BY keep_vec_id""".stripMargin
 
+  /** d17's fixed benchmark-panel budget — ONE constant interpolated into
+    * BOTH the Scala dataflow and od17's LIMIT, so the two can never
+    * drift apart (ov24's `$panelBudget` discipline). `final val` literal
+    * so object-init order can never interpolate a zero (the v24 trap). */
+  private final val D17PanelBudget = 256
+
   /** D17 — SEMANTIC decontamination: the embedding-space twin of
     * p04/p06's n-gram eval-set decontamination. A deterministic
     * benchmark panel (`vec_id % 97 = 0`, standing in for the held-out
@@ -1900,48 +1870,29 @@ object DedupQueries {
     * strings), so only in-probed-bucket pairs pay a dot product. The
     * EXACT brute-force flag count rides along as the in-query recall
     * audit (the v09 discipline; blocked ⊆ exact by construction,
-    * `block_recall` ≤ 1) — and since round 11 the audit is
-    * SAMPLE-ENFORCED BY THE PLAN, not by a comment (the round-10
-    * advisory; d15's pattern-group discipline): only the deterministic
-    * `vec_id % 3 = 0` corpus slice enters the crossJoin, recall is
-    * blocked∩audited vs exact-on-audited (both sides restricted
-    * identically, so the ratio is unbiased), and `n_audited` censuses
-    * the slice. Measured ~0.33-class recall at sf0.1's adaptive key
-    * for the weak tau=0.3 screen (single-probe was ~0.07 — the H≤1
-    * probes quadruple it); the audit column is exactly the number
-    * that tells a production pipeline how many more probes (or how
-    * much higher a contamination threshold) its recall target costs —
-    * the v23 tuning-curve reading applied to decontamination. Both
-    * paths `distinct` BEFORE counting: a corpus vector near three
-    * panel members is one contamination, not three. */
-  /** d17's fixed benchmark-panel budget — ONE constant interpolated into
-    * BOTH the Scala call site and od17's LIMIT (round-14 advisory: the
-    * two literals had drifted apart once already in spirit — ov24's
-    * `$panelBudget` discipline applied here). `final val` literal so
-    * object-init order can never interpolate a zero (the v24 trap). */
-  private final val D17PanelBudget = 256
-
-  private def d17(s: SparkSession, d: String): DataFrame =
-    semanticDecontam(s, d, 97L, panelBudget = D17PanelBudget)
-
-  /** [[d17]]'s dataflow with the panel-membership modulus exposed —
-    * D17PanelProbe drives the SAME plan at ~11× panel size (mod 9) to
-    * measure the growth axis: the probed screen should scale with
-    * |panel| × bucket-hit-rate, the exact audit with |corpus|·|panel|
-    * (which is why the audit samples at scale). */
-  /** `panelBudget > 0` caps the benchmark panel at a FIXED query
-    * count — the `panelBudget` hash-rank-lowest members of the
-    * `% panelMod` slice (v24's `(id·40503+7) mod 104729` rank; ties by
-    * vec_id). Benchmarks are bounded by nature, but the synthetic
-    * `% 97` slice grows with the corpus, and the slice feeds BOTH the
-    * probe-key broadcast AND the exact-audit crossJoin — so an
-    * uncapped panel makes the audit (corpus/auditMod)×(corpus/97):
-    * α≈2/decade, the v24 shape. With the cap both paths are one
-    * corpus-linear pass against a fixed broadcast. 0 keeps the raw
-    * slice — D17PanelProbe's growth-axis measurement. */
-  private[graft] def semanticDecontam(
-      s: SparkSession, d: String, panelMod: Long,
-      auditMod: Long = 3L, panelBudget: Int = 0): DataFrame = {
+    * `block_recall` ≤ 1), SAMPLE-ENFORCED BY THE PLAN (d15's
+    * pattern-group discipline): only the deterministic `vec_id % 3 = 0`
+    * corpus slice enters the crossJoin, recall is blocked∩audited vs
+    * exact-on-audited (both sides restricted identically, so the ratio
+    * is unbiased), and `n_audited` censuses the slice. Measured
+    * ~0.33-class recall at sf0.1's adaptive key for the weak tau=0.3
+    * screen (single-probe was ~0.07 — the H≤1 probes quadruple it); the
+    * audit column is exactly the number that tells a production
+    * pipeline how many more probes (or how much higher a contamination
+    * threshold) its recall target costs — the v23 tuning-curve reading
+    * applied to decontamination. Both paths `distinct` BEFORE counting:
+    * a corpus vector near three panel members is one contamination, not
+    * three.
+    *
+    * The panel is capped at [[D17PanelBudget]] queries — the
+    * hash-rank-lowest members of the `% 97` slice (v24's
+    * `(id·40503+7) mod 104729` rank; ties by vec_id). Benchmarks are
+    * bounded by nature, but the synthetic `% 97` slice grows with the
+    * corpus, and the slice feeds BOTH the probe-key broadcast AND the
+    * exact-audit crossJoin — so an uncapped panel makes the audit
+    * (corpus/3)×(corpus/97): α≈2/decade, the v24 shape. With the cap
+    * both paths are one corpus-linear pass against a fixed broadcast. */
+  private def d17(s: SparkSession, d: String): DataFrame = {
     val bits = adaptiveSrpBits(graft.sources.VectorIndex.corpusCount(s, d))
     val b = graft.Tables.rebalance(s, embeddings(s, d))
       .select(col("vec_id"), col("label"),
@@ -1949,14 +1900,11 @@ object DedupQueries {
       .select(col("vec_id"), col("label"), col("e"),
         VectorFns.norm(col("e")).as("nrm"),
         VectorFns.srpBucket(col("e"), bits).as("bucket"))
-    val slice = b.filter(col("vec_id") % panelMod === 0)
-    val panel = (if (panelBudget > 0)
-        slice.withColumn("hk",
-            (col("vec_id") * lit(40503L) + lit(7L)) % lit(104729L))
-          .orderBy(col("hk"), col("vec_id")).limit(panelBudget)
-      else slice)
+    val panel = b.filter(col("vec_id") % 97L === 0)
+      .withColumn("hk", (col("vec_id") * lit(40503L) + lit(7L)) % lit(104729L))
+      .orderBy(col("hk"), col("vec_id")).limit(D17PanelBudget)
       .select(col("e").as("qe"), col("nrm").as("qn"), col("bucket").as("qb"))
-    val corp = b.filter(col("vec_id") % panelMod =!= 0)
+    val corp = b.filter(col("vec_id") % 97L =!= 0)
     val cosc = VectorFns.dot(col("e"), col("qe")) / (col("nrm") * col("qn"))
     // bucket + every one-bit flip: VectorIndex.multiProbeKeys' flip
     // rule minus its partition-dir prefix (this join is on the ad-hoc
@@ -1975,21 +1923,15 @@ object DedupQueries {
       .select(col("vec_id"), col("label")).distinct()
       .localCheckpoint()
     val flagged = flaggedIds.groupBy("label").agg(count(lit(1)).as("nf"))
-    // The exact audit is |corpus|·|panel| brute force — the PLAN now
-    // enforces the sample the scaladoc used to merely promise (round-10
-    // advisory; the d15 pattern): only the deterministic vec_id %
-    // auditMod == 0 corpus slice enters the crossJoin, recall is scored
-    // on that slice (blocked ∩ audited vs exact-on-audited — both sides
-    // restricted identically, so the ratio is unbiased), and n_audited
-    // is the census of what the sample covered. At 100 TB auditMod
-    // dials audit cost independently of the probed product path.
-    val audited = corp.filter(col("vec_id") % auditMod === 0)
+    // The exact audit is |corpus|·|panel| brute force, so only the
+    // vec_id % 3 == 0 slice enters it (see the scaladoc).
+    val audited = corp.filter(col("vec_id") % 3L === 0)
     val nAudited = audited.groupBy("label").agg(count(lit(1)).as("na"))
     val exact = audited.crossJoin(broadcast(panel.drop("qb")))
       .filter(cosc >= 0.3)
       .select(col("vec_id"), col("label")).distinct()
       .groupBy("label").agg(count(lit(1)).as("nx"))
-    val flaggedAudit = flaggedIds.filter(col("vec_id") % auditMod === 0)
+    val flaggedAudit = flaggedIds.filter(col("vec_id") % 3L === 0)
       .groupBy("label").agg(count(lit(1)).as("nfa"))
     corp.groupBy("label").agg(count(lit(1)).as("n_corpus"))
       .join(flagged, Seq("label"), "left_outer")

@@ -190,7 +190,7 @@ object GraphQueries {
     * emits each sorted (ca < cb) pair exactly once.
     *
     * THE PAIR STREAM CROSSES EXACTLY ONE EXCHANGE — its own
-    * aggregation, the operator's irreducible cost (G04StageProbe: pair
+    * aggregation, the operator's irreducible cost (measured: pair
     * mass is exactly linear, 84M → 840M across the decade, and the
     * bare aggregation ~103 s at sf10 against a 249 s full query). Two
     * rejected alternatives, both measured: shuffle-joining the
@@ -200,7 +200,7 @@ object GraphQueries {
     * widened the aggregation keys 16B → 32B (explode 24 → 105 s, agg
     * 159 → 214 s — worse on both ends).
     *
-    * PACKED PAIR KEY (round-15, the verdict's closing lever): the
+    * PACKED PAIR KEY: the
     * (ca, cb) key the 840 M-row stream shuffles and hash-aggregates on
     * is ONE long — `ca << 32 | cb` — packed inside the combinations
     * lambda, so the explode emits 8-byte longs instead of 16-byte
@@ -209,9 +209,9 @@ object GraphQueries {
     * ops on the ~collapsed output. Precondition, static on this data
     * model: custkeys are positive and < 2³¹ (TPC-H custkey ≈ 1.5M × SF
     * — fine beyond sf100; an estate past 2³¹ customers needs the
-    * 2-column key back). G04StageProbe measures both shapes
-    * back-to-back with a stage-metrics listener so the win is a
-    * spill/peak-memory receipt, not a narrative.
+    * 2-column key back). Both shapes were measured back-to-back with
+    * a stage-metrics listener, so the win is a spill/peak-memory
+    * receipt, not a narrative.
     *
     * Degrees join as a SIZE-GATED BROADCAST: deg is a per-customer
     * aggregate — the customer DIM, 10²–10³× smaller than the pair

@@ -963,26 +963,23 @@ object TextQueries {
     * over exact unigrams since the synthetic vocab is small; at web
     * scale the ONLY change is `term` → `xxhash64(term) % 10⁴`, which
     * BOUNDS the feature table at 10⁴ rows instead of vocab-sized —
-    * same plan, stronger guarantee. No longer just a claim: both
-    * halves are MEASURED on a staged 47.5k-term corpus by
-    * [[graft.examples.DsirHashProbe]] — feature table 47,500 → 9,919
-    * rows, plan node-for-node equal, weight correlation 0.91 at
-    * 4.75:1 collision load (0.98 at 1.4:1); the receipt's caveat is
-    * that a literal top-k cut over near-tied weights IS
-    * collision-sensitive — hashing suits DSIR's soft resampling, not
-    * hard ranking). Target domain = the corpus'
+    * same plan, stronger guarantee. No longer just a claim: both halves are
+    * MEASURED on a staged 47.5k-term corpus — feature table 47,500 → 9,919
+    * rows, plan node-for-node equal, weight correlation 0.91 at 4.75:1
+    * collision load (0.98 at 1.4:1); the receipt's caveat is that a literal
+    * top-k cut over near-tied weights IS collision-sensitive — hashing suits
+    * DSIR's soft resampling, not hard ranking). Target domain = the corpus'
     * majority language (deterministic: doc-count desc, lang asc);
-    * per-document weight = mean over tokens of
-    * ln p̂_target(tok) − ln p̂_corpus(tok), both Laplace-smoothed over
-    * the shared vocabulary. Published: the top-30 OUT-OF-DOMAIN docs
-    * by weight — "which docs outside the target stratum look most
-    * like it", exactly the resampling key DSIR ranks on. Both
-    * unigram tables come from ONE aggregate (c_all and the
-    * lang-gated c_t in the same groupBy — no second corpus pass);
-    * totals and |V| are a 1-row broadcast; the scoring join keys on
-    * term (vocab-sized side left to AQE, never driver-forced,
-    * the t07 discipline); top-30 is a TakeOrdered ordered by the
-    * ROUNDED weight so cross-engine ulp noise cannot reorder it. */
+    * per-document weight = mean over tokens of ln p̂_target(tok) − ln
+    * p̂_corpus(tok), both Laplace-smoothed over the shared vocabulary.
+    * Published: the top-30 OUT-OF-DOMAIN docs by weight — "which docs outside
+    * the target stratum look most like it", exactly the resampling key DSIR
+    * ranks on. Both unigram tables come from ONE aggregate (c_all and the
+    * lang-gated c_t in the same groupBy — no second corpus pass); totals and
+    * |V| are a 1-row broadcast; the scoring join keys on term (vocab-sized
+    * side left to AQE, never driver-forced, the t07 discipline); top-30 is a
+    * TakeOrdered ordered by the ROUNDED weight so cross-engine ulp noise
+    * cannot reorder it. */
   private def t26(s: SparkSession, d: String): DataFrame = {
     val tgt = documents(s, d).groupBy("lang").agg(count(lit(1)).as("c"))
       .orderBy(col("c").desc, col("lang")).limit(1)
@@ -1130,17 +1127,7 @@ object TextQueries {
     * the final state as the ENCODER (a word's segmentation after
     * training IS its BPE encoding under the learned rules). */
   private def bpeTrain(
-      s: SparkSession, d: String): (Seq[DataFrame], DataFrame) =
-    bpeTrainRounds(s, d, 5)()
-
-  /** [[bpeTrain]] with the merge budget exposed, plus a per-round hook
-    * (the round-12 BpeRoundsProbe times each round through it — 5
-    * rounds is the oracle-checked surface, realistic tokenizer budgets
-    * are 10⁴⁺ and the probe pins that per-round cost stays flat). */
-  private[graft] def bpeTrainRounds(
-      s: SparkSession, d: String, rounds: Int)(
-      onRound: (Int, DataFrame) => Unit = (_, _) => ())
-      : (Seq[DataFrame], DataFrame) = {
+      s: SparkSession, d: String): (Seq[DataFrame], DataFrame) = {
     val sep = "~" // outside the corpus alphabet (a–y + space)
     val init = graft.Tables.rebalance(s, documents(s, d))
       .select(explode(TextFns.tokens(col("text"))).as("tok"))
@@ -1150,7 +1137,7 @@ object TextQueries {
           i => col("tok").substr(i, lit(1))), sep).as("sym"))
       .groupBy("sym").agg(count(lit(1)).as("cnt"))
     var vocab = init.localCheckpoint()
-    val merges = (1 to rounds).map { r =>
+    val merges = (1 to 5).map { r =>
       val pairs = vocab
         .select(col("cnt"), split(col("sym"), sep).as("ss"))
         .filter(size(col("ss")) >= 2)
@@ -1171,15 +1158,14 @@ object TextQueries {
       // once symbols are multi-char (round 2+) an unanchored
       // replace(sym, a~b, ab) can match ACROSS symbol boundaries —
       // [ab, c] stored as 'ab~c' contains 'b~c', so merging (b, c)
-      // would corrupt it to the single symbol 'abc' (round-11 advisory,
-      // shared by the oracle so the cross-engine check couldn't see
-      // it). The fold's accumulator is the rebuilt '~'-joined string;
-      // its last symbol equals `a` iff acc IS a or acc ENDS WITH '~'+a
-      // (symbols never contain '~', so the separator anchors the
-      // boundary), and a just-merged trailing a+b can never re-match
-      // as `a` (that would need b = ''), so the fold is exactly the
-      // greedy scan: merge consumes both symbols, the next comparison
-      // starts after them.
+      // would corrupt it to the single symbol 'abc' (a bug the oracle once
+      // shared, so the cross-engine check couldn't see it). The fold's
+      // accumulator is the rebuilt '~'-joined string; its last symbol equals
+      // `a` iff acc IS a or acc ENDS WITH '~'+a (symbols never contain '~',
+      // so the separator anchors the boundary), and a just-merged trailing
+      // a+b can never re-match as `a` (that would need b = ''), so the fold
+      // is exactly the greedy scan: merge consumes both symbols, the next
+      // comparison starts after them.
       vocab = vocab.crossJoin(broadcast(top))
         .select(
           aggregate(
@@ -1194,7 +1180,6 @@ object TextQueries {
             ).otherwise(concat(acc, lit(sep), x))).as("sym"),
           col("cnt"))
         .localCheckpoint()
-      onRound(r, vocab)
       top
     }
     (merges, vocab)

@@ -64,7 +64,7 @@ object VectorQueries {
   /** v03's coarse-probe stage as the ONE definition v03 and v16 both
     * select partitions with: the nprobe=2 best labels by centroid
     * cosine against the broadcast (qe, qn) query row. */
-  private def coarseProbe(s: SparkSession, centPath: String, q: DataFrame): DataFrame =
+  private def coarseLabels(s: SparkSession, centPath: String, q: DataFrame): DataFrame =
     s.read.parquet(centPath).crossJoin(broadcast(q))
       .select(
         col("label"),
@@ -112,7 +112,7 @@ object VectorQueries {
   private def v03(s: SparkSession, d: String): DataFrame = {
     val (centPath, corpPath) = graft.sources.VectorIndex.ensureIvf(s, d)
     val q = queryVec(s, d)
-    val best = coarseProbe(s, centPath, q)
+    val best = coarseLabels(s, centPath, q)
     s.read.parquet(corpPath)
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("e"))
       .join(broadcast(best), col("label") === col("best_label"))
@@ -483,7 +483,7 @@ object VectorQueries {
   private def v16(s: SparkSession, d: String): DataFrame = {
     val (centPath, corpPath) = graft.sources.VectorIndex.ensureIvf(s, d)
     val q = queryVec(s, d)
-    val best = coarseProbe(s, centPath, q)
+    val best = coarseLabels(s, centPath, q)
     val ctx = pqSeeds(s, d).crossJoin(q).localCheckpoint()
     val shortlist = s.read.parquet(corpPath)
       .select(col("vec_id"), col("label"), toDouble(col("embedding")).as("e"))
@@ -680,7 +680,7 @@ object VectorQueries {
       |FROM b, q WHERE b.bucket = q.qb ORDER BY cos_sim DESC, vec_id LIMIT 10""".stripMargin
 
   /** Shared oracle fragments (each assumes the standard `n` CTE and a
-    * `q(qe)` CTE precede it) — the SQL twins of [[coarseProbe]],
+    * `q(qe)` CTE precede it) — the SQL twins of [[coarseLabels]],
     * [[pqSeeds]] and [[adcExpr]], shared by ov03/ov15/ov16 exactly as
     * the Scala side shares the definitions. */
   private def oCentBestCtes: String =
@@ -1238,7 +1238,7 @@ object VectorQueries {
   private def v26(s: SparkSession, d: String): DataFrame = {
     val (centPath, corpPath) = graft.sources.VectorIndex.ensureIvf(s, d)
     val q = queryVec(s, d)
-    val best = coarseProbe(s, centPath, q)
+    val best = coarseLabels(s, centPath, q)
     val cent = s.read.parquet(centPath).select(col("label").as("clabel"), col("ce"))
     // the codebook re-expressed in residual space (3 rows; one row out)
     val rseeds = embeddings(s, d).filter(col("vec_id") <= 2)
@@ -1375,7 +1375,7 @@ object VectorQueries {
         (dot(col("ce"), col("qe")) / (norm(col("ce")) * col("qn"))).as("cs"))
     val exact = v01(s, d).select(col("vec_id"))
     Seq(1, 2, 3).map { np =>
-      // per-width label pick as orderBy+limit — v03's coarseProbe shape,
+      // per-width label pick as orderBy+limit — v03's coarseLabels shape,
       // NOT a shared window + rk-filter: Catalyst inserts the dynamic
       // partition-pruning filter for the Limit build side but falls back
       // to dynamicpruningexpression(true) behind the windowed filter

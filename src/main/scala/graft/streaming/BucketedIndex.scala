@@ -38,9 +38,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   *  A probe reads the base PRUNED to the touched buckets plus the
   *  delta in full — and the delta is SMALL by the fold trigger below,
   *  so probe cost ≈ |batch keys| × occupancy + |delta|, independent of
-  *  stream age (measured: [[graft.examples.Q54GrowthProbe]], against
-  *  the round-11 full-scan layout whose probe grows linearly with
-  *  history).
+  *  stream age (measured against a full-scan layout whose probe grows
+  *  linearly with history).
   *
   * Compaction cadence is SIZE-RATIO (LSM-style), not every-N-batches:
   * [[maybeCompact]] folds when the delta reaches 1/[[BucketedIndex
@@ -154,8 +153,8 @@ private[graft] final class BucketedIndex(
     * partition-discovery listing over P bucket directories is a
     * DISTRIBUTED JOB once P exceeds the parallel-listing threshold,
     * and re-running it per micro-batch made per-batch cost grow with
-    * P — measured 6.5 → 9.5 → 17.8 s/batch across the ×4/×8/×16
-    * growth probe seeds BEFORE this cache, flat after. Safe because a
+    * P — measured 6.5 → 9.5 → 17.8 s/batch across ×4/×8/×16 stream
+    * growth BEFORE this cache, flat after. Safe because a
     * base generation is immutable from `_SUCCESS` to deletion (appends
     * go to delta generations only) — this is the manifest cache every
     * table format (Delta/Iceberg) maintains so readers never re-list
@@ -409,7 +408,7 @@ private[graft] final class BucketedIndex(
     * width so each bucket file carries at least [[BucketedIndex
     * .MinTierBucketBytes]] of the fold's input bounds the metadata bill
     * by the tier's BYTES, which the size-ratio gate already bounds to
-    * ≤ base/FoldFraction. Probe cost is unaffected in order: a tier
+    * ≤ base/FoldFraction. The probe's cost is unaffected in order: a tier
     * read amplifies to at most the tier's own (small) size, exactly as
     * the unfolded delta it replaces was read in full. FULL merges keep
     * the pure occupancy rule — the big base is where `bp` pruning pays

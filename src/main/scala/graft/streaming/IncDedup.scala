@@ -9,10 +9,9 @@ import graft.functions.Num.oround
 /** The q58 STREAMING incremental-dedup micro-batch step — batch d09's
   * "dedup today's crawl against the persisted history index" made
   * continuous, its index backed by [[BucketedIndex]] exactly as q54's
-  * (the round-12 verdict's seed: one state-store format for every
-  * foreachBatch state consumer). Factored out of the `foreachBatch`
-  * closure so the stream (q58) and [[graft.examples.D09StreamProbe]]
-  * drive the IDENTICAL code.
+  * (one state-store format for every foreachBatch state consumer).
+  * Factored out of the `foreachBatch` closure so q58 and q58b drive
+  * the IDENTICAL code.
   *
   * Per batch: the delta docs' band keys probe the index PRUNED to the
   * touched buckets (plan-asserted via [[BucketedIndex.lastProbePlan]]),

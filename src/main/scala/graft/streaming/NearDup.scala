@@ -1,28 +1,21 @@
 package graft.streaming
 
-import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.Num.oround
 
 /** The q54 streaming near-duplicate micro-batch step, factored out of
-  * the `foreachBatch` closure so the stream (q54) and the growth probe
-  * ([[graft.examples.Q54GrowthProbe]], which drives many more batches
-  * than the query stages) execute the IDENTICAL code. Semantics and
-  * the two-tier layering are documented at the q54 site
-  * (`graft.queries.Core`); this object owns only the state layout:
-  * both accumulated indexes live in [[BucketedIndex]] generations, so
-  * each batch's probes read ONLY the buckets the batch's own keys hash
-  * into (plan-asserted in PlanAssertionsSpec) and the per-batch
-  * small-file appends fold into one re-bucketed generation under
-  * [[BucketedIndex.maybeCompact]]'s size-ratio trigger.
-  *
-  * The `bucketed = false` path keeps the round-11 layout (plain
-  * parquet appends, the FULL accumulated index read back every batch)
-  * measurable — it exists for [[graft.examples.Q54GrowthProbe]]'s
-  * A/B contrast only; the stream always runs bucketed.
+  * the `foreachBatch` closure so q54 and q54b execute the IDENTICAL
+  * code. Semantics and the two-tier layering are documented at the
+  * q54 site (`graft.queries.Core`); this object owns only the state
+  * layout: both accumulated indexes live in [[BucketedIndex]]
+  * generations, so each batch's probes read ONLY the buckets the
+  * batch's own keys hash into (plan-asserted in PlanAssertionsSpec)
+  * and the per-batch small-file appends fold into one re-bucketed
+  * generation under [[BucketedIndex.maybeCompact]]'s size-ratio
+  * trigger.
   */
 private[graft] object NearDup {
 
@@ -31,64 +24,18 @@ private[graft] object NearDup {
   private val bandSchema = StructType.fromDDL(
     "doc_id LONG, sh ARRAY<STRING>, bk STRING")
 
-  /** The state-layout seam: the shipped bucket-pruned store vs the
-    * round-11 full-scan layout, so the growth probe can A/B the two
-    * under the otherwise-identical batch step. */
-  private sealed trait Store {
-    def probe(keys: DataFrame): Option[DataFrame]
-    def append(df: DataFrame): Unit
-    def maybeCompact(): Boolean
-    def compact(): Unit
-    def foldIncremental(): Unit
-  }
-
-  private final class Bucketed(ix: BucketedIndex) extends Store {
-    def probe(keys: DataFrame): Option[DataFrame] = ix.probe(keys)
-    def append(df: DataFrame): Unit = ix.append(df)
-    def maybeCompact(): Boolean = ix.maybeCompact()
-    def compact(): Unit = ix.compact()
-    def foldIncremental(): Unit = ix.foldIncremental()
-  }
-
-  /** Round-11 layout: plain appends, full-history read per batch, no
-    * compaction. Existence via the Hadoop FileSystem (the one layout
-    * fix that applies to it too). */
-  private final class Plain(
-      s: SparkSession, root: String, schema: StructType) extends Store {
-    private val path = new Path(root)
-    private def fs = path.getFileSystem(s.sparkContext.hadoopConfiguration)
-    def probe(keys: DataFrame): Option[DataFrame] =
-      if (fs.exists(path)) Some(s.read.schema(schema).parquet(root)) else None
-    def append(df: DataFrame): Unit =
-      df.write.mode("append").parquet(root)
-    def maybeCompact(): Boolean = false
-    def compact(): Unit = () // plain layout has no generations to fold
-    def foldIncremental(): Unit = ()
-  }
-
-  def bandIndex(
-      s: SparkSession, root: String,
-      targetRowsPerBucket: Long, minBuckets: Int): BucketedIndex =
-    new BucketedIndex(s, root, "bk", bandSchema, targetRowsPerBucket, minBuckets)
-
-  def exactIndex(
-      s: SparkSession, root: String,
-      targetRowsPerBucket: Long, minBuckets: Int): BucketedIndex =
-    new BucketedIndex(s, root, "h", exactSchema, targetRowsPerBucket, minBuckets)
-
   /** The stream's band-bucket overload guard. DELIBERATELY distinct
     * from d02's [[graft.queries.DedupQueries.PairBlockCap]] (64): that
     * cap is part of d02's ORACLE TEXT (a HAVING bound both engines
     * apply), while q54's oracle is the UNCAPPED closure — this cap
     * exists only to bound farm mass, so it is sized by the measured
     * separation between adversarial template farms (bucket membership
-    * 479/960/1,998 at 500/1k/2k perturbed copies,
-    * Q54AdversarialProbe) and GENUINE near-dup families (tens; the
-    * largest real family bucket seen on any staged estate is 76, at
-    * sf1 — which a 64 cap wrongly dropped, the round-13 sf1 sweep's
-    * one row of divergence). 256 keeps every measured genuine family
-    * and still kills every measured farm; a >256 genuine family would
-    * be dropped WITH a census row — surfaced, never silent. */
+    * 479/960/1,998 at 500/1k/2k perturbed copies) and GENUINE near-dup
+    * families (tens; the largest real family bucket seen on any staged estate
+    * is 76, at sf1 — which a 64 cap wrongly dropped, the round-13 sf1 sweep's
+    * one row of divergence). 256 keeps every measured genuine family and
+    * still kills every measured farm; a >256 genuine family would be dropped
+    * WITH a census row — surfaced, never silent. */
   val StreamBandCap = 256
 
   /** One micro-batch: exact-class collapse, LSH over first-seen class
@@ -96,25 +43,17 @@ private[graft] object NearDup {
     * append + index append, size-triggered compaction. Writes are
     * append-only and the readers duplicate-immune (min-aggregates /
     * final distinct), so a replayed batch is harmless — the q46
-    * idempotence contract met by algebra. Returns whether either
-    * index compacted this batch (probe bookkeeping). */
+    * idempotence contract met by algebra. */
   def processBatch(
       batch: DataFrame, batchId: Long,
       resDir: String, bandRoot: String, exactRoot: String,
       targetRowsPerBucket: Long = 4096L, minBuckets: Int = 16,
-      bucketed: Boolean = true,
-      bandCap: Option[Int] = Some(StreamBandCap),
-      forceCompact: Boolean = false)
-      : Boolean = {
+      forceCompact: Boolean = false): Unit = {
     val bs = batch.sparkSession
-    val exIdxStore: Store =
-      if (bucketed)
-        new Bucketed(exactIndex(bs, exactRoot, targetRowsPerBucket, minBuckets))
-      else new Plain(bs, exactRoot, exactSchema)
-    val bandStore: Store =
-      if (bucketed)
-        new Bucketed(bandIndex(bs, bandRoot, targetRowsPerBucket, minBuckets))
-      else new Plain(bs, bandRoot, bandSchema)
+    val exactIdx = new BucketedIndex(
+      bs, exactRoot, "h", exactSchema, targetRowsPerBucket, minBuckets)
+    val bandIdx = new BucketedIndex(
+      bs, bandRoot, "bk", bandSchema, targetRowsPerBucket, minBuckets)
     // ---- EXACT tier first (the measured scale guard: 2,000 template
     // copies took the single-tier band join from 7.5 s to 377 s at
     // sf0.1 — |copies|² pairs per band; collapsing each text-hash
@@ -128,7 +67,7 @@ private[graft] object NearDup {
       .select(col("doc_id"), col("text"),
         md5(col("text").cast("binary")).as("h"))
       .localCheckpoint()
-    val exIdx = exIdxStore.probe(withH.select(col("h"))).getOrElse(
+    val exIdx = exactIdx.probe(withH.select(col("h"))).getOrElse(
       bs.createDataFrame(
         bs.sparkContext.emptyRDD[org.apache.spark.sql.Row], exactSchema))
     val looked = withH.join(exIdx, Seq("h"), "left_outer")
@@ -152,22 +91,21 @@ private[graft] object NearDup {
     val bands = graft.queries.DedupQueries.keyedBandsOf(repDocs)
       .select("doc_id", "sh", "bk")
       .localCheckpoint()
-    val rhs0 = bandStore.probe(bands.select(col("bk"))) match {
+    val rhs0 = bandIdx.probe(bands.select(col("bk"))) match {
       case Some(hist) => bands.unionByName(hist.select("doc_id", "sh", "bk"))
       case None       => bands
     }
-    // THE CAPPED STREAMING POLICY (round-12 verdict item 4, probed by
-    // Q54AdversarialProbe): the exact tier collapses BYTE-EQUAL copies,
-    // but a template farm with per-copy PERTURBATIONS defeats it — every
-    // copy is its own exact class, all 2,000 reps share most band keys,
-    // and the in-batch join explodes |copies|² pairs a stream cannot
-    // df-cap after the fact (quadratic in the farm size — measured on
-    // the copy-count axis in Q54AdversarialProbe; capped, the same
-    // batches run flat). So the d02 discipline rides
-    // the probe union: band keys whose membership (batch reps +
-    // accumulated index) exceeds `bandCap` are EXCLUDED from pair
+    // THE CAPPED STREAMING POLICY: the exact tier collapses BYTE-EQUAL
+    // copies, but a template farm with per-copy PERTURBATIONS defeats
+    // it — every copy is its own exact class, all 2,000 reps share most
+    // band keys, and the in-batch join explodes |copies|² pairs a stream
+    // cannot df-cap after the fact (quadratic in the farm size; capped,
+    // the same batches run flat). So the d02 discipline rides the probe
+    // union: band keys whose membership (batch reps + accumulated
+    // index) exceeds [[StreamBandCap]] are EXCLUDED from pair
     // enumeration, and the drop is SURFACED (a census row appended to
     // `<resDir>_capcensus` whenever anything drops — never silent).
+    // NearDupCapSpec pins both sides of the cap.
     // EXACTNESS TRADEOFF, stated plainly: a capped-out key contributes
     // no pairs THIS batch, so a genuine near-dup hiding inside hot
     // template mass is missed by the near tier (it still collapses via
@@ -176,30 +114,26 @@ private[graft] object NearDup {
     // oracle — q54's contract, green at all three SFs with the cap
     // active. rhs is checkpointed: the census sizes aggregate and the
     // pair join are two consumers of the probe union.
-    val rhs = bandCap match {
-      case None => rhs0
-      case Some(cap) =>
-        val ck = rhs0.localCheckpoint()
-        // countDistinct, not count(*): during the compaction crash
-        // window BOTH index generations are visible until the next
-        // fold, so a raw row count double-counts every member and
-        // could push a genuine family past the cap — the census must
-        // be duplicate-immune like the pair algebra it guards.
-        val sizes = ck.groupBy("bk").agg(countDistinct("doc_id").as("bn"))
-          .localCheckpoint()
-        val hot = sizes.filter(col("bn") > cap)
-          .agg(count(lit(1)).as("hot_keys"), max("bn").as("max_bucket"),
-            sum(col("bn") * (col("bn") - 1)).as("dropped_pair_bound2x"))
-          .head()
-        if (hot.getLong(0) > 0)
-          bs.range(1).select(
-            lit(batchId).as("batch_id"),
-            lit(hot.getLong(0)).as("hot_keys"),
-            lit(hot.getLong(1)).as("max_bucket"),
-            lit(hot.getLong(2) / 2).as("dropped_pair_bound"))
-            .write.mode("append").parquet(resDir + "_capcensus")
-        ck.join(sizes.filter(col("bn") <= cap).select("bk"), "bk")
-    }
+    val ck = rhs0.localCheckpoint()
+    // countDistinct, not count(*): during the compaction crash window
+    // BOTH index generations are visible until the next fold, so a raw
+    // row count double-counts every member and could push a genuine
+    // family past the cap — the census must be duplicate-immune like
+    // the pair algebra it guards.
+    val sizes = ck.groupBy("bk").agg(countDistinct("doc_id").as("bn"))
+      .localCheckpoint()
+    val hot = sizes.filter(col("bn") > StreamBandCap)
+      .agg(count(lit(1)).as("hot_keys"), max("bn").as("max_bucket"),
+        sum(col("bn") * (col("bn") - 1)).as("dropped_pair_bound2x"))
+      .head()
+    if (hot.getLong(0) > 0)
+      bs.range(1).select(
+        lit(batchId).as("batch_id"),
+        lit(hot.getLong(0)).as("hot_keys"),
+        lit(hot.getLong(1)).as("max_bucket"),
+        lit(hot.getLong(2) / 2).as("dropped_pair_bound"))
+        .write.mode("append").parquet(resDir + "_capcensus")
+    val rhs = ck.join(sizes.filter(col("bn") <= StreamBandCap).select("bk"), "bk")
     val lsh = bands
       .select(col("bk"), col("doc_id").as("new_id"), col("sh").as("shn"))
       .join(rhs.select(
@@ -228,24 +162,22 @@ private[graft] object NearDup {
         col("rep_jac").as("jaccard"))
     oldCopies.unionByName(newCopies).unionByName(repHits)
       .write.mode("append").parquet(resDir)
-    bandStore.append(bands)
-    exIdxStore.append(repRes.select("h", "rep_id", "rep_dup", "rep_jac"))
+    bandIdx.append(bands)
+    exactIdx.append(repRes.select("h", "rep_id", "rep_dup", "rep_jac"))
     // forceCompact = the q60b determinism knob applied here (q54b):
     // fold after EVERY batch so each epoch's bucket width P is a pure
     // function of row counts — the production LSM policy exercised
     // mid-stream under the oracle (P is pure layout for this consumer,
     // so unlike AnnStream's SRP width the oracle text is unchanged).
-    // INCREMENTAL fold (round-18): fold-every-batch × whole-base
-    // rewrite cost O(stream²/batch) bytes; the banded keys here are
-    // fold-invariant (identity rewrite), so each batch folds only its
-    // own delta and the big base merges on the geometric ratio —
-    // results unchanged (see BucketedIndex.foldIncremental).
+    // INCREMENTAL fold: fold-every-batch × whole-base rewrite costs
+    // O(stream²/batch) bytes; the banded keys here are fold-invariant
+    // (identity rewrite), so each batch folds only its own delta and the
+    // big base merges on the geometric ratio — results unchanged (see
+    // BucketedIndex.foldIncremental).
     if (forceCompact) {
-      bandStore.foldIncremental(); exIdxStore.foldIncremental(); true
+      bandIdx.foldIncremental(); exactIdx.foldIncremental()
     } else {
-      val c1 = bandStore.maybeCompact()
-      val c2 = exIdxStore.maybeCompact()
-      c1 || c2
+      bandIdx.maybeCompact(); exactIdx.maybeCompact()
     }
   }
 }
