@@ -37,51 +37,6 @@ object Bench {
     // in the JSON host stamp below for dump provenance.
     val shuffleWidth = Engine.tuneForEstate(spark, sfDir)
     val errs = scala.collection.mutable.ArrayBuffer[String]()
-    // SPILL TELEMETRY: wall-clock alone misattributes one-box spill to
-    // plan defects — the α tables need "more work" separated from
-    // "same work, spilled". A stage-metrics listener accumulates
-    // memory/disk-spill and peak-execution-memory; per-query deltas
-    // ride the JSON as `queries_spill` when SPARK_GRAFT_BENCH_SPILL=1.
-    // Gated because attribution needs a drain sleep per query
-    // (ListenerBus is async), which adds untimed wall a default sweep
-    // shouldn't pay.
-    val wantSpill = sys.env.get("SPARK_GRAFT_BENCH_SPILL").contains("1")
-    val memSpill = new java.util.concurrent.atomic.AtomicLong
-    val diskSpill = new java.util.concurrent.atomic.AtomicLong
-    val peakExec = new java.util.concurrent.atomic.AtomicLong
-    val stageEvents = new java.util.concurrent.atomic.AtomicLong
-    if (wantSpill)
-      spark.sparkContext.addSparkListener(
-        new org.apache.spark.scheduler.SparkListener {
-          override def onStageCompleted(
-              sc: org.apache.spark.scheduler.SparkListenerStageCompleted)
-              : Unit = {
-            val m = sc.stageInfo.taskMetrics
-            if (m != null) {
-              memSpill.addAndGet(m.memoryBytesSpilled)
-              diskSpill.addAndGet(m.diskBytesSpilled)
-              peakExec.getAndAccumulate(m.peakExecutionMemory, math.max)
-            }
-            stageEvents.incrementAndGet()
-          }
-        })
-    // ListenerBus drain: the bus is async with no completion guarantee,
-    // so a fixed sleep can let a heavy query's late stage-completed
-    // events bleed into the NEXT query's spill entry (round-16
-    // advisory). Poll the event counter until it's been stable for
-    // 400 ms (3 s cap — attribution stays best-effort by nature, but a
-    // quiescent bus is a far stronger signal than one fixed nap).
-    def drainListenerBus(): Unit = {
-      val deadline = System.nanoTime() + 3000L * 1000000
-      var last = stageEvents.get
-      var stableSince = System.nanoTime()
-      while (System.nanoTime() < deadline &&
-          System.nanoTime() - stableSince < 400L * 1000000) {
-        Thread.sleep(50)
-        val now = stageEvents.get
-        if (now != last) { last = now; stableSince = System.nanoTime() }
-      }
-    }
     // Optional args: run only the named queries (profiling aid).
     val selected =
       if (args.isEmpty) SparkEntry.queries.toSeq
@@ -104,13 +59,7 @@ object Bench {
     // seconds run-to-run (measured 8–33 s for the same 9-stage LSH query,
     // ~4 s warm); min-of-2 reports the steady state a long-running
     // cluster job actually sees.
-    val spills =
-      scala.collection.mutable.LinkedHashMap[String, (Long, Long, Long)]()
     val results = selected.sortBy(_._1).map { case (name, fn) =>
-      if (wantSpill) { // drain the previous query's late stage events
-        drainListenerBus()
-        memSpill.set(0L); diskSpill.set(0L); peakExec.set(0L)
-      }
       def once(): Double =
         try {
           val t0 = System.nanoTime()
@@ -125,25 +74,10 @@ object Bench {
       // Always attempt the second run: a transient failure can hit run
       // one just as easily as run two, and a single success is a valid
       // measurement either way (errors are still logged to stderr).
-      // SPARK_GRAFT_BENCH_RUNS=1 skips it — for decade-probe invocations
-      // (sf100 heavies run for minutes each; a second execution doubles
-      // the probe's wall for a warm number the α table doesn't use).
-      // The driver's full-bench contract stays min-of-2 by default.
-      // -1 sentinel when the second run is suppressed
-      // (SPARK_GRAFT_BENCH_RUNS=1): `second = first` would make a
-      // single-run dump indistinguishable from a genuine warm run that
-      // happened to equal cold, muddying cold/warm-gap provenance
-      // (round-15 advisory). `best` below already treats -1 as
-      // "missing" and reports the non-negative run.
-      val second =
-        if (sys.env.get("SPARK_GRAFT_BENCH_RUNS").contains("1")) -1.0
-        else once()
+      val second = once()
       // Both raw timings to stderr: the cold/warm gap is the codegen +
       // artifact-staging cost, worth watching per query when profiling.
-      if (second < 0 && first >= 0)
-        System.err.println(f"[bench] $name run1=$first%.2f run2=skipped")
-      else
-        System.err.println(f"[bench] $name run1=$first%.2f run2=$second%.2f")
+      System.err.println(f"[bench] $name run1=$first%.2f run2=$second%.2f")
       // Untimed inter-query hygiene: localCheckpoint blocks are released
       // by the ContextCleaner only after the owning RDD is GC'd on the
       // driver AND the async cleaner thread gets to it — a 234-query run
@@ -157,12 +91,6 @@ object Bench {
       // read d06's component labeling instead of rebuilding it.
       Engine.sweepPersistentRDDs(spark)
       System.gc()
-      if (wantSpill) {
-        // totals across the query's runs (the cold run alone under
-        // SPARK_GRAFT_BENCH_RUNS=1 — the number the α tables want)
-        drainListenerBus()
-        spills(name) = (memSpill.get, diskSpill.get, peakExec.get)
-      }
       val best = (first, second) match {
         case (a, b) if a >= 0 && b >= 0 => math.min(a, b)
         case (a, b)                     => math.max(a, b) // the non-negative one, or -1
@@ -197,15 +125,9 @@ object Bench {
         s""""shuffle_width":$shuffleWidth,"record_grade":$recordGrade,""" +
         s""""load_start":$loadStart,"load_end":$loadEnd}"""
     }
-    val spillJson =
-      if (spills.isEmpty) ""
-      else spills.map { case (n, (m, dk, p)) =>
-        "\"" + n + s"""":{"spill_mb":${m >> 20},"disk_mb":${dk >> 20},""" +
-          s""""peak_exec_mb":${p >> 20}}"""
-      }.mkString("\"queries_spill\":{", ",", "},")
     val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""queries_cold":${jmap(_._3)},"queries_resumed":${jmap(_._4)},""" +
-      spillJson + s""""host":$host,"sf":"$sfDir"}"""
+      s""""host":$host,"sf":"$sfDir"}"""
     println(json)
     // Also persist the full line: the driver's BENCH capture truncates
     // its tail at 2000 chars, which loses per-query data for most of the

@@ -48,15 +48,9 @@ object Engine {
       .builder()
       .master(master)
       .appName("graft-engine")
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS decouples shuffle WIDTH from
-      // local thread count — the knob a cluster sizes by data volume
-      // but local[32] otherwise holds constant across decade steps
-      // (the round-13 suspicion for p06/d13/g04's super-linear
-      // wall-clock: fixed 32-way shuffles spilling at ×100 data). AQE
-      // coalesces unused width away, so oversizing is cheap.
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS",
-          shufflePartitions.toString))
+      // the initial width; [[tuneForEstate]] resizes it to the estate,
+      // and a caller can still override it with its own `.config`
+      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -122,8 +116,7 @@ object Engine {
     * post-shuffle reads back toward 64 MB), so the only cost of the
     * larger initial number is scheduler overhead AQE already absorbs.
     *
-    * An explicit `SPARK_GRAFT_SHUFFLE_PARTITIONS` always wins (the
-    * probe A/B knob). On a real cluster the deployment sets this conf
+    * On a real cluster the deployment sets this conf
     * from its own estate stats — this helper is the local-mode
     * spelling of that sizing rule, reading the estate directory's
     * parquet bytes (a driver-side listing, no job). Returns the width
@@ -131,16 +124,11 @@ object Engine {
     * known; `spark.sql.shuffle.partitions` is runtime-settable, so
     * every plan built afterwards picks it up. */
   def tuneForEstate(spark: SparkSession, dir: String): Int = {
-    val width = sys.env.get("SPARK_GRAFT_SHUFFLE_PARTITIONS") match {
-      case Some(w) => w.toInt
-      // Floor at the SESSION's actual parallelism, not the env default:
-      // Verify sizes its session from SPARK_GRAFT_CPUS with default 4
-      // while the env default here is 32 — reading the env again would
-      // silently widen a 4-core Verify session to 32 even at sf0.01
-      // (round-16 advisory).
-      case None =>
-        widthFor(estateBytes(dir), spark.sparkContext.defaultParallelism)
-    }
+    // Floor at the SESSION's actual parallelism, not the env default:
+    // Verify sizes its session from SPARK_GRAFT_CPUS with default 4
+    // while the env default here is 32 — reading the env again would
+    // silently widen a 4-core Verify session to 32 even at sf0.01.
+    val width = widthFor(estateBytes(dir), spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", width.toString)
     width
   }

@@ -1,6 +1,7 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -597,10 +598,10 @@ object Core {
     * whenever the watermark passes it, so the UNION of all batch
     * partitions is batch-split-independent. A far-future sentinel
     * reading (null payload — dropped by decode, but event time still
-    * advances the watermark) rides in a SECOND source file with a later
-    * mtime, guaranteeing every real window flushes before the query
-    * drains; the sentinel's own window stays above the final watermark
-    * and never emits. Two traps, both load-bearing:
+    * advances the watermark) rides in a later source file, guaranteeing
+    * every real window flushes before the query drains; the sentinel's
+    * own window stays above the final watermark and never emits. Two
+    * traps, both load-bearing (see [[readingsSrc]]):
     *
     *  - the sentinel carries a VALID payload on a NON-whitelisted MAC,
     *    not an invalid payload: Catalyst pushes the decode-validity
@@ -617,72 +618,58 @@ object Core {
     *    flushes.
     *
     * `batch_id` is dropped on read-back: WHICH batch
-    * emitted a window depends on file ordering, the row set does not.
-    * Fresh source/checkpoint/sink dirs per run — replaying the replay
-    * is itself idempotent. */
+    * emitted a window depends on file ordering, the row set does not. */
   private def q33(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_replay", "q33", d, Seq("events.parquet"))((s, st) => {
-      def sentinel(ts: String) = s.range(1).select(
-        lit("AA:BB:CC:DD:EE:99").as("mac"), // NOT in the whitelist
-        to_timestamp(lit(ts)).as("ts"),
-        unhex(graft.functions.Format5.encodeHex(
-          lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L))).as("payload"))
-      st.stage(synthReadings(s, d), "batch0", 1000000000000L)
-      st.stage(sentinel("2030-01-01 00:00:00"), "batch1", 1000000060000L)
-      st.stage(sentinel("2030-02-01 00:00:00"), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    val stream = s.readStream.schema(synthReadings(s, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val query = graft.etl.Pipeline.streaming(
-      stream, synthTags(s), r.outDir, r.ckpDir,
-      trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-      watermark = "1 minute")
-    query.awaitTermination()
-    s.read.parquet(s"${r.outDir}/sensor_data")
+    val r = new Replay(s0, readingsSrc, "q33", d)
+    graft.etl.Pipeline.streaming(
+      r.stream, synthTags(r.session), r.outDir, r.ckpDir,
+      trigger = Trigger.AvailableNow(), watermark = "1 minute")
+      .awaitTermination()
+    r.session.read.parquet(s"${r.outDir}/sensor_data")
       .drop("batch_id")
       .orderBy("mac", "time")
   }
 
-  /** File-source replay harness shared by the five streaming queries
-    * (q33/q36/q39/q40/q42) — ONE copy of the replay mechanics those
-    * queries learned the hard way:
-    *  - a CLONED session with 8 shuffle partitions (streaming state per
-    *    replay is tiny — sensors × windows, or one struct per active
-    *    user — so 32 state-store tasks per micro-batch are pure
-    *    overhead: task launches + store commits, no data);
-    *  - `stage` writes with repartition(1), NOT coalesce(1): coalesce
+  /** File-source replay harness shared by all 17 streaming queries —
+    * ONE copy of the replay mechanics:
+    *  - each replay source is declared ONCE, as a [[Replay.Source]];
+    *    queries replaying the same files share that value, and so the
+    *    one staged artifact;
+    *  - frame i of a source is staged as `batch<i>.parquet` with mtime
+    *    1e12 + 60000·i: distinct increasing mtimes pin the file-source
+    *    processing order (real data first, watermark-flush sentinels
+    *    last) via copy-then-FileTime;
+    *  - a CLONED session with 1 shuffle partition and no trailing empty
+    *    micro-batch (see [[session]]);
+    *  - staging writes with repartition(1), NOT coalesce(1): coalesce
     *    folds the whole upstream synthesis into the single writer task,
     *    the shuffle keeps per-row work parallel and serializes only the
     *    write;
-    *  - distinct mtimes pin the file-source processing order (real data
-    *    first, watermark-flush sentinels last) via copy-then-FileTime;
     *  - the source is STAGED ONCE, not once per JVM: the staged files are
-    *    a pure function of (prefix, the tables the staging closure reads),
-    *    so they are an on-disk artifact ([[Replay.source]]) keyed on the
-    *    prefix, [[Replay.SourceVersion]] and those tables' content stamp.
-    *    The staging closure runs only when no JVM has published that key
-    *    — a repeated run of the same replay (Bench's min-of-2, Verify
-    *    after Bench, repeated specs) skips the synthesis + write entirely,
-    *    and the artifact store's atomic publish means no reader ever
-    *    lists a half-staged source;
+    *    a pure function of (prefix, the tables the source reads), so they
+    *    are an on-disk artifact ([[Replay.source]]) keyed on the prefix,
+    *    [[Replay.SourceVersion]] and those tables' content stamp. The
+    *    staging runs only when no JVM has published that key — a
+    *    repeated run of the same replay skips the synthesis + write
+    *    entirely, and the artifact store's atomic publish means no
+    *    reader ever lists a half-staged source;
     *  - checkpoint and sink are per-JVM, keyed by (runKey, sfDir):
     *    a reconstruction of the same replay RESUMES the stream over the
     *    kept checkpoint — AvailableNow finds every staged file already
     *    committed, drains nothing, and the sink already holds the full
-    *    result. That is a production stream's steady state (q44 proves
-    *    the recovery machinery end-to-end; every other replay then gets
-    *    to reuse it): history is never re-ingested because the
-    *    checkpoint, not the harness, owns progress. Bench's min-of-2
-    *    therefore measures cold replay once and incremental resume
-    *    once — the two costs a long-running streaming job actually has;
+    *    result. That is a production stream's steady state: history is
+    *    never re-ingested because the checkpoint, not the harness, owns
+    *    progress. Bench's min-of-2 therefore measures cold replay once
+    *    and incremental resume once;
+    *  - [[stream]] reads the staged files one per trigger; the two sinks
+    *    ([[toParquet]], [[foreachBatch]]) run a query under AvailableNow
+    *    over the run's checkpoint and wait for it to drain;
     *  - every run root this JVM creates is registered for shutdown-hook
     *    removal, and run roots left by DEAD graft JVMs (crashed runs whose
     *    hook never fired) are swept at first use, so repeated
     *    bench/verify runs do not accumulate unbounded temp data. */
   private final class Replay(
-      s0: SparkSession, prefix: String, runKey: String, d: String, tables: Seq[String])(
-      stages: (SparkSession, Replay.Stager) => Unit) {
+      s0: SparkSession, src: Replay.Source, runKey: String, d: String) {
     val session: SparkSession = {
       val s = s0.newSession()
       // 1, not the session's 32: every stateful operator commits one
@@ -690,29 +677,67 @@ object Core {
       // join keeps four stores per partition), so partitions × batches
       // is the file-op count and the state itself is tiny — sensors ×
       // windows or one struct per active user. Measured on the replay
-      // bench: 32 → 8 partitions saved ~40%; 8 → 4 another ~15%; 4 → 1
-      // another ~20% of the family total. On a real cluster this knob
-      // scales back up with ACTIVE-KEY count, not data volume.
+      // family: 32 → 8 partitions saved ~40%; 8 → 4 another ~15%; 4 → 1
+      // another ~20%. On a real cluster this knob scales back up with
+      // ACTIVE-KEY count, not data volume.
       s.conf.set("spark.sql.shuffle.partitions", "1")
       // The replays advance watermarks with EXPLICIT far-future sentinel
       // batches (watermark-in-batch-N is computed after batch N-1, so
       // each replay stages exactly the files whose successors flush its
       // windows/timeouts). The engine's extra empty batch after the last
       // file would re-derive a watermark nothing is left to consume —
-      // pure per-batch floor (~0.7 s) × 7 watermarked replays.
+      // pure per-batch floor (~0.7 s) per watermarked replay.
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
       s
     }
-    val srcDir: String = Replay.source(session, prefix, d, tables)(stages)
     private val root = Replay.runRoot(runKey, d)
     val outDir: String = root.resolve("out").toString
     val ckpDir: String = root.resolve("ckp").toString
+
+    /** The shared staged source, one file per micro-batch. */
+    def stream: DataFrame = read(Replay.source(session, src, d))
+
+    /** The source's first `n` frames staged into this run's OWN mutable
+      * directory, one file per micro-batch — for q44, which grows its
+      * source between two query incarnations. Re-staging is idempotent. */
+    def localStream(n: Int): DataFrame = {
+      val dir = java.nio.file.Files.createDirectories(root.resolve("src"))
+      Replay.stageAll(src.batches(session, d).take(n), dir)
+      read(dir.toString)
+    }
+
+    private def read(dir: String): DataFrame =
+      session.readStream.schema(src.schema)
+        .option("maxFilesPerTrigger", "1").parquet(dir)
+
+    /** Streams `ds` into the parquet sink at [[outDir]] (append mode)
+      * until the staged files are drained; returns the sink read back. */
+    def toParquet(ds: Dataset[_]): DataFrame = {
+      run(ds.writeStream.format("parquet").option("path", outDir).outputMode("append"))
+      session.read.parquet(outDir)
+    }
+
+    /** Streams `df` through `f`, once per micro-batch, until the staged
+      * files are drained. */
+    def foreachBatch(df: DataFrame)(f: (DataFrame, Long) => Unit): Unit =
+      run(df.writeStream.foreachBatch(f))
+
+    private def run(w: DataStreamWriter[_]): Unit =
+      w.option("checkpointLocation", ckpDir).trigger(Trigger.AvailableNow())
+        .start().awaitTermination()
   }
 
   private[graft] object Replay {
     import java.nio.file.{Files, Path, Paths}
     import graft.ops.Artifacts
     import graft.ops.Artifacts.rmTree
+
+    /** One replay source: the staged artifact's `prefix`, the `tables`
+      * of the sfDir that `batches` reads, the stream `schema` (DDL), and
+      * the frames to stage, in file-source processing order. */
+    final case class Source(
+        prefix: String, tables: Seq[String], schema: String,
+        batches: (SparkSession, String) => Seq[DataFrame])
 
     private val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
     private val tmpBase = Paths.get(System.getProperty("java.io.tmpdir"))
@@ -747,53 +772,42 @@ object Core {
     private[queries] def pathKey(d: String): String =
       d.replaceAll("[^A-Za-z0-9.]+", "-").replaceAll("^-|-$", "")
 
-    /** Handed to the staging closure while the shared source dir is
-      * being built: writes one single-file parquet micro-batch with a
-      * pinned mtime (the file-source processing order; the publishing
-      * rename keeps it). */
-    final class Stager private[Replay] (build: Path) {
-      def stage(df: DataFrame, name: String, mtimeMs: Long): Unit =
-        stageFile(df, build, name, mtimeMs)
-    }
+    /** Stages frame i as the single parquet file `batch<i>.parquet` with
+      * mtime 1e12 + 60000·i — the file-source processing order, which
+      * the publishing rename keeps. A file already staged is kept as-is
+      * (q44's cached root re-stages the same batches on reconstruction). */
+    private def stageAll(frames: Seq[DataFrame], dir: Path): Unit =
+      frames.zipWithIndex.foreach { case (df, i) =>
+        val dst = dir.resolve(s"batch$i.parquet")
+        if (!Files.exists(dst)) {
+          val tmp = dir.resolve(s"stage_batch$i")
+          df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
+          val listing = Files.list(tmp)
+          val part = try listing.filter(_.toString.endsWith(".parquet")).findFirst.get
+          finally listing.close()
+          Files.copy(part, dst)
+          Files.setLastModifiedTime(
+            dst, java.nio.file.attribute.FileTime.fromMillis(1000000000000L + 60000L * i))
+          rmTree(tmp) // the copied data file is the only survivor
+        }
+      }
 
-    /** The single-file staged write itself — also used directly by q44,
-      * whose restart semantics need a RUN-LOCAL mutable source dir
-      * rather than the shared immutable artifact. Idempotent: an
-      * already-staged file is kept as-is (q44's cached root re-stages
-      * the same batches on reconstruction). */
-    private[queries] def stageFile(
-        df: DataFrame, dir: Path, name: String, mtimeMs: Long): Unit = {
-      if (Files.exists(dir.resolve(s"$name.parquet"))) return
-      val tmp = dir.resolve(s"stage_$name")
-      df.repartition(1).write.mode("overwrite").parquet(tmp.toString)
-      val listing = Files.list(tmp)
-      val part = try listing.filter(_.toString.endsWith(".parquet")).findFirst.get
-      finally listing.close()
-      val dst = Files.copy(part, dir.resolve(s"$name.parquet"))
-      Files.setLastModifiedTime(
-        dst, java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
-      rmTree(tmp) // the copied data file is the only survivor
-    }
-
-    /** Bump when a staging closure changes: published sources are
+    /** Bump when a source's frames change: published sources are
       * otherwise served as they are. */
-    private val SourceVersion = "1"
+    private val SourceVersion = "2"
 
-    /** The staged source of the replays sharing `prefix` over `d`, whose
-      * staging closure reads only `tables` of `d` — built once by
-      * `stages` and published through [[graft.ops.Artifacts.dir]], so
-      * every JVM shares it and a restaged table gets a fresh one. */
-    private[graft] def source(
-        s: SparkSession, prefix: String, d: String, tables: Seq[String])(
-        stages: (SparkSession, Stager) => Unit): String =
-      Artifacts.dir(s, s"replay_$prefix", SourceVersion, d, tables) { p =>
-        stages(s, new Stager(Files.createDirectories(Paths.get(p))))
+    /** The staged files of `src` over `d` — built once and published
+      * through [[graft.ops.Artifacts.dir]], so every JVM shares them and
+      * a restaged table gets a fresh copy. */
+    private[graft] def source(s: SparkSession, src: Source, d: String): String =
+      Artifacts.dir(s, s"replay_${src.prefix}", SourceVersion, d, src.tables) { p =>
+        stageAll(src.batches(s, d), Files.createDirectories(Paths.get(p)))
       }
 
     /** The per-JVM checkpoint + sink root of one replay, keyed by
       * (runKey, sfDir): first construction streams cold, every later
       * construction RESUMES over it (see the class scaladoc). */
-    private[queries] def runRoot(runKey: String, d: String): Path =
+    private def runRoot(runKey: String, d: String): Path =
       runRoots.computeIfAbsent(s"${runKey}_${pathKey(d)}", _ => {
         val p = Files.createDirectories(
           tmpBase.resolve(s"graft_run_${pidHex}_${runKey}_${pathKey(d)}"))
@@ -803,55 +817,57 @@ object Core {
     private val runRoots = new java.util.concurrent.ConcurrentHashMap[String, Path]()
   }
 
+  /** `df` in three id-ordered thirds of its max `id`. The one max()
+    * action runs while a source is staged, once per published source. */
+  private def idThirds(df: DataFrame, id: String): Seq[DataFrame] = {
+    val mx = df.agg(max(id)).head().getLong(0)
+    val (c1, c2) = (mx / 3, 2 * mx / 3)
+    Seq(df.filter(col(id) < c1), df.filter(col(id) >= c1 && col(id) < c2),
+      df.filter(col(id) >= c2))
+  }
+
+  /** The fixed date cuts of the time-ordered replays: every file's rows
+    * lie ahead of the prior batch's watermark, so nothing drops as late. */
+  private def tsCuts = (lit("2024-01-11").cast("timestamp"), lit("2024-01-21").cast("timestamp"))
+
+  /** `ev` in three time-ordered batches split at [[tsCuts]]. */
+  private def tsThirds(ev: DataFrame): Seq[DataFrame] = {
+    val (c1, c2) = tsCuts
+    Seq(ev.filter(col("ts") < c1), ev.filter(col("ts") >= c1 && col("ts") < c2),
+      ev.filter(col("ts") >= c2))
+  }
+
+  /** q26's synthesized readings, then the two far-future flush
+    * sentinels whose shape [[q33]] explains; replayed by q33, q44, q46. */
+  private lazy val readingsSrc = Replay.Source(
+    "graft_replay", Seq("events.parquet"), "mac STRING, ts TIMESTAMP, payload BINARY",
+    (s, d) => synthReadings(s, d) +:
+      Seq("2030-01-01 00:00:00", "2030-02-01 00:00:00").map(ts => s.range(1).select(
+        lit("AA:BB:CC:DD:EE:99").as("mac"), // NOT in the whitelist
+        to_timestamp(lit(ts)).as("ts"),
+        unhex(graft.functions.Format5.encodeHex(
+          lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L))).as("payload"))))
+
+  /** The events as one batch, then two flush sentinels for a non-real
+    * user (see [[sessionsRun]]); replayed by q36 and q43. */
+  private lazy val sessionsSrc = Replay.Source(
+    "graft_sessions", Seq("events.parquet"), "user_id LONG, ts TIMESTAMP, event_id LONG",
+    (s, d) => {
+      def sentinel(ts: String, id: Long) = s.range(1).select(
+        lit(-1L).as("user_id"), to_timestamp(lit(ts)).as("ts"), lit(id).as("event_id"))
+      Seq(events(s, d).select(col("user_id"), col("ts"), col("event_id")),
+        sentinel("2030-01-01 00:00:00", -1L), sentinel("2030-02-01 00:00:00", -2L))
+    })
+
   /** Q36 — STATEFUL streaming under the oracle: the real `events` table
     * replayed through [[graft.streaming.Sessionize]]
     * (`flatMapGroupsWithState`, event-time timeouts) into a parquet
     * sink, read back, and aggregated to exactly q24's batch shape —
     * the oracle IS q24's SQL, so the custom-state runtime is pinned to
     * the declarative window definition by an independent engine. q33
-    * pins the WINDOWED streaming path; this pins the custom-state one.
-    *
-    * Replay mechanics (the q33 lessons): two far-future sentinel files
-    * for a non-real user — the first advances the watermark past every
-    * real session's (last + gap) timeout, the second triggers the
-    * batch whose START watermark reflects it (timeouts in batch N fire
-    * on the watermark computed after batch N-1), so every real session
-    * closes and emits before AvailableNow drains. The sentinel user is
-    * filtered from the result. */
-  private def q36(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_sessions", "q36", d, Seq("events.parquet"))((s, st) => {
-      def sentinel(ts: String, id: Long) = s.range(1).select(
-        lit(-1L).as("user_id"), to_timestamp(lit(ts)).as("ts"), lit(id).as("event_id"))
-      st.stage(events(s, d).select(col("user_id"), col("ts"), col("event_id")),
-        "batch0", 1000000000000L)
-      st.stage(sentinel("2030-01-01 00:00:00", -1L), "batch1", 1000000060000L)
-      st.stage(sentinel("2030-02-01 00:00:00", -2L), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    import s.implicits._
-    val stream = s.readStream.schema("user_id LONG, ts TIMESTAMP, event_id LONG")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-      .withWatermark("ts", "1 minute")
-      .as[graft.streaming.Sessionize.Event]
-    val query = graft.streaming.Sessionize.sessions(stream)
-      .writeStream
-      .format("parquet")
-      .option("path", r.outDir)
-      .option("checkpointLocation", r.ckpDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(r.outDir)
-      .filter(col("user_id") >= 0) // drop the watermark-advancing sentinel
-      .groupBy("user_id")
-      .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
-      .select(
-        col("user_id"), col("n_sessions"), col("n_events"),
-        oround(col("n_events").cast("double") / col("n_sessions"), 4)
-          .as("avg_events_per_session"))
-      .orderBy("user_id")
-  }
+    * pins the WINDOWED streaming path; this pins the custom-state one. */
+  private def q36(s0: SparkSession, d: String): DataFrame =
+    sessionsRun(s0, d, "q36", rocksDb = false)(graft.streaming.Sessionize.sessions(_))
 
   /** Q43 — the `transformWithState` sessionizer under the oracle: the
     * THIRD stateful streaming API (after q33's windowed aggregation and
@@ -860,39 +876,29 @@ object Core {
     * event-time timers on the RocksDB store the API mandates — and
     * aggregated to exactly q24's batch shape, so ALL THREE runtimes are
     * pinned to the one declarative session definition by an independent
-    * engine. The staging prefix is deliberately q36's: the staged
-    * micro-batch files are identical, so the staged artifact is shared
-    * between the two sessionizer replays (one synthesis pays for both).
-    * Sentinel/watermark mechanics are q36's unchanged — TWS timers fire
-    * on the same batch-N-uses-watermark-of-N−1 schedule as GroupState
-    * timeouts. */
-  private def q43(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_sessions", "q43", d, Seq("events.parquet"))((s, st) => {
-      def sentinel(ts: String, id: Long) = s.range(1).select(
-        lit(-1L).as("user_id"), to_timestamp(lit(ts)).as("ts"), lit(id).as("event_id"))
-      st.stage(events(s, d).select(col("user_id"), col("ts"), col("event_id")),
-        "batch0", 1000000000000L)
-      st.stage(sentinel("2030-01-01 00:00:00", -1L), "batch1", 1000000060000L)
-      st.stage(sentinel("2030-02-01 00:00:00", -2L), "batch2", 1000000120000L)
-    })
+    * engine. It replays q36's source (one staging pays for both); TWS
+    * timers fire on the same batch-N-uses-watermark-of-N−1 schedule as
+    * GroupState timeouts, so the sentinels flush it the same way. */
+  private def q43(s0: SparkSession, d: String): DataFrame =
+    sessionsRun(s0, d, "q43", rocksDb = true)(graft.streaming.SessionizeTws.sessions(_))
+
+  /** q36/q43's dataflow over [[sessionsSrc]]. Two far-future sentinel
+    * files for a non-real user: the first advances the watermark past
+    * every real session's (last + gap) timeout, the second triggers the
+    * batch whose START watermark reflects it (timeouts in batch N fire
+    * on the watermark computed after batch N-1), so every real session
+    * closes and emits before AvailableNow drains. The sentinel user is
+    * filtered from the result. */
+  private def sessionsRun(s0: SparkSession, d: String, runKey: String, rocksDb: Boolean)(
+      sessionize: Dataset[graft.streaming.Sessionize.Event] => Dataset[_]): DataFrame = {
+    val r = new Replay(s0, sessionsSrc, runKey, d)
     val s = r.session
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    if (rocksDb)
+      s.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import s.implicits._
-    val stream = s.readStream.schema("user_id LONG, ts TIMESTAMP, event_id LONG")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-      .withWatermark("ts", "1 minute")
-      .as[graft.streaming.Sessionize.Event]
-    val query = graft.streaming.SessionizeTws.sessions(stream)
-      .writeStream
-      .format("parquet")
-      .option("path", r.outDir)
-      .option("checkpointLocation", r.ckpDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(r.outDir)
+    r.toParquet(sessionize(
+        r.stream.withWatermark("ts", "1 minute").as[graft.streaming.Sessionize.Event]))
       .filter(col("user_id") >= 0) // drop the watermark-advancing sentinel
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
@@ -919,41 +925,20 @@ object Core {
     * comes from checkpoint + state store + idempotent sink, not from a
     * hand-rolled reconnect loop — and this query proves the recovery
     * path END TO END against an independent engine, not just in a
-    * unit test. Run-LOCAL staging (not the shared staged artifact):
-    * mutating the source between incarnations is the point. */
+    * unit test. Run-LOCAL staging of q33's frames (not the shared staged
+    * artifact): mutating the source between incarnations is the point.
+    * The run root is cached like every replay's, so a reconstruction
+    * resumes both incarnations over the kept checkpoint. */
   private def q44(s0: SparkSession, d: String): DataFrame = {
-    import java.nio.file.Files
-    val s = s0.newSession()
-    s.conf.set("spark.sql.shuffle.partitions", "1") // see Replay's rationale
-    // cached per (runKey, sfDir) like every replay: a reconstruction
-    // re-stages the same files (stageFile is idempotent) and both
-    // incarnations resume over the kept checkpoint — a THIRD proof of
-    // the recovery path, free
-    val root = Replay.runRoot("q44", d)
-    val src = Files.createDirectories(root.resolve("src"))
-    val outDir = root.resolve("out").toString
-    val ckpDir = root.resolve("ckp").toString
-    val readings = synthReadings(s, d)
-    def sentinel(ts: String) = s.range(1).select(
-      lit("AA:BB:CC:DD:EE:99").as("mac"), // NOT in the whitelist (q33 trap)
-      to_timestamp(lit(ts)).as("ts"),
-      unhex(graft.functions.Format5.encodeHex(
-        lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L))).as("payload"))
-    def incarnation(): Unit = {
-      val stream = s.readStream.schema(readings.schema)
-        .option("maxFilesPerTrigger", "1").parquet(src.toString)
+    val r = new Replay(s0, readingsSrc, "q44", d)
+    def incarnation(files: Int): Unit =
       graft.etl.Pipeline.streaming(
-        stream, synthTags(s), outDir, ckpDir,
-        trigger = org.apache.spark.sql.streaming.Trigger.AvailableNow(),
-        watermark = "1 minute")
+        r.localStream(files), synthTags(r.session), r.outDir, r.ckpDir,
+        trigger = Trigger.AvailableNow(), watermark = "1 minute")
         .awaitTermination()
-    }
-    Replay.stageFile(readings, src, "batch0", 1000000000000L)
-    incarnation() // run 1: ingest, stop with tail windows still in state
-    Replay.stageFile(sentinel("2030-01-01 00:00:00"), src, "batch1", 1000000060000L)
-    Replay.stageFile(sentinel("2030-02-01 00:00:00"), src, "batch2", 1000000120000L)
-    incarnation() // run 2: same checkpoint — recovered state must flush
-    s.read.parquet(s"$outDir/sensor_data")
+    incarnation(1) // run 1: ingest, stop with tail windows still in state
+    incarnation(3) // run 2: + the sentinels, same checkpoint — recovered state must flush
+    r.session.read.parquet(s"${r.outDir}/sensor_data")
       .drop("batch_id")
       .orderBy("mac", "time")
   }
@@ -975,34 +960,19 @@ object Core {
     * are read back, and aggregate to per-type totals whose oracle is
     * the PLAIN events table — each event exactly once. */
   private def q45(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_dedup", "q45", d, Seq("events.parquet"))((s, st) => {
-      val ev = events(s, d)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      val (cut1, cut2) =
-        (lit("2024-01-11").cast("timestamp"), lit("2024-01-21").cast("timestamp"))
-      val b0 = ev.filter(col("ts") < cut1)
-      st.stage(b0.unionAll(b0), "batch0", 1000000000000L)
-      st.stage(
-        ev.filter(col("ts") >= cut1 && col("ts") < cut2).unionAll(
-          b0.filter(col("ts") >= cut1 - expr("interval 1 minute"))),
-        "batch1", 1000000060000L)
-      st.stage(ev.filter(col("ts") >= cut2), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-      .withWatermark("ts", "1 minute")
-      .dropDuplicatesWithinWatermark("event_id")
-    val query = stream.writeStream
-      .format("parquet")
-      .option("path", r.outDir)
-      .option("checkpointLocation", r.ckpDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(r.outDir)
+    val r = new Replay(s0, Replay.Source(
+      "graft_dedup", Seq("events.parquet"),
+      "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING, value DOUBLE",
+      (s, d) => {
+        val Seq(b0, b1, b2) = tsThirds(events(s, d)
+          .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value")))
+        Seq(b0.unionAll(b0),
+          b1.unionAll(b0.filter(col("ts") >= tsCuts._1 - expr("interval 1 minute"))),
+          b2)
+      }), "q45", d)
+    r.toParquet(r.stream
+        .withWatermark("ts", "1 minute")
+        .dropDuplicatesWithinWatermark("event_id"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), oround(sum("value"), 2).as("sum_value"))
       .orderBy("event_type")
@@ -1028,38 +998,22 @@ object Core {
     * a15's exact projection, so the streamed answer must hash-equal the batch
     * text. */
   private def q57(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_hopwin", "q57", d, Seq("events.parquet"))((s, st) => {
-      val ev = events(s, d)
-        .filter(col("ts").isNotNull)
-        .select(col("ts"), col("event_type"), col("value"))
-      val (cut1, cut2) =
-        (lit("2024-01-11").cast("timestamp"), lit("2024-01-21").cast("timestamp"))
-      def sentinel(t: String) = s.range(1)
-        .select(lit(t).cast("timestamp").as("ts"),
-          lit("zz_sentinel").as("event_type"), lit(0.0).as("value"))
-      st.stage(ev.filter(col("ts") < cut1), "batch0", 1000000000000L)
-      st.stage(ev.filter(col("ts") >= cut1 && col("ts") < cut2), "batch1", 1000000060000L)
-      st.stage(ev.filter(col("ts") >= cut2), "batch2", 1000000120000L)
-      st.stage(sentinel("2030-01-01 00:00:00"), "batch3", 1000000180000L)
-      st.stage(sentinel("2030-02-01 00:00:00"), "batch4", 1000000240000L)
-    })
-    val s = r.session
-    val stream = s.readStream
-      .schema("ts TIMESTAMP, event_type STRING, value DOUBLE")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-      .withWatermark("ts", "1 minute")
-      .groupBy(window(col("ts"), "30 minutes", "10 minutes").as("w"),
-        col("event_type"))
-      .agg(count(lit(1)).as("n"), sum("value").as("sv"))
-    val query = stream.writeStream
-      .format("parquet")
-      .option("path", r.outDir)
-      .option("checkpointLocation", r.ckpDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(r.outDir)
+    val r = new Replay(s0, Replay.Source(
+      "graft_hopwin", Seq("events.parquet"), "ts TIMESTAMP, event_type STRING, value DOUBLE",
+      (s, d) => {
+        def sentinel(t: String) = s.range(1)
+          .select(lit(t).cast("timestamp").as("ts"),
+            lit("zz_sentinel").as("event_type"), lit(0.0).as("value"))
+        tsThirds(events(s, d)
+            .filter(col("ts").isNotNull)
+            .select(col("ts"), col("event_type"), col("value"))) ++
+          Seq(sentinel("2030-01-01 00:00:00"), sentinel("2030-02-01 00:00:00"))
+      }), "q57", d)
+    r.toParquet(r.stream
+        .withWatermark("ts", "1 minute")
+        .groupBy(window(col("ts"), "30 minutes", "10 minutes").as("w"),
+          col("event_type"))
+        .agg(count(lit(1)).as("n"), sum("value").as("sv")))
       // Null-safe drop: `=!=` is NULL (row silently dropped) for a
       // NULL event_type, diverging from the shared batch oracle oa15
       // which keeps a NULL group. <=> keeps NULL-typed events. The
@@ -1077,7 +1031,7 @@ object Core {
   /** Q54 — STREAMING near-duplicate detection: the continuous-crawl
     * dedup loop, TWO-TIERED the way a production pipeline layers it.
     * Documents arrive in doc_id-ordered micro-batches (three staged
-    * file batches, the q33 replay discipline). Tier 1 — EXACT: each
+    * file batches). Tier 1 — EXACT: each
     * doc's text hash probes the accumulated exact-class index; copies
     * of a known class inherit their representative's verdict without
     * touching the near tier (template mass is d01/q18's signal, and
@@ -1119,46 +1073,8 @@ object Core {
     * write-new-then-delete-old crash window safe). Because arrival
     * order is doc_id order, ONE oracle serves the streaming and batch
     * forms — the q36/q43 discipline applied to dedup. */
-  private def q54Stage(d: String): (SparkSession, Replay.Stager) => Unit =
-    (s, st) => {
-      val docs = documents(s, d).select(col("doc_id"), col("text"))
-      // proportional id-ordered thirds (any id-ordered batching yields
-      // the identical result — see the oracle note — so the cut choice
-      // is a realism knob, not a semantics one; staging runs once per
-      // published source, so the one max() action is staging cost, not
-      // query cost)
-      val mx = docs.agg(max("doc_id")).head().getLong(0)
-      val (c1, c2) = (mx / 3, 2 * mx / 3)
-      st.stage(docs.filter(col("doc_id") < c1), "batch0", 1000000000000L)
-      st.stage(docs.filter(col("doc_id") >= c1 && col("doc_id") < c2),
-        "batch1", 1000000060000L)
-      st.stage(docs.filter(col("doc_id") >= c2), "batch2", 1000000120000L)
-    }
-
-  private def q54(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_neardup", "q54", d, Seq("documents.parquet"))(q54Stage(d))
-    val s = r.session
-    val resDir = r.outDir
-    val stream = s.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // the per-batch step (exact-class collapse → pruned LSH probe
-        // → append + periodic compaction) lives in NearDup.processBatch,
-        // shared with q54b; tier semantics + the collapse-exactness
-        // proof are in the scaladoc above
-        graft.streaming.NearDup.processBatch(
-          batch, batchId,
-          resDir = resDir,
-          bandRoot = r.outDir + "_index",
-          exactRoot = r.outDir + "_exact")
-      }
-      .option("checkpointLocation", r.ckpDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(resDir).distinct().orderBy("doc_id")
-  }
+  private def q54(s0: SparkSession, d: String): DataFrame =
+    nearDupRun(s0, d, "q54", 4096L, 16, forceCompact = false)
 
   /** Q54b — q54 UNDER THE PRODUCTION FOLD POLICY: the identical
     * two-tier dataflow with `forceCompact = true` (q60b's determinism
@@ -1170,34 +1086,34 @@ object Core {
     * LSH band key — no row's `bk` changes — so the oracle is q54's
     * VERBATIM (no phase split needed); what the variant buys is the
     * LSM fold + adaptive re-widening path executing MID-STREAM under
-    * the cross-engine oracle instead of only under specs/probes.
+    * the cross-engine oracle instead of only under specs.
     * target = 64 with minBuckets = 4, chosen so ceil(rows/64) moves
     * across every fold at all three SFs (at the 4096 production target
     * the test estates never leave the minBuckets floor and the
     * re-widening would go unexercised — the q60b straddle-a-boundary
-    * discipline). Shares q54's staged source (same prefix), own
-    * index/checkpoint (runKey q54b). */
-  private def q54b(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_neardup", "q54b", d, Seq("documents.parquet"))(q54Stage(d))
-    val s = r.session
-    val resDir = r.outDir
-    val stream = s.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.streaming.NearDup.processBatch(
-          batch, batchId,
-          resDir = resDir,
-          bandRoot = r.outDir + "_index",
-          exactRoot = r.outDir + "_exact",
-          targetRowsPerBucket = 64L, minBuckets = 4,
-          forceCompact = true)
-      }
-      .option("checkpointLocation", r.ckpDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(resDir).distinct().orderBy("doc_id")
+    * discipline). Replays q54's source, own index/checkpoint. */
+  private def q54b(s0: SparkSession, d: String): DataFrame =
+    nearDupRun(s0, d, "q54b", 64L, 4, forceCompact = true)
+
+  /** q54/q54b's dataflow over id-ordered thirds of the documents,
+    * parameterized over runKey and the fold policy; the per-batch step
+    * lives in [[graft.streaming.NearDup.processBatch]]. */
+  private def nearDupRun(
+      s0: SparkSession, d: String, runKey: String,
+      targetRowsPerBucket: Long, minBuckets: Int, forceCompact: Boolean): DataFrame = {
+    val r = new Replay(s0, Replay.Source(
+      "graft_neardup", Seq("documents.parquet"), "doc_id LONG, text STRING",
+      (s, d) => idThirds(documents(s, d).select(col("doc_id"), col("text")), "doc_id")),
+      runKey, d)
+    r.foreachBatch(r.stream) { (batch, batchId) =>
+      graft.streaming.NearDup.processBatch(
+        batch, batchId,
+        resDir = r.outDir,
+        bandRoot = r.outDir + "_index",
+        exactRoot = r.outDir + "_exact",
+        targetRowsPerBucket, minBuckets, forceCompact)
+    }
+    r.session.read.parquet(r.outDir).distinct().orderBy("doc_id")
   }
 
   /** One oracle for the streaming and batch forms: the uncapped
@@ -1212,8 +1128,8 @@ object Core {
   /** Q58 — STREAMING incremental dedup: batch d09's "dedup the delta
     * against the persisted history index" made CONTINUOUS, the index
     * backed by [[graft.streaming.BucketedIndex]] exactly as q54's (one
-    * state-store format for every foreachBatch state consumer — the
-    * round-12 seed). The indexing job seeds the history corpus's bands
+    * state-store format for every foreachBatch state consumer). The
+    * indexing job seeds the history corpus's bands
     * (doc_id % 5 ≠ 4, d09's split) once; the delta (doc_id % 5 = 4)
     * then arrives as three id-ordered micro-batches, and each batch
     * probes the index PRUNED to its own band keys, Jaccard-verifies on
@@ -1226,20 +1142,9 @@ object Core {
     * ([[DedupQueries.oIncDedupStream]]). Resume contract: a second
     * construction over the same checkpoint re-ingests nothing (index
     * seeding is existence-gated, AvailableNow finds every file
-    * committed) and returns identical rows. */
-  private def q58Stage(d: String): (SparkSession, Replay.Stager) => Unit =
-    (s, st) => {
-      val delta = documents(s, d).select(col("doc_id"), col("text"))
-        .filter(col("doc_id") % 5 === 4)
-      val mx = delta.agg(max("doc_id")).head().getLong(0)
-      val (c1, c2) = (mx / 3, 2 * mx / 3)
-      st.stage(delta.filter(col("doc_id") < c1), "batch0", 1000000000000L)
-      st.stage(delta.filter(col("doc_id") >= c1 && col("doc_id") < c2),
-        "batch1", 1000000060000L)
-      st.stage(delta.filter(col("doc_id") >= c2), "batch2", 1000000120000L)
-    }
-
-  /** q58's dataflow, parameterized over runKey + the fold policy so the
+    * committed) and returns identical rows.
+    *
+    * The dataflow is parameterized over runKey + the fold policy so the
     * declared q58 (production size-ratio trigger) and q58b (forced
     * per-batch folds at a P-moving target — see [[q54b]]'s rationale;
     * the oracle is unchanged because the LSH band key is fixed and P is
@@ -1248,30 +1153,24 @@ object Core {
       s0: SparkSession, d: String, runKey: String,
       targetRowsPerBucket: Long, minBuckets: Int,
       forceCompact: Boolean): DataFrame = {
-    val r = new Replay(s0, "graft_incdedup", runKey, d, Seq("documents.parquet"))(q58Stage(d))
-    val s = r.session
-    val resDir = r.outDir
+    val r = new Replay(s0, Replay.Source(
+      "graft_incdedup", Seq("documents.parquet"), "doc_id LONG, text STRING",
+      (s, d) => idThirds(documents(s, d).select(col("doc_id"), col("text"))
+        .filter(col("doc_id") % 5 === 4), "doc_id")),
+      runKey, d)
     val idxRoot = r.outDir + "_index"
     graft.streaming.IncDedup.seedHistory(
-      s,
+      r.session,
       DedupQueries.keyedBandsOf(
-        documents(s, d).select(col("doc_id"), col("text"))
+        documents(r.session, d).select(col("doc_id"), col("text"))
           .filter(col("doc_id") % 5 =!= 4)),
       idxRoot, targetRowsPerBucket, minBuckets)
-    val stream = s.readStream.schema("doc_id LONG, text STRING")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.streaming.IncDedup.processBatch(
-          batch, batchId, resDir = resDir, root = idxRoot,
-          targetRowsPerBucket, minBuckets, forceCompact = forceCompact)
-        ()
-      }
-      .option("checkpointLocation", r.ckpDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(resDir).distinct().orderBy("new_id", "dup_of")
+    r.foreachBatch(r.stream) { (batch, batchId) =>
+      graft.streaming.IncDedup.processBatch(
+        batch, batchId, resDir = r.outDir, root = idxRoot,
+        targetRowsPerBucket, minBuckets, forceCompact = forceCompact)
+    }
+    r.session.read.parquet(r.outDir).distinct().orderBy("new_id", "dup_of")
   }
 
   private def q58(s0: SparkSession, d: String): DataFrame =
@@ -1295,40 +1194,8 @@ object Core {
     * same count with the same integer-shift SQL). Semantics, partner
     * algebra and the rounded-rank discipline live at
     * [[graft.streaming.AnnStream]]. */
-  private def q60(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_annstream", "q60", d, Seq("embeddings.parquet"))((s, st) => {
-      val delta = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") % 5 === 4)
-      val mx = delta.agg(max("vec_id")).head().getLong(0)
-      val (c1, c2) = (mx / 3, 2 * mx / 3)
-      st.stage(delta.filter(col("vec_id") < c1), "batch0", 1000000000000L)
-      st.stage(delta.filter(col("vec_id") >= c1 && col("vec_id") < c2),
-        "batch1", 1000000060000L)
-      st.stage(delta.filter(col("vec_id") >= c2), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    val hist = embeddings(s, d).select(col("vec_id"), col("embedding"))
-      .filter(col("vec_id") % 5 =!= 4)
-    val bits = graft.functions.VectorFns.adaptiveSrpBits(
-      hist.count(), graft.sources.VectorIndex.IndexBucketTarget)
-    val resDir = r.outDir
-    val idxRoot = r.outDir + "_index"
-    graft.streaming.AnnStream.seedHistory(s, hist, idxRoot, bits)
-    val stream = s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.streaming.AnnStream.processBatch(
-          batch, batchId, resDir = resDir, root = idxRoot, bits = bits)
-        ()
-      }
-      .option("checkpointLocation", r.ckpDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(resDir).distinct()
-      .orderBy("vec_id", "nb_rank")
-  }
+  private def q60(s0: SparkSession, d: String): DataFrame =
+    annRun(s0, d, "q60", graft.sources.VectorIndex.IndexBucketTarget, reband = false)
 
   /** One oracle text for the streamed top-k: the ov02 SRP CTE family
     * with the width from the HISTORY count, the q58 partner clause,
@@ -1367,53 +1234,41 @@ object Core {
     * sf0.1: 1600→1866 crosses 7·2⁸ = 1792), because the whole point
     * of the variant is an ORACLE-CHECKED width FLIP — at a target of
     * 64 the ~8%-per-batch growth never crosses a power-of-two and the
-    * flip would go unexercised). The oracle is
-    * PHASE-SPLIT: one width
+    * flip would go unexercised). The oracle is PHASE-SPLIT: one width
     * per batch epoch derived with the same integer-shift SQL, each
     * query joined to its phase's width, candidates bucket-matched on
-    * `substr(sig, 1, w_phase)` — the union of per-epoch CTEs the
-    * verdict sketched. Partner rule, rounded-rank discipline, and the
-    * result read are q60's verbatim; shares q60's staged source (same
-    * prefix), own index/checkpoint (runKey q60b). */
-  private def q60b(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_annstream", "q60b", d, Seq("embeddings.parquet"))((s, st) => {
-      val delta = embeddings(s, d).select(col("vec_id"), col("embedding"))
-        .filter(col("vec_id") % 5 === 4)
-      val mx = delta.agg(max("vec_id")).head().getLong(0)
-      val (c1, c2) = (mx / 3, 2 * mx / 3)
-      st.stage(delta.filter(col("vec_id") < c1), "batch0", 1000000000000L)
-      st.stage(delta.filter(col("vec_id") >= c1 && col("vec_id") < c2),
-        "batch1", 1000000060000L)
-      st.stage(delta.filter(col("vec_id") >= c2), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    val hist = embeddings(s, d).select(col("vec_id"), col("embedding"))
+    * `substr(sig, 1, w_phase)`. Partner rule, rounded-rank discipline,
+    * and the result read are q60's verbatim; replays q60's source, own
+    * index/checkpoint. */
+  private def q60b(s0: SparkSession, d: String): DataFrame =
+    annRun(s0, d, "q60b", 7L, reband = true)
+
+  /** q60/q60b's dataflow: `bandTarget` is the SRP BAND occupancy target
+    * (oracle-pinned); the index FILE layout follows the 4096 every other
+    * consumer uses — see AnnStream.seedHistory's layout note. `reband`
+    * re-derives the band width at a fold forced after every batch. */
+  private def annRun(
+      s0: SparkSession, d: String, runKey: String,
+      bandTarget: Long, reband: Boolean): DataFrame = {
+    val r = new Replay(s0, Replay.Source(
+      "graft_annstream", Seq("embeddings.parquet"), "vec_id LONG, embedding ARRAY<FLOAT>",
+      (s, d) => idThirds(embeddings(s, d).select(col("vec_id"), col("embedding"))
+        .filter(col("vec_id") % 5 === 4), "vec_id")),
+      runKey, d)
+    val hist = embeddings(r.session, d).select(col("vec_id"), col("embedding"))
       .filter(col("vec_id") % 5 =!= 4)
-    val bits = graft.functions.VectorFns.adaptiveSrpBits(hist.count(), 7L)
-    val resDir = r.outDir
+    val bits = graft.functions.VectorFns.adaptiveSrpBits(hist.count(), bandTarget)
     val idxRoot = r.outDir + "_index"
-    // targetRowsPerBucket = 7 is the BAND width knob (oracle-pinned:
-    // the estates straddle a width boundary mid-stream); the file
-    // LAYOUT follows the 4096 every other consumer uses — see
-    // AnnStream.seedHistory's layout note.
     graft.streaming.AnnStream.seedHistory(
-      s, hist, idxRoot, bits, targetRowsPerBucket = 7L,
+      r.session, hist, idxRoot, bits, targetRowsPerBucket = bandTarget,
       layoutRowsPerBucket = 4096L)
-    val stream = s.readStream.schema("vec_id LONG, embedding ARRAY<FLOAT>")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.streaming.AnnStream.processBatch(
-          batch, batchId, resDir = resDir, root = idxRoot, bits = bits,
-          targetRowsPerBucket = 7L, reband = true, forceCompact = true,
-          layoutRowsPerBucket = 4096L)
-        ()
-      }
-      .option("checkpointLocation", r.ckpDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(resDir).distinct()
+    r.foreachBatch(r.stream) { (batch, batchId) =>
+      graft.streaming.AnnStream.processBatch(
+        batch, batchId, resDir = r.outDir, root = idxRoot, bits = bits,
+        targetRowsPerBucket = bandTarget, reband = reband, forceCompact = reband,
+        layoutRowsPerBucket = 4096L)
+    }
+    r.session.read.parquet(r.outDir).distinct()
       .orderBy("vec_id", "nb_rank")
   }
 
@@ -1470,37 +1325,22 @@ object Core {
     * side, so the batch query's oracle text is this query's oracle
     * verbatim — the q36/q43 one-oracle discipline. */
   private def q61(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_decontam", "q61", d, Seq("documents.parquet"))((s, st) => {
-      val train = documents(s, d).select(col("doc_id"), col("lang"), col("text"))
-        .filter(!AnalyticsQueries.isBenchDoc(col("doc_id")))
-      val mx = train.agg(max("doc_id")).head().getLong(0)
-      val (c1, c2) = (mx / 3, 2 * mx / 3)
-      st.stage(train.filter(col("doc_id") < c1), "batch0", 1000000000000L)
-      st.stage(train.filter(col("doc_id") >= c1 && col("doc_id") < c2),
-        "batch1", 1000000060000L)
-      st.stage(train.filter(col("doc_id") >= c2), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    val resDir = r.outDir
+    val r = new Replay(s0, Replay.Source(
+      "graft_decontam", Seq("documents.parquet"), "doc_id LONG, lang STRING, text STRING",
+      (s, d) => idThirds(documents(s, d).select(col("doc_id"), col("lang"), col("text"))
+        .filter(!AnalyticsQueries.isBenchDoc(col("doc_id"))), "doc_id")),
+      "q61", d)
     val idxRoot = r.outDir + "_index"
     graft.streaming.Decontam.seedBench(
-      s,
-      documents(s, d).select(col("doc_id"), col("lang"), col("text"))
+      r.session,
+      documents(r.session, d).select(col("doc_id"), col("lang"), col("text"))
         .filter(AnalyticsQueries.isBenchDoc(col("doc_id"))),
       idxRoot)
-    val stream = s.readStream.schema("doc_id LONG, lang STRING, text STRING")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val query = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.streaming.Decontam.processBatch(
-          batch, batchId, resDir = resDir, root = idxRoot)
-        ()
-      }
-      .option("checkpointLocation", r.ckpDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(resDir).distinct()
+    r.foreachBatch(r.stream) { (batch, batchId) =>
+      graft.streaming.Decontam.processBatch(
+        batch, batchId, resDir = r.outDir, root = idxRoot)
+    }
+    r.session.read.parquet(r.outDir).distinct()
       .groupBy("lang")
       .agg(count(lit(1)).as("n_contaminated"))
       .orderBy("lang")
@@ -1519,36 +1359,17 @@ object Core {
     * streaming sink; re-running the query (Bench's min-of-2) replays
     * the same batch ids into the same in-memory database and the
     * delete-then-insert idempotence keeps the table identical, which
-    * is itself the crash-replay property under test. Shares q33's
-    * staged source (same prefix, same files). */
+    * is itself the crash-replay property under test. Replays q33's
+    * source. */
   private def q46(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_replay", "q46", d, Seq("events.parquet"))((s, st) => {
-      def sentinel(ts: String) = s.range(1).select(
-        lit("AA:BB:CC:DD:EE:99").as("mac"), // NOT in the whitelist
-        to_timestamp(lit(ts)).as("ts"),
-        unhex(graft.functions.Format5.encodeHex(
-          lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L), lit(0L))).as("payload"))
-      st.stage(synthReadings(s, d), "batch0", 1000000000000L)
-      st.stage(sentinel("2030-01-01 00:00:00"), "batch1", 1000000060000L)
-      st.stage(sentinel("2030-02-01 00:00:00"), "batch2", 1000000120000L)
-    })
-    val s = r.session
+    val r = new Replay(s0, readingsSrc, "q46", d)
     val url =
       s"jdbc:derby:memory:graftq46_${Replay.pathKey(d)};create=true"
-    val stream = s.readStream.schema(synthReadings(s, d).schema)
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val agg = graft.etl.Pipeline.batch(
-      stream.withWatermark("ts", "1 minute"), synthTags(s))
-    val query = agg.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", r.ckpDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .foreachBatch { (batchDf: DataFrame, batchId: Long) =>
-        graft.etl.Pipeline.writeJdbcMicroBatch(batchDf, batchId, url)
-      }
-      .start()
-    query.awaitTermination()
-    s.read.jdbc(url, "sensor_data", new java.util.Properties)
+    r.foreachBatch(graft.etl.Pipeline.batch(
+        r.stream.withWatermark("ts", "1 minute"), synthTags(r.session))) {
+      (batchDf, batchId) => graft.etl.Pipeline.writeJdbcMicroBatch(batchDf, batchId, url)
+    }
+    r.session.read.jdbc(url, "sensor_data", new java.util.Properties)
       .select("mac", "temperature", "humidity", "pressure", "time", "name", "samples")
       .orderBy("mac", "time")
   }
@@ -1569,48 +1390,12 @@ object Core {
     * passes vts + 12 h) — without it, stream-stream join state grows
     * forever at 100 TB. Inner-join matches emit as they arrive, so no
     * watermark-flush sentinels are needed (emission is not
-    * watermark-gated; only state EVICTION is). Batches split at fixed
-    * date cuts keep every file's rows ahead of the prior batch's
-    * watermark — nothing is dropped as late, so the replay equals the
-    * batch join exactly. */
-  private def q39(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_ssjoin", "q39", d, Seq("events.parquet"))((s, st) => {
-      val ev = events(s, d)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val (cut1, cut2) =
-        (lit("2024-01-11").cast("timestamp"), lit("2024-01-21").cast("timestamp"))
-      st.stage(ev.filter(col("ts") < cut1), "batch0", 1000000000000L)
-      st.stage(ev.filter(col("ts") >= cut1 && col("ts") < cut2), "batch1", 1000000060000L)
-      st.stage(ev.filter(col("ts") >= cut2), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
-    val clicks = stream.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("ts").as("cts"), col("user_id"))
-      .withWatermark("cts", "1 minute")
-    val views = stream.filter(col("event_type") === "view")
-      .select(col("event_id").as("view_id"), col("ts").as("vts"),
-        col("user_id").as("v_user_id"))
-      .withWatermark("vts", "1 minute")
-    val query = clicks
-      .join(views,
-        col("user_id") === col("v_user_id") &&
-          col("vts") <= col("cts") &&
-          col("vts") >= col("cts") - expr("interval 12 hours"))
-      .select(col("click_id"), col("view_id"), col("user_id"),
-        (unix_micros(col("cts")) - unix_micros(col("vts"))).as("gap_us"))
-      .writeStream
-      .format("parquet")
-      .option("path", r.outDir)
-      .option("checkpointLocation", r.ckpDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(r.outDir).orderBy("click_id", "view_id")
-  }
+    * watermark-gated; only state EVICTION is). Batches split at
+    * [[tsCuts]], so the replay equals the batch join exactly. */
+  private def q39(s0: SparkSession, d: String): DataFrame =
+    clickViewRun(s0, d, "q39", Replay.Source(
+      "graft_ssjoin", Seq("events.parquet"), clickViewSchema,
+      (s, d) => tsThirds(clickViewEvents(s, d))), outer = false)
 
   private val oq39 =
     """SELECT c.event_id AS click_id, v.event_id AS view_id, c.user_id,
@@ -1635,36 +1420,23 @@ object Core {
     * canonical streaming enrich: dimension refreshes swap the
     * broadcast between micro-batches without touching stream state. */
   private def q40(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_enrich", "q40", d, Seq("events.parquet"))((s, st) => {
-      val ev = events(s, d)
-        .select(col("event_id"), col("ts"), col("user_id"), col("value"))
-      st.stage(ev.filter(col("event_id") % 3 === 0), "batch0", 1000000000000L)
-      st.stage(ev.filter(col("event_id") % 3 === 1), "batch1", 1000000060000L)
-      st.stage(ev.filter(col("event_id") % 3 === 2), "batch2", 1000000120000L)
-    })
-    val s = r.session
-    val dim = customer(s, d)
-      .join(nation(s, d), col("c_nationkey") === col("n_nationkey"))
+    val r = new Replay(s0, Replay.Source(
+      "graft_enrich", Seq("events.parquet"), "event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE",
+      (s, d) => {
+        val ev = events(s, d)
+          .select(col("event_id"), col("ts"), col("user_id"), col("value"))
+        (0 until 3).map(k => ev.filter(col("event_id") % 3 === k))
+      }), "q40", d)
+    val dim = customer(r.session, d)
+      .join(nation(r.session, d), col("c_nationkey") === col("n_nationkey"))
       .select(col("c_custkey").as("user_id"), col("n_name"))
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, value DOUBLE")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
     // No broadcast() hint: customer SCALES WITH THE CORPUS (the t06/t07
     // lesson — never force a broadcast of an unbounded table). Under the
     // autoBroadcastJoinThreshold the planner broadcasts it per batch
     // anyway; past it, the join degrades to a shuffled join instead of
     // an OOM'd driver.
-    val query = stream.join(dim, Seq("user_id"))
-      .select(col("event_id"), col("n_name"), col("value"))
-      .writeStream
-      .format("parquet")
-      .option("path", r.outDir)
-      .option("checkpointLocation", r.ckpDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(r.outDir)
+    r.toParquet(r.stream.join(dim, Seq("user_id"))
+        .select(col("event_id"), col("n_name"), col("value")))
       .groupBy("n_name")
       .agg(count(lit(1)).as("n_events"), oround(sum("value"), 2).as("sum_value"))
       .orderBy("n_name")
@@ -1687,40 +1459,45 @@ object Core {
     * null-completion on state EXPIRY. Without the far-future sentinel
     * batches the tail clicks would sit in state when AvailableNow
     * drains and the unmatched rows would silently vanish — two
-    * sentinel files (the q36 lesson: evictions in batch N fire on the
-    * watermark computed after batch N−1) advance the watermark past
-    * every real click and flush them; the sentinel user is filtered
-    * from the result. At 100 TB the state bound is identical to q39's
+    * sentinel files (evictions in batch N fire on the watermark
+    * computed after batch N−1) advance the watermark past every real
+    * click and flush them; the sentinel user is filtered from the
+    * result. At 100 TB the state bound is identical to q39's
     * (per-side watermark from the range predicate); the only extra
     * cost of LEFT OUTER is that left rows live to watermark expiry
     * instead of leaving at first match. */
-  private def q42(s0: SparkSession, d: String): DataFrame = {
-    val r = new Replay(s0, "graft_ssouter", "q42", d, Seq("events.parquet"))((s, st) => {
-      val ev = events(s, d)
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
-      val (cut1, cut2) =
-        (lit("2024-01-11").cast("timestamp"), lit("2024-01-21").cast("timestamp"))
-      // BOTH event types per sentinel file: each branch's watermark only
-      // sees rows surviving its own filter, and the GLOBAL watermark is
-      // the min across branches — a view-only sentinel would leave the
-      // click-side watermark at the last real click and strand it in state.
-      def sentinel(ts: String, id: Long) = s.range(1).select(
-        explode(array(
-          struct(lit(id).as("event_id"), to_timestamp(lit(ts)).as("ts"),
-            lit(-1L).as("user_id"), lit("click").as("event_type")),
-          struct(lit(id - 1).as("event_id"), to_timestamp(lit(ts)).as("ts"),
-            lit(-1L).as("user_id"), lit("view").as("event_type")))).as("e"))
-        .select(col("e.*"))
-      st.stage(ev.filter(col("ts") < cut1), "batch0", 1000000000000L)
-      st.stage(ev.filter(col("ts") >= cut1 && col("ts") < cut2), "batch1", 1000000060000L)
-      st.stage(ev.filter(col("ts") >= cut2), "batch2", 1000000120000L)
-      st.stage(sentinel("2030-01-01 00:00:00", -1L), "batch3", 1000000180000L)
-      st.stage(sentinel("2030-02-01 00:00:00", -3L), "batch4", 1000000240000L)
-    })
-    val s = r.session
-    val stream = s.readStream
-      .schema("event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING")
-      .option("maxFilesPerTrigger", "1").parquet(r.srcDir)
+  private def q42(s0: SparkSession, d: String): DataFrame =
+    clickViewRun(s0, d, "q42", Replay.Source(
+      "graft_ssouter", Seq("events.parquet"), clickViewSchema,
+      (s, d) => {
+        // BOTH event types per sentinel file: each branch's watermark only
+        // sees rows surviving its own filter, and the GLOBAL watermark is
+        // the min across branches — a view-only sentinel would leave the
+        // click-side watermark at the last real click and strand it in state.
+        def sentinel(ts: String, id: Long) = s.range(1).select(
+          explode(array(
+            struct(lit(id).as("event_id"), to_timestamp(lit(ts)).as("ts"),
+              lit(-1L).as("user_id"), lit("click").as("event_type")),
+            struct(lit(id - 1).as("event_id"), to_timestamp(lit(ts)).as("ts"),
+              lit(-1L).as("user_id"), lit("view").as("event_type")))).as("e"))
+          .select(col("e.*"))
+        tsThirds(clickViewEvents(s, d)) ++
+          Seq(sentinel("2030-01-01 00:00:00", -1L), sentinel("2030-02-01 00:00:00", -3L))
+      }), outer = true)
+
+  private val clickViewSchema = "event_id LONG, ts TIMESTAMP, user_id LONG, event_type STRING"
+
+  private def clickViewEvents(s: SparkSession, d: String): DataFrame =
+    events(s, d).select(col("event_id"), col("ts"), col("user_id"), col("event_type"))
+
+  /** q39/q42's clicks⋈views interval join over `src`: inner (q39), or
+    * left outer (q42), whose source ends in flush sentinels that the
+    * read-back drops. Each keeps its own output column order. */
+  private def clickViewRun(
+      s0: SparkSession, d: String, runKey: String, src: Replay.Source,
+      outer: Boolean): DataFrame = {
+    val r = new Replay(s0, src, runKey, d)
+    val stream = r.stream
     val clicks = stream.filter(col("event_type") === "click")
       .select(col("event_id").as("click_id"), col("ts").as("cts"), col("user_id"))
       .withWatermark("cts", "1 minute")
@@ -1728,24 +1505,17 @@ object Core {
       .select(col("event_id").as("view_id"), col("ts").as("vts"),
         col("user_id").as("v_user_id"))
       .withWatermark("vts", "1 minute")
-    val query = clicks
+    val cols =
+      if (outer) Seq("click_id", "user_id", "view_id") else Seq("click_id", "view_id", "user_id")
+    val out = r.toParquet(clicks
       .join(views,
         col("user_id") === col("v_user_id") &&
           col("vts") <= col("cts") &&
           col("vts") >= col("cts") - expr("interval 12 hours"),
-        "leftOuter")
-      .select(col("click_id"), col("user_id"), col("view_id"),
-        (unix_micros(col("cts")) - unix_micros(col("vts"))).as("gap_us"))
-      .writeStream
-      .format("parquet")
-      .option("path", r.outDir)
-      .option("checkpointLocation", r.ckpDir)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    query.awaitTermination()
-    s.read.parquet(r.outDir)
-      .filter(col("user_id") >= 0) // drop the watermark-advancing sentinel
+        if (outer) "leftOuter" else "inner")
+      .select(cols.map(col) :+
+        (unix_micros(col("cts")) - unix_micros(col("vts"))).as("gap_us"): _*))
+    (if (outer) out.filter(col("user_id") >= 0) else out) // drop the sentinels
       .orderBy("click_id", "view_id")
   }
 

@@ -40,11 +40,9 @@ class EngineWidthSpec extends AnyFunSuite {
     val s = SparkTestSession.spark
     val before = s.conf.get("spark.sql.shuffle.partitions")
     try {
-      // a dir that doesn't exist → estate 0 → the SESSION's core
-      // floor (env override would win, but the test env doesn't set it)
+      // a dir that doesn't exist → estate 0 → the SESSION's core floor
       val w = Engine.tuneForEstate(s, "/nonexistent-estate-dir")
-      assert(sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS") ||
-        w == s.sparkContext.defaultParallelism)
+      assert(w == s.sparkContext.defaultParallelism)
       assert(s.conf.get("spark.sql.shuffle.partitions") == w.toString)
     } finally s.conf.set("spark.sql.shuffle.partitions", before)
   }
@@ -65,8 +63,7 @@ class EngineWidthSpec extends AnyFunSuite {
       val before = s.conf.get("spark.sql.shuffle.partitions")
       try {
         val w = Engine.tuneForEstate(s, dir.getAbsolutePath)
-        assert(sys.env.contains("SPARK_GRAFT_SHUFFLE_PARTITIONS") ||
-          w == math.max(s.sparkContext.defaultParallelism, 3))
+        assert(w == math.max(s.sparkContext.defaultParallelism, 3))
       } finally s.conf.set("spark.sql.shuffle.partitions", before)
     } finally {
       dir.listFiles().foreach(_.delete())

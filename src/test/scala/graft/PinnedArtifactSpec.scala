@@ -148,12 +148,12 @@ class PinnedArtifactSpec extends AnyFunSuite with org.scalatest.BeforeAndAfterAl
     val dir = stagedTable(5)
     val prefix = s"spec_replay_${System.nanoTime()}"
     val builds = new AtomicInteger()
-    def lookup(): String =
-      graft.queries.Core.Replay.source(spark, prefix, dir, Seq("t.parquet")) { (s, st) =>
+    val replay = graft.queries.Core.Replay.Source(prefix, Seq("t.parquet"), "x LONG",
+      (s, d) => {
         builds.incrementAndGet()
-        st.stage(s.read.parquet(s"$dir/t.parquet"), "batch0", 1000000000000L)
-        st.stage(s.range(1).toDF("x"), "batch1", 1000000060000L)
-      }
+        Seq(s.read.parquet(s"$d/t.parquet"), s.range(1).toDF("x"))
+      })
+    def lookup(): String = graft.queries.Core.Replay.source(spark, replay, dir)
     val first = lookup()
     assert(lookup() == first && builds.get == 1)
     // published in the shared store under a name with no pid in it, so

@@ -1,15 +1,15 @@
 package graft
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** q58 (streaming incremental dedup), q60 (streaming ANN) and q61
-  * (streaming decontamination) carry the same two contracts q54
-  * already has pinned — executed here instead of argued in their
-  * scaladocs:
+/** The foreachBatch index consumers — q54 (streaming near-dup), q58
+  * (streaming incremental dedup), q60 (streaming ANN), q61 (streaming
+  * decontamination) and their b-variants — carry the same two
+  * contracts, executed here instead of argued in their scaladocs:
   *
   *  1. RESUME: a second construction over the same checkpoint returns
   *     identical rows and appends NOT ONE new file to the external
@@ -25,24 +25,25 @@ class StreamIndexConsumersSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  private def indexFiles(runKey: String): Long = {
+  /** This JVM's run root of a replay (`graft_run_<pidHex>_<runKey>_…`). */
+  private def runRoot(runKey: String): Path = {
     val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-    val root = {
-      val l = Files.list(tmp)
-      try l.filter(p =>
-          p.getFileName.toString.startsWith(s"graft_run_${pidHex}_${runKey}_"))
-        .findFirst()
-        .orElseThrow(() => new AssertionError(s"$runKey run root not found"))
-      finally l.close()
-    }
-    val idx = root.resolve("out_index")
-    val l = Files.walk(idx)
+    val l = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    try l.filter(p =>
+        p.getFileName.toString.startsWith(s"graft_run_${pidHex}_${runKey}_"))
+      .findFirst()
+      .orElseThrow(() => new AssertionError(s"$runKey run root not found"))
+    finally l.close()
+  }
+
+  private def indexFiles(runKey: String): Long = {
+    val l = Files.walk(runRoot(runKey).resolve("out_index"))
     try l.filter(p => p.getFileName.toString.endsWith(".parquet")).count()
     finally l.close()
   }
 
   for ((name, runKey, probeKey) <- Seq(
+      ("q54_stream_neardup", "q54", "bk"),
       ("q58_stream_incdedup", "q58", "bk"),
       ("q58b_stream_incdedup_fold", "q58b", "bk"),
       ("q54b_stream_neardup_fold", "q54b", "bk"),
@@ -80,18 +81,8 @@ class StreamIndexConsumersSpec extends AnyFunSuite {
       ("q58b_stream_incdedup_fold", "q58b", 4))) {
     test(s"$name: the fold re-derived the bucket width off the floor") {
       SparkEntry.queries(name)(spark, sf).collect()
-      val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
-      val tmp = Paths.get(System.getProperty("java.io.tmpdir"))
-      val root = {
-        val l = Files.list(tmp)
-        try l.filter(p =>
-            p.getFileName.toString.startsWith(s"graft_run_${pidHex}_${runKey}_"))
-          .findFirst()
-          .orElseThrow(() => new AssertionError(s"$runKey run root not found"))
-        finally l.close()
-      }
       val GenP = """gen_\d+_p(\d+)_b""".r
-      val l = Files.list(root.resolve("out_index"))
+      val l = Files.list(runRoot(runKey).resolve("out_index"))
       val ps =
         try l.iterator().asScala
           .flatMap(p => GenP.findFirstMatchIn(p.getFileName.toString))

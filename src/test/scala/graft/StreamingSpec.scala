@@ -292,10 +292,15 @@ class StreamingSpec extends AnyFunSuite {
     // construction of any replay query resumes the stream — AvailableNow
     // finds every staged file committed, drains zero batches, and the
     // sink already holds the result. Pin that the resumed read equals
-    // the cold one for the three sink shapes: windowed parquet (q33),
-    // foreachBatch JDBC (q46), flatMapGroupsWithState parquet (q36).
+    // the cold one for every parquet-sink stream shape plus the
+    // foreachBatch JDBC sink: windowed aggregation (q33, q57),
+    // flatMapGroupsWithState (q36), transformWithState (q43),
+    // watermarked dedup (q45), stream-stream inner and outer joins
+    // (q39, q42), stream-static join (q40), JDBC (q46).
     val sf = "/root/testdata/sf0.001"
-    for (q <- Seq("q33_stream_replay", "q46_stream_jdbc", "q36_stream_sessions")) {
+    for (q <- Seq("q33_stream_replay", "q46_stream_jdbc", "q36_stream_sessions",
+        "q43_stream_tws", "q45_stream_dedup", "q57_stream_hopping",
+        "q39_stream_join", "q40_stream_static", "q42_stream_outer_join")) {
       val cold = SparkEntry.queries(q)(spark, sf).collect().map(_.toString).sorted
       val resumed = SparkEntry.queries(q)(spark, sf).collect().map(_.toString).sorted
       assert(cold.nonEmpty, s"$q cold run produced no rows")
