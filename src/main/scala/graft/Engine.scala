@@ -78,12 +78,21 @@ object Engine {
         sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "64m"))
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.sql.parquet.filterPushdown", "true")
-      // NOTE: do NOT swap fs.file.impl to RawLocalFileSystem to skip the
-      // .crc sidecars (tempting for micro-batch small-file overhead) —
-      // the RocksDB state store used by transformWithState casts the
-      // local filesystem to o.a.h.fs.LocalFileSystem and crashes every
-      // TWS checkpoint commit (measured: ~5% bench win, five failed
-      // streaming suites).
+      // LOCAL I/O: without native libhadoop the stock local filesystem
+      // forks `chmod` per file create and mkdir, `ls -ld` per listed
+      // file's permission and `readlink` per FileContext rename (about
+      // 45 processes per index_stream micro-batch). These two entries
+      // swap in graft.ops.NioRawLocalFileSystem, which makes those stat
+      // and permission calls through java.nio; create, rename and delete
+      // stay Hadoop's. The FileSystem wrapper stays a LocalFileSystem
+      // (a ChecksumFileSystem): .crc sidecars keep being written, and the
+      // RocksDB state store behind transformWithState casts the local
+      // filesystem to o.a.h.fs.LocalFileSystem — a plain
+      // RawLocalFileSystem here fails every TWS checkpoint commit. The
+      // FileContext entry covers the streaming checkpoint manager.
+      .config("spark.hadoop.fs.file.impl", classOf[graft.ops.NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.ops.NioLocalFs].getName)
       .config("spark.ui.enabled", "false")
 
   /** Local session sized from SPARK_GRAFT_CPUS (driver contract). */

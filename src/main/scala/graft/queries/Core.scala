@@ -769,7 +769,7 @@ object Core {
     /** The tmpdir-safe identity of an sfDir — a readable sanitized path,
       * NOT a hashCode (two dirs can collide on hashCode and silently
       * share a staged source). */
-    private[queries] def pathKey(d: String): String =
+    private[graft] def pathKey(d: String): String =
       d.replaceAll("[^A-Za-z0-9.]+", "-").replaceAll("^-|-$", "")
 
     /** Stages frame i as the single parquet file `batch<i>.parquet` with

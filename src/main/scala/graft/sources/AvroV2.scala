@@ -7,6 +7,7 @@ import org.apache.avro.file.DataFileReader
 import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -15,6 +16,7 @@ import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.util.SerializableConfiguration
 
 /** `format("graft-avro")` — the [[AvroSource]] bridge done the
   * Spark-first way: a DataSource V2 `TableProvider`, so avro
@@ -81,11 +83,17 @@ object AvroV2 {
       throw new IllegalArgumentException(s"unsupported avro type: $other")
   }
 
+  /** The session's Hadoop configuration, so its `spark.hadoop.*`
+    * entries (the filesystem classes [[graft.Engine.builder]] sets,
+    * credentials, defaultFS) govern every read, as in [[AvroSource]]. */
+  private def sessionConf: Configuration =
+    SparkSession.active.sparkContext.hadoopConfiguration
+
   /** Writer schema from ONE container header — bytes, not a data pass. */
   private def inferFrom(path: String): StructType = {
     val f = firstFile(path)
     val r = new DataFileReader[GenericRecord](
-      new FsInput(f, new Configuration()), new GenericDatumReader[GenericRecord]())
+      new FsInput(f, sessionConf), new GenericDatumReader[GenericRecord]())
     val writer = try r.getSchema finally r.close()
     StructType(writer.getFields.stream.map[StructField] { fld =>
       val (dt, nullable) = sparkType(fld.schema())
@@ -95,7 +103,7 @@ object AvroV2 {
 
   private def listFiles(path: String): Seq[org.apache.hadoop.fs.Path] = {
     val dir = new org.apache.hadoop.fs.Path(path)
-    val fs = dir.getFileSystem(new Configuration())
+    val fs = dir.getFileSystem(sessionConf)
     val it = fs.listStatus(dir).iterator
     // the `_`/`.` prefix filter is Hadoop's hidden-file convention —
     // [[AvroSource.write]]'s commit protocol relies on it so a crashed
@@ -136,12 +144,12 @@ object AvroV2 {
       listFiles(path).sortBy(_.getName)
         .map(p => AvroFilePartition(p.toString): InputPartition).toArray
     override def createReaderFactory(): PartitionReaderFactory =
-      new AvroReaderFactory(required.json)
+      new AvroReaderFactory(required.json, new SerializableConfiguration(sessionConf))
   }
 
   private case class AvroFilePartition(file: String) extends InputPartition
 
-  private class AvroReaderFactory(requiredJson: String)
+  private class AvroReaderFactory(requiredJson: String, conf: SerializableConfiguration)
       extends PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
       val required = DataType.fromJson(requiredJson).asInstanceOf[StructType]
@@ -150,7 +158,7 @@ object AvroV2 {
       val readerSchema = AvroSource.avroSchema(required)
       val file = p.asInstanceOf[AvroFilePartition].file
       val reader = new DataFileReader[GenericRecord](
-        new FsInput(new org.apache.hadoop.fs.Path(file), new Configuration()),
+        new FsInput(new org.apache.hadoop.fs.Path(file), conf.value),
         new GenericDatumReader[GenericRecord](null, readerSchema))
       val fields = required.fields
       new PartitionReader[InternalRow] {

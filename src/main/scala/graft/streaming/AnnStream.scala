@@ -146,7 +146,8 @@ private[graft] object AnnStream {
     val ix = index(bs, root, layout, minBuckets)
     val liveBits = if (reband) currentBits(ix, bits) else bits
     val rows = keyed(batch, liveBits).localCheckpoint()
-    val rhs = ix.probe(rows.select(col("bk"))) match {
+    val probe = ix.probe(rows.select(col("bk")))
+    val rhs = probe.rows match {
       case Some(hist) => rows.unionByName(hist.select("vec_id", "e", "bk"))
       case None       => rows
     }
@@ -174,7 +175,7 @@ private[graft] object AnnStream {
       .select(col("qid").as("vec_id"), col("pid").as("neighbor"),
         col("cos_sim"), col("rank").cast("long").as("nb_rank"))
     ranked.write.mode("append").parquet(resDir)
-    ix.append(rows)
+    ix.append(rows, probe.keyRows)
     if (reband) {
       // re-band at the width the CURRENT count calls for — the ONE
       // adaptiveSrpBits rule over the folded row count, recomputed

@@ -201,30 +201,47 @@ private[graft] final class BucketedIndex(
   }
 
   /** The accumulated index restricted to the buckets `keys` (a
-    * single-column frame of probe keys, SMALL — it is collected per
-    * generation to derive the touched-bucket set) can possibly match.
+    * single-column frame of probe keys) can possibly match, with the
+    * number of key rows when the touched-bucket job counted them.
     * Pruning is exact: `bp` is a pure function of the key, so a row in
-    * an un-touched bucket cannot equal any probe key. None when the
-    * index has no generations yet. */
-  def probe(keys: DataFrame): Option[DataFrame] = {
+    * an un-touched bucket cannot equal any probe key. */
+  def probe(keys: DataFrame): BucketedIndex.Probe = {
     val gs = gens()
-    if (gs.isEmpty) return None
+    if (gs.isEmpty) return BucketedIndex.Probe(None, None)
     val (bases, deltas) = gs.partition(_.kind == "b")
-    // one touched-set per distinct base width (steady state: ONE base,
-    // so one small collect per probe)
-    val pruned = bases.map { g =>
-      val touched = keys
-        .select(bpOf(col(key), g.p).as("bp")).distinct()
-        .collect().map(_.getLong(0)).toSeq
-      baseRelation(g).filter(col("bp").isin(touched: _*))
-    }
+    val widths = bases.map(_.p).distinct
+    val (keyRows, touched) =
+      if (widths.isEmpty) (None, Map.empty[Int, Seq[Long]])
+      else touchedBuckets(keys, widths) match { case (n, t) => (Some(n), t) }
+    val pruned = bases.map(g => baseRelation(g).filter(col("bp").isin(touched(g.p): _*)))
     if (pruned.nonEmpty)
       BucketedIndex.probePlans.put(
         key, pruned.map(_.queryExecution.executedPlan.toString()).mkString("\n"))
     val parts =
       pruned.map(_.drop("bp")) ++
         deltas.map(g => s.read.schema(rowSchema).parquet(g.dir.toString))
-    Some(parts.reduce(_ unionByName _))
+    BucketedIndex.Probe(Some(parts.reduce(_ unionByName _)), keyRows)
+  }
+
+  /** The row count of `keys` and, per base width, the sorted buckets its
+    * keys hash into — ONE job: one projection of every width's bucket
+    * id, de-duplicated inside each task, so no exchange and at most
+    * Σ widths ids per task reach the driver. */
+  private def touchedBuckets(
+      keys: DataFrame, widths: Seq[Int]): (Long, Map[Int, Seq[Long]]) = {
+    val n = widths.size
+    val perTask = keys.select(widths.map(p => bpOf(col(key), p)): _*).rdd
+      .mapPartitions { rows =>
+        val seen = Array.fill(n)(scala.collection.mutable.HashSet.empty[Long])
+        var count = 0L
+        rows.foreach { r => count += 1; for (i <- 0 until n) seen(i) += r.getLong(i) }
+        Iterator.single((count, seen.map(_.toArray)))
+      }
+      .collect()
+    val touched = widths.zipWithIndex.map { case (p, i) =>
+      p -> perTask.flatMap(_._2(i)).distinct.sorted.toSeq
+    }.toMap
+    (perTask.map(_._1).sum, touched)
   }
 
   /** Total rows across generations — parquet footer counts, a
@@ -248,9 +265,10 @@ private[graft] final class BucketedIndex(
     * itself is intentional — one delta file per micro-batch; a
     * high-throughput stream would raise the coalesce width and let
     * the size-ratio fold absorb the extra files.) Empty appends are
-    * skipped. */
-  def append(df: DataFrame): Unit = {
-    if (df.isEmpty) return
+    * skipped: `knownRows`, a count the caller already has (a [[probe]]
+    * of the same frame's keys), spares the emptiness job. */
+  def append(df: DataFrame, knownRows: Option[Long] = None): Unit = {
+    if (knownRows.fold(df.isEmpty)(_ == 0L)) return
     val dir = gens().lastOption match {
       case Some(g) if g.kind == "a" => g.dir.toString
       case Some(g) => new Path(rootPath, s"gen_${g.n + 1}_p0_a").toString
@@ -353,8 +371,8 @@ private[graft] final class BucketedIndex(
     *     production policy already pays;
     *  3. a small-tier merge (all bases but the oldest) when more than
     *     [[MaxBaseGens]] bases coexist — bounds per-probe overhead
-    *     (one touched-set collect per base) without touching the big
-    *     base.
+    *     (one pruned scan and one bucket-id column per base) without
+    *     touching the big base.
     *
     * Sound ONLY for indexes whose fold is layout-pure (identity
     * rewrite): [[probe]] already unions every base with per-base
@@ -394,7 +412,7 @@ private[graft] final class BucketedIndex(
   }
 
   /** Coexisting-base ceiling for [[foldIncremental]]: each base costs a
-    * probe one touched-set collect + one pruned scan, so the tier is
+    * probe one bucket-id column + one pruned scan, so the tier is
     * merged (cheap — the tier is small by the ratio gate) past this. */
   private val MaxBaseGens = 8
 
@@ -512,6 +530,12 @@ private[graft] final class BucketedIndex(
 }
 
 private[graft] object BucketedIndex {
+  /** A [[BucketedIndex.probe]]'s result: the index rows the keys can
+    * match (None when the index has no generations yet), and the number
+    * of key rows when the touched-set job counted them (the index has a
+    * base generation). */
+  final case class Probe(rows: Option[DataFrame], keyRows: Option[Long])
+
   /** Immutable-base caches (see [[BucketedIndex.baseRelation]] / Gen.bytes). */
   private val relCache =
     new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()

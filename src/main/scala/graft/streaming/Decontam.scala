@@ -80,7 +80,7 @@ private[graft] object Decontam {
     val bs = batch.sparkSession
     val ix = index(bs, root, targetRowsPerBucket, minBuckets)
     val grams = gramsOf(batch).localCheckpoint()
-    val flagged = ix.probe(grams.select(col("h"))) match {
+    val flagged = ix.probe(grams.select(col("h"))).rows match {
       case Some(hits) =>
         grams.join(hits.select("h"), Seq("h"), "left_semi")
           .select(col("doc_id"), col("lang")).distinct()

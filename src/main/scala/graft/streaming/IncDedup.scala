@@ -79,13 +79,14 @@ private[graft] object IncDedup {
       forceCompact: Boolean = false): Boolean = {
     val bs = batch.sparkSession
     val ix = index(bs, root, targetRowsPerBucket, minBuckets)
-    // checkpointed: the touched-bucket collect, the join build side and
+    // checkpointed: the touched-bucket job, the join build side and
     // the index append are three consumers of the banding subtree
     val bands = graft.queries.DedupQueries
       .keyedBandsOf(batch.select(col("doc_id"), col("text")))
       .select("doc_id", "sh", "bk")
       .localCheckpoint()
-    val rhs = ix.probe(bands.select(col("bk"))) match {
+    val probe = ix.probe(bands.select(col("bk")))
+    val rhs = probe.rows match {
       case Some(hist) => bands.unionByName(hist.select("doc_id", "sh", "bk"))
       case None       => bands
     }
@@ -105,7 +106,8 @@ private[graft] object IncDedup {
       .agg(max(col("jac")).as("jac"))
       .select(col("new_id"), col("dup_of"), oround(col("jac"), 3).as("jaccard"))
     verified.write.mode("append").parquet(resDir)
-    ix.append(bands)
+    // the touched-bucket job counted the bands: no emptiness job
+    ix.append(bands, probe.keyRows)
     // q58b's determinism knob (see NearDup.processBatch): fold every
     // batch so the adaptive bucket width P runs the production policy
     // under the unchanged oracle (P is layout-only for LSH band keys).

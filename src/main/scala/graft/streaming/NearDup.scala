@@ -67,7 +67,7 @@ private[graft] object NearDup {
       .select(col("doc_id"), col("text"),
         md5(col("text").cast("binary")).as("h"))
       .localCheckpoint()
-    val exIdx = exactIdx.probe(withH.select(col("h"))).getOrElse(
+    val exIdx = exactIdx.probe(withH.select(col("h"))).rows.getOrElse(
       bs.createDataFrame(
         bs.sparkContext.emptyRDD[org.apache.spark.sql.Row], exactSchema))
     val looked = withH.join(exIdx, Seq("h"), "left_outer")
@@ -91,7 +91,8 @@ private[graft] object NearDup {
     val bands = graft.queries.DedupQueries.keyedBandsOf(repDocs)
       .select("doc_id", "sh", "bk")
       .localCheckpoint()
-    val rhs0 = bandIdx.probe(bands.select(col("bk"))) match {
+    val bandProbe = bandIdx.probe(bands.select(col("bk")))
+    val rhs0 = bandProbe.rows match {
       case Some(hist) => bands.unionByName(hist.select("doc_id", "sh", "bk"))
       case None       => bands
     }
@@ -162,7 +163,7 @@ private[graft] object NearDup {
         col("rep_jac").as("jaccard"))
     oldCopies.unionByName(newCopies).unionByName(repHits)
       .write.mode("append").parquet(resDir)
-    bandIdx.append(bands)
+    bandIdx.append(bands, bandProbe.keyRows)
     exactIdx.append(repRes.select("h", "rep_id", "rep_dup", "rep_jac"))
     // forceCompact = the q60b determinism knob applied here (q54b):
     // fold after EVERY batch so each epoch's bucket width P is a pure

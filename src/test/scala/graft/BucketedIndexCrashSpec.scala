@@ -51,7 +51,7 @@ class BucketedIndexCrashSpec extends AnyFunSuite {
   }
 
   private def probeAll(ix: BucketedIndex, keys: DataFrame): Seq[Row] =
-    ix.probe(keys).get.orderBy("k", "v").collect().toSeq
+    ix.probe(keys).rows.get.orderBy("k", "v").collect().toSeq
 
   test("crash between base write and superseded delete: duplicates, never loss; re-fold converges") {
     val (ix, root) = freshIndex()

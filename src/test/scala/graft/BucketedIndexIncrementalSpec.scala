@@ -71,7 +71,7 @@ class BucketedIndexIncrementalSpec extends AnyFunSuite {
       == baseMtime, "big base dir must not be rewritten")
 
     // results identical to a whole-base layout: every row still probes
-    val rows = ix.probe(allKeys(528)).get
+    val rows = ix.probe(allKeys(528)).rows.get
       .orderBy("v").collect().map(_.getLong(1)).toSeq
     assert(rows == (0L until 528L), "multi-base probe must see every row")
   }
@@ -91,7 +91,7 @@ class BucketedIndexIncrementalSpec extends AnyFunSuite {
       if (genDirs(root).size == 1) merged = true
     }
     assert(merged, "equal-sized batches must trip the geometric full merge")
-    val rows = ix.probe(allKeys(hi)).get
+    val rows = ix.probe(allKeys(hi)).rows.get
       .orderBy("v").collect().map(_.getLong(1)).toSeq
     assert(rows == (0L until hi.toLong))
   }
@@ -110,7 +110,7 @@ class BucketedIndexIncrementalSpec extends AnyFunSuite {
     val after = genDirs(root)
     assert(after.contains(baseDir), s"oldest base must survive: $after")
     assert(after.size <= 9, s"base count must stay bounded, got $after")
-    val rows = ix.probe(allKeys(hi)).get
+    val rows = ix.probe(allKeys(hi)).rows.get
       .orderBy("v").collect().map(_.getLong(1)).toSeq
     assert(rows == (0L until hi.toLong))
   }

@@ -25,12 +25,27 @@ class StreamIndexConsumersSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  /** This JVM's run root of a replay (`graft_run_<pidHex>_<runKey>_…`). */
+  /** This spec's own copy of the estate. Replay run roots are keyed by
+    * (query, estate path), so a fresh path gives every row a COLD first
+    * run even when an earlier spec in this JVM (PlanAssertionsSpec runs
+    * q54) already streamed the same query over the shared directory —
+    * over that one, r1 would compare a resume with a resume, and the
+    * pruning assertion would read whichever probe ran last. */
+  private lazy val coldSf: String = {
+    val dir = SparkTestSession.tempDir("graft-stream-index-sf")
+    val l = Files.list(Paths.get(sf))
+    try l.forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
+    finally l.close()
+    dir.toString
+  }
+
+  /** This JVM's run root of a replay over [[coldSf]]
+    * (`graft_run_<pidHex>_<runKey>_<pathKey>`). */
   private def runRoot(runKey: String): Path = {
     val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
+    val name = s"graft_run_${pidHex}_${runKey}_${graft.queries.Core.Replay.pathKey(coldSf)}"
     val l = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-    try l.filter(p =>
-        p.getFileName.toString.startsWith(s"graft_run_${pidHex}_${runKey}_"))
+    try l.filter(p => p.getFileName.toString == name)
       .findFirst()
       .orElseThrow(() => new AssertionError(s"$runKey run root not found"))
     finally l.close()
@@ -52,7 +67,7 @@ class StreamIndexConsumersSpec extends AnyFunSuite {
       ("q61_stream_decontam", "q61", "h"))) {
     test(s"$name: resume returns identical rows with zero index appends; probes prune") {
       val q = SparkEntry.queries(name)
-      val r1 = q(spark, sf).collect().toSeq
+      val r1 = q(spark, coldSf).collect().toSeq
       assert(r1.nonEmpty, s"$name must produce rows at $sf")
 
       val plan = graft.streaming.BucketedIndex.lastProbePlanFor(probeKey)
@@ -64,7 +79,7 @@ class StreamIndexConsumersSpec extends AnyFunSuite {
 
       val filesAfterFirst = indexFiles(runKey)
       assert(filesAfterFirst > 0, s"$name must have built its index")
-      val r2 = q(spark, sf).collect().toSeq
+      val r2 = q(spark, coldSf).collect().toSeq
       assert(r2 == r1, s"a resumed $name run must return identical rows")
       assert(indexFiles(runKey) == filesAfterFirst,
         s"a resumed $name run must not re-append to its index")
@@ -80,7 +95,7 @@ class StreamIndexConsumersSpec extends AnyFunSuite {
       ("q54b_stream_neardup_fold", "q54b", 4),
       ("q58b_stream_incdedup_fold", "q58b", 4))) {
     test(s"$name: the fold re-derived the bucket width off the floor") {
-      SparkEntry.queries(name)(spark, sf).collect()
+      SparkEntry.queries(name)(spark, coldSf).collect()
       val GenP = """gen_\d+_p(\d+)_b""".r
       val l = Files.list(runRoot(runKey).resolve("out_index"))
       val ps =
