@@ -1,13 +1,21 @@
 package graft
-/** Benchmark main (driver contract): run every declared query on
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, md5, split, transform}
+
+import graft.queries.QueryDef
+
+/** Benchmark main: run every declared query (or the named ones) on
   * SPARK_GRAFT_SF_DIR, print ONE JSON line with per-query seconds.
+  * Session, selection and loop: [[Run]].
   *
   * The action is a `noop`-format write — it executes the FULL physical
   * plan and materializes every output row (unlike `.count()`, under which
   * Catalyst prunes all projected columns and the bench measures row
-  * counting, not the query). Failures are surfaced on stderr and as -1
-  * timings, never swallowed. Session via [[Engine.session]] (UTC, AQE,
-  * nanosAsLong, shuffle partitions = cores). */
+  * counting, not the query). Failures are reported on stderr and as -1
+  * timings, never swallowed. */
 object Bench {
   /** 1-minute load average via the OS MXBean (-1 where unsupported). */
   private def loadAvg(): Double =
@@ -15,162 +23,106 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // Host-state stamp, captured BEFORE the run starts: rounds 7–9 all had
-    // driver-side bench dumps inflated by host contention that was only
-    // diagnosable by a judge-side re-bench on a quiet host. Recording the
-    // load average at start and end makes a contended dump self-identifying
-    // (load >> cpus at either edge ⇒ treat the timings as upper bounds).
+    // Host-state stamp, captured BEFORE the run starts: host contention
+    // inflates every timing of a dump, and only the load average at both
+    // edges makes such a dump self-identifying (load >> cpus at either
+    // edge ⇒ treat the timings as upper bounds). A contended start also
+    // gets a loud warning up front and `"record_grade":false` below.
     val loadStart = loadAvg()
-    // Quiet-start assertion (round-16 verdict task 6: the round lost
-    // both records to host state it measured but didn't act on). A
-    // contended start gets a loud stderr WARNING up front and a
-    // `"record_grade":false` stamp in the dump — the provenance rule
-    // as code, not prose.
-    if (loadStart >= 1.0)
-      System.err.println(
-        f"[bench] WARNING: load_start=$loadStart%.2f >= 1 — this run is " +
-          "NOT record grade; timings are upper bounds (host contention)")
-    val spark = Engine.session()
-    // SF-aware shuffle width (round-15 verdict task 4; Engine doc):
-    // estate-sized initial width, AQE coalesces — the d02 sf100 fix,
-    // applied as engine policy instead of a per-query knob. Recorded
-    // in the JSON host stamp below for dump provenance.
-    val shuffleWidth = Engine.tuneForEstate(spark, sfDir)
-    val errs = scala.collection.mutable.ArrayBuffer[String]()
-    // Optional args: run only the named queries (profiling aid).
-    val selected =
-      if (args.isEmpty) SparkEntry.queries.toSeq
-      else SparkEntry.queries.filter(q => args.contains(q._1)).toSeq
+    if (loadStart >= 1.0) System.err.println(f"[bench] WARNING: load_start=$loadStart%.2f " +
+      ">= 1 — this run is NOT record grade; timings are upper bounds (host contention)")
+    Run.main(sfDir, args.toSeq) { (spark, queries) =>
+      val json = line(spark, sfDir, queries, loadStart)
+      println(json)
+      // Full-run dumps only, so a selective profiling run never clobbers
+      // the record.
+      if (args.isEmpty) record(json)
+      Nil // a failed query is a -1 timing, not a failed bench
+    }
+  }
+
+  /** Runs `queries` and returns the JSON line. */
+  private[graft] def line(spark: SparkSession, sfDir: String,
+      queries: Seq[QueryDef], loadStart: Double): String = {
     // Untimed warmup: JIT/codegen the shared machinery (parquet scan,
     // shuffle, noop write, higher-order array eval) so the first measured
     // query isn't charged for JVM warmup — at sf0.1 the first query
     // otherwise absorbs ~5 s of compile time.
-    locally {
-      import org.apache.spark.sql.functions._
-      spark.range(1000000).selectExpr("sum(id)").collect()
-      spark.read.parquet(s"$sfDir/nation.parquet")
-        .select(md5(col("n_name").cast("binary")).as("h"),
-          transform(split(col("n_name"), ""), x => md5(x.cast("binary"))).as("hs"))
-        .groupBy("h").count()
-        .write.format("noop").mode("overwrite").save()
-    }
+    spark.range(1000000).selectExpr("sum(id)").collect()
+    spark.read.parquet(s"$sfDir/nation.parquet")
+      .select(md5(col("n_name").cast("binary")).as("h"),
+        transform(split(col("n_name"), ""), x => md5(x.cast("binary"))).as("hs"))
+      .groupBy("h").count()
+      .write.format("noop").mode("overwrite").save()
     // Two timed runs per query, report the min: the first execution of a
     // complex plan pays JIT/codegen compilation that varies by tens of
     // seconds run-to-run (measured 8–33 s for the same 9-stage LSH query,
     // ~4 s warm); min-of-2 reports the steady state a long-running
-    // cluster job actually sees.
-    val results = selected.sortBy(_._1).map { case (name, fn) =>
-      def once(): Double =
-        try {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
-        } catch {
-          case e: Throwable =>
-            errs += s"$name: ${e.getClass.getSimpleName}: ${e.getMessage}"
-            -1.0
-        }
-      val first = once()
-      // Always attempt the second run: a transient failure can hit run
-      // one just as easily as run two, and a single success is a valid
-      // measurement either way (errors are still logged to stderr).
-      val second = once()
+    // cluster job actually sees. Both runs are always attempted: a
+    // transient failure can hit either, and one success is a valid
+    // measurement.
+    val results = Run.loop(spark, sfDir, queries, runs = 2) { (_, df) =>
+      df.write.format("noop").mode("overwrite").save()
+    }.map { case (q, runs) =>
+      val ts = runs.map(_.getOrElse(-1.0))
       // Both raw timings to stderr: the cold/warm gap is the codegen +
       // artifact-staging cost, worth watching per query when profiling.
-      System.err.println(f"[bench] $name run1=$first%.2f run2=$second%.2f")
-      // Untimed inter-query hygiene: localCheckpoint blocks are released
-      // by the ContextCleaner only after the owning RDD is GC'd on the
-      // driver AND the async cleaner thread gets to it — a 234-query run
-      // otherwise accumulates dead checkpoint storage that bleeds into
-      // later queries' memory headroom (measured round 14: g04 268 s
-      // in-sweep vs 186 s fresh-JVM, d13 50 vs 25 — the heavy
-      // aggregations were spilling against stale storage memory). The
-      // explicit BLOCKING unpersist makes the release deterministic —
-      // the isolation a per-job cluster gets for free from JVM teardown.
-      // Live shared-artifact checkpoints survive the sweep, so d14/p14
-      // read d06's component labeling instead of rebuilding it.
-      Engine.sweepPersistentRDDs(spark)
+      System.err.println(f"[bench] ${q.name} run1=${ts(0)}%.2f run2=${ts(1)}%.2f")
+      // Untimed: after Run's storage sweep, collect the query's garbage
+      // so the next query starts on a clean heap, the isolation a per-job
+      // cluster gets for free from JVM teardown.
       System.gc()
-      val best = (first, second) match {
-        case (a, b) if a >= 0 && b >= 0 => math.min(a, b)
-        case (a, b)                     => math.max(a, b) // the non-negative one, or -1
-      }
-      (name, best, first, second)
-    }
-    errs.foreach(e => System.err.println(s"[bench] FAILED $e"))
-    def jmap(f: ((String, Double, Double, Double)) => Double): String =
-      results.map(r => "\"" + r._1 + "\":" + f(r)).mkString("{", ",", "}")
-    val qs = jmap(_._2)
-    val total = results.collect { case (_, v, _, _) if v >= 0 => v }.sum
-    // `queries` stays min-of-2 (the driver's BENCH contract); the per-run
+      q.name -> ts
+    }.toList
+    // the faster successful run, or -1 when both failed
+    def best(ts: Seq[Double]): Double = ts.filter(_ >= 0).minOption.getOrElse(-1.0)
+    def jmap(f: Seq[Double] => Double): String =
+      results.map { case (name, ts) => s""""$name":${f(ts)}""" }.mkString("{", ",", "}")
+    val total = results.map(r => best(r._2)).filter(_ >= 0).sum
+    // `queries` stays min-of-2 (the line's contract); the per-run
     // maps persist what the min discards — run1 is the COLD execution
     // (codegen + streaming-replay + artifact-staging cost, the number a
-    // first-time cluster job pays), run2 the resumed/warm one. The
-    // round-7/8 cold replay cost for the streams family survived only in
-    // stderr; now it rides the committed record.
+    // first-time cluster job pays), run2 the resumed/warm one.
     val loadEnd = loadAvg()
     // record_grade: quiet START (< 1 — the edge the runner controls)
     // and an end edge bounded by the bench's own tail: a full sweep's
-    // final 1-min average reads ~2 purely from its own 32-thread work
-    // (measured round 17; the r15 record's own end edge was 3.9), so
-    // an end gate of < 1 is unsatisfiable by construction. 4.0 sits
-    // above the measured self-load decay and below observed genuine
-    // contention (the r16 driver run ended at 7.5). Stamped INTO the
-    // dump so a contended run is self-identifying even when renamed
-    // or read in isolation (round-16 verdict task 6).
+    // final 1-min average reads ~2 purely from its own 32-thread work,
+    // and a quiet record's own end edge measured 3.9, so an end gate of
+    // < 1 is unsatisfiable by construction. 4.0 sits above the measured
+    // self-load decay and below observed genuine contention (a contended
+    // run ended at 7.5). Stamped INTO the dump so a contended run
+    // is self-identifying even when renamed or read in isolation.
     val recordGrade = loadStart < 1.0 && loadEnd <= 4.0
-    val host = {
-      val procs = Runtime.getRuntime.availableProcessors
-      s"""{"cpus":"${Engine.defaultParallelism}","avail_procs":$procs,""" +
-        s""""shuffle_width":$shuffleWidth,"record_grade":$recordGrade,""" +
-        s""""load_start":$loadStart,"load_end":$loadEnd}"""
-    }
-    val json = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""queries_cold":${jmap(_._3)},"queries_resumed":${jmap(_._4)},""" +
+    val host =
+      s"""{"cpus":"${spark.sparkContext.defaultParallelism}",""" +
+        s""""avail_procs":${Runtime.getRuntime.availableProcessors},""" +
+        s""""shuffle_width":${spark.conf.get("spark.sql.shuffle.partitions")},""" +
+        s""""record_grade":$recordGrade,"load_start":$loadStart,"load_end":$loadEnd}"""
+    s"""{"metric":"total","value":$total,"unit":"sec","queries":${jmap(best)},""" +
+      s""""queries_cold":${jmap(_(0))},"queries_resumed":${jmap(_(1))},""" +
       s""""host":$host,"sf":"$sfDir"}"""
-    println(json)
-    // Also persist the full line: the driver's BENCH capture truncates
-    // its tail at 2000 chars, which loses per-query data for most of the
-    // surface (the round-5 lesson — round-over-round comparison was only
-    // possible for 28 of 141 queries). Full-run dumps only, so a
-    // selective profiling invocation never clobbers the record.
-    if (args.isEmpty) {
-      // Default dumps go to a LOAD-STAMPED filename; `latest_full.json`
-      // (the record the judge reads as "latest = best-known") is only
-      // written when the run is record grade (see above). Rounds
-      // 10 AND 11 both had the committed quiet record silently
-      // clobbered by the driver's contended bench invocation — the
-      // stamp makes every dump self-identifying AND keeps the record
-      // convention intact without manual copying. An explicit
-      // SPARK_GRAFT_BENCH_FILE still wins verbatim (profiling runs
-      // name their own artifact).
-      val explicit = sys.env.get("SPARK_GRAFT_BENCH_FILE")
-      val stamped = "/root/repo/bench/run_%d_ls%.1f_le%.1f.json"
-        .format(System.currentTimeMillis() / 1000, loadStart, loadEnd)
-      // "latest = BEST-known": a record-grade run on a slow host DAY
-      // (the box drifts 1.4–1.8× across incarnations, round 16) must
-      // not clobber a faster record — only take the file when the new
-      // total beats the standing one (or none stands).
-      val beatsStanding = {
-        val f = java.nio.file.Paths.get("/root/repo/bench/latest_full.json")
-        !java.nio.file.Files.exists(f) || {
-          val m = """"value":([0-9.eE+-]+)""".r
-            .findFirstMatchIn(java.nio.file.Files.readString(f))
-          m.forall(_.group(1).toDouble > total)
-        }
-      }
-      val targets = explicit match {
-        case Some(f) => Seq(f)
-        case None if recordGrade && beatsStanding =>
-          Seq(stamped, "/root/repo/bench/latest_full.json")
-        case None => Seq(stamped)
-      }
-      targets.foreach { t =>
-        val out = java.nio.file.Paths.get(t)
-        java.nio.file.Files.createDirectories(out.getParent)
-        java.nio.file.Files.writeString(out, json + "\n")
-      }
-    }
-    spark.stop()
+  }
+
+  /** Persists a full run's line under `bench/` of the working directory
+    * (the checkout sbt runs in): a stdout capture cut at 2000 chars loses
+    * the per-query data of most of the surface. Every dump goes to a
+    * LOAD-STAMPED name; `latest_full.json` (read as "latest =
+    * best-known") is only replaced by a record-grade run whose total
+    * beats the standing one — the host drifts 1.4–1.8× across a working
+    * day, and a record-grade run on a slow day must not clobber a faster
+    * record. */
+  private def record(json: String): Unit = {
+    def fields(s: String): Map[String, String] =
+      """"(value|load_start|load_end|record_grade)":([^,}]+)""".r
+        .findAllMatchIn(s).map(m => m.group(1) -> m.group(2)).toMap
+    val run = fields(json)
+    val latest = Paths.get("bench", "latest_full.json")
+    val beatsStanding = !Files.exists(latest) || fields(Files.readString(latest))
+      .get("value").forall(_.toDouble > run("value").toDouble)
+    val stamped = Paths.get("bench", "run_%d_ls%.1f_le%.1f.json".format(
+      System.currentTimeMillis() / 1000, run("load_start").toDouble, run("load_end").toDouble))
+    Files.createDirectories(stamped.getParent)
+    (stamped +: (if (run("record_grade") == "true" && beatsStanding) Seq(latest) else Nil))
+      .foreach(Files.writeString(_, json + "\n"))
   }
 }

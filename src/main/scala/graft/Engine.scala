@@ -20,15 +20,11 @@ import org.apache.spark.sql.SparkSession
   *    splitting and dynamic join-strategy switching are the difference
   *    between a plan that survives and one that doesn't. Locally it also
   *    keeps the tiny SFs from producing thousands of empty tasks.
-  *  - shuffle partitions default to the local core count (32), not 200 —
-  *    on a real cluster this is the one knob that must be re-tuned
-  *    (rule of thumb: 2–3× total executor cores, or rely on AQE's
-  *    coalescing from a higher initial number).
+  *  - shuffle partitions start at the caller's width, not 200, and
+  *    [[tuneForEstate]] resizes them to the estate.
   */
 object Engine {
-  def defaultParallelism: String = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-
-  /** The inter-query storage sweep Bench and Verify run: blocking-
+  /** The inter-query storage sweep of [[Run.loop]]: blocking-
     * unpersist every persistent RDD except the live frames of
     * [[graft.ops.Artifacts]] in `spark`'s context. The sweep keeps one
     * query's dead checkpoint blocks out of the next query's memory
@@ -56,7 +52,7 @@ object Engine {
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // JOIN-STRATEGY POLICY (round-18 verdict task 1; guide §3.1/§9):
+      // JOIN-STRATEGY POLICY:
       // let the planner pick shuffled-hash over sort-merge when its size
       // conditions hold — every SMJ pays an O(n log n) sort per side
       // that SHJ skips, and the estate-sized shuffle width (widthFor:
@@ -95,28 +91,20 @@ object Engine {
         classOf[graft.ops.NioLocalFs].getName)
       .config("spark.ui.enabled", "false")
 
-  /** Local session sized from SPARK_GRAFT_CPUS (driver contract). */
-  def session(): SparkSession = {
-    val cpus = defaultParallelism
-    val spark = builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   /** Estate-per-shuffle-partition target for [[tuneForEstate]].
     * 96 MiB of COMPRESSED estate parquet per partition keeps the
     * worst measured expansion (d02's carry shape: 905 MB of documents
     * parquet → ~52 GB of band-exploded shingle payload, a ~57×
     * blow-up) near ~200 MB of in-flight sort data per partition —
-    * single-pass external sort territory. Chosen from the round-16
+    * single-pass external sort territory. Chosen from the
     * d02 sf100 A/B: width 32 → 501.7 s, width 256 → 240.7 s (same
     * answer, same spill total, half the wall — the multi-pass
     * sort-merge + GC term, not data volume). */
   private val EstateBytesPerPartition: Long = 96L << 20
 
-  /** SF-AWARE SHUFFLE WIDTH (round-15 verdict task 4: "the knob a
-    * cluster sizes by data volume but local[32] holds constant across
-    * decade steps"). The core-count default is right through the
+  /** SF-AWARE SHUFFLE WIDTH: the knob a cluster sizes by data volume,
+    * which a fixed core count would hold constant across decade steps.
+    * The core-count default is right through the
     * second decade (sf10 = 2.3 GiB estate → the 96 MiB/partition rule
     * lands back on 32); at sf100 a 32-way shuffle carries ×1000 the
     * sf0.1 rows per partition and d02's external sort went multi-pass
@@ -129,14 +117,12 @@ object Engine {
     * from its own estate stats — this helper is the local-mode
     * spelling of that sizing rule, reading the estate directory's
     * parquet bytes (a driver-side listing, no job). Returns the width
-    * it set. Called by the Bench/Verify mains once the estate dir is
+    * it set. Called by [[Run.session]] once the estate dir is
     * known; `spark.sql.shuffle.partitions` is runtime-settable, so
     * every plan built afterwards picks it up. */
   def tuneForEstate(spark: SparkSession, dir: String): Int = {
-    // Floor at the SESSION's actual parallelism, not the env default:
-    // Verify sizes its session from SPARK_GRAFT_CPUS with default 4
-    // while the env default here is 32 — reading the env again would
-    // silently widen a 4-core Verify session to 32 even at sf0.01.
+    // Floor at the SESSION's actual parallelism, so a caller's
+    // `Engine.builder` width is the floor it gets.
     val width = widthFor(estateBytes(dir), spark.sparkContext.defaultParallelism)
     spark.conf.set("spark.sql.shuffle.partitions", width.toString)
     width

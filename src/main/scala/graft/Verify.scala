@@ -1,71 +1,48 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
-  *
-  * The session comes from [[Engine.builder]] so the verify run carries the
-  * same semantics as everything else — UTC, AQE, and
-  * `spark.sql.legacy.parquet.nanosAsLong=true` (events.parquet is
-  * `timestamp[ns]`; a bare session throws PARQUET_TYPE_ILLEGAL on all six
-  * events-based queries). */
+
+import org.apache.spark.sql.SparkSession
+
+import graft.queries.QueryDef
+/** Correctness dump: each selected query's result → `<outDir>/<name>/`
+  * parquet, plus `oracle_sql.json` for the DuckDB compare
+  * (`tools/compare.py`). Usage: `graft.Verify <sfDir> <outDir> [query…]`;
+  * two args dump every query, extra args restrict the dump to the named
+  * queries. Session, selection and loop: [[Run]]. */
 object Verify {
   def main(args: Array[String]): Unit = {
-    val (Array(sfDir, outDir), only) = args.splitAt(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = Engine.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SF-aware shuffle width (Engine.tuneForEstate doc): inert at the
-    // driver's sf0.01 (estate < cores×96 MiB keeps the core-count
-    // default), load-bearing for local decade-step verification runs.
-    Engine.tuneForEstate(spark, sfDir)
-    new java.io.File(outDir).mkdirs()
-    // Extra args (local iteration only; the driver passes exactly two)
-    // restrict the dump to the named queries.
-    val selected =
-      if (only.isEmpty) SparkEntry.queries
-      else SparkEntry.queries.view.filterKeys(only.contains).toMap
-    var failed = List.empty[String]
-    selected.foreach { case (name, fn) =>
-      // coalesce(1) is for the tiny oracle dumps only (one file per query
-      // for the driver's reader) — never a pattern for real sinks.
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        failed ::= name
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // Bench's inter-query hygiene (see there): deterministic release
-      // of dead localCheckpoint storage so late heavy queries don't
-      // spill against 200 earlier queries' leftover blocks. Live
-      // shared-artifact checkpoints survive (graft.ops.Artifacts).
-      Engine.sweepPersistentRDDs(spark)
+    if (args.length < 2) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [query ...]")
+      sys.exit(2)
     }
+    Run.main(args(0), args.drop(2).toSeq)(dump(_, args(0), args(1), _))
+  }
+
+  /** Writes the dump of `queries`; returns the names of those that
+    * failed. The oracle map holds the selected queries only, so
+    * `tools/compare.py` flags a query that died before writing its dir. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[QueryDef]): Seq[String] = {
+    Files.createDirectories(Paths.get(outDir))
+    // coalesce(1) is for the tiny oracle dumps only (one file per query
+    // for the compare's reader) — never a pattern for real sinks.
+    val failed = Run.failures(Run.loop(spark, sfDir, queries) { (name, df) =>
+      df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
+    // — a tab or CR in an oracle's SQL would otherwise make the reader's
+    // json.load fail and silently zero the correctness check.
+    def str(s: String): String = "\"" + s.flatMap {
+      case c @ ('"' | '\\') => s"\\$c"
       case '\n' => "\\n"
       case '\r' => "\\r"
       case '\t' => "\\t"
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    // Local single-query runs get an oracle restricted to the selection,
-    // so compare.py can flag a query that died BEFORE writing its dir
-    // (a plan-time failure used to vanish: no dir, no FAIL). The driver
-    // always passes two args and keeps the full map.
-    val oracleOut =
-      if (only.isEmpty) SparkEntry.oracleSql
-      else SparkEntry.oracleSql.view.filterKeys(only.contains).toMap
-    val json = oracleOut
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
-    if (failed.nonEmpty) {
-      System.err.println(s"[verify] ${failed.size} FAILED: ${failed.mkString(", ")}")
-      sys.exit(1)
-    }
+    val oracles = queries.flatMap(q => q.oracle.map(q.name -> _)).toMap
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracles.map { case (k, v) => s"${str(k)}: ${str(v)}" }.mkString("{", ",", "}"))
+    failed
   }
 }

@@ -1,20 +1,15 @@
 #!/usr/bin/env python3
-"""Round-over-round cold-run comparison (BASELINE.md 'Bench dump
-provenance' reading rule): diff queries_cold between two full bench
-dumps, flagging the streaming family (cold = checkpoint replay cost)
-and any query whose cold run regressed > 1.5x and > 1 s.
+"""Cold-run comparison of two full bench dumps (BASELINE.md 'Bench dump
+provenance' reading rule): diff queries_cold, flagging the streaming
+family (every query whose name carries the `_stream_` token; cold =
+checkpoint replay cost) and any query whose cold run regressed > 1.5x
+and > 1 s.
 
 Usage: python3 tools/cold_delta.py bench/r9_quiet_full_203.json \
            bench/r10_quiet_full_204.json
 """
 import json
 import sys
-
-STREAMS = [
-    "q33_stream_replay", "q36_stream_sessions", "q39_stream_join",
-    "q40_stream_static", "q42_stream_outer_join", "q43_stream_tws",
-    "q44_stream_restart", "q45_stream_dedup", "q46_stream_jdbc",
-]
 
 
 def main(old_path, new_path):
@@ -24,12 +19,12 @@ def main(old_path, new_path):
 
     print(f"== streaming family cold (replay) runs: {old_path} -> {new_path}")
     tot_o = tot_n = 0.0
-    for q in STREAMS:
+    for q in sorted(q for q in set(oc) | set(nc) if "_stream_" in q):
         o, n = oc.get(q, -1), nc.get(q, -1)
         tot_o += max(o, 0)
         tot_n += max(n, 0)
-        print(f"  {q:24s} {o:6.2f} -> {n:6.2f}  ({n - o:+.2f})")
-    print(f"  {'TOTAL':24s} {tot_o:6.2f} -> {tot_n:6.2f}  ({tot_n - tot_o:+.2f})")
+        print(f"  {q:26s} {o:6.2f} -> {n:6.2f}  ({n - o:+.2f})")
+    print(f"  {'TOTAL':26s} {tot_o:6.2f} -> {tot_n:6.2f}  ({tot_n - tot_o:+.2f})")
 
     print("== cold regressions > 1.5x and > 1 s (all queries)")
     reg = [

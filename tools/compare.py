@@ -6,7 +6,10 @@ Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 For each query dir under verifyOutDir: load Spark's parquet result, run
 the matching oracle SQL (oracle_sql.json) in DuckDB over the sfDir
 tables, sort columns by name, sort rows, and compare row count, schema
-(dtype kinds) and values.
+(dtype kinds) and values. Every oracle entry is checked (one without an
+output dir fails); the tool prints how many it compared and exits
+non-zero on any failure or when there was none to compare (an empty
+oracle_sql.json is not a pass).
 """
 import sys, json, glob, os
 import duckdb
@@ -70,5 +73,8 @@ for qdir in sorted(glob.glob(f"{out}/*/")):
             if diff[c].any():
                 i = diff[c].idxmax()
                 print(f"   col {c} first diff at row {i}: spark={s[c][i]!r} oracle={o[c][i]!r}")
-print(f"\n{len(fails)} failures: {fails}" if fails else "\nALL PASS")
+print(f"\n{len(oracle)} compared")
+if not oracle:
+    print("NOTHING COMPARED"); sys.exit(1)
+print(f"{len(fails)} failures: {fails}" if fails else "ALL PASS")
 sys.exit(1 if fails else 0)
