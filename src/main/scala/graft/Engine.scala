@@ -81,10 +81,9 @@ object Engine {
       // swap in graft.ops.NioRawLocalFileSystem, which makes those stat
       // and permission calls through java.nio; create, rename and delete
       // stay Hadoop's. The FileSystem wrapper stays a LocalFileSystem
-      // (a ChecksumFileSystem): .crc sidecars keep being written, and the
-      // RocksDB state store behind transformWithState casts the local
-      // filesystem to o.a.h.fs.LocalFileSystem — a plain
-      // RawLocalFileSystem here fails every TWS checkpoint commit. The
+      // (a ChecksumFileSystem): .crc sidecars keep being written, and
+      // Hadoop's FileSystem.getLocal, which casts the file:// filesystem
+      // to o.a.h.fs.LocalFileSystem, keeps working for every caller. The
       // FileContext entry covers the streaming checkpoint manager.
       .config("spark.hadoop.fs.file.impl", classOf[graft.ops.NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl",

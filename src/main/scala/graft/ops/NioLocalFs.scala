@@ -119,7 +119,7 @@ private object NioRawLocalFileSystem {
 
 /** [[NioRawLocalFileSystem]] as the `FileSystem` for `file://`. It stays
   * a [[LocalFileSystem]], a `ChecksumFileSystem`: `.crc` sidecars are
-  * written and verified as before, and the RocksDB state store's cast of
+  * written and verified as before, and `FileSystem.getLocal`'s cast of
   * the local filesystem to `LocalFileSystem` holds. */
 class NioLocalFileSystem extends LocalFileSystem(new NioRawLocalFileSystem)
 

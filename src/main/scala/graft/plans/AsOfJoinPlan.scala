@@ -18,33 +18,34 @@ import org.apache.spark.sql.types._
   * [[GraftExtensions]]) into a custom physical operator
   * ([[AsOfJoinExec]]).
   *
-  * Semantics (identical to the composed [[graft.ops.AsOfJoin.lastPrior]],
-  * which re-expresses the reference's "latest reading at or before the
+  * Semantics (of [[graft.ops.AsOfJoin.lastPrior]] and SQL `ASOF JOIN`,
+  * which re-express the reference's "latest reading at or before the
   * moment of interest" lookup — the arrival-ordered first/last
   * discipline of `/root/reference/src/utils.rs:64-71` — as a join): for
   * every left row, attach the right row with the greatest
   * `(rightTs, tie-columns)` among rows with the same key and
   * `rightTs <= leftTs`; all-null right side when no such row exists.
-  * NULL keys and NULL timestamps never match (on either side), matching
-  * both the composed form (its window never carries a payload across
-  * keys; null-ts right rows have their payload explicitly nullified so
-  * `last(..., ignoreNulls)` skips them) and SQL join-key conventions.
+  * NULL keys and NULL timestamps never match (on either side), as in
+  * SQL join keys and DuckDB's `ASOF JOIN`.
   *
-  * Why a physical operator when (a)-composition exists: the composed
-  * form UNIONS both sides through one exchange — every right row is
-  * padded to the full left schema plus the payload struct, every left
-  * row carries a null payload column, and a window operator buffers an
-  * unbounded-preceding frame per key on the far side. This operator
+  * Why a physical operator rather than a composition of built-ins: the
+  * union+window composition UNIONS both sides through one exchange —
+  * every right row is padded to the full left schema plus a payload
+  * struct, every left row carries a null payload column, and a window
+  * operator buffers an unbounded-preceding frame per key on the far
+  * side. It also groups NULL keys together under `Window.partitionBy`,
+  * so a NULL-key left row would match NULL-key right rows. This operator
   * shuffles each side with ONLY its own columns and replaces the
   * window's frame-buffering with a single forward-merge pointer per
   * partition — O(1) state, no frame materialization, no
-  * `last(ignoreNulls)` scan over the frame. Measured at sf0.1:
-  * 0.85–0.90× the composed form's shuffle bytes at identical shuffled row
-  * counts (UnsafeRow nulls are fixed-width, so schema-padding is cheaper than
-  * it looks; the byte gap widens when the payload struct duplicates wide
-  * columns), and ~1.7× faster on the join stages from dropping the window
-  * operator. The O(1)-state merge is also what survives skew: one hot key
-  * costs a sorted-run scan, never a window frame in memory.
+  * `last(ignoreNulls)` scan over the frame. Measured at sf0.1 against
+  * that composition: 0.85–0.90× its shuffle bytes at identical shuffled
+  * row counts (UnsafeRow nulls are fixed-width, so schema-padding is
+  * cheaper than it looks; the byte gap widens when the payload struct
+  * duplicates wide columns), and ~1.7× faster on the join stages from
+  * dropping the window operator. The O(1)-state merge is also what
+  * survives skew: one hot key costs a sorted-run scan, never a window
+  * frame in memory.
   *
   * Scale posture: `requiredChildDistribution` is the same
   * co-partitioning contract as SortMergeJoin — EnsureRequirements
@@ -116,8 +117,8 @@ object AsOfJoinStrategy extends SparkStrategy {
   * sorted by `(keys, ts)` — the right side additionally by its
   * remaining columns, which pins the tie rule "greatest
   * `(ts, other columns in output order)` wins" deterministically on
-  * every run (the composed form's struct-ordered `last` — same rule,
-  * same results; [[graft.AsOfJoinNativeSpec]] asserts row equality).
+  * every run ([[graft.AsOfJoinSpec]] and [[graft.AsOfJoinPropSpec]] pin
+  * it).
   * Each partition then runs a two-pointer forward merge: left rows
   * stream in order, a single lookahead pointer consumes right rows up
   * to the current left `(key, ts)`, and the latest eligible right row

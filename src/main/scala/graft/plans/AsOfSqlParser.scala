@@ -190,8 +190,9 @@ object AsOfSqlRewrite extends PredicateHelper {
     // subquery EXPRESSION (EXISTS / IN / scalar — the subplan hangs
     // off an expression, not a child) or under EXPLAIN (ExplainCommand
     // keeps its plan as innerChildren), and transformUp walks neither
-    // — the round-11 advisory's false 'ambiguous' rejection. markTree
-    // recurses into both; the lowering side needs no twin fix (subquery
+    // — a join found only there would be falsely rejected as
+    // 'ambiguous'. markTree recurses into both; the lowering side needs
+    // no twin fix (subquery
     // plans are analyzed by the full analyzer via ResolveSubquery, and
     // EXPLAIN re-analyzes its inner plan at run time — both run the
     // injected resolution rules).

@@ -214,10 +214,10 @@ object Core {
     // startsWith/endsWith + substring, NOT an anchored regex: Java's $
     // matches before a trailing newline and .* stops at one, so regex
     // anchoring silently diverges from the reference's byte-literal
-    // strip_prefix/strip_suffix on keys containing \n (round-9 review
-    // finding; Q52PropSpec generates such keys). The suffix test runs
-    // on the REMAINDER after the prefix — "RUUVI_TAG_MAC" must fall
-    // out, exactly as the reference's Option-chained strips do.
+    // strip_prefix/strip_suffix on keys containing \n (Q52PropSpec
+    // generates such keys). The suffix test runs on the REMAINDER
+    // after the prefix — "RUUVI_TAG_MAC" must fall out, exactly as the
+    // reference's Option-chained strips do.
     def half(suffix: String, out: String): DataFrame = env
       .filter(col("key").startsWith("RUUVI_TAG_") &&
         expr(s"endswith(substring(key, 11), '$suffix')"))
@@ -394,88 +394,47 @@ object Core {
         count(lit(1)).as("n"))
       .orderBy("event_type")
 
-  /** Q23 — AS-OF join ([[graft.ops.AsOfJoin]]): every purchase joined to
-    * the user's most recent view at or before it. One shuffle on
-    * user_id — no range join, no pair explosion; DuckDB's native
-    * `ASOF JOIN` is the oracle. */
-  private def q23(s: SparkSession, d: String): DataFrame = {
-    val e = events(s, d)
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val views = e.filter(col("event_type") === "view")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    graft.ops.AsOfJoin
-      .lastPrior(purchases, views, "user_id", "ts",
-        struct(col("ts").as("vts"), col("event_id").as("vid")))
-      .select(
-        col("event_id").as("purchase_id"),
-        col("asof.vid").as("view_id"),
-        (unix_timestamp(col("ts")) - unix_timestamp(col("asof.vts"))).as("gap_sec"))
-      .orderBy("purchase_id")
-  }
+  /** Q23 — AS-OF join ([[graft.ops.AsOfJoin]], planned as
+    * [[graft.plans.AsOfJoinExec]]): every purchase joined to the user's
+    * most recent view at or before it. One hash exchange per side, each
+    * shipping only its own columns, then a forward merge — no range
+    * join, no pair explosion, no window. DuckDB's native `ASOF LEFT
+    * JOIN` is the oracle; j12 declares the same query under its own
+    * name. */
+  private def q23(s: SparkSession, d: String): DataFrame =
+    lastViewBeforePurchase(s, d).orderBy("purchase_id")
 
   /** J11 — as-of join with a TOLERANCE bound (pandas `merge_asof
     * (tolerance=...)`, kdb's `wj` window join): the most recent view at
     * or before each purchase, but only if it's ≤ 10 min stale —
-    * attribution windows, sensor-staleness cutoffs. Same single
-    * exchange as q23: because [[graft.ops.AsOfJoin.lastPrior]] already
-    * carries the MOST RECENT prior row, the tolerance is a post-hoc
-    * null-out (if the latest prior is too old, nothing within the
-    * window exists) — no second window pass, no range join; the bound
-    * costs one `when`. DuckDB has no ASOF tolerance either; the oracle
-    * applies the identical CASE over its native ASOF join. */
+    * attribution windows, sensor-staleness cutoffs. Because the as-of
+    * join already carries the MOST RECENT prior row, the tolerance is a
+    * post-hoc null-out over its `r_ts` (if the latest prior is too old,
+    * nothing within the window exists) — no second pass, no range join;
+    * the bound costs one `when`. DuckDB has no ASOF tolerance either; the
+    * oracle applies the identical CASE over its native ASOF join. */
   private def j11(s: SparkSession, d: String): DataFrame = {
-    val e = events(s, d)
-    val purchases = e.filter(col("event_type") === "purchase")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    val views = e.filter(col("event_type") === "view")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    graft.ops.AsOfJoin
-      .lastPrior(purchases, views, "user_id", "ts",
-        struct(col("ts").as("vts"), col("event_id").as("vid")))
-      .select(
-        col("event_id").as("purchase_id"),
-        col("asof.vid").as("vid"),
-        (unix_timestamp(col("ts")) - unix_timestamp(col("asof.vts"))).as("gap"))
-      .select(
-        col("purchase_id"),
-        when(col("gap") <= 600, col("vid")).as("view_id"),
-        when(col("gap") <= 600, col("gap")).as("gap_sec"))
+    val fresh = col("gap_sec") <= 600
+    lastViewBeforePurchase(s, d)
+      .select(col("purchase_id"),
+        when(fresh, col("view_id")).as("view_id"),
+        when(fresh, col("gap_sec")).as("gap_sec"))
       .orderBy("purchase_id")
   }
 
-  /** J12 — the NATIVE as-of join ([[graft.plans.AsOfJoinExec]] via
-    * [[graft.ops.AsOfJoin.lastPriorNative]]): q23's exact semantics and
-    * oracle, planned as the custom whole-operator physical plan instead
-    * of the union+window composition. One hash exchange per side, each
-    * side shipping ONLY its own columns (the composed form pads right
-    * rows to the left schema plus the payload struct), and the window's
-    * per-key frame buffer becomes an O(1) merge pointer — measured
-    * ~0.9× shuffle bytes / ~1.7× join-stage speed at sf0.1. Green
-    * against the IDENTICAL DuckDB `ASOF LEFT JOIN` oracle as q23 — one
-    * oracle, two plans, which is the point: the operator changes the physical
-    * strategy, not the answer. */
-  private def j12(s: SparkSession, d: String): DataFrame = {
+  /** q23/j11's as-of join: (purchase_id, view_id, gap_sec) with the
+    * latest view at or before each purchase (ties on `ts`: the greatest
+    * view `event_id`), nulls when the user viewed nothing before. */
+  private def lastViewBeforePurchase(s: SparkSession, d: String): DataFrame = {
     val e = events(s, d)
-    val purchases = e.filter(col("event_type") === "purchase")
+    def of(eventType: String) = e.filter(col("event_type") === eventType)
       .select(col("event_id"), col("user_id"), col("ts"))
-    val views = e.filter(col("event_type") === "view")
-      .select(col("event_id"), col("user_id"), col("ts"))
-    graft.ops.AsOfJoin.lastPriorNative(purchases, views, "user_id", "ts")
+    graft.ops.AsOfJoin.lastPrior(of("purchase"), of("view"), "user_id", "ts")
       .select(
         col("event_id").as("purchase_id"),
         col("r_event_id").as("view_id"),
         (unix_timestamp(col("ts")) - unix_timestamp(col("r_ts"))).as("gap_sec"))
-      .orderBy("purchase_id")
   }
-
-  private val oj12 =
-    """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
-      |v AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'view')
-      |SELECT p.event_id AS purchase_id, v.event_id AS view_id,
-      |  (epoch_us(p.ts) // 1000000 - epoch_us(v.ts) // 1000000)::BIGINT AS gap_sec
-      |FROM p ASOF LEFT JOIN v ON p.user_id = v.user_id AND v.ts <= p.ts
-      |ORDER BY purchase_id""".stripMargin
 
   private val oj11 =
     """WITH p AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'purchase'),
@@ -865,22 +824,9 @@ object Core {
     * sink, read back, and aggregated to exactly q24's batch shape —
     * the oracle IS q24's SQL, so the custom-state runtime is pinned to
     * the declarative window definition by an independent engine. q33
-    * pins the WINDOWED streaming path; this pins the custom-state one. */
-  private def q36(s0: SparkSession, d: String): DataFrame =
-    sessionsRun(s0, d, "q36", rocksDb = false)(graft.streaming.Sessionize.sessions(_))
-
-  /** Q43 — the `transformWithState` sessionizer under the oracle: the
-    * THIRD stateful streaming API (after q33's windowed aggregation and
-    * q36's `flatMapGroupsWithState`) replaying the same events through
-    * [[graft.streaming.SessionizeTws]] — typed ValueState + first-class
-    * event-time timers on the RocksDB store the API mandates — and
-    * aggregated to exactly q24's batch shape, so ALL THREE runtimes are
-    * pinned to the one declarative session definition by an independent
-    * engine. It replays q36's source (one staging pays for both); TWS
-    * timers fire on the same batch-N-uses-watermark-of-N−1 schedule as
-    * GroupState timeouts, so the sentinels flush it the same way. */
-  private def q43(s0: SparkSession, d: String): DataFrame =
-    sessionsRun(s0, d, "q43", rocksDb = true)(graft.streaming.SessionizeTws.sessions(_))
+    * pins the WINDOWED streaming path; this pins the custom-state one.
+    * q43 declares the same replay under its own run key. */
+  private def q36(s0: SparkSession, d: String): DataFrame = sessionsRun(s0, d, "q36")
 
   /** q36/q43's dataflow over [[sessionsSrc]]. Two far-future sentinel
     * files for a non-real user: the first advances the watermark past
@@ -889,15 +835,10 @@ object Core {
     * on the watermark computed after batch N-1), so every real session
     * closes and emits before AvailableNow drains. The sentinel user is
     * filtered from the result. */
-  private def sessionsRun(s0: SparkSession, d: String, runKey: String, rocksDb: Boolean)(
-      sessionize: Dataset[graft.streaming.Sessionize.Event] => Dataset[_]): DataFrame = {
+  private def sessionsRun(s0: SparkSession, d: String, runKey: String): DataFrame = {
     val r = new Replay(s0, sessionsSrc, runKey, d)
-    val s = r.session
-    if (rocksDb)
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    import s.implicits._
-    r.toParquet(sessionize(
+    import r.session.implicits._
+    r.toParquet(graft.streaming.Sessionize.sessions(
         r.stream.withWatermark("ts", "1 minute").as[graft.streaming.Sessionize.Event]))
       .filter(col("user_id") >= 0) // drop the watermark-advancing sentinel
       .groupBy("user_id")
@@ -984,7 +925,7 @@ object Core {
 
   /** Q57 — STREAMING hopping-window aggregates: a15's 30-min/10-min
     * sliding panes as a watermarked streaming aggregation, sharing
-    * a15's EXACT batch oracle (the q36/q43 one-oracle discipline
+    * a15's EXACT batch oracle (the q24/q36 one-oracle discipline
     * applied to the third window family — tumbling has q05↔q33,
     * session has w06↔q36; this closes hopping). Three time-ordered
     * micro-batches replay the event stream; each event expands to its
@@ -1072,7 +1013,7 @@ object Core {
     * of bookkeeping (the same algebra makes compaction's
     * write-new-then-delete-old crash window safe). Because arrival
     * order is doc_id order, ONE oracle serves the streaming and batch
-    * forms — the q36/q43 discipline applied to dedup. */
+    * forms — the q24/q36 discipline applied to dedup. */
   private def q54(s0: SparkSession, d: String): DataFrame =
     nearDupRun(s0, d, "q54", 4096L, 16, forceCompact = false)
 
@@ -1323,7 +1264,7 @@ object Core {
     * the append-idempotence argument live at
     * [[graft.streaming.Decontam]]. q61 streams p04's ENTIRE train
     * side, so the batch query's oracle text is this query's oracle
-    * verbatim — the q36/q43 one-oracle discipline. */
+    * verbatim — the q24/q36 one-oracle discipline. */
   private def q61(s0: SparkSession, d: String): DataFrame = {
     val r = new Replay(s0, Replay.Source(
       "graft_decontam", Seq("documents.parquet"), "doc_id LONG, lang STRING, text STRING",
@@ -1909,7 +1850,7 @@ object Core {
     QueryDef("q22_percentiles", q22, Some(oq22)),
     QueryDef("q23_asof_join", q23, Some(oq23)),
     QueryDef("j11_asof_tolerance", j11, Some(oj11)),
-    QueryDef("j12_asof_native", j12, Some(oj12)),
+    QueryDef("j12_asof_native", q23, Some(oq23)),
     QueryDef("q24_sessionize", q24, Some(oq24)),
     QueryDef("q25_hash_sample", q25, Some(oq25)),
     QueryDef("q26_pipeline_parity", q26, Some(oq26)),
@@ -1919,9 +1860,7 @@ object Core {
     // same oracle as q24: the custom-state streaming sessionizer must be
     // indistinguishable from the declarative batch definition
     QueryDef("q36_stream_sessions", q36, Some(oq24)),
-    // same oracle again for the transformWithState runtime: all three
-    // stateful APIs must agree with the one declarative definition
-    QueryDef("q43_stream_tws", q43, Some(oq24)),
+    QueryDef("q43_stream_tws", sessionsRun(_, _, "q43"), Some(oq24)),
     // q33's oracle again: output across a stop + restart must equal the
     // single-incarnation run, which must equal batch
     QueryDef("q44_stream_restart", q44, Some(oq33)),

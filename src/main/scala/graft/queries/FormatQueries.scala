@@ -145,54 +145,51 @@ object FormatQueries {
       |GROUP BY 1 ORDER BY 1""".stripMargin
 
   /** X5 — AVRO roundtrip: the FULL events table → avro container files
-    * (one per partition, timestamps as `timestamp-micros`) → explicit
-    * 3-of-6-column schema scan → per-type rollup. The read schema is
-    * applied as the avro READER schema inside the decoder
-    * ([[graft.sources.AvroSource.read]]), so the projection prunes at
-    * the source like ReadSchema does on parquet — and `max_ts` pins the
-    * microsecond roundtrip exactly as x02 does for JSONL. No spark-avro
-    * module on this classpath; the source is built on avro-mapred's
-    * splittable input format (FormatsSpec asserts the mapping table). */
-  private def x05(s: SparkSession, d: String): DataFrame = {
-    val path = Artifacts.dir(s, "events_avro", "1", d, Seq("events.parquet")) { p =>
-      graft.sources.AvroSource.write(events(s, d), p)
-    }
-    graft.sources.AvroSource.read(s, path,
-      org.apache.spark.sql.types.StructType.fromDDL(
-        "event_type STRING, ts TIMESTAMP, value DOUBLE"))
+    * (one per partition, timestamps as `timestamp-micros`) → scan with
+    * an explicit 3-of-6-column schema through the `graft-avro` V2
+    * connector ([[graft.sources.AvroV2]]) → per-type rollup. The
+    * supplied schema becomes the avro READER schema inside the decoder,
+    * so the projection prunes at the source like ReadSchema does on
+    * parquet — and `max_ts` pins the microsecond roundtrip exactly as
+    * x02 does for JSONL. No spark-avro module on this classpath
+    * (FormatsSpec asserts the mapping table and the pruned scan). */
+  private def x05(s: SparkSession, d: String): DataFrame =
+    s.read.format("graft-avro").schema("event_type STRING, ts TIMESTAMP, value DOUBLE")
+      .load(eventsAvro(s, d))
       .groupBy("event_type")
       .agg(
         count(lit(1)).as("n"),
         oround(avg("value"), 2).as("avg_value"),
         max("ts").as("max_ts"))
       .orderBy("event_type")
-  }
+
+  /** The events table as avro container files, one artifact for x05/x06. */
+  private def eventsAvro(s: SparkSession, d: String): String =
+    Artifacts.dir(s, "events_avro", "1", d, Seq("events.parquet")) { p =>
+      graft.sources.AvroSource.write(events(s, d), p)
+    }
 
   private val ox05 =
     """SELECT event_type, count(*) AS n, ROUND(avg(value), 2) AS avg_value,
       |  max(ts) AS max_ts
       |FROM events GROUP BY 1 ORDER BY 1""".stripMargin
 
-  /** X6 — the same avro estate through the DataSource V2 connector
-    * ([[graft.sources.AvroV2]], `format("graft-avro")`): schema
-    * INFERRED from one container header (bytes, never a data pass —
-    * the one inference the x01 rule permits), column pruning driven by
-    * the PLANNER (`pruneColumns` → avro reader schema; FormatsSpec
-    * asserts the BatchScan decodes 3 of 6 columns), one input
-    * partition per file. Same artifact as x05; `min(ts)` instead of
-    * max so the two queries cannot share a cached result by accident. */
-  private def x06(s: SparkSession, d: String): DataFrame = {
-    val path = Artifacts.dir(s, "events_avro", "1", d, Seq("events.parquet")) { p =>
-      graft.sources.AvroSource.write(events(s, d), p)
-    }
-    s.read.format("graft-avro").load(path)
+  /** X6 — the same avro estate through the same connector with NO
+    * schema: it is INFERRED from one container header (bytes, never a
+    * data pass — the one inference the x01 rule permits), and column
+    * pruning is driven by the PLANNER alone (`pruneColumns` → avro
+    * reader schema; FormatsSpec asserts the BatchScan decodes 3 of 6
+    * columns), one input partition per file. `min(ts)` instead of
+    * x05's max so the two queries cannot share a cached result by
+    * accident. */
+  private def x06(s: SparkSession, d: String): DataFrame =
+    s.read.format("graft-avro").load(eventsAvro(s, d))
       .groupBy("event_type")
       .agg(
         count(lit(1)).as("n"),
         oround(avg("value"), 2).as("avg_value"),
         min("ts").as("min_ts"))
       .orderBy("event_type")
-  }
 
   private val ox06 =
     """SELECT event_type, count(*) AS n, ROUND(avg(value), 2) AS avg_value,

@@ -4,45 +4,28 @@ import java.nio.ByteBuffer
 
 import org.apache.avro.Schema
 import org.apache.avro.generic.{GenericData, GenericRecord}
-import org.apache.avro.mapred.AvroKey
-import org.apache.avro.mapreduce.AvroKeyInputFormat
-import org.apache.hadoop.io.NullWritable
 import org.apache.spark.TaskContext
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types._
 
-/** Avro container files as a source/sink WITHOUT the spark-avro module
-  * (not on this classpath — only avro core + avro-mapred ship with the
+/** Avro container files WITHOUT the spark-avro module (not on this
+  * classpath — only avro core + avro-mapred ship with the
   * distribution), completing the at-rest estate formats after
   * parquet/ORC/CSV/JSONL (x01–x04; the reference's source stage is
   * `/root/reference/src/bluetooth/scanner.rs:96-202` — this is the
   * fourth file format a 100 TB lake commonly holds).
   *
-  * Design, Spark-first where the datasource API isn't available:
-  *
-  *  - READ is `newAPIHadoopFile` over avro-mapred's splittable
-  *    `AvroKeyInputFormat` — one task per HDFS block, exactly the
-  *    parallel-scan shape the DataFrame reader would produce. The
-  *    caller passes an EXPLICIT Spark schema (the x01/x02 discipline —
-  *    never infer on a lake-scale estate) which is converted to an
-  *    avro READER schema, so projection happens inside the avro
-  *    decoder: unrequested fields are resolved away per Avro schema
-  *    resolution and never materialized. That is the avro-native
-  *    equivalent of column pruning (no footer statistics though —
-  *    like every row-major format, avro cannot skip row groups;
-  *    convert to parquet early and this query documents why).
-  *  - WRITE fans out one container file per partition through the
-  *    Hadoop FileSystem API (works on file://, HDFS, or any mounted
-  *    FS), rows converted to GenericRecords by the shared
-  *    field-mapping table.
+  *  - WRITE fans out one container file per partition (`foreachPartition`,
+  *    the per-partition imperative seam) through the Hadoop FileSystem
+  *    API (works on file://, HDFS, or any mounted FS), rows converted
+  *    to GenericRecords by the shared field-mapping table.
+  *  - READ is the DataSource V2 connector [[AvroV2]]
+  *    (`format("graft-avro")`), which maps Spark schemas to avro
+  *    reader schemas through [[avroSchema]].
   *  - Timestamps map to avro `long` + `timestamp-micros` logical type
   *    in BOTH directions — microsecond-exact roundtrip (the x02
   *    JSON-format lesson: a default millisecond pattern silently
   *    truncates event times; the x05 oracle pins max(ts) to the µs).
-  *
-  * RDD usage is deliberate and narrow (the per-partition imperative
-  * seam the builder guide reserves it for): everything downstream of
-  * `read` is a plain DataFrame, so Catalyst sees a normal scan.
   */
 object AvroSource {
 
@@ -83,7 +66,7 @@ object AvroSource {
     * after a successful close. A retried or speculative attempt can
     * therefore never interleave bytes with a concurrent sibling writing
     * the same `part-NNNNN.avro`, and a crashed attempt leaves only a
-    * `_tmp-` orphan — which Hadoop's input formats (and [[read]]) skip
+    * `_tmp-` orphan — which Hadoop's input formats (and [[AvroV2]]) skip
     * as a hidden file — never a truncated `part-` file a later scan
     * would treat as data. One complete attempt's file survives per
     * partition — first-wins on HDFS-like stores (rename refuses an
@@ -96,9 +79,9 @@ object AvroSource {
     val sparkSchema = df.schema
     val json = avroSchema(sparkSchema).toString
     // The SESSION's filesystem configuration (s3a credentials,
-    // defaultFS, …) must govern the write exactly as it governs read()
-    // — a bare `new Configuration()` here would resolve a different
-    // filesystem for the same path string (round-10 advisory fix).
+    // defaultFS, …) must govern the write exactly as it governs the
+    // read — a bare `new Configuration()` here would resolve a different
+    // filesystem for the same path string.
     // Hadoop Configuration is not Serializable, so the session entries
     // ship to executors as a key→value overlay on the task-side
     // defaults (the SerializableConfiguration pattern without the
@@ -168,44 +151,5 @@ object AvroSource {
           throw new java.io.IOException(s"avro task commit failed: $tmp -> $dest")
       }
     }
-  }
-
-  /** Parallel scan of an avro directory with an explicit Spark schema;
-    * the schema doubles as the avro READER schema, so projection is
-    * applied inside the decoder (fields not listed are never built). */
-  def read(spark: SparkSession, path: String, schema: StructType): DataFrame = {
-    val readerJson = avroSchema(schema).toString
-    val conf = new org.apache.hadoop.conf.Configuration(
-      spark.sparkContext.hadoopConfiguration)
-    conf.set("avro.schema.input.key", readerJson)
-    val fields = schema.fields.map(f => (f.name, f.dataType))
-    val rows = spark.sparkContext
-      .newAPIHadoopFile(
-        path,
-        classOf[AvroKeyInputFormat[GenericRecord]],
-        classOf[AvroKey[GenericRecord]],
-        classOf[NullWritable],
-        conf)
-      .map { case (k, _) =>
-        val rec = k.datum()
-        Row.fromSeq(fields.toIndexedSeq.map { case (name, dt) =>
-          rec.get(name) match {
-            case null => null
-            case v => dt match {
-              case TimestampType =>
-                val micros = v.asInstanceOf[Long]
-                val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000000L) * 1000L)
-                ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-                ts
-              case StringType => v.toString
-              case BinaryType =>
-                val bb = v.asInstanceOf[ByteBuffer]
-                val arr = new Array[Byte](bb.remaining()); bb.duplicate().get(arr); arr
-              case _ => v
-            }
-          }
-        })
-      }
-    spark.createDataFrame(rows, schema)
   }
 }

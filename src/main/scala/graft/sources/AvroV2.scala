@@ -18,22 +18,23 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.util.SerializableConfiguration
 
-/** `format("graft-avro")` — the [[AvroSource]] bridge done the
-  * Spark-first way: a DataSource V2 `TableProvider`, so avro
-  * directories read through the standard connector API instead of an
-  * RDD seam. What the V2 shape buys over the bridge:
+/** `format("graft-avro")` — the engine's avro reader (files written by
+  * [[AvroSource.write]]): a DataSource V2 `TableProvider`, so avro
+  * directories read through the standard connector API:
   *
   *  - **column pruning through the PLANNER**: Catalyst calls
   *    `pruneColumns` with exactly the attributes the query references;
   *    the pruned StructType becomes the avro READER schema, so
   *    projection happens inside the decoder AND is visible in
   *    `.explain` as the BatchScan's narrowed output (FormatsSpec
-  *    asserts it) — with the RDD bridge the caller had to pass the
-  *    projection by hand;
-  *  - **schema inference from the container header** when the caller
-  *    doesn't supply one: the writer schema is read from ONE file's
-  *    header (a few hundred bytes — never a data pass, unlike CSV/JSON
-  *    inference) and mapped back to Spark types;
+  *    asserts it);
+  *  - **the caller's schema** (`.schema(...)`, the x01 discipline —
+  *    never infer on a lake-scale estate) or, when none is given,
+  *    **inference from the container header**: the writer schema is
+  *    read from ONE file's header (a few hundred bytes — never a data
+  *    pass, unlike CSV/JSON inference) and mapped back to Spark types.
+  *    Avro schema resolution matches fields by name, so a supplied
+  *    schema may list any subset of the written fields in any order;
   *  - standard integration: the source composes with
   *    `spark.read.format(...).schema(...).load(path)`, shows up in
   *    query plans as a first-class scan, and hands Spark one
@@ -42,9 +43,9 @@ import org.apache.spark.util.SerializableConfiguration
   *    markers, noted as the scale follow-up).
   *
   * Rows are produced directly as `InternalRow` (UTF8String / micros
-  * long / bytes), skipping the external-Row conversion layer the
-  * bridge pays. Timestamps are `timestamp-micros` in both directions,
-  * matching [[AvroSource.avroSchema]].
+  * long / bytes), with no external-Row conversion. Timestamps are
+  * `timestamp-micros` in both directions, matching
+  * [[AvroSource.avroSchema]].
   */
 class AvroV2 extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-avro"
@@ -85,7 +86,8 @@ object AvroV2 {
 
   /** The session's Hadoop configuration, so its `spark.hadoop.*`
     * entries (the filesystem classes [[graft.Engine.builder]] sets,
-    * credentials, defaultFS) govern every read, as in [[AvroSource]]. */
+    * credentials, defaultFS) govern every read, as they govern
+    * [[AvroSource.write]]. */
   private def sessionConf: Configuration =
     SparkSession.active.sparkContext.hadoopConfiguration
 

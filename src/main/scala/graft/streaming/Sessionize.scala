@@ -20,7 +20,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * transitions are checkpointed with the batch.
   *
   * State size is one small struct per ACTIVE user — bounded by concurrent
-  * users, not history; the RocksDB state store holds it at cluster scale.
+  * users, not history; at cluster scale a RocksDB state store can hold it
+  * (`spark.sql.streaming.stateStore.providerClass`, no code change).
   */
 object Sessionize {
 
@@ -43,18 +44,18 @@ object Sessionize {
       user_id: Long, session_start: Timestamp, session_end: Timestamp, n_events: Long)
 
   private def toUs(t: Timestamp): Long = t.getTime * 1000L + (t.getNanos / 1000L) % 1000L
+  /** Floor division: before 1970 `us` is negative, and a truncating
+    * `%` would hand `setNanos` a negative sub-second part (it throws). */
   private def toTs(us: Long): Timestamp = {
-    val t = new Timestamp(us / 1000L)
-    t.setNanos(((us % 1000000L) * 1000L).toInt)
+    val t = new Timestamp(Math.floorDiv(us, 1000000L) * 1000L)
+    t.setNanos((Math.floorMod(us, 1000000L) * 1000L).toInt)
     t
   }
 
   /** 30-minute default gap, mirroring the reference's interval. */
   val DefaultGapUs: Long = 1800L * 1000000L
 
-  /** The pure sessionization core, shared by the `flatMapGroupsWithState`
-    * implementation here and the `transformWithState` one
-    * ([[SessionizeTws]]) so the two runtimes can never drift.
+  /** The pure sessionization core behind [[update]].
     *
     * Interval sweep over (open session ∪ batch events) sorted by start:
     * adjacent intervals within the gap merge (this handles ordinary
@@ -83,10 +84,10 @@ object Sessionize {
     (earlier.reverse, Some(latest))
   }
 
-  private[streaming] def toClosed(userId: Long, s: OpenSession): ClosedSession =
+  private def toClosed(userId: Long, s: OpenSession): ClosedSession =
     ClosedSession(userId, toTs(s.startUs), toTs(s.lastUs), s.nEvents)
 
-  private[streaming] def eventInterval(e: Event): OpenSession = {
+  private def eventInterval(e: Event): OpenSession = {
     val us = toUs(e.ts); OpenSession(us, us, 1L)
   }
 
@@ -97,8 +98,7 @@ object Sessionize {
     if (state.hasTimedOut) {
       val s = state.get
       state.remove()
-      return Iterator.single(
-        ClosedSession(userId, toTs(s.startUs), toTs(s.lastUs), s.nEvents))
+      return Iterator.single(toClosed(userId, s))
     }
     val (earlier, latestOpt) =
       mergeIntervals(gapUs, state.getOption, rows.map(eventInterval).toSeq)
@@ -114,8 +114,7 @@ object Sessionize {
       catch { case _: UnsupportedOperationException => -1L }
     state.setTimeoutTimestamp(
       math.max(latest.lastUs / 1000L + gapUs / 1000L, watermarkMs + 1L))
-    earlier.iterator.map(s =>
-      ClosedSession(userId, toTs(s.startUs), toTs(s.lastUs), s.nEvents))
+    earlier.iterator.map(toClosed(userId, _))
   }
 
   /** Sessionize a (possibly streaming) typed event source. The input

@@ -5,12 +5,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.AsOfJoin
 
-/** [[graft.plans.AsOfJoinExec]] — the native whole-operator as-of join —
-  * against the composed union+window form it replaces: row-for-row
-  * equality on adversarial data (timestamp ties, null keys, null
-  * timestamps, keys with no right rows, empty right side), plus the
-  * plan shape that justifies its existence (two narrow exchanges, no
-  * window, no union). */
+/** [[graft.plans.AsOfJoinExec]] — the as-of join operator behind
+  * [[AsOfJoin.lastPrior]] and SQL `ASOF JOIN` — on adversarial data
+  * (timestamp ties, null keys, null timestamps, keys with no right rows,
+  * an empty right side, one hot key), each pinned to the row DuckDB
+  * 1.0's `ASOF LEFT JOIN` returns for the same tables, plus the plan
+  * shape and statistics the operator exists for (two narrow exchanges,
+  * no window, no union; none at all over bucketed sides). */
 class AsOfJoinNativeSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -22,29 +23,17 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
       .select(col("event_id"), col("user_id"),
         when(col("tsl").isNotNull, timestamp_seconds(col("tsl"))).as("ts"))
 
-  /** Native result normalized to the composed form's output shape. */
-  private def runBoth(left: Seq[(Long, java.lang.Integer, java.lang.Long)],
+  /** Each left event_id → the matched right event_id (None: no match). */
+  private def matches(left: Seq[(Long, java.lang.Integer, java.lang.Long)],
                       right: Seq[(Long, java.lang.Integer, java.lang.Long)]) = {
-    val l = mkDF(left)
-    val r = mkDF(right)
-    val composed = AsOfJoin
-      .lastPrior(l, r, "user_id", "ts",
-        struct(col("ts").as("vts"), col("event_id").as("vid")))
-      .select(col("event_id"), col("user_id"), col("ts"),
-        col("asof.vid").as("r_event_id"), col("asof.vts").as("r_ts"))
-      .orderBy("event_id")
-    // native right-side ordering ties on (ts, then remaining columns in
-    // OUTPUT order) — mkDF puts event_id first, so project the right
-    // side to (ts-first is not required; tie columns are the non-key
-    // non-ts columns, here just event_id, same as the composed payload)
-    val native = AsOfJoin.lastPriorNative(l, r, "user_id", "ts")
-      .select(col("event_id"), col("user_id"), col("ts"),
-        col("r_event_id"), col("r_ts"))
-      .orderBy("event_id")
-    (composed.collect().toSeq, native.collect().toSeq)
+    val out = AsOfJoin.lastPrior(mkDF(left), mkDF(right), "user_id", "ts")
+      .select(col("event_id"), col("r_event_id"))
+      .collect()
+    assert(out.length == left.length, "a left join keeps every left row")
+    out.map(r => r.getLong(0) -> Option(r.get(1))).toMap
   }
 
-  test("matches the composed form on ties, nulls, gaps, unmatched keys") {
+  test("ties, nulls, gaps and unmatched keys match DuckDB's ASOF LEFT JOIN") {
     val left = Seq[(Long, java.lang.Integer, java.lang.Long)](
       (1L, 1, 100L), (2L, 1, 150L), (3L, 1, 90L), // before any right row
       (4L, 2, 500L), // key with no right rows at all
@@ -58,81 +47,44 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
       (108L, null, 50L), // null right key: skipped
       (109L, 5, null), // null right ts: skipped
       (110L, 5, 999L))
-    val (c, n) = runBoth(left, right)
-    assert(n == c)
-    // and the pinned expectations, independent of both implementations
-    val byId = n.map(r => r.getLong(0) -> Option(r.get(3))).toMap
-    assert(byId(1L) == Some(102L)) // ts==100 ties left row: <= matches
-    assert(byId(2L) == Some(103L))
-    assert(byId(3L) == None)
-    assert(byId(4L) == None)
-    assert(byId(5L) == Some(106L)) // tie on ts=300 → max event_id
-    assert(byId(7L) == None)
-    assert(byId(8L) == Some(110L) && byId(9L) == Some(110L))
+    assert(matches(left, right) == Map(
+      1L -> Some(102L), // ts==100 ties left row: <= matches
+      2L -> Some(103L),
+      3L -> None,
+      4L -> None,
+      5L -> Some(106L), // tie on ts=300 → max event_id
+      7L -> None,
+      8L -> Some(110L), 9L -> Some(110L)))
   }
 
-  test("null keys: native follows SQL equality (no match); composed groups them") {
-    // the one documented divergence between the two forms. The window
-    // in the composed plan partitions by key, and partitionBy groups
-    // NULLs together — so a null-key left row picks up null-key right
-    // rows. SQL equality (and DuckDB's ASOF JOIN, the oracle for
-    // q23/j12) says NULL = NULL is not true: no match. The native
-    // operator implements the SQL rule.
-    val l = mkDF(Seq((1L, null, 100L)))
-    val r = mkDF(Seq((2L, null, 50L)))
-    val native = AsOfJoin.lastPriorNative(l, r, "user_id", "ts").collect()
-    assert(native.length == 1 && native(0).isNullAt(3))
-    val composed = AsOfJoin.lastPrior(l, r, "user_id", "ts",
-      struct(col("ts").as("vts"), col("event_id").as("vid"))).collect()
-    assert(composed.length == 1 &&
-      composed(0).getAs[org.apache.spark.sql.Row]("asof") != null)
+  test("null keys follow SQL equality: no match, as in DuckDB") {
+    // NULL = NULL is not true, so a null-key left row matches nothing,
+    // not even null-key right rows (a Window.partitionBy over the key
+    // would group the NULLs together and match them)
+    assert(matches(Seq((1L, null, 100L)), Seq((2L, null, 50L))) == Map(1L -> None))
   }
 
-  test("a key whose ONLY right rows have null ts matches nothing in both forms") {
-    // Round-10 advisory: before the lastPrior fix, a null-ts right row's
-    // payload struct was non-null (a struct with a null field), sorted
-    // nulls-FIRST in the window, and was carried as the match whenever
-    // its key had no other prior right row — diverging from the native
-    // operator, which skips null-ts rows in the merge. The earlier
-    // suite data masked it (key 5's null-ts row was shadowed by a
-    // later valid row); here null-ts rows are the key's ONLY rows.
+  test("a key whose ONLY right rows have null ts matches nothing") {
+    // the "at or before" predicate is unknowable for a null-ts right
+    // row, so it is never the match — even when its key has no other
+    // right row to shadow it
     val left = Seq[(Long, java.lang.Integer, java.lang.Long)](
       (1L, 1, 100L), (2L, 2, 100L))
     val right = Seq[(Long, java.lang.Integer, java.lang.Long)](
       (101L, 1, null), (102L, 1, null), // key 1: only null-ts right rows
       (103L, 2, 50L))
-    val (c, n) = runBoth(left, right)
-    assert(n == c)
-    val byId = n.map(r => r.getLong(0) -> Option(r.get(3))).toMap
-    assert(byId(1L) == None) // must NOT carry 101/102
-    assert(byId(2L) == Some(103L))
+    assert(matches(left, right) == Map(1L -> None, 2L -> Some(103L)))
   }
 
   test("empty right side yields all-null right columns") {
-    val (c, n) = runBoth(
-      Seq((1L, 1, 100L), (2L, 2, 200L)),
-      Seq.empty)
-    assert(n == c)
-    assert(n.forall(_.isNullAt(3)))
-  }
-
-  test("randomized equivalence with heavy key skew and ties") {
-    val rnd = new scala.util.Random(42)
-    def gen(n: Int, idBase: Long) =
-      (0 until n).map { i =>
-        (idBase + i,
-          Integer.valueOf(rnd.nextInt(7)), // few keys → long runs
-          java.lang.Long.valueOf(rnd.nextInt(50).toLong)) // many ts ties
-      }
-    val (c, n) = runBoth(gen(400, 0L), gen(300, 10000L))
-    assert(n == c)
-    assert(n.count(!_.isNullAt(3)) > 100) // the data actually matched
+    assert(matches(Seq((1L, 1, 100L), (2L, 2, 200L)), Seq.empty) ==
+      Map(1L -> None, 2L -> None))
   }
 
   test("plan: one AsOfJoinExec, two exchanges, no window, no union") {
     val l = mkDF(Seq((1L, 1, 100L))).filter(col("event_id") > 0)
     val r = mkDF(Seq((2L, 1, 50L)))
-    val df = AsOfJoin.lastPriorNative(l, r, "user_id", "ts")
+    val df = AsOfJoin.lastPrior(l, r, "user_id", "ts")
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
       .split("== Initial Plan ==")(0)
@@ -153,7 +105,7 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
       .toDF("event_id", "k1", "k2", "tsl")
       .select(col("event_id"), col("k1"), col("k2"),
         timestamp_seconds(col("tsl")).as("ts"))
-    val out = AsOfJoin.lastPriorNative(l, r, Seq("k1", "k2"), "ts", "r_")
+    val out = AsOfJoin.lastPrior(l, r, Seq("k1", "k2"), "ts", "r_")
       .select(col("event_id"), col("r_event_id")).orderBy("event_id")
       .collect().map(x => (x.getLong(0), Option(x.get(1)))).toSeq
     assert(out == Seq((1L, Some(101L)), (2L, Some(102L)), (3L, None)))
@@ -174,7 +126,7 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
       spark, "asof_views", "1", d, Seq("events.parquet"), "user_id", 4)(
       e.filter(col("event_type") === "view")
         .select("event_id", "user_id", "ts"))
-    val df = AsOfJoin.lastPriorNative(
+    val df = AsOfJoin.lastPrior(
       spark.table(pt), spark.table(vt), "user_id", "ts")
     assert(df.count() > 0)
     val plan = df.queryExecution.executedPlan.toString
@@ -186,9 +138,7 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
   test("hot key: one key owning the whole right side stays O(1)-state") {
     // the skew posture: the merge carries ONE lookahead row and ONE
     // match — a 200k-row hot key costs a sorted-run scan, never a
-    // buffered frame. Correctness pinned against the composed form on
-    // the same data (its running window also streams, so both finish;
-    // the assertion here is agreement at scale, not survival).
+    // buffered frame
     val n = 200000
     val l = spark.range(50).select(
       (col("id") + 1000000L).as("event_id"),
@@ -198,14 +148,12 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
       col("id").as("event_id"),
       lit(1).cast("int").as("user_id"),
       timestamp_seconds(col("id") % 50000).as("ts"))
-    val native = AsOfJoin.lastPriorNative(l, r, "user_id", "ts")
+    val out = AsOfJoin.lastPrior(l, r, "user_id", "ts")
       .select(col("event_id"), col("r_event_id")).orderBy("event_id").collect()
-    val composed = AsOfJoin.lastPrior(l, r, "user_id", "ts",
-        struct(col("ts").as("vts"), col("event_id").as("vid")))
-      .select(col("event_id"), col("asof.vid").as("r_event_id"))
-      .orderBy("event_id").collect()
-    assert(native.toSeq == composed.toSeq)
-    assert(native.length == 50 && native.count(!_.isNullAt(1)) == 50)
+    // left row i sits at ts T = 1000·i + 500, which right ids T, T+50000,
+    // T+100000 and T+150000 share: the tie goes to the greatest id
+    assert(out.toSeq.map(r => (r.getLong(0), r.getLong(1))) ==
+      (0L until 50L).map(i => (1000000L + i, 1000L * i + 500L + 150000L)))
   }
 
   test("stats: additive size estimate keeps downstream broadcast alive") {
@@ -217,7 +165,7 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
     def gen(n: Int, base: Long) = (0 until n).map(i =>
       (base + i, Integer.valueOf(rnd.nextInt(50)),
         java.lang.Long.valueOf(rnd.nextInt(1000).toLong)))
-    val asof = AsOfJoin.lastPriorNative(
+    val asof = AsOfJoin.lastPrior(
       mkDF(gen(1000, 0L)), mkDF(gen(1000, 10000L)), "user_id", "ts")
     val node = asof.queryExecution.optimizedPlan.collect {
       case n: graft.plans.AsOfJoinNode => n
@@ -243,7 +191,7 @@ class AsOfJoinNativeSpec extends AnyFunSuite {
       (1L, 1, 100L), (2L, 1, 90L), (3L, 1, 80L), (4L, 2, 70L)))
     val purchases = e.filter(col("event_id") <= 2)
     val views = e.filter(col("event_id") >= 3)
-    val out = AsOfJoin.lastPriorNative(purchases, views, "user_id", "ts")
+    val out = AsOfJoin.lastPrior(purchases, views, "user_id", "ts")
       .select(col("event_id"), col("r_event_id")).orderBy("event_id")
       .collect().map(r => (r.getLong(0), Option(r.get(1)))).toSeq
     assert(out == Seq((1L, Some(3L)), (2L, Some(3L))))

@@ -11,8 +11,7 @@ import graft.ops.AsOfJoin
   * row-for-row against a direct in-memory model of the declared
   * semantics ("the right row with the greatest (ts, tie-id) among rows
   * with the same key and ts ≤ left ts; null keys/ts never match").
-  * Unlike AsOfJoinNativeSpec's equivalence-vs-composed tests, the
-  * model here shares NO code or plan machinery with the operator, so
+  * The model shares NO code or plan machinery with the operator, so
   * agreement can't be a common-mode bug. Seeded generators — the cases
   * are adversarial but reproducible: few keys (long runs), heavy ts
   * ties, null keys and null timestamps mixed in. */
@@ -64,7 +63,7 @@ class AsOfJoinPropSpec extends AnyFunSuite {
       val right = gen(30 + rnd.nextInt(40), 100000L)
       val expected = model(left, right)
       val got = AsOfJoin
-        .lastPriorNative(toDF(left), toDF(right), "user_id", "ts")
+        .lastPrior(toDF(left), toDF(right), "user_id", "ts")
         .select(col("event_id"), col("r_event_id"))
         .collect()
         .map(r => r.getLong(0) -> Option(r.get(1)).map(_.asInstanceOf[Long]))

@@ -7,9 +7,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.AsOfJoin
 
-/** AS-OF join edge semantics: equal timestamps match (<=), no prior row
-  * yields null, keys never leak across partitions, and the latest — not
-  * first — prior row wins. */
+/** AS-OF join edge semantics of [[AsOfJoin.lastPrior]]: equal
+  * timestamps match (<=), no prior row yields null, keys never leak
+  * across partitions, the latest — not first — prior row wins, and
+  * right rows tied on (key, ts) resolve the same way on every run. */
 class AsOfJoinSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
@@ -31,8 +32,8 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("lastPrior: ties match, latest wins, missing is null, keys isolate") {
     val out = AsOfJoin
-      .lastPrior(left, right, "k", "ts", struct(col("rid")))
-      .select(col("lid"), col("asof.rid").as("rid"))
+      .lastPrior(left, right, "k", "ts")
+      .select(col("lid"), col("r_rid"))
       .collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) None else Some(r.getLong(1))))
       .toMap
@@ -45,22 +46,23 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("same-(key,ts) right rows resolve to the struct-wise greatest, every run") {
     // three right rows share (k=9, 10:00): the deterministic tiebreak
-    // must carry the greatest payload struct (rid=23) on all runs
+    // must carry the row greatest by its remaining columns (rid=23) on
+    // all runs
     val l = Seq((900L, 9L, ts("2024-01-01 10:30:00"))).toDF("lid", "k", "ts")
     val r = Seq(
       (21L, 9L, ts("2024-01-01 10:00:00")),
       (23L, 9L, ts("2024-01-01 10:00:00")),
       (22L, 9L, ts("2024-01-01 10:00:00"))).toDF("rid", "k", "ts")
     (1 to 3).foreach { _ =>
-      val out = AsOfJoin.lastPrior(l, r, "k", "ts", struct(col("rid")))
-        .select(col("asof.rid")).collect()
+      val out = AsOfJoin.lastPrior(l, r, "k", "ts")
+        .select(col("r_rid")).collect()
       assert(out.length == 1 && out.head.getLong(0) == 23L)
     }
   }
 
   test("left columns and row count are preserved") {
-    val out = AsOfJoin.lastPrior(left, right, "k", "ts", struct(col("rid")))
+    val out = AsOfJoin.lastPrior(left, right, "k", "ts")
     assert(out.count() == 4)
-    assert(Seq("lid", "k", "ts", "asof").forall(out.columns.contains))
+    assert(out.columns.toSeq == Seq("lid", "k", "ts", "r_rid", "r_k", "r_ts"))
   }
 }

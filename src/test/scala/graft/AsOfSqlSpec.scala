@@ -8,7 +8,7 @@ import graft.ops.AsOfJoin
 /** The `ASOF [LEFT|INNER] JOIN` SQL frontend
   * ([[graft.plans.GraftSqlParser]] + [[graft.plans.ResolveAsOfJoin]]):
   * the SQL text must produce the SAME rows as the DataFrame-level
-  * [[AsOfJoin.lastPriorNative]], plan through [[graft.plans.AsOfJoinExec]],
+  * [[AsOfJoin.lastPrior]], plan through [[graft.plans.AsOfJoinExec]],
   * respect string-literal masking, and reject ambiguous statements
   * loudly instead of guessing. */
 class AsOfSqlSpec extends AnyFunSuite {
@@ -33,7 +33,7 @@ class AsOfSqlSpec extends AnyFunSuite {
       .createOrReplaceTempView("rgt")
   }
 
-  test("ASOF LEFT JOIN sql == lastPriorNative, plans AsOfJoinExec") {
+  test("ASOF LEFT JOIN sql == lastPrior, plans AsOfJoinExec") {
     stage()
     val sql = spark.sql(
       """SELECT l.event_id AS eid, r.event_id AS rid
@@ -42,7 +42,7 @@ class AsOfSqlSpec extends AnyFunSuite {
         |ORDER BY eid""".stripMargin)
     val plan = sql.queryExecution.executedPlan.toString
     assert(plan.contains("AsOfJoin"), plan)
-    val viaDf = AsOfJoin.lastPriorNative(
+    val viaDf = AsOfJoin.lastPrior(
         spark.table("lft"), spark.table("rgt"), "user_id", "ts")
       .select(col("event_id").as("eid"), col("r_event_id").as("rid"))
       .orderBy("eid")

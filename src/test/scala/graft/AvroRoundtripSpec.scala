@@ -7,12 +7,12 @@ import org.apache.spark.sql.types._
 import org.scalacheck.Gen
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property roundtrip for [[graft.sources.AvroSource]] + the
+/** Property roundtrip for [[graft.sources.AvroSource.write]] + the
   * `graft-avro` V2 connector: generated rows across every supported
   * type — including the adversarial corners (empty strings and byte
   * arrays, nulls in every nullable slot, negative epochs, sub-second
-  * timestamp tails) — must survive write → read (both read paths)
-  * value-exact. */
+  * timestamp tails) — must survive write → read value-exact, with the
+  * caller's schema and with the schema inferred from the files. */
 class AvroRoundtripSpec extends AnyFunSuite {
   import SparkTestSession.spark
 
@@ -39,7 +39,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
     b <- opt(Gen.oneOf(true, false))
     bin <- opt(Gen.listOf(Gen.chooseNum(-128, 127).map(_.toByte)).map(_.toArray))
     // ±~50 years around the epoch with a µs tail — negative epochs
-    // exercise the floorDiv/floorMod split on read
+    // exercise the floorDiv/floorMod split of the expected values
     us <- opt(Gen.chooseNum(-1600000000000000L, 1600000000000000L))
   } yield Seq(l, i, d, f, s, b, bin,
     us match {
@@ -67,9 +67,9 @@ class AvroRoundtripSpec extends AnyFunSuite {
     graft.sources.AvroSource.write(df, dir)
     val expect = rows.map(canon).sortBy(_.head.asInstanceOf[Long])
 
-    val viaBridge = graft.sources.AvroSource.read(spark, dir, schema)
+    val viaSchema = spark.read.format("graft-avro").schema(schema).load(dir)
       .orderBy("id").collect().map(canon).toSeq
-    assert(viaBridge == expect, "RDD-bridge read must roundtrip exactly")
+    assert(viaSchema == expect, "V2 connector read (caller's schema) must roundtrip exactly")
 
     val viaV2 = spark.read.format("graft-avro").load(dir)
       .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
@@ -77,7 +77,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
     assert(viaV2 == expect, "V2 connector read (inferred schema) must roundtrip exactly")
   }
 
-  // --- task-commit protocol (round-9: attempt-unique temp + rename) ---
+  // --- task-commit protocol (attempt-unique temp + rename) ---
 
   private val tinySchema = StructType(Seq(
     StructField("id", LongType, nullable = false)))
@@ -88,6 +88,9 @@ class AvroRoundtripSpec extends AnyFunSuite {
       (0L until n).map(Row(_)).asJava, tinySchema).repartition(parts)
   }
 
+  private def readTiny(dir: String) =
+    spark.read.format("graft-avro").schema(tinySchema).load(dir)
+
   test("re-writing a directory clears stale partitions from a wider prior job") {
     val dir = SparkTestSession.tempDir("graft-avro-commit1").toString
     graft.sources.AvroSource.write(tinyDf(30, 5), dir)
@@ -97,7 +100,7 @@ class AvroRoundtripSpec extends AnyFunSuite {
       .filterNot(n => n.startsWith(".") || n.startsWith("_")).sorted.toSeq
     assert(files == Seq("part-00000.avro", "part-00001.avro"),
       s"stale part files must not survive an overwrite, got $files")
-    val got = graft.sources.AvroSource.read(spark, dir, tinySchema)
+    val got = readTiny(dir)
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == (0L until 10L), s"got $got")
   }
@@ -119,12 +122,12 @@ class AvroRoundtripSpec extends AnyFunSuite {
     assert(!leftover.exists(_.startsWith("_tmp-")),
       s"failed attempts must delete their temp file, got $leftover")
     // whatever partitions DID commit must be complete, readable containers
-    val survivors = graft.sources.AvroSource.read(spark, dir, tinySchema)
+    val survivors = readTiny(dir)
       .collect().map(_.getLong(0)).toSeq
     assert(survivors.forall(i => i >= 0 && i < 20 && i != 15))
     // and a fresh write over the same directory fully recovers it
     graft.sources.AvroSource.write(tinyDf(6, 2), dir)
-    val got = graft.sources.AvroSource.read(spark, dir, tinySchema)
+    val got = readTiny(dir)
       .collect().map(_.getLong(0)).sorted.toSeq
     assert(got == (0L until 6L), s"got $got")
   }
@@ -136,11 +139,10 @@ class AvroRoundtripSpec extends AnyFunSuite {
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "_tmp-part-00099-attempt-999.avro"),
       Array[Byte](0x4f, 0x62, 0x6a, 0x01)) // "Obj\1" magic, then nothing
-    val viaBridge = graft.sources.AvroSource.read(spark, dir, tinySchema)
+    val viaSchema = readTiny(dir).collect().map(_.getLong(0)).sorted.toSeq
+    assert(viaSchema == (0L until 8L), s"got $viaSchema")
+    val viaInferred = spark.read.format("graft-avro").load(dir)
       .collect().map(_.getLong(0)).sorted.toSeq
-    assert(viaBridge == (0L until 8L), s"got $viaBridge")
-    val viaV2 = spark.read.format("graft-avro").load(dir)
-      .collect().map(_.getLong(0)).sorted.toSeq
-    assert(viaV2 == (0L until 8L), s"got $viaV2")
+    assert(viaInferred == (0L until 8L), s"got $viaInferred")
   }
 }

@@ -126,20 +126,23 @@ class FormatsSpec extends AnyFunSuite {
   }
 
   test("x06: the graft-avro V2 scan is pruned by the planner to referenced columns") {
-    // No explicit schema, no hand-passed projection: the provider infers
-    // the 6-column writer schema from one container header, and
-    // Catalyst's pruneColumns narrows the scan to the 3 referenced
-    // columns — which become the avro READER schema inside the decoder.
-    val df = SparkEntry.queries("x06_avro_v2")(spark, "/root/testdata/sf0.001")
-    assert(df.collect().nonEmpty)
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("BatchScan") && plan.contains("graft-avro"),
-      s"expected a V2 BatchScan of graft-avro:\n$plan")
-    Seq("event_type", "value", "ts").foreach(c =>
-      assert(plan.contains(c), s"scan must carry $c:\n$plan"))
-    Seq("props", "user_id", "event_id").foreach(c =>
-      assert(!plan.contains(c),
-        s"unreferenced column $c must be pruned from the scan:\n$plan"))
+    // x06 passes no schema and no projection: the provider infers the
+    // 6-column writer schema from one container header, and Catalyst's
+    // pruneColumns narrows the scan to the 3 referenced columns — which
+    // become the avro READER schema inside the decoder. x05 supplies
+    // those 3 columns as its schema and must reach the same scan.
+    for (q <- Seq("x06_avro_v2", "x05_avro_source")) {
+      val df = SparkEntry.queries(q)(spark, "/root/testdata/sf0.001")
+      assert(df.collect().nonEmpty)
+      val plan = df.queryExecution.executedPlan.toString
+      assert(plan.contains("BatchScan") && plan.contains("graft-avro"),
+        s"$q: expected a V2 BatchScan of graft-avro:\n$plan")
+      Seq("event_type", "value", "ts").foreach(c =>
+        assert(plan.contains(c), s"$q: scan must carry $c:\n$plan"))
+      Seq("props", "user_id", "event_id").foreach(c =>
+        assert(!plan.contains(c),
+          s"$q: unreferenced column $c must be pruned from the scan:\n$plan"))
+    }
   }
 
   test("x05: avro roundtrip keeps µs timestamps, nulls, binary; reader schema prunes") {
@@ -158,7 +161,7 @@ class FormatsSpec extends AnyFunSuite {
     graft.sources.AvroSource.write(df, dir)
     // full read-back: every value — including the two µs tails that a
     // millisecond mapping would destroy — survives the container format
-    val back = graft.sources.AvroSource.read(spark, dir, df.schema)
+    val back = spark.read.format("graft-avro").schema(df.schema).load(dir)
       .orderBy("id").collect()
     assert(back.map(_.getLong(0)).toSeq == Seq(1L, 2L))
     assert(back.map(_.getTimestamp(1).toString).toSeq ==
@@ -167,8 +170,8 @@ class FormatsSpec extends AnyFunSuite {
     assert(back(1).isNullAt(4) && back(0).getDouble(4) == 1.5)
     // projection: a 2-column reader schema decodes without the rest —
     // and in a DIFFERENT field order than written (avro resolves by name)
-    val pruned = graft.sources.AvroSource.read(spark, dir,
-      StructType.fromDDL("tag STRING, id BIGINT")).orderBy("id").collect()
+    val pruned = spark.read.format("graft-avro").schema("tag STRING, id BIGINT").load(dir)
+      .orderBy("id").collect()
     assert(pruned.map(r => (r.getString(0), r.getLong(1))).toSeq ==
       Seq(("a", 1L), ("b", 2L)))
   }

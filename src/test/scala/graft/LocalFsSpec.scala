@@ -17,7 +17,7 @@ import org.apache.spark.sql.types.StructType
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.{Artifacts, NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
-import graft.streaming.{BucketedIndex, SessionizeTws}
+import graft.streaming.{BucketedIndex, Sessionize}
 import graft.streaming.Sessionize.Event
 
 /** The engine's local I/O starts no process: every session from
@@ -50,15 +50,15 @@ class LocalFsSpec extends AnyFunSuite {
     } finally { rec.close(); Files.delete(file) }
   }
 
-  /** Process starts that are not the Hadoop filesystem's: Spark's own
-    * recursive delete of its local scratch (a session's artifact dir,
-    * the RocksDB state store's working copies), which runs `rm -rf` on
-    * Unix with no switch, and two probes that run once per JVM in
-    * whichever window comes first — Spark's executor-metrics page size
-    * and the RocksDB loader's libc check. */
+  /** Process starts that are not the Hadoop filesystem's: Spark's
+    * removal of a collected session's artifact directory (a cleaner
+    * runs it whenever the GC finds the session's `ArtifactManager`
+    * unreachable, so in any window; its recursive delete runs `rm -rf`
+    * on Unix with no switch), and Spark's executor-metrics page-size
+    * probe, which runs once per JVM in whichever window comes first. */
+  private val sessionArtifacts = "rm -rf .*/artifacts-[0-9a-f-]{36}/[0-9a-f-]{36}".r
   private def notFileSystem(command: String): Boolean =
-    command.startsWith("rm -rf ") || command == "getconf PAGESIZE" ||
-      command.endsWith("| grep -q musl")
+    command == "getconf PAGESIZE" || sessionArtifacts.matches(command)
 
   private def assertForkFree(what: String)(body: => Unit): Unit = {
     val started = processStarts(body).filterNot(notFileSystem)
@@ -69,7 +69,7 @@ class LocalFsSpec extends AnyFunSuite {
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = new Path("file:///").getFileSystem(conf)
     assert(fs.isInstanceOf[NioLocalFileSystem], fs.getClass.getName)
-    // the RocksDB state store's cast
+    // FileSystem.getLocal's cast
     assert(org.apache.hadoop.fs.FileSystem.getLocal(conf).isInstanceOf[LocalFileSystem])
     assert(fs.asInstanceOf[LocalFileSystem].getRaw.isInstanceOf[NioRawLocalFileSystem])
     val afs = FileContext.getFileContext(URI.create("file:///"), conf).getDefaultFileSystem
@@ -137,17 +137,14 @@ class LocalFsSpec extends AnyFunSuite {
     assert(spark.read.parquet(root.resolve("out").toString).count() == 3)
   }
 
-  test("a RocksDB transformWithState commit (q43's path) starts no process") {
-    val root = SparkTestSession.tempDir("graft-localfs-tws")
-    val s = spark.newSession()
-    s.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    implicit val ctx: SQLContext = s.sqlContext
+  test("a flatMapGroupsWithState commit (q36 and q43's path) starts no process") {
+    val root = SparkTestSession.tempDir("graft-localfs-sessions")
+    implicit val ctx: SQLContext = spark.sqlContext
     implicit val enc: Encoder[Event] = Encoders.product[Event]
     val input = MemoryStream[Event]
     def at(ts: String, user: Long, id: Long) = Event(user, Timestamp.valueOf(ts), id)
     assertForkFree("the sessionizer's state commits") {
-      val q = SessionizeTws.sessions(input.toDS().withWatermark("ts", "1 minute"))
+      val q = Sessionize.sessions(input.toDS().withWatermark("ts", "1 minute"))
         .writeStream.format("parquet")
         .option("path", root.resolve("out").toString)
         .option("checkpointLocation", root.resolve("ckp").toString)
@@ -155,14 +152,14 @@ class LocalFsSpec extends AnyFunSuite {
       try {
         input.addData(at("2024-01-01 00:00:00", 1L, 1L), at("2024-01-01 00:05:00", 1L, 2L))
         q.processAllAvailable()
-        // far past the gap: the watermark moves on and the timer closes user 1
+        // far past the gap: the watermark moves on and the timeout closes user 1
         input.addData(at("2030-01-01 00:00:00", 2L, 3L))
         q.processAllAvailable()
         input.addData(at("2030-02-01 00:00:00", 2L, 4L))
         q.processAllAvailable()
       } finally q.stop()
     }
-    val closed = s.read.parquet(root.resolve("out").toString)
+    val closed = spark.read.parquet(root.resolve("out").toString)
     assert(closed.filter(col("user_id") === 1L).count() == 1)
   }
 

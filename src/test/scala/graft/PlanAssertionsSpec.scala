@@ -672,10 +672,13 @@ class PlanAssertionsSpec extends AnyFunSuite {
   }
 
   test("j12: native as-of join — AsOfJoinExec, no window, no union") {
-    val plan = executedPlan("j12_asof_native")
-    assert(plan.contains("AsOfJoin"), s"expected AsOfJoinExec, got:\n$plan")
-    assert(!plan.contains("Window ") && !plan.contains("Union"),
-      s"the native plan must not fall back to the composed form, got:\n$plan")
+    // q23 and j11 run the same operator as j12
+    for (q <- Seq("j12_asof_native", "q23_asof_join", "j11_asof_tolerance")) {
+      val plan = executedPlan(q)
+      assert(plan.contains("AsOfJoin"), s"$q: expected AsOfJoinExec, got:\n$plan")
+      assert(!plan.contains("Window ") && !plan.contains("Union"),
+        s"$q: the as-of join must not be a union + window composition, got:\n$plan")
+    }
   }
 
   test("m10: perceptual near-dup is banded — an equi-join, never all-pairs") {

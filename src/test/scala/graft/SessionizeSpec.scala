@@ -11,7 +11,8 @@ import graft.streaming.Sessionize
 import graft.streaming.Sessionize.Event
 
 /** Stateful streaming sessionization: in-batch gap splits, cross-batch
-  * state continuation, and event-time-timeout closure of idle sessions. */
+  * state continuation, event-time-timeout closure of idle sessions, and
+  * the state transitions of one `update` call, pre-1970 times included. */
 class SessionizeSpec extends AnyFunSuite {
   import SparkTestSession.spark
   import spark.implicits._
@@ -42,21 +43,29 @@ class SessionizeSpec extends AnyFunSuite {
       // event time at 0s delay) already passes user 2's 10:35 timeout,
       // so that idle session closes in the same drain. User 1's second
       // session (timeout 11:30) stays open.
-      val afterBatch1 = spark.table("closed_sessions").as[Sessionize.ClosedSession].collect()
-      assert(afterBatch1.toSet == Set(
+      val batch1Closed = Set(
         Sessionize.ClosedSession(1L, ts("2024-01-01 10:00:00"), ts("2024-01-01 10:10:00"), 2L),
-        Sessionize.ClosedSession(2L, ts("2024-01-01 10:05:00"), ts("2024-01-01 10:05:00"), 1L)))
+        Sessionize.ClosedSession(2L, ts("2024-01-01 10:05:00"), ts("2024-01-01 10:05:00"), 1L))
+      def closed = spark.table("closed_sessions").as[Sessionize.ClosedSession].collect().toSet
+      assert(closed == batch1Closed)
 
-      // advance the watermark far past both open sessions → timeouts fire
-      ms.addData(Event(99L, ts("2024-01-01 15:00:00"), 5L))
+      // a later batch extends user 1's open session from the state store
+      ms.addData(
+        Event(1L, ts("2024-01-01 11:20:00"), 5L),
+        Event(1L, ts("2024-01-01 11:25:00"), 6L))
       query.processAllAvailable()
-      ms.addData(Event(99L, ts("2024-01-01 20:00:00"), 6L))
+      assert(closed == batch1Closed, "user 1's extended session must stay open")
+
+      // advance the watermark far past the open session → its timeout fires
+      ms.addData(Event(99L, ts("2024-01-01 15:00:00"), 7L))
+      query.processAllAvailable()
+      ms.addData(Event(99L, ts("2024-01-01 20:00:00"), 8L))
       query.processAllAvailable()
 
-      val all = spark.table("closed_sessions").as[Sessionize.ClosedSession].collect().toSet
+      val all = closed
       assert(all.contains(
-        Sessionize.ClosedSession(1L, ts("2024-01-01 11:00:00"), ts("2024-01-01 11:00:00"), 1L)),
-        s"user 1's second session should time out; got $all")
+        Sessionize.ClosedSession(1L, ts("2024-01-01 11:00:00"), ts("2024-01-01 11:25:00"), 3L)),
+        s"user 1's extended session should time out with all three events; got $all")
       assert(all.contains(
         Sessionize.ClosedSession(2L, ts("2024-01-01 10:05:00"), ts("2024-01-01 10:05:00"), 1L)),
         s"user 2's idle session should time out; got $all")
@@ -88,5 +97,13 @@ class SessionizeSpec extends AnyFunSuite {
     assert(out2 == Seq(Sessionize.ClosedSession(
       1L, ts("2024-01-01 08:00:00"), ts("2024-01-01 08:00:00"), 1L)))
     assert(s2.get.startUs == us("2024-01-01 12:00:00") && s2.get.nEvents == 2L)
+
+    // before 1970 with a sub-second part (epoch − 1.5 s): the negative
+    // microsecond count must still convert back to the same instant
+    val preEpoch = new Timestamp(-1500L)
+    val s3 = freshState
+    val out3 = Sessionize.update(Sessionize.DefaultGapUs)(
+      1L, Iterator(Event(1L, preEpoch, 11L)), s3).toSeq
+    assert(out3 == Seq(Sessionize.ClosedSession(1L, preEpoch, preEpoch, 1L)))
   }
 }

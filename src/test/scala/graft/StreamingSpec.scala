@@ -294,7 +294,7 @@ class StreamingSpec extends AnyFunSuite {
     // sink already holds the result. Pin that the resumed read equals
     // the cold one for every parquet-sink stream shape plus the
     // foreachBatch JDBC sink: windowed aggregation (q33, q57),
-    // flatMapGroupsWithState (q36), transformWithState (q43),
+    // flatMapGroupsWithState (q36, q43),
     // watermarked dedup (q45), stream-stream inner and outer joins
     // (q39, q42), stream-static join (q40), JDBC (q46).
     val sf = "/root/testdata/sf0.001"
@@ -307,5 +307,19 @@ class StreamingSpec extends AnyFunSuite {
       assert(resumed.toSeq == cold.toSeq,
         s"$q resume diverged: cold=${cold.length} rows, resumed=${resumed.length}")
     }
+  }
+
+  test("q43 streams through q36's flatMapGroupsWithState sessionizer") {
+    // the stateful operator is read back from q43's own checkpoint
+    // (Spark's state-metadata source), so the name cannot drift from
+    // the plan the stream actually ran
+    val sf = "/root/testdata/sf0.001"
+    assert(SparkEntry.queries("q43_stream_tws")(spark, sf).collect().nonEmpty)
+    val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
+    val ckp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      s"graft_run_${pidHex}_q43_${graft.queries.Core.Replay.pathKey(sf)}", "ckp")
+    val ops = spark.read.format("state-metadata").load(ckp.toString)
+      .select("operatorName").collect().map(_.getString(0)).toSeq
+    assert(ops == Seq("flatMapGroupsWithState"), s"q43's state operators: $ops")
   }
 }
