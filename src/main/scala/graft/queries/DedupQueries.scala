@@ -31,11 +31,11 @@ object DedupQueries {
 
   private val N = 2 // bigram shingles (see vocabulary note above)
 
-  /** The fingerprint-block document-frequency cap shared by the two
-    * pair-enumerating blocked queries (d04, d11): blocks larger than
-    * this never enter pair enumeration (see d11's scaladoc for the
-    * full rationale). Public so the property spec pins the same bound
-    * the queries apply. */
+  /** The block document-frequency cap [[capBlocks]] applies for every
+    * pair-enumerating blocked query (d02/d07/d18 LSH buckets, d04/d11
+    * fingerprint blocks, d08/m10 bands): blocks larger than this never
+    * enter pair enumeration (see d11's scaladoc for the full rationale).
+    * Public so the property specs pin the same bound the queries apply. */
   val PairBlockCap = 64
 
   /** Tokens staged as a materialized projection column — every downstream
@@ -81,7 +81,7 @@ object DedupQueries {
     * silently de-sync them until the other's oracle run failed). */
   private def minhashCols: Seq[Column] = (0 until 8).map(i =>
     TextFns.minhashPerm(col("hs"), MhA(i), MhB(i), MhP).as(s"mh$i"))
-  private def bandKeyCols: Seq[Column] = (0 until 4).map(b =>
+  private[graft] def bandKeyCols: Seq[Column] = (0 until 4).map(b =>
     concat_ws(":", col(s"mh${2 * b}"), col(s"mh${2 * b + 1}")))
 
   /** D2 — MinHash + LSH banding: ONE md5 pass per shingle set, then 8
@@ -110,10 +110,10 @@ object DedupQueries {
     * ~2 s for this shape at sf0.1, same output. At 100 TB the carried arrays
     * widen the bucket shuffle 4×; if that dominates, persist the shingle
     * table and join back instead — the band/bucket skeleton is unchanged
-    * (implemented as [[d07]]; the bench carries both so the switch point is a
-    * measurement, not a comment). A pair sharing several bands is scored once
-    * per band and collapsed by the final distinct — duplicate scores of the
-    * same pair are identical, so distinct-after-verify is exact. */
+    * ([[d07]], the same pipeline in that shape, claims the same oracle).
+    * A pair sharing several bands is scored once per band and collapsed by
+    * the final distinct — duplicate scores of the same pair are identical,
+    * so distinct-after-verify is exact. */
   private def d02(s: SparkSession, d: String): DataFrame =
     lshVerifiedPairs(s, d)
       .select(col("da"), col("db"), oround(col("jac"), 3).as("jaccard"))
@@ -121,148 +121,19 @@ object DedupQueries {
       .orderBy("da", "db")
 
   /** D2's verified near-dup pair stream: (da < db, exact Jaccard ≥ 0.8),
-    * possibly repeated when a pair collides in several bands (the
-    * join-back shape emits each pair once — consumers distinct/aggregate
-    * either way), with the (band, bh) buckets df-capped at
+    * repeated when a pair collides in several bands (consumers
+    * distinct/aggregate), with the (band, bh) buckets df-capped at
     * [[PairBlockCap]] ([[capBlocks]] discipline — the signature table is
     * checkpointed first so the bucket census and the capped join read
-    * one materialization). `cap = None` is the uncapped reference
-    * (always carry) that CompHotMassSpec compares the capped stream
-    * against. The CARRY vs JOIN-BACK choice is automatic — see
-    * [[chooseJoinBack]]; `forceShape` pins it for SwitchSpec's A/B. */
-  private[graft] def lshVerifiedPairs(
-      s: SparkSession, d: String,
-      cap: Option[Int] = Some(PairBlockCap),
-      forceShape: Option[Boolean] = None): DataFrame = {
-    val sig0 = sigWithSh(s, d)
-    if (cap.isEmpty) {
-      val bands = sig0.select(
-        col("doc_id"), col("sh"),
-        posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
-      return pairsFromShBuckets(
-        capBlocks(bands, Seq("band", "bh"), "d02_bucket_census", cap))
-    }
-    val sig = sig0.localCheckpoint()
-    if (chooseJoinBack("d02_bucket_census", sig, forceShape, d))
-      joinBackVerifiedPairs(sig, "d02_bucket_census", cap)
-    else {
-      // band key = the two component values, delimited — no hashing
-      // needed, the pair of longs IS the identity the band compares on
-      val bands = sig.select(
-        col("doc_id"), col("sh"),
-        posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
-      pairsFromShBuckets(
-        capBlocks(bands, Seq("band", "bh"), "d02_bucket_census", cap))
-    }
+    * one materialization). */
+  private[graft] def lshVerifiedPairs(s: SparkSession, d: String): DataFrame = {
+    // band key = the two component values, delimited — no hashing
+    // needed, the pair of longs IS the identity the band compares on
+    val bands = sigWithSh(s, d).localCheckpoint().select(
+      col("doc_id"), col("sh"),
+      posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
+    pairsFromShBuckets(capBlocks(bands, Seq("band", "bh"), "d02_bucket_census"))
   }
-
-  /** The JOIN-BACK spelling of [[lshVerifiedPairs]]'s tail over an
-    * already-checkpointed (doc_id, sh, mh0..7) signature table — d07's
-    * shape driven off the ONE shared sig materialization: the 4× band
-    * explosion carries only (doc_id, band key), candidate pairs are
-    * distinct'd BEFORE verification, and exactly the surviving pairs
-    * join back (twice, keyed on doc_id) for the exact-Jaccard check.
-    * Chosen by [[chooseJoinBack]] when the carried payload would
-    * dominate the band shuffle. */
-  private def joinBackVerifiedPairs(
-      sig: DataFrame, censusName: String, cap: Option[Int]): DataFrame =
-    joinBackScoredPairs(
-      sig,
-      sig.select(
-        col("doc_id"), posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh"))),
-      censusName, cap)
-      .filter(col("jac") >= 0.8)
-
-  /** [[joinBackVerifiedPairs]] WITHOUT the verification threshold, over
-    * caller-supplied narrow bands — d18's join-back twin needs the
-    * scored CANDIDATE stream per banding config. */
-  private def joinBackScoredPairs(
-      sig: DataFrame, bands: DataFrame,
-      censusName: String, cap: Option[Int]): DataFrame = {
-    val pairs = capBlocks(bands, Seq("band", "bh"), censusName, cap)
-      .groupBy("band", "bh")
-      .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
-      .filter(size(col("ids")) > 1)
-      .select(explode(flatten(transform(col("ids"), (x, i) =>
-        transform(
-          slice(col("ids"), i + lit(2), greatest(size(col("ids")) - i - 1, lit(0))),
-          y => struct(x.as("da"), y.as("db")))))).as("p"))
-      .select(col("p.da").as("da"), col("p.db").as("db"))
-      .distinct()
-    pairs
-      .join(sig.select(col("doc_id").as("da"), col("sh").as("sha")), Seq("da"))
-      .join(sig.select(col("doc_id").as("db"), col("sh").as("shb")), Seq("db"))
-      .select(col("da"), col("db"),
-        (size(array_intersect(col("sha"), col("shb"))).cast("double") /
-          (size(col("sha")) + size(col("shb"))
-            - size(array_intersect(col("sha"), col("shb"))))).as("jac"))
-  }
-
-  /** The AUTOMATED d02↔d07 switch: carry the shingle arrays
-    * through the band shuffle, or persist narrow bands
-    * and join back? The choice is made per-corpus from a CHEAP stats
-    * probe instead of a hand edit: average carried-payload bytes per
-    * doc, read from the first [[SwitchSampleRows]] rows of the
-    * already-checkpointed signature (a `limit` over cached blocks —
-    * bounded work at ANY corpus size, deterministic for a given plan),
-    * stored per documents content ([[graft.ops.Artifacts.value]]) so one
-    * tiny job serves d02/d10/d18 and Bench's min-of-2 reruns.
-    *
-    * What the model says and what was measured: carry ships the
-    * payload ×4 (band fanout) through the bucket shuffle; join-back
-    * ships it ≤2× (the two verification joins — 0× when the candidate
-    * side broadcasts) plus fixed machinery (an extra exchange pair, a
-    * distinct, two joins). A 70× payload sweep (2 KB → 146 KB/doc, planted
-    * verifying pairs): 2 KB carry 1.48 vs jb 1.01 (machinery noise at tiny
-    * payloads), 8.5 KB 1.23 vs 1.39, 35 KB 1.76 vs 2.03, 146 KB carry 5.36 vs
-    * JOIN-BACK 4.16 — the payload term wins the far end even at local[32],
-    * where a shuffle is only a memory copy; on a cluster fabric the crossover
-    * moves LEFT because shuffle bytes become the real cost and join-back
-    * halves them. [[CarryShBytesCutoff]] sits in the measured-neutral middle:
-    * below it carry's simpler plan wins outright (the estate's ~2.6 KB
-    * payloads, and the measured d02 1.6 s vs d07 3.4 s endpoints), above it
-    * join-back is ~free locally and halves network bytes at deployment. The
-    * decision is LOGGED per census key ([[switchDecision]]) so specs pin it
-    * and bench runs can attribute shape changes. */
-  private def chooseJoinBack(
-      census: String, sig: DataFrame, force: Option[Boolean],
-      estate: String): Boolean = {
-    val jb = force.getOrElse {
-      // the payload stat is an ESTATE property, not a query property —
-      // one tiny job per documents content, shared by d02/d10/d18 and by
-      // Bench's min-of-2 reruns
-      val avgBytes = graft.ops.Artifacts.value(
-          sig.sparkSession, "avg_sh_bytes", "1", estate, Seq("documents.parquet")) {
-        val r = sig.limit(SwitchSampleRows)
-          .agg(avg(aggregate(col("sh"), lit(0L),
-            (acc, x) => acc + length(x) + lit(16L))))
-          .head()
-        if (r.isNullAt(0)) 0.0 else r.getDouble(0)
-      }
-      avgBytes > CarryShBytesCutoff
-    }
-    switchLog.put(census, if (jb) "join-back" else "carry")
-    jb
-  }
-
-  /** Payload-stats sample size — first rows of the checkpointed
-    * signature, NOT a corpus scan (bounded work at 100 TB). */
-  private val SwitchSampleRows = 2048
-
-  /** Carried-payload cutoff (bytes/doc) above which [[chooseJoinBack]]
-    * picks the join-back shape — set where the payload sweep measured
-    * the shapes LOCALLY neutral (see [[chooseJoinBack]]'s doc: above
-    * this, join-back is free locally and halves shuffle bytes on a real
-    * fabric). */
-  private val CarryShBytesCutoff = 8192.0
-
-  private val switchLog =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** The last carry/join-back decision recorded under `census` —
-    * spec/bench bookkeeping ("the decision logged"). */
-  private[graft] def switchDecision(census: String): Option[String] =
-    Option(switchLog.get(census))
 
   /** Bucket-local pair emission + exact-Jaccard verification over a
     * (doc_id, sh, band, bh) band-exploded frame — the shared tail of
@@ -272,7 +143,7 @@ object DedupQueries {
     * ONCE inside the lambda and only 5 scalars leave it (materializing
     * the two shingle arrays per pair would blow the row up |bucket|²×);
     * the Jaccard ratio is derived from the scalars in the projection. */
-  private def pairsFromShBuckets(bands: DataFrame): DataFrame =
+  private[graft] def pairsFromShBuckets(bands: DataFrame): DataFrame =
     pairsScoredFromShBuckets(bands).filter(col("jac") >= 0.8)
 
   /** [[pairsFromShBuckets]] WITHOUT the verification threshold — every
@@ -304,8 +175,8 @@ object DedupQueries {
     * within a class, no verification needed), and the LSH
     * band/bucket/verify pipeline runs over one REPRESENTATIVE per class.
     *
-    * This is exactly equivalent to components over the uncapped
-    * [[lshVerifiedPairs]] stream, because both band collision and
+    * This is exactly equivalent to components over the all-pairs stream
+    * ([[lshVerifiedPairs]] without its bucket cap), because both band collision and
     * Jaccard are functions of the shingle SET alone: for same-class docs
     * x, y and any doc z, the edge (x, z) exists in the all-pairs graph
     * iff (y, z) does, so the all-pairs graph is the union of intra-class
@@ -327,9 +198,9 @@ object DedupQueries {
     // class. Injectivity: each shingle maps to its fixed-width 32-hex
     // md5 block first, so the concatenation decomposes uniquely no
     // matter what bytes the tokens contain (a delimiter-based concat is
-    // NOT injective when a token can contain the delimiter — round-9
-    // review finding); a residual md5 collision across distinct sets is
-    // the usual 2^-128 non-event every fingerprint in this file accepts.
+    // NOT injective when a token can contain the delimiter); a residual
+    // md5 collision across distinct sets is the usual 2^-128 non-event
+    // every fingerprint in this file accepts.
     val grouped = shingled(s, d)
       .select(col("doc_id"), sort_array(col("sh")).as("sh"))
       .select(col("doc_id"), col("sh"),
@@ -356,8 +227,8 @@ object DedupQueries {
   }
 
   /** D7 — the SAME MinHash+LSH dedup as d02 in its at-scale JOIN-BACK
-    * shape, the documented escape hatch for when d02's carried shingle
-    * arrays dominate the band shuffle. The shingle table is persisted
+    * shape, the escape hatch for a corpus whose carried shingle arrays
+    * dominate d02's band shuffle. The shingle table is persisted
     * once (localCheckpoint standing in for the parquet artifact an
     * indexing job would write); the 4× band explosion then carries ONLY
     * (doc_id, band key) — a few longs per row instead of the array —
@@ -365,13 +236,17 @@ object DedupQueries {
     * surviving pairs join back to the shingle table (twice, keyed on
     * doc_id) for the exact-Jaccard check. Three shuffles + two joins vs
     * d02's two shuffles + zero joins, but the big one (bands) is narrow.
-    * The switch point is measured, not guessed: at sf0.1 d02 = 1.6 s vs
-    * d07 = 3.4 s (the checkpoint barrier + two extra joins dominate
-    * while the ~100-element arrays are cheap to carry), so d02 is the
-    * default and the join-back becomes worth it only when per-doc
-    * shingle cardinality × band replication outweighs two corpus-wide
-    * joins — both stay benched so the crossover is re-measured per
-    * corpus. Oracle-identical to d02 by construction (same od02 text). */
+    * Measured at sf0.1: d02 = 1.6 s vs d07 = 3.4 s (the checkpoint
+    * barrier + two extra joins dominate while the ~100-element arrays are
+    * cheap to carry; the estates' bigram payloads average ~1.3 KB/doc and
+    * peak at ~2.6 KB). A payload sweep on a synthetic corpus (planted
+    * verifying pairs, local[32]) had carry ahead at 8.5 KB/doc (1.23 s vs
+    * join-back 1.39 s) and 35 KB (1.76 vs 2.03) and join-back ahead only
+    * at 146 KB (5.36 vs 4.16); on a cluster fabric the crossover moves
+    * left, since join-back ships the payload ≤2× against carry's 4×.
+    * Oracle-identical to d02 by construction (same
+    * od02 text; SwitchSpec executes the equivalence on a 35 KB/doc
+    * corpus). */
   private def d07(s: SparkSession, d: String): DataFrame = {
     val sh = shingled(s, d).localCheckpoint()
     val withHs = sh.select(col("doc_id"), TextFns.shingleHashes(col("sh")).as("hs"))
@@ -383,8 +258,7 @@ object DedupQueries {
       col("doc_id"), posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
     // the same PairBlockCap bucket bound as d02 (d07 claims oracle
     // identity with d02, so the two caps must move together)
-    val pairs = capBlocks(bands, Seq("band", "bh"), "d07_bucket_census",
-        Some(PairBlockCap))
+    val pairs = capBlocks(bands, Seq("band", "bh"), "d07_bucket_census")
       .groupBy("band", "bh")
       .agg(sort_array(collect_list(col("doc_id"))).as("ids"))
       .filter(size(col("ids")) > 1)
@@ -519,7 +393,7 @@ object DedupQueries {
         // barrier the tokenize→fingerprint→shingle subtree runs twice
         // (measured +0.9 s at sf0.1)
         .localCheckpoint(),
-      Seq("fp"), "d04_block_census", Some(PairBlockCap))
+      Seq("fp"), "d04_block_census")
       .groupBy("fp")
       .agg(sort_array(collect_list(struct(col("doc_id").as("id"), col("sh").as("sh"))))
         .as("ms"))
@@ -598,14 +472,6 @@ object DedupQueries {
     .map(i => s"list_min(list_transform(hs, h -> (${MhA(i)}*h + ${MhB(i)}) % $MhP))")
     .mkString(",\n      |   ")
 
-  /** The shared oracle CTE chain producing the scored candidate pairs —
-    * interpolated into od02 AND od06/od14/op14 so the oracles can never
-    * verify against different edge sets (mirrors the Scala side's shared
-    * [[lshVerifiedPairs]]). Yields CTE `j(da, db, jac)`. `cap` mirrors
-    * [[capBlocks]]'s (band, bh) bucket bound: `Some(PairBlockCap)` for
-    * the pair-LISTING oracles (od02 — d02 and d07 both claim it), `None`
-    * for the component oracles, whose Scala side ([[lshComponentEdges]])
-    * is exactly-equivalent to the UNCAPPED closure and needs no bound. */
   /** The shingle→hash→8-component-signature CTE chain shared by every
     * MinHash oracle (od02/od06/... via [[lshPairCtes]], and od18) —
     * yields CTEs `s(doc_id, sh)` and `sig(doc_id, mh)`. */
@@ -616,6 +482,14 @@ object DedupQueries {
       |hsed AS (SELECT doc_id, sh, list_transform(sh, x -> ('0x'||substr(md5(x),1,7))::BIGINT) hs FROM s),
       |sig AS (SELECT doc_id, [$mhList] mh FROM hsed)""".stripMargin
 
+  /** The shared oracle CTE chain producing the scored candidate pairs —
+    * interpolated into od02 AND od06/od14/op14 so the oracles can never
+    * verify against different edge sets (mirrors the Scala side's shared
+    * [[lshVerifiedPairs]]). Yields CTE `j(da, db, jac)`. `cap` mirrors
+    * [[capBlocks]]'s (band, bh) bucket bound: `Some(PairBlockCap)` for
+    * the pair-LISTING oracles (od02 — d02 and d07 both claim it), `None`
+    * for the component oracles, whose Scala side ([[lshComponentEdges]])
+    * is exactly-equivalent to the UNCAPPED closure and needs no bound. */
   private[queries] def lshPairCtes(cap: Option[Int]): String = {
     val bk = cap match {
       case Some(c) =>
@@ -760,7 +634,7 @@ object DedupQueries {
     // capBlocks' using-join reorders columns (join keys first) — pin the
     // order by NAME before the positional rename in d08Pairs, or da/sa
     // silently bind to the band key (caught by the sf0.01 oracle)
-    capBlocks(k, Seq("bk"), "d08_band_census", Some(PairBlockCap))
+    capBlocks(k, Seq("bk"), "d08_band_census")
       .select("doc_id", "simhash", "bk")
   }
 
@@ -836,7 +710,7 @@ object DedupQueries {
     * d02/d06 ([[lshVerifiedPairs]]) and d09 ([[keyedBands]]) derive
     * from. d07 deliberately re-stages its own narrow variant (no `sh`
     * carried) off its checkpointed shingle table. */
-  private def sigWithSh(s: SparkSession, d: String): DataFrame = {
+  private[graft] def sigWithSh(s: SparkSession, d: String): DataFrame = {
     val withHs = shingled(s, d)
       .select(col("doc_id"), col("sh"), TextFns.shingleHashes(col("sh")).as("hs"))
     withHs.select(col("doc_id") +: col("sh") +: minhashCols: _*)
@@ -925,42 +799,24 @@ object DedupQueries {
     * shrinks it ∝ 1/√k, same plan). The audit discipline v09/v11/v15
     * apply to ANN, applied to the dedup estimator.
     *
-    * Shape: the [[chooseJoinBack]] switch, same rule as d02 — the
-    * round-12 bench's slowest query (6.3 s at sf0.1) was this
-    * calibration in its hand-written join-back form, both verification
-    * joins shuffling the full (sh, mh0..7) signature; at the estate's
-    * ~2.6 KB payloads the stats probe picks CARRY (payload rides the
-    * band shuffle once, pairs score in-bucket, zero joins), and on a
-    * long-document corpus the same probe flips it back. The carry
-    * branch's buckets are UNCAPPED like the candidate set itself
-    * (od10 has no HAVING bound — d10 audits every collision): hot
-    * exact-dup MASS would fatten a bucket row here exactly as in
-    * d02's uncapped twin, which is a measured hazard the calibration
-    * audit accepts by contract (it runs before, not inside, the
-    * production pipeline). */
-  private def d10(s: SparkSession, d: String): DataFrame = {
+    * Shape: d02's carry pipeline — (sh, mh[8]) ride the band explosion
+    * once and pairs are emitted and scored INSIDE the bucket (both the
+    * estimate and the exact Jaccard from the struct fields — only 6
+    * scalars leave the lambda), zero joins. Its hand-written join-back
+    * form, both verification joins shuffling the full (sh, mh0..7)
+    * signature, was once the bench's slowest query (6.3 s at sf0.1).
+    * Multi-band collisions carry identical scores, so the distinct is
+    * exact. The buckets are UNCAPPED like the candidate set itself (od10
+    * has no HAVING bound — d10 audits every collision): hot exact-dup
+    * MASS would fatten a bucket row here, which is a measured hazard the
+    * calibration audit accepts by contract (it runs before, not inside,
+    * the production pipeline). */
+  private def d10(s: SparkSession, d: String): DataFrame =
     // THE shared signature + banding definitions (sigWithSh /
     // bandKeyCols) — d10 must calibrate exactly the candidate-pair set
     // d02 verifies, so it derives from the same single copy
-    val sig = sigWithSh(s, d).localCheckpoint()
-    val scored =
-      if (chooseJoinBack("d10_switch", sig, None, d)) d10JoinBack(sig)
-      else d10Carry(sig)
-    scored
-      .select(col("da"), col("db"),
-        oround(col("est"), 3).as("mh_estimate"),
-        oround(col("jac"), 3).as("jaccard"),
-        oround(abs(col("est") - col("jac")), 3).as("abs_err"))
-      .orderBy("da", "db")
-  }
-
-  /** d10's carry branch: (sh, mh[8]) ride the band explosion once;
-    * pairs are emitted and scored INSIDE the bucket (both the estimate
-    * and the exact Jaccard from the struct fields — only 6 scalars
-    * leave the lambda); multi-band collisions carry identical scores,
-    * so the distinct is exact. */
-  private def d10Carry(sig: DataFrame): DataFrame =
-    sig.select(
+    sigWithSh(s, d).localCheckpoint()
+      .select(
         col("doc_id"), col("sh"),
         array((0 until 8).map(i => col(s"mh$i")): _*).as("mh"),
         posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
@@ -986,33 +842,11 @@ object DedupQueries {
         (col("p.ni").cast("double")
           / (col("p.na") + col("p.nb") - col("p.ni"))).as("jac"))
       .distinct()
-
-  /** d10's join-back branch — the round-12 spelling: narrow bands,
-    * distinct candidates, two verification joins against the
-    * checkpointed signature (d07's lesson — lambda exprIds defeat
-    * ReuseExchange, so the un-checkpointed self-join would recompute
-    * every signature twice). */
-  private def d10JoinBack(sig: DataFrame): DataFrame = {
-    val bands = sig.select(
-      col("doc_id"), posexplode(array(bandKeyCols: _*)).as(Seq("band", "bh")))
-    val cand = bands.toDF("da", "ba", "ka")
-      .join(bands.toDF("db", "bb", "kb2"),
-        col("ba") === col("bb") && col("ka") === col("kb2") && col("da") < col("db"))
-      .select(col("da"), col("db"))
-      .distinct()
-    def side(p: String, id: String) = sig.select(
-      col("doc_id").as(id) +: col("sh").as(s"sh$p") +:
-        (0 until 8).map(i => col(s"mh$i").as(s"$p$i")): _*)
-    val est = (0 until 8)
-      .map(i => when(col(s"a$i") === col(s"b$i"), 1).otherwise(0))
-      .reduce(_ + _).cast("double") / 8.0
-    cand
-      .join(side("a", "da"), Seq("da"))
-      .join(side("b", "db"), Seq("db"))
       .select(col("da"), col("db"),
-        est.as("est"),
-        TextFns.jaccard(col("sha"), col("shb")).as("jac"))
-  }
+        oround(col("est"), 3).as("mh_estimate"),
+        oround(col("jac"), 3).as("jaccard"),
+        oround(abs(col("est") - col("jac")), 3).as("abs_err"))
+      .orderBy("da", "db")
 
   private val od10 =
     s"""WITH t AS (SELECT doc_id, string_split(text,' ') toks FROM documents),
@@ -1059,8 +893,8 @@ object DedupQueries {
     * (including the 275-doc hot block) and cuts candidate pairs
     * 315k → 22k; the DuckDB oracle applies the identical HAVING bound.
     *
-    * Two stages, split where the COST lives (the round-6 lesson —
-    * measured 217 s → ~7 s at sf0.1):
+    * Two stages, split where the COST lives (measured 217 s → ~7 s at
+    * sf0.1):
     *
     *  1. candidate ENUMERATION, bucket-local as in d02/d04 — block
     *     members are grouped and the ordered pairs (ids + both texts)
@@ -1096,31 +930,26 @@ object DedupQueries {
     * one row, and the dropped mass rides the job as a named observe
     * (surfaced, not silent — the d13 df≤20 / g04 ≤40-buyers discipline).
     * `keys` is the blocking key — the 16-byte fingerprint for d04/d11,
-    * the (band, bh) LSH bucket for d02/d07. `cap = None` passes `base`
-    * through uncapped — [[lshVerifiedPairs]]' reference stream. Callers
+    * the (band, bh) LSH bucket for d02/d07. Callers
     * checkpoint `base`'s lineage first: the size agg and the equi-join
     * both read it, and lambda exprIds defeat ReuseExchange (an unpinned
     * base pays its projection twice, measured on d04). */
   // private[queries]: m10's perceptual-hash banding rides the same
   // df-cap + census discipline
   private[queries] def capBlocks(
-      base: DataFrame, keys: Seq[String], censusName: String,
-      cap: Option[Int]): DataFrame =
-    cap match {
-      case None => base
-      case Some(b) =>
-        val sizes = base.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bn"))
-        base
-          .join(sizes, keys)
-          .observe(
-            censusName,
-            sum(when(col("bn") > b, 1L).otherwise(0L)).as("docs_in_dropped_blocks"),
-            max(col("bn")).as("max_block_size"),
-            sum(when(col("bn") > b, (col("bn") - 1) / 2.0).otherwise(0.0))
-              .as("dropped_pair_mass"))
-          .filter(col("bn").between(2, b))
-          .drop("bn")
-    }
+      base: DataFrame, keys: Seq[String], censusName: String): DataFrame = {
+    val sizes = base.groupBy(keys.map(col): _*).agg(count(lit(1)).as("bn"))
+    base
+      .join(sizes, keys)
+      .observe(
+        censusName,
+        sum(when(col("bn") > PairBlockCap, 1L).otherwise(0L)).as("docs_in_dropped_blocks"),
+        max(col("bn")).as("max_block_size"),
+        sum(when(col("bn") > PairBlockCap, (col("bn") - 1) / 2.0).otherwise(0.0))
+          .as("dropped_pair_mass"))
+      .filter(col("bn").between(2, PairBlockCap))
+      .drop("bn")
+  }
 
   /** d11's stage 1 — fingerprint, cap, pair-enumerate — split out so the
     * plan spec can assert the cap join's shape (the barrier in [[d11]]
@@ -1132,7 +961,7 @@ object DedupQueries {
         TextFns.fingerprintOf(col("toks"), col("text"), N).as("fp"),
         col("text"))
       .localCheckpoint() // compute-once: block census + capped join read it
-    capBlocks(base, Seq("fp"), "d11_block_census", Some(PairBlockCap))
+    capBlocks(base, Seq("fp"), "d11_block_census")
       .groupBy("fp")
       .agg(sort_array(collect_list(struct(col("doc_id").as("id"), col("text").as("tx"))))
         .as("ms"))
@@ -1247,7 +1076,7 @@ object DedupQueries {
     * bounded ≤ 20 by the df filter (never an uncapped collect — the hot-key
     * rule), then a combinations lambda explodes the C(df,2) sorted pairs.
     *
-    * The round-17 shrink applies the g04/p04 packed-key discipline to
+    * The payload shrink applies the g04/p04 packed-key discipline to
     * everything that crosses the exchange or parks in the checkpoint:
     *
     *  - the shingle key is `xxhash64` over the token slice
@@ -1256,7 +1085,7 @@ object DedupQueries {
     *    the per-partition window sort runs over longs (at sf100 /
     *    policy width ≈ 245 that is ~65 MB of sort data per partition —
     *    in-memory territory; the string shape externally sorted and
-    *    was the round-16 kill);
+    *    was killed at sf100);
     *  - the localCheckpoint keeps only the df ≥ 2 SLIVER (duplicated
     *    shingles — a few % of the stream; most shingles are unique),
     *    not the near-full df ≤ 20 stream the old shape parked. The
@@ -1661,7 +1490,7 @@ object DedupQueries {
       |    AS clean_hash
       |FROM tr GROUP BY doc_id HAVING sum(covered) > 0 ORDER BY doc_id""".stripMargin
 
-  /** D15 — CROSS-SOURCE corpus overlap (round 9): for every source
+  /** D15 — CROSS-SOURCE corpus overlap: for every source
     * pair, the MinHash-ESTIMATED shingle-set Jaccard — the one-pass
     * corpus-accounting number a curation pipeline reads before deciding
     * which crawls to merge (two mirrors of the same site → overlap ≈ 1;
@@ -1678,8 +1507,8 @@ object DedupQueries {
     * [[minhashCols]] (d02/d07/d09's constants — one edit moves every
     * oracle together).
     *
-    * The EXACT audit is PATTERN-GROUPED, not postings-joined (round-10
-    * fix of the round-9 verdict's unbounded-fan-out finding): a naive
+    * The EXACT audit is PATTERN-GROUPED, not postings-joined (a
+    * postings join has unbounded fan-out): a naive
     * self-join on the shingle key costs df² rows PER SHINGLE, and on a
     * real corpus most shingles are near-ubiquitous across sources
     * (df ≈ |sources| — measured 10–20 of 20 on the synthetic corpus),
@@ -2024,25 +1853,13 @@ object DedupQueries {
   private def d18(s: SparkSession, d: String): DataFrame = {
     val sig = sigWithSh(s, d).localCheckpoint()
     val configs = Seq((2, 4), (4, 2), (8, 1))
-    // ONE stats probe decides the shape for all three branches — the
-    // same [[chooseJoinBack]] rule as d02/d10 (each branch is a
-    // d02-class pipeline, so the payload economics are identical)
-    val jb = chooseJoinBack("d18_switch", sig, None, d)
     val scored = configs.map { case (b, r) =>
       val keys = (0 until b).map(i =>
         concat_ws(":", (0 until r).map(j => col(s"mh${i * r + j}")): _*))
-      val census = s"d18_census_${b}x$r"
-      val p =
-        if (jb) joinBackScoredPairs(
-          sig,
-          sig.select(col("doc_id"),
-            posexplode(array(keys: _*)).as(Seq("band", "bh"))),
-          census, Some(PairBlockCap))
-        else pairsScoredFromShBuckets(
-          capBlocks(
-            sig.select(col("doc_id"), col("sh"),
-              posexplode(array(keys: _*)).as(Seq("band", "bh"))),
-            Seq("band", "bh"), census, Some(PairBlockCap)))
+      val p = pairsScoredFromShBuckets(capBlocks(
+        sig.select(col("doc_id"), col("sh"),
+          posexplode(array(keys: _*)).as(Seq("band", "bh"))),
+        Seq("band", "bh"), s"d18_census_${b}x$r"))
       (b, r, p.select(col("da"), col("db"), col("jac")).distinct()
         .localCheckpoint())
     }

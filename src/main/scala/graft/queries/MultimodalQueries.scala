@@ -482,9 +482,7 @@ object MultimodalQueries {
     // capBlocks' using-join reorders columns — pin by NAME before the
     // positional rename (the d08 lesson), and checkpoint so both
     // self-join sides read one materialization
-    val capped = DedupQueries.capBlocks(
-        banded, Seq("j", "band"), "m10_band_census",
-        Some(DedupQueries.PairBlockCap))
+    val capped = DedupQueries.capBlocks(banded, Seq("j", "band"), "m10_band_census")
       .select("media_id", "dhash", "j", "band")
       .localCheckpoint()
     val a = capped.toDF("da", "sa", "ja", "ba")

@@ -105,7 +105,7 @@ private[graft] object AnnStream {
     * with [[BucketedIndex]] so folds purge deleted generations' entries
     * and test cache-clears reach it (a wiped-and-reseeded index root
     * re-uses generation dir names; a stale width would key every batch
-    * wrong and silently empty the candidate sets — round-14 advisory). */
+    * wrong and silently empty the candidate sets). */
   private val widthCache =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Integer]()
   BucketedIndex.registerDirKeyedCache(widthCache)

@@ -14,9 +14,9 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * the motivating users. This is the at-rest half of the
   * `foreachBatch`-owns-its-state pattern, laid out so a micro-batch's
   * probe reads only the buckets its own keys hash into instead of the
-  * whole accumulated history (the round-11 layout scanned the full
-  * index every batch — per-batch cost grew with stream age, cumulative
-  * cost quadratic in stream length).
+  * whole accumulated history (a full-scan layout reads the whole index
+  * every batch — per-batch cost grows with stream age, cumulative cost
+  * quadratic in stream length).
   *
   * Layout — the two-level LSM shape:
   *
@@ -62,9 +62,8 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * any survivors. Generations are only visible once their `_SUCCESS`
   * marker lands (a half-written compaction target is invisible and
   * reaped at the next compact). All filesystem access goes through the
-  * session-configured Hadoop [[FileSystem]] — the round-11 layout's
-  * `java.io.File` checks assumed a local filesystem
-  * ([[graft.sources.AvroSource]] established the pattern).
+  * session-configured Hadoop [[FileSystem]], never `java.io.File`, which
+  * assumes a local filesystem.
   */
 private[graft] final class BucketedIndex(
     s: SparkSession,
@@ -79,8 +78,8 @@ private[graft] final class BucketedIndex(
     * bucket is a physical partition DIRECTORY with one file — at
     * sf10, q54b's deliberately-small test target (64) re-widened to
     * P = 31,250 and each per-batch fold wrote 31k directories of
-    * ~4 KB files (round 17: two micro-batches in 45 minutes, all of
-    * it filesystem metadata). A real table format bounds files per
+    * ~4 KB files (two micro-batches in 45 minutes, all of it filesystem
+    * metadata). A real table format bounds files per
     * snapshot the same way. Above the cap, OCCUPANCY grows with the
     * corpus instead of bucket count — probe reads degrade gracefully
     * (rows/4096 per touched bucket) while the metadata bill stays
@@ -141,13 +140,6 @@ private[graft] final class BucketedIndex(
   }
 
   def exists: Boolean = gens().nonEmpty
-
-  /** Executed-plan string of the most recent [[probe]]'s index scan,
-    * keyed by the index's key column — PlanAssertionsSpec pins that
-    * the per-batch probe carries `bp` in `PartitionFilters` (the d09
-    * pre-bucketed-read assertion applied to streaming state). */
-  def lastProbePlan: Option[String] =
-    Option(BucketedIndex.probePlans.get(key))
 
   /** A base generation's DataFrame, cached per (session, dir): the
     * partition-discovery listing over P bucket directories is a
@@ -213,12 +205,8 @@ private[graft] final class BucketedIndex(
     val (keyRows, touched) =
       if (widths.isEmpty) (None, Map.empty[Int, Seq[Long]])
       else touchedBuckets(keys, widths) match { case (n, t) => (Some(n), t) }
-    val pruned = bases.map(g => baseRelation(g).filter(col("bp").isin(touched(g.p): _*)))
-    if (pruned.nonEmpty)
-      BucketedIndex.probePlans.put(
-        key, pruned.map(_.queryExecution.executedPlan.toString()).mkString("\n"))
     val parts =
-      pruned.map(_.drop("bp")) ++
+      bases.map(g => baseRelation(g).filter(col("bp").isin(touched(g.p): _*)).drop("bp")) ++
         deltas.map(g => s.read.schema(rowSchema).parquet(g.dir.toString))
     BucketedIndex.Probe(Some(parts.reduce(_ unionByName _)), keyRows)
   }
@@ -244,14 +232,6 @@ private[graft] final class BucketedIndex(
     (perTask.map(_._1).sum, touched)
   }
 
-  /** Total rows across generations — parquet footer counts, a
-    * metadata-only scan (probe bookkeeping). */
-  def totalRows(): Long =
-    gens().map { g =>
-      val sch = if (g.kind == "b") diskSchema else rowSchema
-      s.read.schema(sch).parquet(g.dir.toString).count()
-    }.sum
-
   /** Append a batch's rows into the current DELTA generation (plain
     * sequential files — ONE file per append; the bucket fan-out is
     * paid only at fold time, see the class doc). `coalesce`, not
@@ -259,9 +239,8 @@ private[graft] final class BucketedIndex(
     * appended frame must already be materialized (localCheckpoint),
     * so the single writer task reads cached blocks directly with no
     * shuffle exchange; an UNcheckpointed frame would have its whole
-    * upstream computation serialized into that one task (the
-    * round-13 review caught exactly this in the history seeders,
-    * fixed by checkpointing at the seed call sites). (The funnel
+    * upstream computation serialized into that one task (the history
+    * seeders checkpoint at their call sites for this reason). (The funnel
     * itself is intentional — one delta file per micro-batch; a
     * high-throughput stream would raise the coalesce width and let
     * the size-ratio fold absorb the extra files.) Empty appends are
@@ -314,8 +293,8 @@ private[graft] final class BucketedIndex(
         // the cache key carries the dir's mtime: an index root wiped and
         // re-seeded at the same path RE-USES generation dir names, so a
         // bare-path key could serve a previous incarnation's cached
-        // derivation (round-14 advisory — AnnStream's width cache); the
-        // mtime disambiguates incarnations for one extra metadata call
+        // derivation (AnnStream's width cache); the mtime disambiguates
+        // incarnations for one extra metadata call
         (s"${g.dir}@${fs.getFileStatus(g.dir).getModificationTime}",
           baseRelation(g))
       }
@@ -338,8 +317,8 @@ private[graft] final class BucketedIndex(
     * schema; it runs BEFORE the duplicate-collapsing distinct (so
     * crash-window twins from two coexisting bases — whose re-banded
     * keys differ in WIDTH and would defeat a key-inclusive distinct —
-    * are first normalized to one width, then collapsed for good;
-    * round-14 advisory) and before the bp assignment, so
+    * are first normalized to one width, then collapsed for good) and
+    * before the bp assignment, so
     * `bp = hash(rewritten key)` stays consistent by construction.
     * Consequence: the row count the rewrite receives is the
     * PRE-collapse upper bound (exact outside replay/crash windows,
@@ -359,8 +338,8 @@ private[graft] final class BucketedIndex(
   }
 
   /** INCREMENTAL (size-tiered) fold — the fold-every-batch consumers'
-    * (q54b/q58b) replacement for whole-base [[compact]] (round-17
-    * verdict task 6). Whole-base rewrite every batch costs
+    * (q54b/q58b) replacement for whole-base [[compact]]. Whole-base
+    * rewrite every batch costs
     * O(stream² / batch) bytes rewritten; here each batch pays only:
     *
     *  1. its DELTA folded into a NEW base generation sized to the
@@ -416,8 +395,8 @@ private[graft] final class BucketedIndex(
     * merged (cheap — the tier is small by the ratio gate) past this. */
   private val MaxBaseGens = 8
 
-  /** PER-TIER bucket-count cap for [[foldIncremental]]'s partial folds
-    * (round-18 verdict task 2): `ceil(rows / targetRowsPerBucket)` is a
+  /** PER-TIER bucket-count cap for [[foldIncremental]]'s partial folds:
+    * `ceil(rows / targetRowsPerBucket)` is a
     * bucket-OCCUPANCY rule sized for the big base, but applied to a
     * per-batch DELTA fold it fans a few MB into hundreds of ~4 KB
     * bucket directories — at q54b's adversarial 64-rows/bucket target
@@ -438,13 +417,16 @@ private[graft] final class BucketedIndex(
       bytes / BucketedIndex.MinTierBucketBytes)).toInt
   }
 
-  /** Reap half-written compaction targets from a crashed predecessor. */
-  private def reapHalfWritten(): Unit =
+  /** Reap half-written compaction targets from a crashed predecessor
+    * (nothing to reap when no append ever created the root). */
+  private def reapHalfWritten(): Unit = {
+    if (!fs.exists(rootPath)) return
     fs.listStatus(rootPath).toSeq
       .filter(st => st.isDirectory &&
         GenName.findFirstIn(st.getPath.getName).isDefined &&
         !fs.exists(new Path(st.getPath, "_SUCCESS")))
       .foreach(st => fs.delete(st.getPath, true))
+  }
 
   /** The ONE fold pipeline [[compact]] and [[foldIncremental]] share:
     * union the given generations, rewrite, collapse duplicates,
@@ -556,22 +538,13 @@ private[graft] object BucketedIndex {
     * capped. */
   val MinTierBucketBytes: Long = 256L << 10
 
-  /** Last probe plan per key column (see [[BucketedIndex.lastProbePlan]]). */
-  private val probePlans =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  /** Static accessor for plan tests: the most recent probe's executed
-    * plan for an index keyed on `key`, across all instances. */
-  private[graft] def lastProbePlanFor(key: String): Option[String] =
-    Option(probePlans.get(key))
-
   /** Consumer caches keyed by IMMUTABLE generation dir (e.g.
     * [[AnnStream]]'s per-base band-width cache). Registering here buys
     * the consumer the same lifecycle the index's own dir-keyed caches
     * get: [[compact]] purges entries for the generations it deletes
     * (without this, a wiped-and-reseeded index root whose generation
-    * names recur would serve a STALE cached value — round-14
-    * advisory), and [[clearCachesForTesting]] clears them. */
+    * names recur would serve a STALE cached value), and
+    * [[clearCachesForTesting]] clears them. */
   private val dirKeyedCaches =
     new java.util.concurrent.CopyOnWriteArrayList[
       java.util.concurrent.ConcurrentHashMap[String, _]]()

@@ -14,7 +14,7 @@ import graft.functions.Num.oround
   * the IDENTICAL code.
   *
   * Per batch: the delta docs' band keys probe the index PRUNED to the
-  * touched buckets (plan-asserted via [[BucketedIndex.lastProbePlan]]),
+  * touched buckets (plan-asserted by StreamIndexConsumersSpec),
   * candidates are Jaccard-verified on the joined row (the index carries
   * the shingle set precisely so verification needs no second lookup —
   * d09's contract), the verdicts append to the result sink, and the

@@ -32,8 +32,8 @@ private[graft] object NearDup {
     * separation between adversarial template farms (bucket membership
     * 479/960/1,998 at 500/1k/2k perturbed copies) and GENUINE near-dup
     * families (tens; the largest real family bucket seen on any staged estate
-    * is 76, at sf1 — which a 64 cap wrongly dropped, the round-13 sf1 sweep's
-    * one row of divergence). 256 keeps every measured genuine family and
+    * is 76, at sf1 — which a 64 cap wrongly dropped, the one row of
+    * divergence in an sf1 sweep). 256 keeps every measured genuine family and
     * still kills every measured farm; a >256 genuine family would be dropped
     * WITH a census row — surfaced, never silent. */
   val StreamBandCap = 256

@@ -82,7 +82,9 @@ class AnnRebandSpec extends AnyFunSuite {
         targetRowsPerBucket = target, minBuckets = 4, reband = true)
     }
     val ix = AnnStream.index(spark, idx, target, 4)
-    val total = ix.totalRows()
+    // rows across generations — parquet footer counts
+    val total = new java.io.File(idx).listFiles().filter(_.getName.startsWith("gen_"))
+      .map(g => spark.read.parquet(g.getPath).count()).sum
     val want = VectorFns.adaptiveSrpBits(total, target)
     assert(want > seedBits, s"test must cross a width boundary: $seedBits -> $want")
     val live = AnnStream.currentBits(ix, seedBits)

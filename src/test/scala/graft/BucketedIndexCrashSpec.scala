@@ -24,7 +24,9 @@ import graft.streaming.BucketedIndex
   *     cleared) rebuild the generation's relation without any directory
   *     listing, identical rows and the same `bp` partition pruning; a
   *     generation whose manifest is missing (crash between parquet
-  *     commit and manifest write) falls back to the listing read.
+  *     commit and manifest write) falls back to the listing read;
+  *  4. folding a root that no append created (an empty history seed) is
+  *     a no-op, and the first delta batch after it lands in the index.
   */
 class BucketedIndexCrashSpec extends AnyFunSuite {
 
@@ -126,9 +128,10 @@ class BucketedIndexCrashSpec extends AnyFunSuite {
     // a FRESH session's first probe: caches dropped, manifest present →
     // the relation is rebuilt from the one small file
     BucketedIndex.clearCachesForTesting()
-    val coldManifest = probeAll(ix, keys)
+    val coldProbe = ix.probe(keys).rows.get
+    val coldManifest = coldProbe.orderBy("k", "v").collect().toSeq
     assert(coldManifest == warm, "manifest-built relation must match")
-    val plan = ix.lastProbePlan.get
+    val plan = coldProbe.queryExecution.executedPlan.toString
     assert(plan.contains("PartitionFilters") && plan.contains("bp"),
       s"bp partition pruning must survive the manifest-built relation:\n$plan")
 
@@ -191,5 +194,33 @@ class BucketedIndexCrashSpec extends AnyFunSuite {
     val out = fs.create(mp, true)
     try out.write(full) finally out.close()
     assert(BucketedIndex.readManifest(fs, gen).isDefined)
+  }
+
+  test("folding a root no append created is a no-op; the first delta after an empty seed lands") {
+    val (ix, root) = freshIndex()
+    val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(new Path(root), true) // the root a first append would create
+    ix.compact()
+    ix.foldIncremental()
+    assert(!ix.exists && !fs.exists(new Path(root)), "a fold must not create the root")
+
+    // seed from an empty history, then one delta batch: docs 4, 9 and 14
+    // (all delta ids, doc_id % 5 = 4) share one text, 19 differs
+    import spark.implicits._
+    val idx = SparkTestSession.tempDir("graft_incdedup_empty").resolve("idx").toString
+    val res = SparkTestSession.tempDir("graft_incdedup_empty_res").resolve("res").toString
+    val same = "alpha beta gamma delta epsilon zeta eta theta"
+    val batch = Seq((4L, same), (9L, same), (14L, same), (19L, "north south east west"))
+      .toDF("doc_id", "text")
+    val noHistory = graft.queries.DedupQueries.keyedBandsOf(batch.limit(0))
+    graft.streaming.IncDedup.seedHistory(spark, noHistory, idx)
+    graft.streaming.IncDedup.processBatch(batch, 0L, res, idx)
+    val pairs = spark.read.parquet(res).distinct().orderBy("new_id", "dup_of")
+      .as[(Long, Long, Double)].collect().toSeq
+    assert(pairs == Seq((9L, 4L, 1.0), (14L, 4L, 1.0), (14L, 9L, 1.0)), s"got $pairs")
+    val indexed = graft.streaming.IncDedup.index(spark, idx, 4096L, 16)
+      .probe(graft.queries.DedupQueries.keyedBandsOf(batch).select("bk"))
+      .rows.get.select("doc_id").distinct().as[Long].collect().sorted.toSeq
+    assert(indexed == Seq(4L, 9L, 14L, 19L), s"the batch's bands must land in the index: $indexed")
   }
 }

@@ -15,8 +15,9 @@ import graft.ops.ConnectedComponents
   *  (b) cluster formation via [[DedupQueries.lshComponentEdges]] (linear
   *      star edges over exact-dup classes + LSH over one representative
   *      per class) yields EXACTLY the same connected components as the
-  *      uncapped all-pairs [[DedupQueries.lshVerifiedPairs]] closure —
-  *      the equivalence theorem d06/d14/p14 rest on, executed;
+  *      uncapped all-pairs closure (d02's pipeline without the bucket
+  *      cap, composed here) — the equivalence theorem d06/d14/p14 rest
+  *      on, executed;
   *  (c) the dropped mass is SURFACED through the `d02_bucket_census`
   *      observation, never silently vanished (the d11 census discipline).
   *
@@ -75,8 +76,11 @@ class CompHotMassSpec extends AnyFunSuite {
     val viaStars = ConnectedComponents
       .run(DedupQueries.lshComponentEdges(spark, dir))
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val uncappedBands = DedupQueries.sigWithSh(spark, dir).select(
+      col("doc_id"), col("sh"),
+      posexplode(array(DedupQueries.bandKeyCols: _*)).as(Seq("band", "bh")))
     val viaAllPairs = ConnectedComponents
-      .run(DedupQueries.lshVerifiedPairs(spark, dir, cap = None)
+      .run(DedupQueries.pairsFromShBuckets(uncappedBands)
         .select(col("da").as("src"), col("db").as("dst")).distinct())
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(viaStars == viaAllPairs,

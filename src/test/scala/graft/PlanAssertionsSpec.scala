@@ -67,11 +67,11 @@ class PlanAssertionsSpec extends AnyFunSuite {
   }
 
   test("d02: the ONLY join is the (band,bh) bucket-size cap; verify tail join-free") {
-    // round-8 plan shape: the capBlocks census equi-join on the band
-    // bucket key is the ONE permitted join (the d11 discipline at :264);
-    // pair emission + Jaccard verification still run bucket-locally with
-    // no join — a second equi-join would mean the verify tail regressed
-    // to the join-back shape (that's d07's job, benched separately)
+    // the capBlocks census equi-join on the band bucket key is the ONE
+    // permitted join (the d11 discipline); pair emission + Jaccard
+    // verification run bucket-locally with no join — a second equi-join
+    // would mean the verify tail regressed to the join-back shape (d07's
+    // spelling of the same pipeline)
     val plan = executedPlan("d02_minhash_lsh_pairs").split("== Initial Plan ==")(0)
     Seq("BroadcastNestedLoopJoin", "CartesianProduct").foreach(j =>
       assert(!plan.contains(j), s"d02 must never nested-loop, found $j in:\n$plan"))
@@ -82,6 +82,16 @@ class PlanAssertionsSpec extends AnyFunSuite {
     // bucket-size filter before any bucket row materializes its members)
     assert(plan.contains("CollectMetrics"),
       s"d02's bucket census observe must ride the job:\n$plan")
+  }
+
+  test("d10: calibration pairs score in-bucket — zero joins") {
+    // d10 audits every band collision uncapped, so unlike d02 it has no
+    // cap join either; a join here means verification went back to the
+    // signature table instead of scoring the carried arrays in-bucket
+    val plan = executedPlan("d10_minhash_calibration").split("== Initial Plan ==")(0)
+    val joins = "(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin|BroadcastNestedLoopJoin|CartesianProduct)"
+      .r.findAllIn(plan).length
+    assert(joins == 0, s"d10 must plan no join, got $joins in:\n$plan")
   }
 
   test("d08: banded stage = one cap join + census; pair stage = one self-join") {
@@ -314,21 +324,18 @@ class PlanAssertionsSpec extends AnyFunSuite {
 
   test("q54: each micro-batch's index probes read bucket-pruned, never the full history") {
     // the d09 pre-bucketed-read assertion applied to STREAMING state:
-    // running the replay leaves the last batch's probe plans in the
-    // BucketedIndex debug hook; both the band index (key bk) and the
-    // exact index (key h) must carry their bucket column in the scan's
-    // PartitionFilters — a probe without it is the round-11 layout
-    // (full accumulated history scanned every batch).
-    SparkEntry.queries("q54_stream_neardup")(spark, sf).collect()
-    for (key <- Seq("bk", "h")) {
-      val plan = graft.streaming.BucketedIndex.lastProbePlanFor(key)
-        .getOrElse(fail(s"q54 never probed the $key index"))
-      assert(plan.contains("PartitionFilters: [bp#"),
-        s"the $key index probe must prune on the bp partition column, got:\n$plan")
-      // Spark prints the pushed set as INSET (>10 values) or IN (...)
-      assert(plan.contains("INSET") || plan.contains(" IN "),
-        s"the $key index probe must carry the touched-bucket set filter, got:\n$plan")
-    }
+    // both the band index (out_index) and the exact index (out_exact)
+    // must carry their bucket column in the scan's PartitionFilters — a
+    // probe without it scans the full accumulated history every batch.
+    // A cold copy of the estate: a resumed run would probe nothing.
+    val cold = IndexProbes.coldCopy(sf, "graft-plan-q54-sf")
+    val (_, scans) = IndexProbes.scansDuring(spark)(
+      SparkEntry.queries("q54_stream_neardup")(spark, cold).collect())
+    val run = IndexProbes.runRoot(cold, "q54")
+    for (index <- Seq("out_index", "out_exact").map(run.resolve(_).toString))
+      assert(scans.exists(_.prunedProbeOf(index)),
+        s"the $index probe must prune on bp with the touched-bucket set; its scans:\n" +
+          scans.filter(_.location.contains(index)).mkString("\n"))
   }
 
   test("u03: all four window passes + the run aggregate share ONE user_id exchange") {

@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 
 import scala.jdk.CollectionConverters._
 
@@ -15,41 +15,23 @@ import org.scalatest.funsuite.AnyFunSuite
   *     identical rows and appends NOT ONE new file to the external
   *     index (AvailableNow finds every staged file committed; the
   *     existence-gated history seed re-ingests nothing).
-  *  2. PRUNED PROBES: the last micro-batch's index probe carries the
-  *     `bp` bucket column in the scan's PartitionFilters — the d09
-  *     pre-bucketed-read assertion applied to streaming state (a probe
-  *     without it is the round-11 full-history-scan layout).
+  *  2. PRUNED PROBES: the first run's index probes read the index's
+  *     base generations with the touched-bucket set on the `bp` bucket
+  *     column in the scan's PartitionFilters — the d09 pre-bucketed-read
+  *     assertion applied to streaming state (a probe without it scans
+  *     the full history every batch).
   */
 class StreamIndexConsumersSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
   private val sf = "/root/testdata/sf0.001"
 
-  /** This spec's own copy of the estate. Replay run roots are keyed by
-    * (query, estate path), so a fresh path gives every row a COLD first
-    * run even when an earlier spec in this JVM (PlanAssertionsSpec runs
-    * q54) already streamed the same query over the shared directory —
-    * over that one, r1 would compare a resume with a resume, and the
-    * pruning assertion would read whichever probe ran last. */
-  private lazy val coldSf: String = {
-    val dir = SparkTestSession.tempDir("graft-stream-index-sf")
-    val l = Files.list(Paths.get(sf))
-    try l.forEach(f => Files.copy(f, dir.resolve(f.getFileName)))
-    finally l.close()
-    dir.toString
-  }
+  /** This spec's own copy of the estate, so every row's first run is
+    * cold even when an earlier spec in this JVM streamed the same query
+    * over the shared directory. */
+  private lazy val coldSf: String = IndexProbes.coldCopy(sf, "graft-stream-index-sf")
 
-  /** This JVM's run root of a replay over [[coldSf]]
-    * (`graft_run_<pidHex>_<runKey>_<pathKey>`). */
-  private def runRoot(runKey: String): Path = {
-    val pidHex = java.lang.Long.toHexString(ProcessHandle.current().pid())
-    val name = s"graft_run_${pidHex}_${runKey}_${graft.queries.Core.Replay.pathKey(coldSf)}"
-    val l = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
-    try l.filter(p => p.getFileName.toString == name)
-      .findFirst()
-      .orElseThrow(() => new AssertionError(s"$runKey run root not found"))
-    finally l.close()
-  }
+  private def runRoot(runKey: String): Path = IndexProbes.runRoot(coldSf, runKey)
 
   private def indexFiles(runKey: String): Long = {
     val l = Files.walk(runRoot(runKey).resolve("out_index"))
@@ -57,25 +39,24 @@ class StreamIndexConsumersSpec extends AnyFunSuite {
     finally l.close()
   }
 
-  for ((name, runKey, probeKey) <- Seq(
-      ("q54_stream_neardup", "q54", "bk"),
-      ("q58_stream_incdedup", "q58", "bk"),
-      ("q58b_stream_incdedup_fold", "q58b", "bk"),
-      ("q54b_stream_neardup_fold", "q54b", "bk"),
-      ("q60_stream_ann", "q60", "bk"),
-      ("q60b_stream_ann_reband", "q60b", "bk"),
-      ("q61_stream_decontam", "q61", "h"))) {
+  for ((name, runKey) <- Seq(
+      ("q54_stream_neardup", "q54"),
+      ("q58_stream_incdedup", "q58"),
+      ("q58b_stream_incdedup_fold", "q58b"),
+      ("q54b_stream_neardup_fold", "q54b"),
+      ("q60_stream_ann", "q60"),
+      ("q60b_stream_ann_reband", "q60b"),
+      ("q61_stream_decontam", "q61"))) {
     test(s"$name: resume returns identical rows with zero index appends; probes prune") {
       val q = SparkEntry.queries(name)
-      val r1 = q(spark, coldSf).collect().toSeq
+      val (r1, scans) = IndexProbes.scansDuring(spark)(q(spark, coldSf).collect().toSeq)
       assert(r1.nonEmpty, s"$name must produce rows at $sf")
 
-      val plan = graft.streaming.BucketedIndex.lastProbePlanFor(probeKey)
-        .getOrElse(fail(s"$name never probed its $probeKey index"))
-      assert(plan.contains("PartitionFilters: [bp#"),
-        s"the $name index probe must prune on bp, got:\n$plan")
-      assert(plan.contains("INSET") || plan.contains(" IN "),
-        s"the $name probe must carry the touched-bucket set, got:\n$plan")
+      val index = runRoot(runKey).resolve("out_index").toString
+      assert(scans.exists(_.prunedProbeOf(index)),
+        s"the $name index probe must prune on bp with the touched-bucket set; " +
+          s"its scans of $index:\n" +
+          scans.filter(_.location.contains(index)).mkString("\n"))
 
       val filesAfterFirst = indexFiles(runKey)
       assert(filesAfterFirst > 0, s"$name must have built its index")
